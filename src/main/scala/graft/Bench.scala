@@ -113,17 +113,7 @@ object Bench {
       case (name, med, re) if re > 0 && (med / re > 1.5 || re / med > 1.5) => name
     }
     val sentinelAfter = timeSentinel()
-    // Bank source (r16): env wins; otherwise the committed SENTINEL_BANK
-    // file (the measured idle median for THIS box, re-banked r16 — the r13
-    // bank of 0.132 predated a persistent ~25-35% ambient shift and tripped
-    // run_contended on every clean r15 run). The driver invokes the bench
-    // without the env var, so the file is how the bank reaches its runs.
-    val sentinelBank = sys.env.get("SPARK_GRAFT_SENTINEL_BANK")
-      .orElse(
-        try Some(new String(java.nio.file.Files.readAllBytes(
-          java.nio.file.Paths.get("SENTINEL_BANK"))).trim).filter(_.nonEmpty)
-        catch { case _: Throwable => None })
-      .map(_.toDouble)
+    val sentinelBank = sys.env.get("SPARK_GRAFT_SENTINEL_BANK").map(_.toDouble)
     // ratio alone trips on JVM noise when the sentinel is sub-0.1 s (tiny
     // sf), so mid-run drift also needs a 50 ms absolute gap
     val runContended =

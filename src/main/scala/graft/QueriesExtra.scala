@@ -216,23 +216,19 @@ object QueriesExtra {
     // θ-join written naively — the optimizer rule (gated on the conf)
     // rewrites it to the binned equality join; the oracle is the same SQL
     // as interval_join, so the rule's semantics-preservation is under the
-    // hash gate. The plan is forced inside the lambda so the conf can be
-    // unset before returning (QueryExecution caches the executed plan).
+    // hash gate. The conf must be ACTIVE when the caller's action runs:
+    // every action (write/count) builds a fresh QueryExecution and re-runs
+    // the optimizer, so a set-then-unset falls back to the nested loop
+    // (measured: 2.5 s vs 0.45 s). The whole frame is therefore built on a
+    // child session that carries the conf, and the caller's session never
+    // sees it.
     "interval_join_rule" -> ((s, dir) => {
-      val ev = rd(s, dir, "events")
+      val c = SparkEntry.childSession(s, "spark.graft.rangeJoin.binWidth" -> "600000000")
+      val ev = rd(c, dir, "events")
         .select(col("event_id"), unix_micros(col("ts")).as("tsu"))
       val iv = ev.filter(col("event_id") % 50 === 0)
         .select(col("event_id").as("interval_id"), col("tsu").as("start_us"),
           (col("tsu") + lit(3600000000L)).as("end_us"))
-      // the conf must be ACTIVE when the caller's action runs — every
-      // action (write/count) builds a fresh QueryExecution and re-runs
-      // the optimizer, so a set-then-unset would silently fall back to
-      // the nested loop (measured: 2.5 s vs 0.45 s). Leaving it set is
-      // benign here: the rule's exact two-range-conjunct pattern matches
-      // no other suite query (the hand-binned sibling's join carries an
-      // equality conjunct), verified by the full hash gate. Production
-      // use scopes it with SET/RESET around the statement.
-      s.conf.set("spark.graft.rangeJoin.binWidth", "600000000")
       val df = ev.join(iv,
           col("tsu") >= col("start_us") && col("tsu") <= col("end_us"))
         .select(col("interval_id"), col("event_id"), col("tsu"))

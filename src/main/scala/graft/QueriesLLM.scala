@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Encoder, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.operators.{Dedup, Nlp, Similarity, TextAnalysis}
@@ -19,19 +19,68 @@ object QueriesLLM {
     Tables.read(s, dir, name)
   private val D = DecimalType(30, 10)
 
-  /** Scope `spark.sql.shuffle.partitions` down for the `*_2batch` streaming
-    * replay harnesses: every micro-batch materializes one state-store
-    * instance PER shuffle partition, so a 500-row replay under the
-    * session's 32 partitions pays 32 store open/commit cycles per batch
-    * for ~16 rows each. Four partitions keeps the multi-partition
-    * state-merge semantics under test at a fraction of the fixed cost.
-    * The session value is restored even on failure — batch queries are
-    * unaffected. */
-  private def withStreamShuffle[T](s: SparkSession, n: Int = 4)(f: => T): T = {
-    val key = "spark.sql.shuffle.partitions"
-    val old = s.conf.get(key)
-    s.conf.set(key, n.toString)
-    try f finally s.conf.set(key, old)
+  /** The streaming replay harness of every `streaming_*` query: `batches`
+    * are fed one micro-batch each through a MemoryStream, `build` turns
+    * the stream into the query under test, and the memory sink's rows come
+    * back as a DataFrame. The replay runs on a child session, so the
+    * caller's session is left as it was:
+    *  - shuffle partitions are 4 on the child only. Every micro-batch
+    *    opens one state-store instance per shuffle partition, so a 500-row
+    *    replay under 32 partitions pays 32 store open/commit cycles per
+    *    batch for ~16 rows each; four keeps the multi-partition state merge
+    *    under test at a fraction of the fixed cost;
+    *  - the caller's streaming listeners are added to the child, whose
+    *    progress events would otherwise reach no one. They are not removed
+    *    after `stop()`, which would race the bus's asynchronous delivery
+    *    of the last events;
+    *  - the sink's temp view is dropped, and its rows (already in driver
+    *    memory) come back as a local frame on the caller's session, so
+    *    the caller's action runs there. An action on a child-session frame
+    *    would make the child the inherited active session of every pool
+    *    thread it starts, which then keeps the child alive, and the
+    *    caller's query listeners would not see it.
+    * `build` gets the child session and the stream (columns `_1`, `_2`, …
+    * of `A`), and must read any other input on the child. */
+  private def replay[A: Encoder](s: SparkSession, outputMode: String, batches: Seq[Seq[A]])(
+      build: (SparkSession, DataFrame) => DataFrame): DataFrame = {
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    val c = SparkEntry.childSession(s, "spark.sql.shuffle.partitions" -> "4")
+    s.streams.listListeners().foreach(c.streams.addListener)
+    val in = MemoryStream[A](implicitly[Encoder[A]], c)
+    val name = "replay_" + java.util.UUID.randomUUID.toString.replace("-", "")
+    val q = build(c, in.toDF()).writeStream.format("memory").queryName(name)
+      .outputMode(outputMode).start()
+    try batches.foreach { b => in.addData(b); q.processAllAvailable() }
+    finally q.stop()
+    val sink = c.table(name)
+    c.catalog.dropTempView(name)
+    s.createDataFrame(sink.collectAsList(), sink.schema)
+  }
+
+  /** The stream-stream join replays: each batch is a pair (left ids, right
+    * ids). Both sides ride the one replay stream as (is-left, id) rows and
+    * are split again by the flag, so every trigger feeds both join inputs.
+    * Join key id % 50; left event time id + 10 s, right id + id % 7 − 3 +
+    * 10 s. The +10 s offset keeps every event time positive: Spark's
+    * watermark starts at epoch 0 and rows below it drop as late (doc_id
+    * 0-2 would land at -3..-1 s). The join condition only sees time
+    * DIFFERENCES, so the offset cancels and the oracle needs none. */
+  private def streamJoinReplay(s: SparkSession, batches: Seq[(Seq[Long], Seq[Long])],
+                               watermark: String): DataFrame = {
+    import s.implicits._
+    val tagged = batches.map { case (l, r) => l.map((true, _)) ++ r.map((false, _)) }
+    replay(s, "append", tagged) { (_, in) =>
+      val rows = in.toDF("is_left", "id")
+      val left = rows.filter(col("is_left")).repartition(4, col("id"))
+        .select((col("id") % 50).as("k"), col("id").as("lid"),
+          timestamp_seconds(col("id") + 10).as("lts"))
+      val right = rows.filter(!col("is_left")).repartition(4, col("id"))
+        .select((col("id") % 50).as("k"), col("id").as("rid"),
+          timestamp_seconds(col("id") + col("id") % 7 - 3 + 10).as("rts"))
+      graft.streaming.Streams.streamJoin(left, right, Seq("k"),
+        "lts", "rts", watermark = watermark, within = "5 seconds")
+        .select(col("k"), col("lid"), col("rid"))
+    }.orderBy("k", "lid", "rid")
   }
 
   /** Scale-adaptive fan-out before a per-row-heavy stage (r15, guide §2.5
@@ -1670,33 +1719,24 @@ object QueriesLLM {
     // estimates (min/min/max over the monotone update stream) must equal
     // the batch fold over the whole corpus, which is what the oracle
     // computes. Cross-batch register merge itself is hash-gated.
-    "streaming_hll_2batch" -> ((s, dir) => withStreamShuffle(s) {
+    "streaming_hll_2batch" -> ((s, dir) => {
       import s.implicits._
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-      import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
       val docs = rd(s, dir, "documents")
         .select(col("doc_id").cast("long"), col("source"), col("text"))
         .orderBy("doc_id").as[(Long, String, String)].collect().toSeq
       val (b1, b2) = docs.partition(_._1 < 250)
-      val in = MemoryStream[(Long, String, String)]
-      val stream = in.toDF.toDF("doc_id", "source", "text")
-        .repartition(4, col("doc_id"))
-      val toks = graft.operators.TextAnalysis.tokens(col("text"))
-      val bg = stream.withColumn("__toks", toks)
-        .filter(size(col("__toks")) >= 2)
-        .select(col("source"),
-          explode(transform(sequence(lit(1), size(col("__toks")) - 1),
-            i => concat(element_at(col("__toks"), i), lit(" "),
-              element_at(col("__toks"), i + 1)))).as("bg"))
-      val out = graft.streaming.Streams.streamingHllDistinct(bg, "source", "bg", p = 8)
-      val name = "shll_" + java.util.UUID.randomUUID.toString.replace("-", "")
-      val q = out.writeStream.format("memory").queryName(name)
-        .outputMode("update").start()
-      try {
-        in.addData(b1: _*); q.processAllAvailable()
-        in.addData(b2: _*); q.processAllAvailable()
-      } finally q.stop()
-      s.table(name).groupBy(col("source"))
+      replay(s, "update", Seq(b1, b2)) { (_, in) =>
+        val stream = in.toDF("doc_id", "source", "text")
+          .repartition(4, col("doc_id"))
+        val toks = graft.operators.TextAnalysis.tokens(col("text"))
+        val bg = stream.withColumn("__toks", toks)
+          .filter(size(col("__toks")) >= 2)
+          .select(col("source"),
+            explode(transform(sequence(lit(1), size(col("__toks")) - 1),
+              i => concat(element_at(col("__toks"), i), lit(" "),
+                element_at(col("__toks"), i + 1)))).as("bg"))
+        graft.streaming.Streams.streamingHllDistinct(bg, "source", "bg", p = 8)
+      }.groupBy(col("source"))
         .agg(min("n_zero").as("n_zero"), min("sum_scaled").as("sum_scaled"),
           max("hll_est").as("hll_est"))
         .orderBy("source")
@@ -1706,32 +1746,23 @@ object QueriesLLM {
     // two-batch replay: bottom-k state folds across the batch boundary,
     // final values (max/max — n_kept and est are both monotone
     // non-decreasing) must equal the batch sketch over the whole corpus.
-    "streaming_kmv_2batch" -> ((s, dir) => withStreamShuffle(s) {
+    "streaming_kmv_2batch" -> ((s, dir) => {
       import s.implicits._
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-      import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
       val docs = rd(s, dir, "documents")
         .select(col("doc_id").cast("long"), col("source"), col("text"))
         .orderBy("doc_id").as[(Long, String, String)].collect().toSeq
       val (b1, b2) = docs.partition(_._1 < 250)
-      val in = MemoryStream[(Long, String, String)]
-      val stream = in.toDF.toDF("doc_id", "source", "text")
-        .repartition(4, col("doc_id"))
-      val bg = stream.withColumn("__toks", graft.operators.TextAnalysis.tokens(col("text")))
-        .filter(size(col("__toks")) >= 2)
-        .select(col("source"),
-          explode(transform(sequence(lit(1), size(col("__toks")) - 1),
-            i => concat(element_at(col("__toks"), i), lit(" "),
-              element_at(col("__toks"), i + 1)))).as("bg"))
-      val out = graft.streaming.Streams.streamingKmvDistinct(bg, "source", "bg", k = 64)
-      val name = "skmv2_" + java.util.UUID.randomUUID.toString.replace("-", "")
-      val q = out.writeStream.format("memory").queryName(name)
-        .outputMode("update").start()
-      try {
-        in.addData(b1: _*); q.processAllAvailable()
-        in.addData(b2: _*); q.processAllAvailable()
-      } finally q.stop()
-      s.table(name).groupBy(col("source"))
+      replay(s, "update", Seq(b1, b2)) { (_, in) =>
+        val stream = in.toDF("doc_id", "source", "text")
+          .repartition(4, col("doc_id"))
+        val bg = stream.withColumn("__toks", graft.operators.TextAnalysis.tokens(col("text")))
+          .filter(size(col("__toks")) >= 2)
+          .select(col("source"),
+            explode(transform(sequence(lit(1), size(col("__toks")) - 1),
+              i => concat(element_at(col("__toks"), i), lit(" "),
+                element_at(col("__toks"), i + 1)))).as("bg"))
+        graft.streaming.Streams.streamingKmvDistinct(bg, "source", "bg", k = 64)
+      }.groupBy(col("source"))
         .agg(max("n_kept").as("n_kept"), max("kmv_est").as("kmv_est"))
         .orderBy("source")
     }),
@@ -1744,28 +1775,18 @@ object QueriesLLM {
     // group, and in the exact regime (k=256 ≥ every dev-SF group) the
     // emitted p50/p90/p99 are exact order statistics — the SAME oracle as
     // quantile_sketch gates the cross-batch state.
-    "streaming_quantile_2batch" -> ((s, dir) => withStreamShuffle(s) {
+    "streaming_quantile_2batch" -> ((s, dir) => {
       import s.implicits._
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-      import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
       val docs = rd(s, dir, "documents").filter(col("text").isNotNull)
         .select(col("doc_id").cast("long"), col("source"),
           length(col("text")).cast("double").as("len"))
         .orderBy("doc_id").as[(Long, String, Double)].collect().toSeq
       val (b1, b2) = docs.partition(_._1 < 250)
-      val in = MemoryStream[(Long, String, Double)]
-      val stream = in.toDF.toDF("doc_id", "source", "len")
-        .repartition(4, col("doc_id"))
-      val out = graft.streaming.Streams.streamingQuantiles(
-        stream, "source", "len", k = 256)
-      val name = "squant2_" + java.util.UUID.randomUUID.toString.replace("-", "")
-      val q = out.writeStream.format("memory").queryName(name)
-        .outputMode("update").start()
-      try {
-        in.addData(b1: _*); q.processAllAvailable()
-        in.addData(b2: _*); q.processAllAvailable()
-      } finally q.stop()
-      s.table(name).groupBy(col("source"))
+      replay(s, "update", Seq(b1, b2)) { (_, in) =>
+        graft.streaming.Streams.streamingQuantiles(
+          in.toDF("doc_id", "source", "len").repartition(4, col("doc_id")),
+          "source", "len", k = 256)
+      }.groupBy(col("source"))
         .agg(max(struct(col("n"), col("p50"), col("p90"), col("p99"))).as("__f"))
         .select(col("source"), col("__f.n").as("n"), col("__f.p50").as("p50"),
           col("__f.p90").as("p90"), col("__f.p99").as("p99"))
@@ -1790,10 +1811,8 @@ object QueriesLLM {
     // FlatMapGroupsWithStateExec.shouldRunAnotherBatch is unconditionally
     // true for it and both processAllAvailable and Trigger.AvailableNow
     // spin forever (measured; see the ttlTimeoutConf scaladoc).
-    "streaming_quantile_evict_3batch" -> ((s, dir) => withStreamShuffle(s) {
+    "streaming_quantile_evict_3batch" -> ((s, dir) => {
       import s.implicits._
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-      import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
       val docs = rd(s, dir, "documents")
         .filter(col("text").isNotNull && col("doc_id") < 500)
         .select(col("doc_id").cast("long"),
@@ -1805,22 +1824,14 @@ object QueriesLLM {
       val b1 = grp(0, 100, "evict", 1000L) ++ grp(300, 400, "keep", 1000L)
       val b2 = grp(400, 500, "keep", 50000L)
       val b3 = grp(100, 300, "evict", 100000L)
-      val in = MemoryStream[(Long, String, Double, Long)]
-      val stream = in.toDF.toDF("doc_id", "source", "len", "tsec")
-        .withColumn("ts", timestamp_seconds(col("tsec")))
-        .repartition(4, col("doc_id"))
-      val out = graft.streaming.Streams.streamingQuantiles(
-        stream, "source", "len", k = 256,
-        stateTtl = Some("1 hour"), eventTimeCol = Some("ts"))
-      val name = "squant3_" + java.util.UUID.randomUUID.toString.replace("-", "")
-      val q = out.writeStream.format("memory").queryName(name)
-        .outputMode("update").start()
-      try {
-        in.addData(b1: _*); q.processAllAvailable()
-        in.addData(b2: _*); q.processAllAvailable()
-        in.addData(b3: _*); q.processAllAvailable()
-      } finally q.stop()
-      s.table(name).groupBy(col("source"))
+      replay(s, "update", Seq(b1, b2, b3)) { (_, in) =>
+        val stream = in.toDF("doc_id", "source", "len", "tsec")
+          .withColumn("ts", timestamp_seconds(col("tsec")))
+          .repartition(4, col("doc_id"))
+        graft.streaming.Streams.streamingQuantiles(
+          stream, "source", "len", k = 256,
+          stateTtl = Some("1 hour"), eventTimeCol = Some("ts"))
+      }.groupBy(col("source"))
         .agg(max(struct(col("n"), col("p50"), col("p90"), col("p99"))).as("__f"))
         .select(col("source"), col("__f.n").as("n"), col("__f.p50").as("p50"),
           col("__f.p90").as("p90"), col("__f.p99").as("p99"))
@@ -1832,31 +1843,22 @@ object QueriesLLM {
     // batch boundary; in the exact regime counts are exact and monotone
     // per (source, item), so the final state is max(est) per pair, and
     // the per-source top-5 must equal the batch GROUP BY count.
-    "streaming_freq_items_2batch" -> ((s, dir) => withStreamShuffle(s) {
+    "streaming_freq_items_2batch" -> ((s, dir) => {
       import s.implicits._
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-      import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
       val docs = rd(s, dir, "documents")
         .select(col("doc_id").cast("long"), col("source"), col("text"))
         .orderBy("doc_id").as[(Long, String, String)].collect().toSeq
       val (b1, b2) = docs.partition(_._1 < 250)
-      val in = MemoryStream[(Long, String, String)]
-      val stream = in.toDF.toDF("doc_id", "source", "text")
-        .repartition(4, col("doc_id"))
-      val toks = stream.select(col("source"),
-        explode(graft.operators.TextAnalysis.tokens(col("text"))).as("w"))
-      val out = graft.streaming.Streams.streamingFrequentItems(
-        toks, "source", "w", maxTracked = 256)
-      val name = "sfreq2_" + java.util.UUID.randomUUID.toString.replace("-", "")
-      val q = out.writeStream.format("memory").queryName(name)
-        .outputMode("update").start()
-      try {
-        in.addData(b1: _*); q.processAllAvailable()
-        in.addData(b2: _*); q.processAllAvailable()
-      } finally q.stop()
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy("source").orderBy(col("cnt").desc, col("item"))
-      s.table(name).groupBy(col("source"), col("item"))
+      replay(s, "update", Seq(b1, b2)) { (_, in) =>
+        val toks = in.toDF("doc_id", "source", "text")
+          .repartition(4, col("doc_id"))
+          .select(col("source"),
+            explode(graft.operators.TextAnalysis.tokens(col("text"))).as("w"))
+        graft.streaming.Streams.streamingFrequentItems(
+          toks, "source", "w", maxTracked = 256)
+      }.groupBy(col("source"), col("item"))
         .agg(max("est").as("cnt"))
         .withColumn("__rn", row_number().over(w))
         .filter(col("__rn") <= 5).drop("__rn")
@@ -2504,8 +2506,6 @@ object QueriesLLM {
     // covered by StreamsSpec/StreamingE2ESpec).
     "streaming_neardup" -> ((s, dir) => {
       import s.implicits._
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-      import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
       // replay capped at 1 000 docs: the synthetic token-soup corpus is
       // near-duplicative by construction, so uncapped-bucket candidate
       // pairs grow ~quadratically in replay size (57 s at 5 000 docs);
@@ -2515,22 +2515,17 @@ object QueriesLLM {
         .select(col("doc_id").cast("long"), col("text"))
         .filter(col("doc_id") < 1000)
         .orderBy("doc_id").as[(Long, String)].collect().toSeq
-      val in = MemoryStream[(Long, String)]
-      in.addData(docs: _*)
-      // a MemoryStream batch is ONE partition, and the signature stage
-      // (interpreted HOF minhash) runs BEFORE the stateful shuffle — fan
-      // the stream out first or that stage is single-threaded (measured
-      // 5 ms/doc serial; a real deployment inherits source partitions)
-      val out = graft.streaming.Streams.streamingNearDupCandidates(
-        in.toDF.toDF("doc_id", "text")
-          .repartition(s.sparkContext.defaultParallelism, col("doc_id")),
-        "doc_id", "text",
-        n = 3, k = 16, bands = 8, threshold = 0.3, maxPerBucket = 1 << 20)
-      val name = "sneardup_" + java.util.UUID.randomUUID.toString.replace("-", "")
-      val q = out.writeStream.format("memory").queryName(name)
-        .outputMode("append").start()
-      try q.processAllAvailable() finally q.stop()
-      s.table(name).orderBy("id", "dup_of", "band")
+      replay(s, "append", Seq(docs)) { (c, in) =>
+        // a MemoryStream batch is ONE partition, and the signature stage
+        // (interpreted HOF minhash) runs BEFORE the stateful shuffle — fan
+        // the stream out first or that stage is single-threaded (measured
+        // 5 ms/doc serial; a real deployment inherits source partitions)
+        graft.streaming.Streams.streamingNearDupCandidates(
+          in.toDF("doc_id", "text")
+            .repartition(c.sparkContext.defaultParallelism, col("doc_id")),
+          "doc_id", "text",
+          n = 3, k = 16, bands = 8, threshold = 0.3, maxPerBucket = 1 << 20)
+      }.orderBy("id", "dup_of", "band")
     }),
 
     // ---------------- the same replay split across TWO micro-batches, so
@@ -2540,31 +2535,20 @@ object QueriesLLM {
     // STATE plus their own batch. "Seen before" therefore has a closed
     // form the oracle reproduces: earlier batch, or same batch with
     // lexicographically smaller string id.
-    "streaming_neardup_2batch" -> ((s, dir) => withStreamShuffle(s) {
+    "streaming_neardup_2batch" -> ((s, dir) => {
       import s.implicits._
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-      import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
       val docs = rd(s, dir, "documents")
         .select(col("doc_id").cast("long"), col("text"))
         .filter(col("doc_id") < 1000)
         .orderBy("doc_id").as[(Long, String)].collect().toSeq
+      // batch 1 commits its state; batch 2 pairs against the retained state
       val (b1, b2) = docs.partition(_._1 < 500)
-      val in = MemoryStream[(Long, String)]
-      val out = graft.streaming.Streams.streamingNearDupCandidates(
-        in.toDF.toDF("doc_id", "text")
-          .repartition(4, col("doc_id")),
-        "doc_id", "text",
-        n = 3, k = 16, bands = 8, threshold = 0.3, maxPerBucket = 1 << 20)
-      val name = "sneardup2_" + java.util.UUID.randomUUID.toString.replace("-", "")
-      val q = out.writeStream.format("memory").queryName(name)
-        .outputMode("append").start()
-      try {
-        in.addData(b1: _*)
-        q.processAllAvailable() // batch 1 commits; its state persists
-        in.addData(b2: _*)
-        q.processAllAvailable() // batch 2 pairs against retained state
-      } finally q.stop()
-      s.table(name).orderBy("id", "dup_of", "band")
+      replay(s, "append", Seq(b1, b2)) { (_, in) =>
+        graft.streaming.Streams.streamingNearDupCandidates(
+          in.toDF("doc_id", "text").repartition(4, col("doc_id")),
+          "doc_id", "text",
+          n = 3, k = 16, bands = 8, threshold = 0.3, maxPerBucket = 1 << 20)
+      }.orderBy("id", "dup_of", "band")
     }),
 
     // ---------------- streaming session windows under the hash gate
@@ -2575,10 +2559,8 @@ object QueriesLLM {
     // every real session exactly once. Oracle = batch gaps-and-islands
     // with session_window's exact boundary rule (a gap of EXACTLY the
     // duration starts a new session — windows are [start, end)).
-    "streaming_sessions_2batch" -> ((s, dir) => withStreamShuffle(s) {
+    "streaming_sessions_2batch" -> ((s, dir) => {
       import s.implicits._
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-      import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
       val ev = rd(s, dir, "events")
         .select(col("event_id").cast(LongType), unix_micros(col("ts")).as("us"),
           col("user_id").cast(LongType))
@@ -2586,22 +2568,16 @@ object QueriesLLM {
       val cut = ev(ev.length / 2)._2
       val (b1, b2) = ev.partition(_._2 < cut)
       val flush = Seq((-1L, ev.map(_._2).max + 86400L * 1000000L, -1L))
-      val in = MemoryStream[(Long, Long, Long)]
-      val stream = in.toDF.toDF("event_id", "us", "user_id")
-        .withColumn("ts", timestamp_micros(col("us")))
-        .repartition(4, col("user_id"))
-      val out = graft.streaming.Streams.sessionAgg(stream, "ts",
-        gap = "30 minutes", watermark = "1 second", keys = Seq("user_id"),
-        aggs = Seq(count(lit(1)).as("n_events")))
-      val name = "ssess2_" + java.util.UUID.randomUUID.toString.replace("-", "")
-      val q = out.writeStream.format("memory").queryName(name)
-        .outputMode("append").start()
-      try {
-        in.addData(b1: _*); q.processAllAvailable() // open sessions persist
-        in.addData(b2: _*); q.processAllAvailable() // merge across batches
-        in.addData(flush: _*); q.processAllAvailable() // watermark flush
-      } finally q.stop()
-      s.table(name).filter(col("user_id") =!= -1L)
+      // open sessions persist after b1, merge across batches in b2, and
+      // the flush event's watermark emits them
+      replay(s, "append", Seq(b1, b2, flush)) { (_, in) =>
+        val stream = in.toDF("event_id", "us", "user_id")
+          .withColumn("ts", timestamp_micros(col("us")))
+          .repartition(4, col("user_id"))
+        graft.streaming.Streams.sessionAgg(stream, "ts",
+          gap = "30 minutes", watermark = "1 second", keys = Seq("user_id"),
+          aggs = Seq(count(lit(1)).as("n_events")))
+      }.filter(col("user_id") =!= -1L)
         .select(col("user_id"),
           unix_micros(col("session_window.start")).as("start_us"),
           unix_micros(col("session_window.end")).as("end_us"),
@@ -2614,27 +2590,18 @@ object QueriesLLM {
     // dropDuplicates state must suppress the repeats, so each key appears
     // EXACTLY once in the sink; keys-only output keeps the row
     // independent of which duplicate won inside a batch
-    "streaming_dedup_2batch" -> ((s, dir) => withStreamShuffle(s) {
+    "streaming_dedup_2batch" -> ((s, dir) => {
       import s.implicits._
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-      import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
       val ids = rd(s, dir, "documents").select(col("doc_id").cast(LongType))
         .orderBy("doc_id").as[Long].collect().toSeq
       val (b1, b2) = ids.partition(_ < 250)
-      val in = MemoryStream[Long]
-      val out = graft.streaming.Streams.streamingDedup(
-        in.toDF.toDF("id")
-          .select((col("id") % 137L).as("key"))
-          .repartition(4, col("key")),
-        Seq("key"), None, None)
-      val name = "sdedup2_" + java.util.UUID.randomUUID.toString.replace("-", "")
-      val q = out.writeStream.format("memory").queryName(name)
-        .outputMode("append").start()
-      try {
-        in.addData(b1: _*); q.processAllAvailable()
-        in.addData(b2: _*); q.processAllAvailable()
-      } finally q.stop()
-      s.table(name).orderBy("key")
+      replay(s, "append", Seq(b1, b2)) { (_, in) =>
+        graft.streaming.Streams.streamingDedup(
+          in.toDF("id")
+            .select((col("id") % 137L).as("key"))
+            .repartition(4, col("key")),
+          Seq("key"), None, None)
+      }.orderBy("key")
     }),
 
     // ---------------- streaming running count under the hash gate (r8):
@@ -2642,28 +2609,17 @@ object QueriesLLM {
     // final max(running_count) per key must equal the key's total corpus
     // occurrences — only correct if batch-2 increments land on the
     // batch-1 state
-    "streaming_runcount_2batch" -> ((s, dir) => withStreamShuffle(s) {
+    "streaming_runcount_2batch" -> ((s, dir) => {
       import s.implicits._
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-      import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
       val rows = rd(s, dir, "documents")
         .filter(col("source").isNotNull)
         .select(col("source"), col("doc_id").cast(LongType))
         .orderBy("doc_id").as[(String, Long)].collect().toSeq
       val (b1, b2) = rows.partition(_._2 < 250)
-      val in = MemoryStream[(String, Long)]
-      val out = graft.streaming.Streams.runningCountPerKey(
-        in.toDF.toDF("source", "doc_id")
-          .repartition(4, col("source")),
-        "source")
-      val name = "srun2_" + java.util.UUID.randomUUID.toString.replace("-", "")
-      val q = out.writeStream.format("memory").queryName(name)
-        .outputMode("update").start()
-      try {
-        in.addData(b1: _*); q.processAllAvailable()
-        in.addData(b2: _*); q.processAllAvailable()
-      } finally q.stop()
-      s.table(name).groupBy(col("key"))
+      replay(s, "update", Seq(b1, b2)) { (_, in) =>
+        graft.streaming.Streams.runningCountPerKey(
+          in.toDF("source", "doc_id").repartition(4, col("source")), "source")
+      }.groupBy(col("key"))
         .agg(max("running_count").as("n")).orderBy("key")
     }),
 
@@ -2677,10 +2633,8 @@ object QueriesLLM {
     // max emission is 200 — a leak would emit 300 and mismatch. "keep"
     // receives data in batches 1-2 only (max emission 200 = its full
     // feed), insensitive to its own later eviction.
-    "streaming_runcount_evict_3batch" -> ((s, dir) => withStreamShuffle(s) {
+    "streaming_runcount_evict_3batch" -> ((s, dir) => {
       import s.implicits._
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-      import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
       val ids = rd(s, dir, "documents").filter(col("doc_id") < 500)
         .select(col("doc_id").cast(LongType))
         .orderBy("doc_id").as[Long].collect().toSeq
@@ -2689,21 +2643,13 @@ object QueriesLLM {
       val b1 = grp(0, 100, "evict", 1000L) ++ grp(300, 400, "keep", 1000L)
       val b2 = grp(400, 500, "keep", 50000L)
       val b3 = grp(100, 300, "evict", 100000L)
-      val in = MemoryStream[(String, Long)]
-      val out = graft.streaming.Streams.runningCountPerKey(
-        in.toDF.toDF("source", "tsec")
-          .withColumn("ts", timestamp_seconds(col("tsec")))
-          .repartition(4, col("source")),
-        "source", stateTtl = Some("1 hour"), eventTimeCol = Some("ts"))
-      val name = "srun3_" + java.util.UUID.randomUUID.toString.replace("-", "")
-      val q = out.writeStream.format("memory").queryName(name)
-        .outputMode("update").start()
-      try {
-        in.addData(b1: _*); q.processAllAvailable()
-        in.addData(b2: _*); q.processAllAvailable()
-        in.addData(b3: _*); q.processAllAvailable()
-      } finally q.stop()
-      s.table(name).groupBy(col("key"))
+      replay(s, "update", Seq(b1, b2, b3)) { (_, in) =>
+        graft.streaming.Streams.runningCountPerKey(
+          in.toDF("source", "tsec")
+            .withColumn("ts", timestamp_seconds(col("tsec")))
+            .repartition(4, col("source")),
+          "source", stateTtl = Some("1 hour"), eventTimeCol = Some("ts"))
+      }.groupBy(col("key"))
         .agg(max("running_count").as("n")).orderBy("key")
     }),
 
@@ -2716,10 +2662,8 @@ object QueriesLLM {
     // re-emit; keys 270..279 duplicate still-alive entries (ts 270..279,
     // +10 s delay > watermark) and MUST stay suppressed. Every stream key
     // appears once per batch, so no in-batch dedup winner ambiguity.
-    "streaming_dedup_wm_2batch" -> ((s, dir) => withStreamShuffle(s) {
+    "streaming_dedup_wm_2batch" -> ((s, dir) => {
       import s.implicits._
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-      import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
       val ids = rd(s, dir, "documents").select(col("doc_id").cast(LongType))
         .filter(col("doc_id") < 280 || col("doc_id") >= 300)
         .orderBy("doc_id").as[Long].collect().toSeq
@@ -2729,23 +2673,17 @@ object QueriesLLM {
         else if (id >= 330 && id <= 339) 270 + (id - 330) % 10
         else id
       val rows = ids.map(id => (keyOf(id), id))
+      // b1 moves the watermark to 269 s; b2 then meets expired and alive keys
       val (b1, b2) = rows.partition(_._2 < 280)
-      val in = MemoryStream[(Long, Long)]
-      val out = graft.streaming.Streams.streamingDedup(
-        in.toDF.toDF("key", "ts_s")
-          // +1000 s base: Spark's initial watermark is epoch 0, and a row
-          // AT the watermark is late — ts 0 would silently drop
-          .withColumn("ts", timestamp_micros((col("ts_s") + 1000L) * 1000000L))
-          .repartition(4, col("key")),
-        Seq("key"), Some("ts"), Some("10 seconds"))
-      val name = "sdwm2_" + java.util.UUID.randomUUID.toString.replace("-", "")
-      val q = out.writeStream.format("memory").queryName(name)
-        .outputMode("append").start()
-      try {
-        in.addData(b1: _*); q.processAllAvailable() // wm -> 269 s
-        in.addData(b2: _*); q.processAllAvailable() // expiry vs alive
-      } finally q.stop()
-      s.table(name).select(col("key"), col("ts_s")).orderBy("key", "ts_s")
+      replay(s, "append", Seq(b1, b2)) { (_, in) =>
+        graft.streaming.Streams.streamingDedup(
+          in.toDF("key", "ts_s")
+            // +1000 s base: Spark's initial watermark is epoch 0, and a row
+            // AT the watermark is late — ts 0 would silently drop
+            .withColumn("ts", timestamp_micros((col("ts_s") + 1000L) * 1000000L))
+            .repartition(4, col("key")),
+          Seq("key"), Some("ts"), Some("10 seconds"))
+      }.select(col("key"), col("ts_s")).orderBy("key", "ts_s")
     }),
 
     // ---------------- streaming signal buffer under the hash gate (r8):
@@ -2754,10 +2692,8 @@ object QueriesLLM {
     // the release must include the batch-1 payloads held in state, so
     // the cross-batch buffer path itself is what the oracle checks.
     // Hash-odd sources never signal and must emit nothing.
-    "streaming_signal_2batch" -> ((s, dir) => withStreamShuffle(s) {
+    "streaming_signal_2batch" -> ((s, dir) => {
       import s.implicits._
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-      import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
       val docs = rd(s, dir, "documents")
         .filter(col("source").isNotNull)
         .select(col("source"), col("doc_id").cast(LongType))
@@ -2769,20 +2705,13 @@ object QueriesLLM {
           org.apache.commons.codec.digest.DigestUtils.md5Hex(src)
             .substring(0, 15), 16) % 2 == 0)
         .map(src => (src, true, null: String, 0L))
+      // b1 only buffers; the signals in batch 2 release
       val (b1, b2data) = dataRows.partition(_._4 < 250)
-      val in = MemoryStream[(String, Boolean, String, Long)]
-      val out = graft.streaming.Streams.signalBuffer(
-        in.toDF.toDF("k", "sig", "payload", "seq")
-          .repartition(4, col("k")),
-        "k", "sig", "payload", "seq")
-      val name = "ssig2_" + java.util.UUID.randomUUID.toString.replace("-", "")
-      val q = out.writeStream.format("memory").queryName(name)
-        .outputMode("append").start()
-      try {
-        in.addData(b1: _*); q.processAllAvailable() // buffer only
-        in.addData(b2data ++ signals: _*); q.processAllAvailable() // release
-      } finally q.stop()
-      s.table(name).orderBy("key", "payload")
+      replay(s, "append", Seq(b1, b2data ++ signals)) { (_, in) =>
+        graft.streaming.Streams.signalBuffer(
+          in.toDF("k", "sig", "payload", "seq").repartition(4, col("k")),
+          "k", "sig", "payload", "seq")
+      }.orderBy("key", "payload")
     }),
 
     // ---------------- the EVICTION path of the streaming signal buffer
@@ -2799,10 +2728,8 @@ object QueriesLLM {
     // leak re-emits 0-99 and mismatches), keep releases its full 300-499
     // (an over-eager TTL loses 300-399 and mismatches). Both failure
     // directions hash-gated.
-    "streaming_signal_evict_3batch" -> ((s, dir) => withStreamShuffle(s) {
+    "streaming_signal_evict_3batch" -> ((s, dir) => {
       import s.implicits._
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-      import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
       val ids = rd(s, dir, "documents").filter(col("doc_id") < 500)
         .select(col("doc_id").cast(LongType))
         .orderBy("doc_id").as[Long].collect().toSeq
@@ -2814,22 +2741,14 @@ object QueriesLLM {
       val b3 = grp(100, 300, "evict", 60000L) ++ Seq(
         ("evict", true, null: String, 0L, 60000L),
         ("keep", true, null: String, 0L, 60000L))
-      val in = MemoryStream[(String, Boolean, String, Long, Long)]
-      val out = graft.streaming.Streams.signalBuffer(
-        in.toDF.toDF("k", "sig", "payload", "seq", "tsec")
-          .withColumn("ts", timestamp_seconds(col("tsec")))
-          .repartition(4, col("k")),
-        "k", "sig", "payload", "seq",
-        stateTtl = Some("49500 seconds"), eventTimeCol = Some("ts"))
-      val name = "ssig3_" + java.util.UUID.randomUUID.toString.replace("-", "")
-      val q = out.writeStream.format("memory").queryName(name)
-        .outputMode("append").start()
-      try {
-        in.addData(b1: _*); q.processAllAvailable()
-        in.addData(b2: _*); q.processAllAvailable()
-        in.addData(b3: _*); q.processAllAvailable()
-      } finally q.stop()
-      s.table(name).orderBy("key", "payload")
+      replay(s, "append", Seq(b1, b2, b3)) { (_, in) =>
+        graft.streaming.Streams.signalBuffer(
+          in.toDF("k", "sig", "payload", "seq", "tsec")
+            .withColumn("ts", timestamp_seconds(col("tsec")))
+            .repartition(4, col("k")),
+          "k", "sig", "payload", "seq",
+          stateTtl = Some("49500 seconds"), eventTimeCol = Some("ts"))
+      }.orderBy("key", "payload")
     }),
 
     // ---------------- streaming decontamination gate under the hash gate
@@ -2840,30 +2759,20 @@ object QueriesLLM {
     // identically to batch-1 rows, and the per-row tags equal the batch
     // decontaminate's exact n-gram overlap counts — same oracle modulo
     // column names.
-    "streaming_decontaminate_2batch" -> ((s, dir) => withStreamShuffle(s) {
+    "streaming_decontaminate_2batch" -> ((s, dir) => {
       import s.implicits._
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-      import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-      val d = rd(s, dir, "documents")
-      val bench = d.filter(col("doc_id") % 97 === 0)
-        .select(col("doc_id"), col("text"))
-      val rows = d.filter(col("doc_id") % 97 =!= 0)
+      val rows = rd(s, dir, "documents").filter(col("doc_id") % 97 =!= 0)
         .select(col("doc_id").cast(LongType), col("text"))
         .orderBy("doc_id").as[(Long, String)].collect().toSeq
       val (b1, b2) = rows.partition(_._1 < 250)
-      val in = MemoryStream[(Long, String)]
-      val out = graft.streaming.Streams.streamingDecontaminationGate(
-        in.toDF.toDF("doc_id", "text"), bench, "doc_id", "text", n = 8)
-        .select(col("doc_id"), col("n_suspect").cast(LongType).as("n_suspect"),
-          col("suspect"))
-      val name = "sdecon2_" + java.util.UUID.randomUUID.toString.replace("-", "")
-      val q = out.writeStream.format("memory").queryName(name)
-        .outputMode("append").start()
-      try {
-        in.addData(b1: _*); q.processAllAvailable()
-        in.addData(b2: _*); q.processAllAvailable()
-      } finally q.stop()
-      s.table(name).orderBy("doc_id")
+      replay(s, "append", Seq(b1, b2)) { (c, in) =>
+        val bench = rd(c, dir, "documents").filter(col("doc_id") % 97 === 0)
+          .select(col("doc_id"), col("text"))
+        graft.streaming.Streams.streamingDecontaminationGate(
+          in.toDF("doc_id", "text"), bench, "doc_id", "text", n = 8)
+          .select(col("doc_id"), col("n_suspect").cast(LongType).as("n_suspect"),
+            col("suspect"))
+      }.orderBy("doc_id")
     }),
 
     // ---------------- watermarked stream-stream join under the hash gate
@@ -2874,36 +2783,12 @@ object QueriesLLM {
     // later arrivals. The 10-minute watermark exceeds the event-time span,
     // so no state is evicted and the appended output must equal the full
     // batch join with the ±5 s range condition (the oracle).
-    "streaming_join_2batch" -> ((s, dir) => withStreamShuffle(s) {
+    "streaming_join_2batch" -> ((s, dir) => {
       import s.implicits._
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-      import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
       val ids = rd(s, dir, "documents").select(col("doc_id").cast(LongType))
         .filter(col("doc_id") < 500).orderBy("doc_id").as[Long].collect().toSeq
       val (lo, hi) = ids.partition(_ < 250)
-      val inL = MemoryStream[Long]
-      val inR = MemoryStream[Long]
-      // +10 s offset keeps every event time positive: Spark's watermark
-      // initializes to epoch 0 and rows below it drop as late (doc_id 0-2
-      // would land at -3..-1 s); the join condition only sees time
-      // DIFFERENCES, so the offset cancels and the oracle needs none
-      val left = inL.toDF.toDF("id").repartition(4, col("id"))
-        .select((col("id") % 50).as("k"), col("id").as("lid"),
-          timestamp_seconds(col("id") + 10).as("lts"))
-      val right = inR.toDF.toDF("id").repartition(4, col("id"))
-        .select((col("id") % 50).as("k"), col("id").as("rid"),
-          timestamp_seconds(col("id") + col("id") % 7 - 3 + 10).as("rts"))
-      val out = graft.streaming.Streams.streamJoin(left, right, Seq("k"),
-        "lts", "rts", watermark = "10 minutes", within = "5 seconds")
-        .select(col("k"), col("lid"), col("rid"))
-      val name = "sjoin2_" + java.util.UUID.randomUUID.toString.replace("-", "")
-      val q = out.writeStream.format("memory").queryName(name)
-        .outputMode("append").start()
-      try {
-        inL.addData(lo: _*); inR.addData(hi: _*); q.processAllAvailable()
-        inL.addData(hi: _*); inR.addData(lo: _*); q.processAllAvailable()
-      } finally q.stop()
-      s.table(name).orderBy("k", "lid", "rid")
+      streamJoinReplay(s, Seq(lo -> hi, hi -> lo), watermark = "10 minutes")
     }),
 
     // ---------------- the EVICTION path of the stream-stream join (r10):
@@ -2915,35 +2800,14 @@ object QueriesLLM {
     // their would-be diagonal matches (lid = rid, |Δt| ≤ 3 s ≤ 5 s) must
     // be ABSENT: the oracle joins only the batch-1/2 id ranges, and any
     // leak of a 200-249 pair hash-mismatches.
-    "streaming_join_evict_3batch" -> ((s, dir) => withStreamShuffle(s) {
+    "streaming_join_evict_3batch" -> ((s, dir) => {
       import s.implicits._
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-      import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
       val ids = rd(s, dir, "documents").select(col("doc_id").cast(LongType))
         .filter(col("doc_id") < 500).orderBy("doc_id").as[Long].collect().toSeq
       val b1 = ids.filter(_ < 200)
       val b2 = ids.filter(_ >= 300)
       val late = ids.filter(i => i >= 200 && i < 250)
-      val inL = MemoryStream[Long]
-      val inR = MemoryStream[Long]
-      val left = inL.toDF.toDF("id").repartition(4, col("id"))
-        .select((col("id") % 50).as("k"), col("id").as("lid"),
-          timestamp_seconds(col("id") + 10).as("lts"))
-      val right = inR.toDF.toDF("id").repartition(4, col("id"))
-        .select((col("id") % 50).as("k"), col("id").as("rid"),
-          timestamp_seconds(col("id") + col("id") % 7 - 3 + 10).as("rts"))
-      val out = graft.streaming.Streams.streamJoin(left, right, Seq("k"),
-        "lts", "rts", watermark = "60 seconds", within = "5 seconds")
-        .select(col("k"), col("lid"), col("rid"))
-      val name = "sjoin3_" + java.util.UUID.randomUUID.toString.replace("-", "")
-      val q = out.writeStream.format("memory").queryName(name)
-        .outputMode("append").start()
-      try {
-        inL.addData(b1: _*); inR.addData(b1: _*); q.processAllAvailable()
-        inL.addData(b2: _*); inR.addData(b2: _*); q.processAllAvailable()
-        inL.addData(late: _*); inR.addData(late: _*); q.processAllAvailable()
-      } finally q.stop()
-      s.table(name).orderBy("k", "lid", "rid")
+      streamJoinReplay(s, Seq(b1 -> b1, b2 -> b2, late -> late), watermark = "60 seconds")
     }),
 
     // ---------------- SFT / preference-data assembly (r8): the

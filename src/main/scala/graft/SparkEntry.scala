@@ -42,6 +42,18 @@ object SparkEntry {
   // coalescing and is the shape a cluster run wants — session configs stay
   // at Spark defaults.
 
+  /** A child session of `s` with `conf` set on it only: it shares the
+    * SparkContext and the cache, starts from the SparkSession.Builder
+    * options (so the `tune` defaults carry over), and has its own SQL conf
+    * and temp views.
+    * A query that needs a session setting builds on the child, so its
+    * caller's session is never changed. */
+  def childSession(s: SparkSession, conf: (String, String)*): SparkSession = {
+    val c = s.newSession()
+    conf.foreach { case (k, v) => c.conf.set(k, v) }
+    c
+  }
+
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0:
     * filter → groupBy-agg (AggregateByValue) → sort, the §7.3 slice. */
   def entry(spark: SparkSession): DataFrame = {

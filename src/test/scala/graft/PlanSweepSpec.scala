@@ -34,6 +34,9 @@ class PlanSweepSpec extends SparkSpec {
       "array_sort(", "exists(")
     val flagged = scala.collection.mutable.ListBuffer.empty[String]
     val errors = scala.collection.mutable.ListBuffer.empty[String]
+    def tempViews = spark.catalog.listTables().collect().filter(_.isTemporary).map(_.name).toSet
+    val confBefore = spark.conf.getAll
+    val viewsBefore = tempViews
     for ((name, fn) <- SparkEntry.queries.toSeq.sortBy(_._1)) {
       try {
         val conds = fn(spark, sfDir).queryExecution.sparkPlan.collect {
@@ -49,5 +52,16 @@ class PlanSweepSpec extends SparkSpec {
     assert(errors.isEmpty, s"queries failed to plan at sf0.001:\n${errors.mkString("\n")}")
     assert(flagged.isEmpty,
       s"filter re-evaluates an expensive HOF chain in:\n${flagged.mkString("\n")}")
+    // no query may change the session it is given: its SQL conf and its
+    // temp views (a streaming replay's memory sink registers one) must be
+    // exactly as they were before the sweep
+    val confAfter = spark.conf.getAll
+    val changed = (confBefore.keySet ++ confAfter.keySet)
+      .filter(k => confBefore.get(k) != confAfter.get(k))
+    val leaked = tempViews -- viewsBefore
+    assert(changed.isEmpty && leaked.isEmpty,
+      s"the sweep changed session conf: " + changed.toSeq.sorted
+        .map(k => s"$k ${confBefore.get(k)} -> ${confAfter.get(k)}").mkString(", ") +
+      s"; and left ${leaked.size} temp views: ${leaked.mkString(", ")}")
   }
 }

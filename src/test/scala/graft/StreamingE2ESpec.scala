@@ -3,6 +3,7 @@ package graft
 import java.nio.file.Files
 import java.sql.Timestamp
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.StreamingQueryListener
 import graft.streaming.Streams
 
 /** End-to-end streaming pipeline: file source → watermarked tumbling window
@@ -124,6 +125,28 @@ class StreamingE2ESpec extends SparkSpec {
       assert(pairs.exists { case (a, b) => a == "4" || b == "4" })
       assert(!pairs.exists { case (a, b) => a == "3" || b == "3" })
     } finally q.stop()
+  }
+
+  test("a listener on the caller's session sees every batch of a replay query") {
+    // the query reads only documents.doc_id: the sf0.001 ids 0-499
+    val dir = Files.createTempDirectory("graft_replay_docs").toString
+    (0L until 500L).toDF("doc_id").write.parquet(s"$dir/documents.parquet")
+    val batches = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new StreamingQueryListener {
+      override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit = ()
+      override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit = ()
+      override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit =
+        if (e.progress.numInputRows > 0) batches.incrementAndGet()
+    }
+    spark.streams.addListener(listener)
+    try {
+      // two data batches: doc ids below 250, then the rest
+      assert(SparkEntry.queries("streaming_dedup_2batch")(spark, dir).count() == 137)
+      // the listener bus delivers progress events asynchronously
+      val deadline = System.nanoTime() + 30000000000L
+      while (batches.get < 2 && System.nanoTime() < deadline) Thread.sleep(20)
+      assert(batches.get >= 2, s"listener saw ${batches.get} of 2 replay batches")
+    } finally spark.streams.removeListener(listener)
   }
 
   test("foreachBatch sink invokes the callback per micro-batch") {

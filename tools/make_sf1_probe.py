@@ -7,7 +7,7 @@ documents: 10 shifted copies; EVERY token gets a per-copy suffix so copies
 share no n-grams — cross-copy near-dup pairs would otherwise explode the
 winnow/dedup probes quadratically and the probe would measure the blow-up,
 not scaling. embeddings: 10 shifted copies with a per-copy additive offset
-on the components (the ScaleProbe recipe). Other tables are copied as-is
+on the components (the ScaleProbe recipe in SCALE.md). Other tables are copied as-is
 (the genuinely-parallel heavy queries read documents/embeddings).
 
 Usage: python3 tools/make_sf1_probe.py [src=/root/testdata/sf0.1] [dst=/tmp/sf1probe] [copies=10]
