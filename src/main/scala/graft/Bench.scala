@@ -1,15 +1,26 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+/** The suite bench: per-query noop-sink medians at `SPARK_GRAFT_SF_DIR`.
+  * Optional trailing args restrict it to the named queries (empty = all).
+  * Run: sbt "runMain graft.Bench [query...]" */
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkEntry.tune(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
+    val only = args.toSet
+    val unknown = only -- SparkEntry.queries.keySet
+    require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(", ")}")
+    val spark = SparkEntry.local(SparkEntry.envCpus)
     spark.sparkContext.setLogLevel("WARN")
+    // One noop-sink run of a query: its wall time, or why it failed. The
+    // noop write forces full materialization (count() would let Catalyst
+    // prune projections away).
+    def run(fn: (SparkSession, String) => DataFrame): Either[Throwable, Double] = {
+      val t0 = System.nanoTime()
+      try {
+        fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+        Right((System.nanoTime() - t0) / 1e9)
+      } catch { case e: Throwable => Left(e) }
+    }
     // r16 RE-BASELINE (methodology change, stated loudly): the r12–r15
     // protocol `.cache()`d every base table before the timed region, so
     // timed numbers excluded all scan I/O + parquet decode — exactly the
@@ -23,25 +34,23 @@ object Bench {
     // JIT/codegen compilation (per-query first-run effects, r5: 8.9 s vs
     // 2.3 s), which is JVM warmup, not result caching.
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt
-    val suite = (QueriesCore.queries ++ QueriesExtra.queries ++ QueriesLLM.queries).toSeq
+    val suite = (QueriesCore.queries ++ QueriesExtra.queries ++ QueriesLLM.queries)
+      .filter { case (name, _) => only.isEmpty || only(name) }
     // warmup pass 2: the WHOLE suite once, untimed. Each query's first run
     // pays its own codegen + JIT compilation (r5 example: dedup_cluster
     // 8.9s first pass vs 2.3s thereafter); a single-query warmup only
     // compiled shared scan code, so pass 1 of the timed reps still carried
     // per-query compilation and skewed 3-sample medians. One untimed full
     // pass removes that from every sample.
-    for ((_, fn) <- suite)
-      try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-      catch { case _: Throwable => () }
+    for ((_, fn) <- suite) run(fn)
     // Any operator-internal persist() that leaks past its query (no
     // unpersist handle) would otherwise be CacheManager-matched by every
     // later pass, letting timed reps read warmup-materialized state
     // (r15 judge: the winnow fingerprint cache did exactly this). Clear
     // the cache after the warmup and after every timed pass so each rep
-    // pays its own materializations.
-    def clearLeakedCaches(): Unit =
-      try spark.catalog.clearCache() catch { case _: Throwable => () }
-    clearLeakedCaches()
+    // pays its own materializations. A failing clear ends the run: carrying
+    // on would time reps against warmup-materialized state.
+    spark.catalog.clearCache()
     // Run-level contention calibration (r15): the interleaved medians and
     // the slowest-10 retime below both compare the run against ITSELF, so
     // a box that is uniformly slow for the whole window (r14: every query
@@ -52,17 +61,10 @@ object Bench {
     // contended when the two disagree by >1.3x (load changed mid-run) or
     // when SPARK_GRAFT_SENTINEL_BANK (banked idle seconds) is set and
     // either sample exceeds 1.3x the bank.
-    val sentinelName = "field_filter"
-    def timeSentinel(): Double = {
-      val fn = suite.find(_._1 == sentinelName).get._2
-      val ts = (1 to 5).map { _ =>
-        val t0 = System.nanoTime()
-        try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-        catch { case _: Throwable => () }
-        (System.nanoTime() - t0) / 1e9
-      }
-      ts.sorted.apply(2)
-    }
+    // A failed sentinel run reads -1, like a failed query.
+    val sentinel = SparkEntry.queries("field_filter")
+    def timeSentinel(): Double =
+      (1 to 5).map(_ => run(sentinel).getOrElse(-1.0)).sorted.apply(2)
     val sentinelBefore = timeSentinel()
     // Median of `reps` runs, but INTERLEAVED: run the whole suite once per
     // pass instead of back-to-back reps per query. The box is CPU-noisy with
@@ -72,21 +74,17 @@ object Bench {
     // spike into one bad sample spread across many queries — which the
     // per-query median then discards.
     val samples = (1 to reps).map { _ =>
-      val pass = suite.map { case (name, fn) =>
-        val t0 = System.nanoTime()
-        // noop write forces full materialization (count() would let Catalyst
-        // prune projections away)
-        val ok =
-          try { fn(spark, sfDir).write.format("noop").mode("overwrite").save(); true }
-          catch { case _: Throwable => false }
-        // a crashed query must not masquerade as a fast success: report -1
-        name -> (if (ok) (System.nanoTime() - t0) / 1e9 else -1.0)
-      }.toMap
-      clearLeakedCaches()
+      val pass = suite.map { case (name, fn) => name -> run(fn) }.toMap
+      spark.catalog.clearCache()
       pass
     }
+    // a crashed query must not masquerade as a fast success: report -1, and
+    // keep the first failure of each query as its cause
+    val causes = suite.flatMap { case (name, _) =>
+      samples.map(_(name)).collectFirst { case Left(e) => name -> SparkEntry.describe(e) }
+    }
     val results = suite.map { case (name, _) =>
-      val times = samples.map(_(name))
+      val times = samples.map(_(name).getOrElse(-1.0))
       (name, if (times.exists(_ < 0)) -1.0 else times.sorted.apply(times.size / 2))
     }
     val errors = results.collect { case (k, v) if v < 0 => "\"" + k + "\"" }
@@ -102,12 +100,7 @@ object Bench {
     // cleaner one.
     val byMedian = results.filter(_._2 >= 0).sortBy { case (_, v) => -v }
     val retimes = byMedian.take(10).flatMap { case (name, med) =>
-      val fn = suite.find(_._1 == name).get._2
-      val t0 = System.nanoTime()
-      val ok =
-        try { fn(spark, sfDir).write.format("noop").mode("overwrite").save(); true }
-        catch { case _: Throwable => false }
-      if (ok) Some((name, med, (System.nanoTime() - t0) / 1e9)) else None
+      run(suite.find(_._1 == name).get._2).toOption.map(re => (name, med, re))
     }
     val contended = retimes.collect {
       case (name, med, re) if re > 0 && (med / re > 1.5 || re / med > 1.5) => name
@@ -127,12 +120,15 @@ object Bench {
       "\"" + name + "\":{\"median\":" + med + ",\"retime\":" + re + "}"
     }.mkString("{", ",", "}")
     val contendedJson = contended.map("\"" + _ + "\"").mkString("[", ",", "]")
+    val causesJson = causes.map { case (name, c) =>
+      "\"" + name + "\":" + SparkEntry.jsonString(c)
+    }.mkString("{", ",", "}")
     // Verbose line first: full precision, every query (for humans reading the
     // complete log).
     val qsFull = results.map { case (k, v) => "\"" + k + "\":" + v }
       .mkString("{", ",", "}")
     val fullLine =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qsFull,"errors":$errors,"retimes":$retimesJson,"contended":$contendedJson,$sentinelJson,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qsFull,"errors":$errors,"causes":$causesJson,"retimes":$retimesJson,"contended":$contendedJson,$sentinelJson,"sf":"$sfDir"}"""
     // The verbose line goes ONLY to the sidecar: printing it to stdout ate
     // most of the harness's bounded 2000-char output tail and left the
     // machine-readable compact line truncated mid-JSON (r8's artifact had

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: write `explain("formatted")` for named queries to files —
   * the committed plan evidence under plans/r15/. Under AQE the final plan
   * only exists after execution, so each query is executed (noop-equivalent
@@ -11,12 +9,7 @@ object ExplainFmt {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0); val outDir = args(1); val suffix = args(2)
     val names = args.drop(3).toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkEntry.tune(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
+    val spark = SparkEntry.local(SparkEntry.envCpus)
     spark.sparkContext.setLogLevel("ERROR")
     // r16: no base-table cache — the bench dropped it (judge flag), and the
     // committed plan evidence should show the REAL parquet scans

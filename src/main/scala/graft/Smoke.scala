@@ -1,15 +1,9 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Smoke main mirroring the driver's t1 check: SparkEntry.entry rows > 0. */
 object Smoke {
   def main(args: Array[String]): Unit = {
-    val spark = SparkEntry.tune(SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
+    val spark = SparkEntry.local(SparkEntry.envCpus)
     spark.sparkContext.setLogLevel("WARN")
     val df = SparkEntry.entry(spark)
     val rows = df.collect()

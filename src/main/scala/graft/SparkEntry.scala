@@ -42,6 +42,36 @@ object SparkEntry {
   // coalescing and is the shape a cluster run wants — session configs stay
   // at Spark defaults.
 
+  /** The one session the mains and the test suites run on: `tune` on a
+    * `local[cpus]` master, `cpus` shuffle partitions, no web UI. */
+  def local(cpus: Int): SparkSession = tune(SparkSession.builder()
+    .master(s"local[$cpus]")
+    .config("spark.sql.shuffle.partitions", cpus.toString)
+    .config("spark.ui.enabled", "false"))
+    .getOrCreate()
+
+  /** `SPARK_GRAFT_CPUS` (default 4): the core count the mains run on. */
+  def envCpus: Int = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+
+  /** Why a query failed, in one line: the exception class and the first
+    * line of its message (which may be null). */
+  def describe(e: Throwable): String =
+    e.getClass.getName + Option(e.getMessage).flatMap(_.linesIterator.nextOption())
+      .map(": " + _).getOrElse("")
+
+  /** JSON string literal: escapes backslash, quote, and ALL control chars
+    * (<0x20) — a tab or CR in builder-authored SQL or in an exception
+    * message would otherwise make a reader's json.load fail. */
+  def jsonString(s: String): String = "\"" + s.flatMap {
+    case '"'  => "\\\""
+    case '\\' => "\\\\"
+    case '\n' => "\\n"
+    case '\r' => "\\r"
+    case '\t' => "\\t"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
+
   /** A child session of `s` with `conf` set on it only: it shares the
     * SparkContext and the cache, starts from the SparkSession.Builder
     * options (so the `tune` defaults carry over), and has its own SQL conf

@@ -48,6 +48,11 @@ class PlanShapeSpec extends SparkSpec {
     assert(codegenSpans(p) >= 1, "minhash hashing hot loop lost codegen")
   }
 
+  test("simhash, ANN scoring and gopher repetition hot loops stay codegen'd") {
+    for (q <- Seq("dedup_simhash", "ann_cosine_topk", "ann_knn_join_heap", "gopher_repetition"))
+      assert(codegenSpans(planOf(q)) >= 1, s"$q lost whole-stage codegen")
+  }
+
   test("bounded-heap knn join aggregates without a window over the candidate stream") {
     val p = planOf("ann_knn_join_heap")
     assert(!p.contains("Window"), "heap top-k must not sort/window candidates")

@@ -7,16 +7,14 @@ import org.apache.spark.sql.execution.FilterExec
   * a higher-order function over an expensive leaf — the signature of
   * `InferFiltersFromGenerate` + pushdown re-inlining a whole computed-array
   * pipeline into a per-row (or per-element) filter, which multiplied
-  * winnowing's cost ~50× before the r14 fix. The r14 sweep was a manual
-  * runMain (`graft.PlanSweep`); the pathology class is real and silent, so
-  * it now runs in CI.
+  * winnowing's cost ~50× before the r14 fix. The pathology class is real
+  * and silent, so the sweep runs in CI.
   *
   * The sweep reads `queryExecution.sparkPlan` — the optimized physical plan
   * BEFORE AQE/execution — because the re-inlining is an optimizer-time
   * artifact (AQE only re-plans exchanges, never rewrites filter
   * expressions), and skipping execution keeps the 230-query sweep to
-  * planning cost. The executed-plan variant stays available as the
-  * `graft.PlanSweep` dev tool. Streaming replay queries still execute at
+  * planning cost. Streaming replay queries still execute at
   * build time by construction (their builder runs the MemoryStream replay);
   * that is the bulk of this suite's wall time. */
 class PlanSweepSpec extends SparkSpec {

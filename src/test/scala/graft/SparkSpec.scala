@@ -5,11 +5,9 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local session for all suites (one JVM, one context). */
 object SparkSpec {
-  lazy val spark: SparkSession = SparkEntry.tune(SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false"))
-    .getOrCreate()
+  // 4 written out, not SPARK_GRAFT_CPUS: the plan-shape tests assume 4
+  // shuffle partitions whatever the machine's core count
+  lazy val spark: SparkSession = SparkEntry.local(4)
 }
 
 trait SparkSpec extends AnyFunSuite {
