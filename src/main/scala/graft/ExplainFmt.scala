@@ -25,7 +25,7 @@ object ExplainFmt {
         java.nio.file.Files.writeString(
           java.nio.file.Paths.get(s"$outDir/${n}_$suffix.txt"), fmt)
         println(s"[explain] wrote $outDir/${n}_$suffix.txt")
-      } catch { case e: Throwable => println(s"[explain] $n FAILED: $e") }
+      } catch { case e: Throwable => println(s"[explain] $n FAILED: ${SparkEntry.describe(e)}") }
     }
     spark.stop()
   }

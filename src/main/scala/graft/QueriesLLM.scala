@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.{Column, DataFrame, Encoder, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import graft.engine.Ops
 import graft.operators.{Dedup, Nlp, Similarity, TextAnalysis}
 
 /**
@@ -1370,12 +1371,9 @@ object QueriesLLM {
         .select(col("vec_id"), col("embedding").cast(ArrayType(DoubleType)).as("v"))
       val eRaw = fanOut(rd(s, dir, "embeddings"), col("vec_id"))
       val qids = Seq(0L, 7L, 42L)
-      // the JL projection is query-independent: project the corpus ONCE and
-      // checkpoint the (id, vec, proj) table — before, each of the 3
-      // queries' 2 projected-table consumers re-ran the 16×64 dot pass
-      // (StageProbe: 6 corpus projection stages where 1 suffices)
+      // 6 consumers: 2 per query, the projection is query-independent
       val proj = Similarity.randomProject(e, "v", dIn = 64, dOut = 16, "__p")
-        .localCheckpoint()
+        .transform(Ops.materialize)
       val predicted = qids.map { q =>
         Similarity.rprojRerankTopKFrom(proj, "vec_id", "v", q,
           m = 50, k = 10).withColumn("qid", lit(q))
@@ -2204,14 +2202,12 @@ object QueriesLLM {
       // battery's required-stopword rule (hash-checked by gopher_filter)
       // would annihilate the corpus and void the composition — this
       // subset splits it 277/500 at sf0.01
-      // `kept` feeds TWO consumers (the cluster pass and the survivors
-      // join) — pin it so the WARC-parse → HTML-extract → gopher chain
-      // runs once, not once per consumer
+      // 2 consumers: the cluster pass and the survivors join
       val kept = graft.operators.TextAnalysis.gopherFilter(docs, "text")
         .filter(col("n_words").between(50, 100000) &&
           col("mean_word_len").between(3.0, 10.0) && col("alpha_frac") >= 0.8)
         .select(col("doc_id"), col("text"))
-        .localCheckpoint()
+        .transform(Ops.materialize)
       val reps = Dedup.nearDupClusters(kept, "text", "doc_id",
           n = 3, k = 8, bands = 4, threshold = 0.5)
         .filter(col("cluster") === col("doc_id")).select("doc_id")
@@ -2923,9 +2919,8 @@ object QueriesLLM {
           concat(col("text"), lit(" "),
             md5(col("doc_id").cast(StringType))).as("text")),
         "text")
-        // wf feeds pieceVocab + segmentWords (each rescans it): checkpoint
-        // the vocabulary-sized table once — the unigram_em discipline
-        .localCheckpoint()
+        // 2 consumers: pieceVocab and segmentWords; vocabulary-sized
+        .transform(Ops.materialize)
       val vocab = graft.operators.Unigram.pieceVocab(wf, k = 500,
         maxPieceLen = 6)
       graft.operators.Unigram.segmentWords(wf, vocab, maxPieceLen = 6,
@@ -2943,8 +2938,8 @@ object QueriesLLM {
           concat(col("text"), lit(" "),
             md5(col("doc_id").cast(StringType))).as("text")),
         "text")
-        // wf feeds vocab + encodeWords: checkpoint once (unigram_em style)
-        .localCheckpoint()
+        // 2 consumers: vocab and encodeWords; vocabulary-sized
+        .transform(Ops.materialize)
       val vocab = graft.operators.WordPiece.vocab(wf, k = 500, maxPieceLen = 6)
       graft.operators.WordPiece.encodeWords(wf, vocab, maxPieceLen = 6,
         maxWordLen = 16).orderBy("w")
@@ -2957,10 +2952,9 @@ object QueriesLLM {
       val docs = fanOut(rd(s, dir, "documents"), col("doc_id")).select(col("doc_id"),
         concat(col("text"), lit(" "),
           md5(col("doc_id").cast(StringType))).as("text"))
-      // wf feeds four consumers across two DP rounds — materialize the
-      // distinct-word table once (it is vocabulary-sized)
+      // 4 consumers across two DP rounds; vocabulary-sized
       val wf = graft.operators.Unigram.wordFreqs(docs, "text")
-        .localCheckpoint()
+        .transform(Ops.materialize)
       val vocab = graft.operators.Unigram.pieceVocab(wf, k = 500,
         maxPieceLen = 6)
       val vocab2 = graft.operators.Unigram.emRefine(wf, vocab,
@@ -2979,11 +2973,9 @@ object QueriesLLM {
         .select(col("doc_id"),
           concat(col("text"), lit(" "),
             md5(col("doc_id").cast(StringType))).as("text"))
-      // wf feeds pieceVocab + segmentWords, each of which rescans it —
-      // without the checkpoint the corpus wordFreqs pass re-ran ~6x
-      // (StageProbe: six 32-task stages of 6-10 s CPU each)
+      // 2 consumers: pieceVocab and segmentWords; vocabulary-sized
       val wf = graft.operators.Unigram.wordFreqs(docs, "text")
-        .localCheckpoint()
+        .transform(Ops.materialize)
       val vocab = graft.operators.Unigram.pieceVocab(wf, k = 500,
         maxPieceLen = 6)
       val segs = graft.operators.Unigram.segmentWords(wf, vocab,

@@ -49,12 +49,12 @@ object StageProbe {
     for (n <- names; fn <- all.get(n)) {
       // warm once (codegen + JIT), then probe
       try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-      catch { case e: Throwable => println(s"[probe] $n warmup FAILED: $e") }
+      catch { case e: Throwable => println(s"[probe] $n warmup FAILED: ${SparkEntry.describe(e)}") }
       stages.synchronized(stages.clear())
       spark.sparkContext.addSparkListener(listener)
       val t0 = System.nanoTime()
       try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-      catch { case e: Throwable => println(s"[probe] $n FAILED: $e") }
+      catch { case e: Throwable => println(s"[probe] $n FAILED: ${SparkEntry.describe(e)}") }
       val wall = (System.nanoTime() - t0) / 1e9
       // Drain the async listener bus FOR REAL before snapshotting: a fixed
       // sleep(300) could still leave onTaskEnd/onStageCompleted undelivered

@@ -258,6 +258,10 @@ object Flow {
   def run(spark: SparkSession, json: String): Map[String, DataFrame] = {
     val (gens, procs) = parse(json)
     val procById = procs.map(p => p.id -> p).toMap
+    // a processor id shadows a generator with the same id
+    val genById = gens.map(g => g.id -> g).toMap -- procById.keySet
+    // one frame per node id, generators included: a generator feeding
+    // several processors is built (and its schema inferred) once
     val memo = scala.collection.mutable.Map.empty[String, DataFrame]
 
     // predecessors: generator or processor ids pointing at a node
@@ -268,18 +272,17 @@ object Flow {
     // cycle guard: getOrElseUpdate memoizes only after the body returns, so
     // a `next` cycle would recurse unboundedly — fail with the cycle's id
     val inProgress = scala.collection.mutable.Set.empty[String]
-    def eval(id: String): DataFrame = memo.getOrElseUpdate(id, {
-      require(inProgress.add(id), s"flow cycle at '$id'")
-      try {
-        val node = procById(id)
-        val inputs = preds.getOrElse(id, Nil).map {
-          case g if gens.exists(_.id == g.id) && !procById.contains(g.id) => generate(spark, g)
-          case p => eval(p.id)
-        }
-        require(inputs.nonEmpty, s"processor ${node.id} has no reachable input")
-        // fan-in = union of predecessor outputs (EOF-merge ⇄ plan union)
-        apply1(inputs.reduce(_.unionByName(_, allowMissingColumns = true)), node)
-      } finally inProgress.remove(id)
+    def eval(id: String): DataFrame = memo.getOrElseUpdate(id, genById.get(id) match {
+      case Some(g) => generate(spark, g)
+      case None =>
+        require(inProgress.add(id), s"flow cycle at '$id'")
+        try {
+          val node = procById(id)
+          val inputs = preds.getOrElse(id, Nil).map(p => eval(p.id))
+          require(inputs.nonEmpty, s"processor ${node.id} has no reachable input")
+          // fan-in = union of predecessor outputs (EOF-merge ⇄ plan union)
+          apply1(inputs.reduce(_.unionByName(_, allowMissingColumns = true)), node)
+        } finally inProgress.remove(id)
     })
 
     val terminals = procs.filter(_.next.isEmpty)

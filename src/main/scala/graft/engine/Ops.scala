@@ -51,6 +51,24 @@ object Ops {
   def constantAdder(df: DataFrame, result: String, template: String): DataFrame =
     df.withColumn(result, Expr.interpolate(template))
 
+  /** The one materialization point of graft: every frame that is computed
+    * once and then read several times, pinned to a layout, or cut out of a
+    * growing loop plan goes through here (`.transform(Ops.materialize)` in
+    * a chain, `x = Ops.materialize(x)` in a loop). The body is
+    * `localCheckpoint()`, and every call site relies on this contract:
+    *   - eager: it runs one job, when it is called, over the whole frame;
+    *   - it cuts lineage, so the returned frame's plan is a `LogicalRDD`
+    *     and an iterative loop's plan depth stays bounded;
+    *   - its layout (partitions and row order in each) is stable across
+    *     later executions, which `indexByLayout`'s two jobs need;
+    *   - it creates no CacheManager entry, so nothing leaks from one bench
+    *     rep into the next; its blocks are freed once the returned frame
+    *     is garbage collected;
+    *   - its blocks are executor-local: losing an executor fails the next
+    *     job over it with `CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND` instead of
+    *     recomputing. Surviving executor loss means changing this body. */
+  def materialize(df: DataFrame): DataFrame = df.localCheckpoint()
+
   /** Scalable global row index in `orderBy` order: range-partition on the
     * sort keys, sort within partitions, then number by layout.
     * Replaces `row_number().over(Window.orderBy(...))`, which funnels ALL
@@ -58,15 +76,12 @@ object Ops {
     *
     * The range shuffle MUST be pinned before numbering: indexByLayout runs
     * two executions (counts, then the indexed result), and a range shuffle
-    * re-samples its partition boundaries per execution — without
-    * materialization the two jobs can see DIFFERENT layouts, yielding
-    * duplicated and missing indices. localCheckpoint materializes the
-    * partitions once (Tungsten binary rows, lineage truncated: a lost
-    * partition fails loudly instead of silently recomputing into a new
-    * layout). */
+    * re-samples its partition boundaries per execution — without the pin
+    * the two jobs can see DIFFERENT layouts, yielding duplicated and
+    * missing indices. */
   def withGlobalIndex(df: DataFrame, orderBy: Seq[Column], result: String): DataFrame =
     indexByLayout(
-      df.repartitionByRange(orderBy: _*).sortWithinPartitions(orderBy: _*).localCheckpoint(),
+      materialize(df.repartitionByRange(orderBy: _*).sortWithinPartitions(orderBy: _*)),
       result)
 
   /** Global index following the CURRENT layout (partition order, then row
@@ -78,7 +93,7 @@ object Ops {
     * Contract: the input's layout must be deterministic across executions,
     * because this runs two jobs (counts, then result) over it. File scans
     * and hash shuffles are deterministic; a range shuffle or a round-robin
-    * `repartition(n)` is NOT — pin those with localCheckpoint first, as
+    * `repartition(n)` is NOT — pin those with `materialize` first, as
     * withGlobalIndex does. Deterministic inputs deliberately get no pin:
     * slicing the first lines of a huge file must not materialize the whole
     * file into executor storage. */
@@ -607,7 +622,8 @@ object Ops {
     rows.crossJoin(broadcast(single))
 
   /** RecursiveLookupProcessor (modules/nosql/.../sql/RecursiveLookup.scala:16):
-    * iterative frontier join to fixpoint; localCheckpoint stops plan growth. */
+    * iterative frontier join to fixpoint; materializing each frontier stops
+    * plan growth. */
   def recursiveLookup(edges: DataFrame, seeds: DataFrame, fromCol: String, toCol: String,
                       maxIter: Int = 20): DataFrame = {
     var frontier = seeds
@@ -616,7 +632,7 @@ object Ops {
     while (i < maxIter && !frontier.isEmpty) {
       frontier = frontier.join(edges, frontier("id") === edges(fromCol))
         .select(edges(toCol).as("id")).distinct()
-        .join(acc, Seq("id"), "left_anti").localCheckpoint()
+        .join(acc, Seq("id"), "left_anti").transform(materialize)
       acc = acc.union(frontier)
       i += 1
     }

@@ -832,9 +832,8 @@ object TuktuCompat {
       // number_of_decimals?, do_rounding?}: aggregate formula over the whole
       // packet, result broadcast onto every row
       case "tuktu.processors.arithmetics.ArithmeticAggregateProcessor" =>
-        // pin the input once — the aggregate job and the probe side are
-        // otherwise two independent executions of the upstream lineage
-        val pinned = df.localCheckpoint()
+        // 2 consumers: the aggregate job and the probe side
+        val pinned = Ops.materialize(df)
         val aggC = Expr.aggregate(pinned, str(c, "calculate").get)
         val rounded =
           if (bool(c, "do_rounding"))
@@ -923,9 +922,8 @@ object TuktuCompat {
       case "tuktu.processors.sample.StratifiedSamplingProcessor" =>
         val ord = uniq("__ord")
         val rn = uniq("__rn")
-        // pin once: the min-count job and the final window would otherwise
-        // each re-run the whole upstream pipeline
-        val base = Ops.indexByLayout(df, ord).localCheckpoint()
+        // 2 consumers: the min-count job and the final window
+        val base = Ops.indexByLayout(df, ord).transform(Ops.materialize)
         val orderBy =
           if (bool(c, "random")) md5(col(ord).cast(StringType)).asc
           else col(ord).asc

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.engine.Ops
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -22,7 +23,7 @@ import org.apache.spark.sql.types._
  * Spark shape — this is where the 100 TB design lives:
  *  - The corpus is touched ONCE (tokenize → word-count shuffle). All K
  *    training iterations run over the *vocabulary* table (distinct words
- *    + freq), which is ~√corpus-sized and cached; per-iteration cost is
+ *    + freq), which is ~√corpus-sized and materialized; per-iteration cost is
  *    one vocab scan + one pair-count partial-aggregate whose distinct-key
  *    space is symbol-pair-sized (tiny), so map-side combine collapses it.
  *  - Only the argmax pair (one row) ever reaches the driver per step —
@@ -101,26 +102,27 @@ object Bpe {
     *
     * Lineage discipline: each step stacks one `replace` on the vocab plan,
     * so without truncation step i would replay all i-1 prior merges from
-    * the cached base (O(K²) total work) and Catalyst analysis depth would
-    * grow linearly — fatal at realistic tokenizer sizes (tens of thousands
-    * of merges). The vocab is therefore localCheckpointed every
-    * `checkpointEvery` merges, bounding both replay and plan depth to one
+    * the materialized base (O(K²) total work) and Catalyst analysis depth
+    * would grow linearly — fatal at realistic tokenizer sizes (tens of
+    * thousands of merges). The vocab is therefore materialized every
+    * `MaterializeEvery` merges, bounding both replay and plan depth to one
     * window; the practical merge-count ceiling is then driver memory for
     * the merge list, not Catalyst. */
-  def train(df: DataFrame, textCol: String, numMerges: Int,
-            checkpointEvery: Int = 32)
+  def train(df: DataFrame, textCol: String, numMerges: Int)
            (implicit spark: SparkSession): (Seq[Merge], DataFrame) =
     trainFromBase(wordFreqs(df, textCol)
       .select(col("w"), initRep(col("w")).as("rep"), col("freq")),
-      numMerges, checkpointEvery)
+      numMerges)
+
+  /** Merge steps between vocab materializations in the training loop. */
+  private val MaterializeEvery = 32
 
   /** Shared training loop over a prepared (w, rep, freq) vocabulary base —
     * the word-level and byte-level pretokenizations differ only in how
     * that base is built. */
-  private def trainFromBase(vocabBase: DataFrame, numMerges: Int,
-                            checkpointEvery: Int): (Seq[Merge], DataFrame) = {
-    val base = vocabBase.cache()
-    var vocab = base
+  private def trainFromBase(vocabBase: DataFrame,
+                            numMerges: Int): (Seq[Merge], DataFrame) = {
+    var vocab = Ops.materialize(vocabBase) // read by every merge step
     val merges = Seq.newBuilder[Merge]
     var step = 1
     var continue = true
@@ -135,15 +137,12 @@ object Bpe {
         merges += Merge(step, l, g, l + g, c)
         vocab = vocab.select(col("w"),
           applyMerge(col("rep"), l, g).as("rep"), col("freq"))
-        if (step % checkpointEvery == 0) vocab = vocab.localCheckpoint(true)
+        if (step % MaterializeEvery == 0) vocab = Ops.materialize(vocab) // loop depth
         step += 1
       }
     }
-    // pin the final reps (vocab-sized), then release the cached base so a
-    // long-lived session doesn't accumulate per-training cache entries
-    val fin = vocab.localCheckpoint(true)
-    base.unpersist()
-    (merges.result(), fin)
+    // the final reps (vocab-sized) feed the caller's encode
+    (merges.result(), Ops.materialize(vocab))
   }
 
   /** Encode: token count per document under the learned merges. Each
@@ -277,13 +276,12 @@ object Bpe {
       .groupBy(col("w")).agg(count(lit(1)).as("freq"))
 
   /** Learn `numMerges` byte-level merge rules — same loop, same scale
-    * shape as [[train]]: all iterations run over the cached pretoken
+    * shape as [[train]]: all iterations run over the materialized pretoken
     * vocabulary, one argmax row per step reaches the driver. */
-  def trainBytes(df: DataFrame, textCol: String, numMerges: Int,
-                 checkpointEvery: Int = 32): (Seq[Merge], DataFrame) =
+  def trainBytes(df: DataFrame, textCol: String, numMerges: Int): (Seq[Merge], DataFrame) =
     trainFromBase(bytePretokenFreqs(df, textCol)
       .select(col("w"), initRepBytes(col("w")).as("rep"), col("freq")),
-      numMerges, checkpointEvery)
+      numMerges)
 
   /** Byte-level encode against a trained vocab table: distinct pretokens
     * ride the broadcast vocab (fresh ones fold the merges), per-document

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.engine.Ops
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
@@ -38,8 +39,8 @@ object Graph {
     * Scale shape: per iteration, one broadcast-able join of the rank
     * table against the edge table on src (both partitioned by the same
     * key across iterations) and one integer-sum groupBy on dst. The rank
-    * table is |nodes| rows — `localCheckpoint` per iteration keeps the
-    * plan flat, the recursiveLookup / connectedComponents discipline. */
+    * table is |nodes| rows — materializing it every 2nd iteration keeps
+    * the plan flat, the recursiveLookup / connectedComponents discipline. */
   def pageRank(edges: DataFrame, srcCol: String, dstCol: String, wCol: String,
                iters: Int = 5, scale: Long = 1000000000000L,
                dampPct: Int = 85): DataFrame = {
@@ -47,15 +48,15 @@ object Graph {
     val e = edges.select(col(srcCol).as("__s"), col(dstCol).as("__d"),
         col(wCol).cast(LongType).as("__w"))
       .groupBy("__s", "__d").agg(sum("__w").as("__w"))
-      .localCheckpoint() // reused every iteration: cut the upstream plan once
+      .transform(Ops.materialize) // read every iteration
     val nodes = e.select(col("__s").as("node"))
       .union(e.select(col("__d").as("node"))).distinct()
-      .localCheckpoint()
-    val outW = e.groupBy(col("__s")).agg(sum("__w").as("__ow")).localCheckpoint()
+      .transform(Ops.materialize) // read every iteration
+    val outW = e.groupBy(col("__s")).agg(sum("__w").as("__ow")).transform(Ops.materialize)
     val nDf = nodes.agg(count(lit(1)).as("__n")) // 1 row; rides as a frame
     var rank = nodes.crossJoin(nDf)
       .select(col("node"), expr(s"$scale div __n").as("pr"))
-      .localCheckpoint()
+      .transform(Ops.materialize)
     for (i <- 1 to iters) {
       val contrib = rank.join(e, col("node") === col("__s"))
         .join(outW, "__s")
@@ -67,9 +68,8 @@ object Graph {
         .select(col("node"),
           expr(s"(($scale * ${100 - dampPct}) div 100) div __n" +
             s" + ($dampPct * coalesce(__c, 0L)) div 100").as("pr"))
-      // every-2nd-iteration cadence: plan depth stays O(1) while the
-      // materialization jobs halve (the BPE-vocab cadence lesson)
-      if (i % 2 == 0 || i == iters) rank = rank.localCheckpoint()
+      // loop depth, every 2nd iteration: O(1) plan depth, half the jobs
+      if (i % 2 == 0 || i == iters) rank = Ops.materialize(rank)
     }
     rank
   }
@@ -92,7 +92,7 @@ object Graph {
     *
     * Scale shape: identical to [[pageRank]] — per half-step one join of a
     * |nodes|-row score table against the edge table and one integer-sum
-    * groupBy; localCheckpoint cadence keeps the plan flat. Returns
+    * groupBy; the same materialization cadence keeps the plan flat. Returns
     * (node, hub, auth), both scaled longs summing to ≈ scale. */
   def hits(edges: DataFrame, srcCol: String, dstCol: String, wCol: String,
            iters: Int = 5, scale: Long = 1000000L): DataFrame = {
@@ -100,15 +100,15 @@ object Graph {
     val e = edges.select(col(srcCol).as("__s"), col(dstCol).as("__d"),
         col(wCol).cast(LongType).as("__w"))
       .groupBy("__s", "__d").agg(sum("__w").as("__w"))
-      .localCheckpoint()
+      .transform(Ops.materialize) // read every half-step
     val nodes = e.select(col("__s").as("node"))
       .union(e.select(col("__d").as("node"))).distinct()
-      .localCheckpoint()
+      .transform(Ops.materialize) // read every half-step
     // the integer fixed point needs scale >= |nodes|: below that the
     // uniform init `scale div n` (and, later, per-node quotients against a
     // large L1 total) truncate to 0, the normalizing total hits 0, and the
     // div is undefined — null scores under non-ANSI, an exception under
-    // ANSI. `nodes` is domain-sized and already checkpointed, so the count
+    // ANSI. `nodes` is domain-sized and already materialized, so the count
     // is one cheap driver-side aggregate
     val n = nodes.count()
     if (n == 0) // empty edge set: nothing to rank, and scale / n is undefined
@@ -118,7 +118,7 @@ object Graph {
         "fixed point to stay exact — raise scale (e.g. 1e12)")
     var hub = nodes
       .select(col("node"), lit(scale / n).as("hub"))
-      .localCheckpoint()
+      .transform(Ops.materialize)
     var auth = hub.select(col("node"), col("hub").as("auth"))
     for (i <- 1 to iters) {
       // authority half-step: a_raw(d) = Σ hub(s)·w over in-edges, then L1
@@ -137,10 +137,8 @@ object Graph {
       hub = nodes.join(hRaw, Seq("node"), "left").crossJoin(hTot)
         .select(col("node"),
           expr(s"(coalesce(__raw, 0L) * $scale) div __tot").as("hub"))
-      // checkpoint HUB only: auth's chain is bounded by one half-step on
-      // top of the last hub checkpoint, so plan depth stays O(1) with
-      // half the materialization jobs (the BPE-vocab cadence lesson)
-      if (i % 2 == 0 || i == iters) hub = hub.localCheckpoint()
+      // loop depth, hub only (auth is one half-step on top), every 2nd
+      if (i % 2 == 0 || i == iters) hub = Ops.materialize(hub)
     }
     hub.join(auth, "node").select(col("node"), col("hub"), col("auth"))
   }
@@ -159,17 +157,15 @@ object Graph {
     * joins, no windows, all counts exact integers. Returns
     * (node, n_triangles) for every endpoint, zeros included. */
   def triangles(edges: DataFrame, srcCol: String, dstCol: String): DataFrame = {
-    // und/deg/o are each referenced by 2-3 downstream joins: materialize
-    // once (graph-sized tables, the pageRank/hits localCheckpoint
-    // discipline) instead of re-deriving the edge build per reference
+    // und/deg/o: 2-3 consumers each (downstream joins); graph-sized
     val und = edges.select(
         least(col(srcCol), col(dstCol)).as("u"),
         greatest(col(srcCol), col(dstCol)).as("v"))
       .filter(col("u") =!= col("v")).distinct()
-      .localCheckpoint()
+      .transform(Ops.materialize)
     val deg = und.select(explode(array(col("u"), col("v"))).as("n"))
       .groupBy("n").agg(count(lit(1)).as("dg"))
-      .localCheckpoint()
+      .transform(Ops.materialize)
     val du = deg.select(col("n").as("u"), col("dg").as("du"))
     val dv = deg.select(col("n").as("v"), col("dg").as("dv"))
     val uLower = struct(col("du"), col("u")) < struct(col("dv"), col("v"))
@@ -177,7 +173,7 @@ object Graph {
       .select(when(uLower, col("u")).otherwise(col("v")).as("a"),
         when(uLower, col("v")).otherwise(col("u")).as("b"),
         when(uLower, col("dv")).otherwise(col("du")).as("db"))
-      .localCheckpoint()
+      .transform(Ops.materialize)
     val o1 = o.select(col("a"), col("b").as("x"), col("db").as("dx"))
     val o2 = o.select(col("a"), col("b").as("y"), col("db").as("dy"))
     val wedges = o1.join(o2, Seq("a"))

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.engine.Ops
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -213,12 +214,10 @@ object LangModel {
     * simpler, equally-correct plan. */
   def perplexityBuckets(df: DataFrame, idCol: String, textCol: String,
                         langCol: String, buckets: Int = 3): DataFrame = {
-    // materialize the scored frame ONCE: the non-empty and empty branches
-    // both consume it, and without this each would re-run the whole
-    // train+score pipeline (two corpus passes each)
+    // 2 consumers: the non-empty and the empty branch
     val scored = selfScore(df, idCol, textCol)
       .join(df.select(col(idCol), col(langCol)), Seq(idCol))
-      .localCheckpoint()
+      .transform(Ops.materialize)
     val ppl = (-col("logprob_q4").cast(DoubleType)) / col("n_bigrams")
     val w = Window.partitionBy(col(langCol))
       .orderBy(col("ppl").asc, col(idCol).asc)
@@ -257,11 +256,10 @@ object LangModel {
     * cutoffs from a perplexity histogram, then assign by threshold). */
   def perplexityBucketsHist(df: DataFrame, idCol: String, textCol: String,
                             langCol: String, buckets: Int = 3): DataFrame = {
-    // four consumers (hist, tot, assignment join, empty branch) — without
-    // this checkpoint each replays the whole train+score pipeline
+    // 4 consumers: hist, tot, assignment join, empty branch
     val scored = selfScore(df, idCol, textCol)
       .join(df.select(col(idCol), col(langCol)), Seq(idCol))
-      .localCheckpoint()
+      .transform(Ops.materialize)
     val ppl = (-col("logprob_q4").cast(DoubleType)) / col("n_bigrams")
     val nonEmpty = scored.filter(col("n_bigrams") > 0)
       .withColumn("ppl", ppl)
@@ -332,16 +330,11 @@ object LangModel {
     }
     val srcG = grams(source)
     val tgtG = grams(target)
-    // checkpoint the bucket HISTOGRAMS (r15): each is <= `buckets` (10k)
-    // rows REGARDLESS of corpus size — DSIR's hashed model is the fixed
-    // bucket space, so this materialization is scale-free. Without it the
-    // two totals below each replayed the full tokenize+gram pass (StageProbe:
-    // 4 heavy 32-task corpus stages where 2 suffice — cT/totT and cS/totS
-    // are separate jobs, so ReuseExchange cannot dedup them).
+    // 2 consumers each (histogram and total); <= `buckets` rows at any scale
     val cT = tgtG.groupBy(col("bucket")).agg(count(lit(1)).as("c_t"))
-      .localCheckpoint()
+      .transform(Ops.materialize)
     val cS = srcG.groupBy(col("bucket")).agg(count(lit(1)).as("c_s"))
-      .localCheckpoint()
+      .transform(Ops.materialize)
     val totT = cT.agg(coalesce(sum(col("c_t")), lit(0L)).as("tot_t"))
     val totS = cS.agg(coalesce(sum(col("c_s")), lit(0L)).as("tot_s"))
     val term = floor(lit(1e4) *

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.engine.Ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -400,12 +401,10 @@ object Similarity {
   def pqTrain(df: DataFrame, vecCol: String, m: Int, k: Int,
               seed: Long = 42, sampleFraction: Double = 1.0): Seq[Seq[Array[Double]]] = {
     import org.apache.spark.ml.functions.array_to_vector
-    // pin the (optionally sampled) vector column ONCE: the dim probe plus
-    // the m per-subspace fits would otherwise each re-run the upstream
-    // lineage — m+1 executions of whatever feeds the training set
+    // m+1 consumers: the dim probe and the m per-subspace fits
     val pinned = (if (sampleFraction < 1.0) df.sample(sampleFraction, seed) else df)
       .select(col(vecCol).cast(ArrayType(DoubleType)).as("__pqv"))
-      .localCheckpoint()
+      .transform(Ops.materialize)
     val dim = pinned.select(size(col("__pqv"))).head.getInt(0)
     require(dim % m == 0, s"dim $dim must be divisible by m=$m")
     val dsub = dim / m
@@ -488,14 +487,12 @@ object Similarity {
     val probes = centroids.zipWithIndex.map { case (c, j) =>
       (j, c.zip(q).foldLeft(0.0) { case (acc, (a, b)) => acc + (a - b) * (a - b) })
     }.sortBy { case (j, d) => (d, j) }.take(nProbe).map(_._1)
-    // pin the probed+encoded slice: pqAdcTopK reads it twice (query-row
-    // extraction + the scoring scan), which would otherwise re-run the
-    // assignment and encode expressions over the whole corpus each time
+    // 2 consumers in pqAdcTopK: query-row extraction and the scoring scan
     val probed = pqEncodeExplicit(
         ivfAssignExplicit(df, vecCol, centroids)
           .filter(col("__centroid").isin(probes: _*)),
         vecCol, books)
-      .localCheckpoint()
+      .transform(Ops.materialize)
     pqAdcTopK(probed, idCol, vecCol, books, queryId, kResults)
   }
 
@@ -525,7 +522,7 @@ object Similarity {
       .select(col(idCol))
     val probed = pqEncodeExplicit(
         df.join(probedIds, Seq(idCol), "left_semi"), vecCol, books)
-      .localCheckpoint()
+      .transform(Ops.materialize)
     pqAdcTopK(probed, idCol, vecCol, books, queryId, kResults)
   }
 
@@ -643,14 +640,11 @@ object Similarity {
       .partitionBy(col("src_id")).orderBy(col("cos_q").desc, col("tgt_id").asc)
     val wT = org.apache.spark.sql.expressions.Window
       .partitionBy(col("tgt_id")).orderBy(col("cos_q").desc, col("src_id").asc)
-    // ranked is referenced three times (both neighborhood sums + the
-    // candidate slice): materialize the scored candidate table ONCE —
-    // otherwise the pair generation and both rank windows re-run per
-    // reference (audited: 3× the cross join, 12 window ops)
+    // 3 consumers: both neighborhood sums and the candidate slice
     val ranked = pairs
       .withColumn("rs", row_number().over(wS))
       .withColumn("rt", row_number().over(wT))
-      .localCheckpoint()
+      .transform(Ops.materialize)
     val nbrS = ranked.filter(col("rs") <= k).groupBy("src_id")
       .agg(sum("cos_q").as("nsum_src"))
     val nbrT = ranked.filter(col("rt") <= k).groupBy("tgt_id")

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.engine.Ops
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -228,7 +229,7 @@ object Sketch {
     * no true hitter is ever missed (one-sided error). */
   def cmsHeavyHitters(df: DataFrame, value: org.apache.spark.sql.Column,
                       minCount: Long, d: Int = 4, w: Int = 1024): DataFrame = {
-    val cms = cmsBuild(df, value, d, w).localCheckpoint()
+    val cms = cmsBuild(df, value, d, w).transform(Ops.materialize) // d×w cells
     val cand = df.select(value.as("q"))
     cmsEstimate(cms, cand, "q", d, w)
       .filter(col("cms_est") >= minCount)
@@ -254,18 +255,11 @@ object Sketch {
   def cmsHeavyChange(before: DataFrame, after: DataFrame,
                      value: org.apache.spark.sql.Column, minDelta: Long,
                      d: Int = 4, w: Int = 1024): DataFrame = {
-    val cb = cmsBuild(before, value, d, w).localCheckpoint()
-    val ca = cmsBuild(after, value, d, w).localCheckpoint()
-    // distinct + checkpoint the candidate set ONCE (r15): cmsEstimate
-    // distincts its query side internally, so without this cut BOTH
-    // estimate joins replayed the before∪after tokenize pass (StageProbe:
-    // two 64-task corpus stages where one suffices). The candidate set is
-    // the distinct-value vocabulary — the query's own output domain, far
-    // below the corpus stream — so one materialization is scale-free. The
-    // isNotNull filter mirrors cmsEstimate's own, keeping semantics
-    // byte-identical.
+    val cb = cmsBuild(before, value, d, w).transform(Ops.materialize) // d×w cells
+    val ca = cmsBuild(after, value, d, w).transform(Ops.materialize)
+    // 2 consumers (both estimate joins); vocabulary-sized distinct values
     val cand = before.select(value.as("q")).unionAll(after.select(value.as("q")))
-      .filter(col("q").isNotNull).distinct().localCheckpoint()
+      .filter(col("q").isNotNull).distinct().transform(Ops.materialize)
     val eb = cmsEstimate(cb, cand, "q", d, w).withColumnRenamed("cms_est", "est_before")
     val ea = cmsEstimate(ca, cand, "q", d, w).withColumnRenamed("cms_est", "est_after")
     eb.join(ea, Seq("q"))
@@ -421,8 +415,8 @@ object Sketch {
       df.select(TextAnalysis.tokenHash(value).as("__h"))
         .filter(col("__h").isNotNull).distinct()
         .orderBy(col("__h").asc).limit(k)
-    val ba = bottom(a).localCheckpoint() // k rows; reused twice below
-    val bb = bottom(b).localCheckpoint()
+    val ba = bottom(a).transform(Ops.materialize) // k rows; reused twice below
+    val bb = bottom(b).transform(Ops.materialize)
     val u = ba.union(bb).distinct().orderBy(col("__h").asc).limit(k)
     val uStats = u.agg(count(lit(1)).as("n_kept"), max(col("__h")).as("__hk"))
     val nCommon = u.join(ba, Seq("__h")).join(bb, Seq("__h"))

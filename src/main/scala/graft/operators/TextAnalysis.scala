@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.engine.Ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -288,16 +289,13 @@ object TextAnalysis {
       .withColumn("__dl", size(col("__toks")))
     val stats = base.agg(count(lit(1)).as("__n"),
       (sum(col("__dl")).cast(DoubleType) / count(lit(1))).as("__avgdl"))
-    // materialize the postings ONCE: both the idf branch and the scoring
-    // branch consume tf, and without this checkpoint each would re-run the
-    // corpus tokenize+explode scan (the connectedComponents edge pattern);
-    // a multi-query deployment persists this index across queries instead
+    // 2 consumers: the idf branch and the scoring branch
     val tf = base
       .select(col("id"), col("__dl"), explode(col("__toks")).as("__t"))
       .filter(col("__t").isin(termsLc: _*))
       .groupBy(col("id"), col("__dl"), col("__t"))
       .agg(count(lit(1)).as("__tf"))
-      .localCheckpoint()
+      .transform(Ops.materialize)
     val idf = tf.groupBy(col("__t"))
       .agg(count_distinct(col("id")).as("__df"))
       .crossJoin(broadcast(stats))
@@ -340,13 +338,13 @@ object TextAnalysis {
       .withColumn("__dl", size(col("__toks")))
     val stats = base.agg(count(lit(1)).as("__n"),
       (sum(col("__dl")).cast(DoubleType) / count(lit(1))).as("__avgdl"))
-    // postings materialized once (shared by idf and scoring, like bm25TopK)
+    // 2 consumers: the idf branch and the scoring branch
     val tf = base
       .select(col("id"), col("__dl"), explode(col("__toks")).as("__t"))
       .join(broadcast(vocab), Seq("__t"))
       .groupBy(col("id"), col("__dl"), col("__t"))
       .agg(count(lit(1)).as("__tf"))
-      .localCheckpoint()
+      .transform(Ops.materialize)
     val idf = tf.groupBy(col("__t"))
       .agg(count_distinct(col("id")).as("__df"))
       .crossJoin(broadcast(stats))

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.engine.Ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -86,10 +87,8 @@ object Unigram {
       .select(col("piece"),
         floor(lit(1e4) * (log(col("c").cast(DoubleType)) -
           log(col("__F").cast(DoubleType)))).cast(LongType).as("sq"))
-      // the refined vocabulary is vocabulary-sized but its PLAN embeds the
-      // entire round-1 DP — materialize so the next segmentation round
-      // optimizes against a flat scan, not a doubled expression tree
-      .localCheckpoint()
+      // plan depth: cut the round-1 DP out of the next round's plan
+      .transform(Ops.materialize)
   }
 
   /** Viterbi-segment every distinct word of `wf` (length ≤ `maxWordLen`)

@@ -33,6 +33,12 @@ import org.apache.spark.sql.types._
  * Returns array<struct<score double, id bigint>> best-first. Registered
  * as SQL function `topk_by(score, id, k)` via [[GraftExtensions]]; `k`
  * must be a foldable integer literal.
+ *
+ * Why not Spark's built-in `approx_top_k(item, k, maxItemsTracked)`: it
+ * ranks item VALUES by their estimated occurrence count (a frequent-items
+ * sketch, partition-invariant on the same 200k rows in 1 and 7
+ * partitions) and takes no score or id argument, so it cannot express
+ * "k best (score desc, id asc) pairs per key" at all.
  */
 case class TopKByScore(
     left: Expression,

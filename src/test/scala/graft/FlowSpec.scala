@@ -41,6 +41,49 @@ class FlowSpec extends SparkSpec {
     assert(out.map(_.getString(1)).toSeq == Seq("tag-1", "tag-3"))
   }
 
+  test("a generator feeding two branches is built once: one json schema-inference job") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_flow_gen").toFile
+    val f = new java.io.File(dir, "rows.json")
+    val w = new java.io.PrintWriter(f)
+    try Seq(1, 2, 3).foreach(x => w.println(s"""{"x": $x}""")) finally w.close()
+    val flow = s"""
+    { "generators": [
+        {"id": "g", "name": "json", "config": {"path": "${f.getPath}"},
+         "next": ["small", "big"]} ],
+      "processors": [
+        {"id": "small", "name": "filter", "config": {"predicate": "$${x} <= 1"}, "next": ["merged"]},
+        {"id": "big",   "name": "filter", "config": {"predicate": "$${x} >= 3"}, "next": ["merged"]},
+        {"id": "merged", "name": "constant_adder",
+         "config": {"value": "tag-$${x}", "result": "tag"}, "next": []} ] }"""
+    val sc = spark.sparkContext
+    val group = "flow_gen_once"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val flushed = new java.util.concurrent.CountDownLatch(1)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
+          case Some(`group`) => jobs.incrementAndGet()
+          case Some("flow_gen_once_marker") => flushed.countDown()
+          case _ =>
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "build")
+      val out = try Flow.runSingle(spark, flow) finally sc.clearJobGroup()
+      // a marker job after the build: the listener bus delivers in order,
+      // so once the marker's start arrives every build job has been counted
+      sc.setJobGroup("flow_gen_once_marker", "marker")
+      try spark.range(1).count() finally sc.clearJobGroup()
+      assert(flushed.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      assert(jobs.get == 1, s"building the flow ran ${jobs.get} jobs, expected one inference job")
+      assert(out.orderBy("x").select("x").as[Long].collect().toSeq == Seq(1L, 3L))
+    } finally {
+      sc.removeSparkListener(listener)
+      f.delete(); dir.delete()
+    }
+  }
+
   test("field ops and sort/take through the front-end") {
     val flow = """
     { "generators": [

@@ -45,17 +45,6 @@ class LLMOpsSpec extends SparkSpec {
         s"band join side carries extra columns: ${side.output.map(_.name)}")
   }
 
-  test("minhashNearDupsCached matches the recompute form and releases its cache") {
-    val (cached, base) = Dedup.minhashNearDupsCached(docs, "text", "doc_id",
-      n = 3, k = 16, bands = 8, threshold = 0.3)
-    val plain = Dedup.minhashNearDups(docs, "text", "doc_id", n = 3, k = 16, bands = 8,
-      threshold = 0.3).collect().map(_.toSeq).toSet
-    assert(cached.collect().map(_.toSeq).toSet == plain)
-    assert(base.storageLevel.useMemory) // handle really is the persisted base
-    base.unpersist(blocking = true)
-    assert(!base.storageLevel.useMemory) // caller can release deterministically
-  }
-
   test("decontaminate flags docs sharing an n-gram with the benchmark") {
     val bench = Seq((100L, "alpha beta gamma delta epsilon")).toDF("doc_id", "text")
     val corpus = Seq(

@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.Row
 import graft.engine.Ops
+import scala.jdk.CollectionConverters._
 
 /** Per-operator specs on inline frames (transliteration of the reference's
   * BaseProcessorTestSuite shapes, FIXTURES.md §1). */
@@ -29,6 +30,41 @@ class OpsSpec extends SparkSpec {
   test("runningCount numbers rows in order with start/step") {
     val out = Ops.runningCount(kv, Seq(col("n")), startAt = 10, stepSize = 5, result = "seq")
     assert(out.orderBy("n").select("seq").as[Long].collect().toSeq == Seq(10L, 15L, 20L))
+  }
+
+  test("materialize keeps the rows, cuts lineage and leaves the CacheManager alone") {
+    val cache = spark.sharedState.cacheManager
+    val wasEmpty = cache.isEmpty
+    val d = spark.range(100).toDF("id").repartition(3).withColumn("sq", col("id") * col("id"))
+    val m = Ops.materialize(d)
+    assert(m.as[(Long, Long)].collect().toSet == d.as[(Long, Long)].collect().toSet)
+    assert(m.queryExecution.analyzed.isInstanceOf[org.apache.spark.sql.execution.LogicalRDD],
+      s"materialized plan is not a LogicalRDD:\n${m.queryExecution.analyzed}")
+    assert(cache.isEmpty == wasEmpty && !m.storageLevel.isValid,
+      "materialize registered a CacheManager entry")
+  }
+
+  test("materialization goes through Ops.materialize only (source gate)") {
+    // code lines of src/main: `//` and scaladoc/block comment lines dropped,
+    // so a comment naming a mechanism does not count
+    val root = java.nio.file.Paths.get("src/main/scala")
+    val code = scala.util.Using.resource(java.nio.file.Files.walk(root)) { paths =>
+      paths.iterator().asScala.filter(_.toString.endsWith(".scala")).toSeq.flatMap { p =>
+        val lines = scala.util.Using.resource(scala.io.Source.fromFile(p.toFile, "UTF-8"))(_.getLines().toList)
+        lines.zipWithIndex.collect {
+          case (l, i) if !Seq("//", "/*", "*").exists(l.trim.startsWith) =>
+            (s"${root.relativize(p)}:${i + 1}", l.trim)
+        }
+      }
+    }
+    def sites(marker: String) = code.filter(_._2.contains(marker))
+    assert(sites(".localCheckpoint(").map(_._2) ==
+      Seq("def materialize(df: DataFrame): DataFrame = df.localCheckpoint()"),
+      s"localCheckpoint outside Ops.materialize: ${sites(".localCheckpoint(")}")
+    assert(sites(".persist(").isEmpty, s"persist in src/main: ${sites(".persist(")}")
+    assert(sites(".cache()").map(_._2) == Seq("val cached = df.cache()") &&
+      sites(".cache()").forall(_._1.startsWith("graft/sources/Sinks.scala")),
+      s".cache() outside Registry.put: ${sites(".cache()")}")
   }
 
   test("withGlobalIndex stays in DataFrame land: no RDD scan, no global window") {

@@ -61,5 +61,10 @@ class PlanSweepSpec extends SparkSpec {
       s"the sweep changed session conf: " + changed.toSeq.sorted
         .map(k => s"$k ${confBefore.get(k)} -> ${confAfter.get(k)}").mkString(", ") +
       s"; and left ${leaked.size} temp views: ${leaked.mkString(", ")}")
+    // materialization goes through Ops.materialize, which registers no
+    // CacheManager entry, so none may outlive the queries (a leaked entry
+    // would let a later bench rep read an earlier rep's data)
+    assert(spark.sharedState.cacheManager.isEmpty,
+      "building the queries left a CacheManager entry")
   }
 }
