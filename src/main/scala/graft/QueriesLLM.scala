@@ -119,6 +119,21 @@ object QueriesLLM {
     else df
   }
 
+  /** The `n` lowest-`vec_id` rows of `e` as a (centroid_id, centroid)
+    * quantizer table — the IVF queries' deterministic seeds. centroid_id
+    * is vec_id, monotone in seed position, so (distance, id) ties go to
+    * the seed the oracles' `row_number() OVER (ORDER BY vec_id)` picks. */
+  private def lowestCentroids(e: DataFrame, vecCol: String, n: Int): DataFrame =
+    e.orderBy("vec_id").limit(n)
+      .select(col("vec_id").as("centroid_id"), col(vecCol).as("centroid"))
+
+  /** m = 8 PQ codebooks seeded from the 4 lowest-`vec_id` vectors —
+    * model-sized, so they ride to the driver. */
+  private def lowestCodebooks(e: DataFrame, vecCol: String): Seq[Seq[Array[Double]]] =
+    Similarity.pqCodebooksFrom(e.orderBy("vec_id").limit(4)
+      .select(col(vecCol).cast(ArrayType(DoubleType)))
+      .collect().map(_.getSeq[Double](0).toArray).toSeq, m = 8)
+
   /** Deterministic WARC fixture for `corpus_build_warc`: every document
     * becomes one `200 text/html` WARC response (body =
     * `<html><body><p>{text}</p></body></html>` in UTF-8, target URI
@@ -777,15 +792,12 @@ object QueriesLLM {
     }),
 
     // ---------------- IVF ANN with a deterministic coarse quantizer: the 8
-    // lowest-id vectors seed the centroids, so assign → probe → re-rank is
-    // fully oracle-replicable (the k-means variant shares this exact
-    // probe/re-rank code path and is recall-spec'd)
+    // lowest-id vectors seed the (centroid_id, centroid) table, so assign →
+    // probe → re-rank is fully oracle-replicable (k-means centers take the
+    // same code path and are recall-spec'd)
     "ann_ivf_topk" -> ((s, dir) => {
       val e = rd(s, dir, "embeddings")
-      val cents = e.orderBy("vec_id").limit(8)
-        .select(col("embedding").cast(ArrayType(DoubleType)))
-        .collect().map(_.getSeq[Double](0).toArray).toSeq
-      Similarity.ivfTopKExplicit(e, "vec_id", "embedding", cents,
+      Similarity.ivfTopK(e, "vec_id", "embedding", lowestCentroids(e, "embedding", 8),
         queryId = 0, kResults = 10, nProbe = 2)
         .select(col("vec_id"), col("cosine").as("cos"))
     }),
@@ -813,24 +825,14 @@ object QueriesLLM {
     // probed slice, ADC-score the codes — end-to-end oracle-replicable.
     "ann_ivfpq" -> ((s, dir) => {
       val e = rd(s, dir, "embeddings")
-      val lows = e.orderBy("vec_id").limit(8)
-        .select(col("embedding").cast(ArrayType(DoubleType)))
-        .collect().map(_.getSeq[Double](0).toArray).toSeq
-      val books = Similarity.pqCodebooksFrom(lows.take(4), m = 8)
-      Similarity.ivfPqTopK(e, "vec_id", "embedding", lows, books,
-        queryId = 0, kResults = 10, nProbe = 2)
+      Similarity.ivfPqTopK(e, "vec_id", "embedding",
+        lowestCentroids(e, "embedding", 8), lowestCodebooks(e, "embedding"),
+        queryId = 0, kResults = 10, nProbe = 2, "centroid_id", "centroid")
     }),
 
-    // ---------------- pretrained-embedding retrieval end-to-end: a
-    // deterministic word2vec TEXT fixture (200 words × 64 dims,
-    // v[i][j] = ((i·31 + j·17) % 97 − 48) / 64 — exact in float32, so
-    // file → parse → float → double is bit-identical to the oracle's
-    // double arithmetic) is written, read back through the word2vec text
-    // SOURCE, and fed to the same IVF-PQ composite as ann_ivfpq.
-    // ---------------- the same IVF-PQ search on the centroids-as-data
-    // path: the coarse quantizer rides as a broadcast-joined (id, vector)
-    // table instead of expression literals — identical (distance, id) tie
-    // order, so the same oracle hash must come back
+    // ---------------- the same IVF-PQ search with the centroid table
+    // numbered by position (0..7) instead of by vec_id: the (distance, id)
+    // tie order is the same, so the same oracle hash must come back
     "ann_ivfpq_join" -> ((s, dir) => {
       import s.implicits._
       val e = rd(s, dir, "embeddings")
@@ -844,6 +846,12 @@ object QueriesLLM {
         queryId = 0, kResults = 10, nProbe = 2, "centroid_id", "centroid")
     }),
 
+    // ---------------- pretrained-embedding retrieval end-to-end: a
+    // deterministic word2vec TEXT fixture (200 words × 64 dims,
+    // v[i][j] = ((i·31 + j·17) % 97 − 48) / 64 — exact in float32, so
+    // file → parse → float → double is bit-identical to the oracle's
+    // double arithmetic) is written, read back through the word2vec text
+    // SOURCE, and fed to the same IVF-PQ composite as ann_ivfpq.
     "w2v_ivfpq" -> ((s, dir) => {
       val tmp = new java.io.File(
         System.getProperty("java.io.tmpdir"), "graft_w2v_fixture.txt")
@@ -856,12 +864,9 @@ object QueriesLLM {
       val vecs = graft.sources.Sources.word2vecText(s, tmp.getAbsolutePath)
         .select(substring(col("word"), 2, 10).cast(LongType).as("vec_id"),
           col("vector"))
-      val lows = vecs.orderBy("vec_id").limit(8)
-        .select(col("vector").cast(ArrayType(DoubleType)))
-        .collect().map(_.getSeq[Double](0).toArray).toSeq
-      val books = Similarity.pqCodebooksFrom(lows.take(4), m = 8)
-      Similarity.ivfPqTopK(vecs, "vec_id", "vector", lows, books,
-        queryId = 0, kResults = 10, nProbe = 2)
+      Similarity.ivfPqTopK(vecs, "vec_id", "vector",
+        lowestCentroids(vecs, "vector", 8), lowestCodebooks(vecs, "vector"),
+        queryId = 0, kResults = 10, nProbe = 2, "centroid_id", "centroid")
     }),
 
     // ---------------- embedding-cosine near-dup pairs, EXACT brute force
@@ -888,21 +893,20 @@ object QueriesLLM {
     }),
 
     // ---------------- SemDeDup (Abbas et al. 2023): cluster-scoped semantic
-    // dedup. The 8 lowest-id vectors are the explicit centroids and vectors
-    // are integerized (floor(x*1e6) — dots become exact sums < 2^53, so
-    // every cosine double and the argmin assignment are bit-identical in
-    // both engines); pairs form only within a cluster, duplicate groups are
+    // dedup. The 16 lowest-id vectors are the centroids and vectors are
+    // integerized (floor(x*1e6) — dots become exact sums < 2^53, so every
+    // cosine double and the argmin assignment are bit-identical in both
+    // engines); pairs form only within a cluster, duplicate groups are
     // connected components, and each group keeps its least-central member.
     "semantic_dedup" -> ((s, dir) => {
       val e = rd(s, dir, "embeddings")
         .select(col("vec_id"),
           transform(col("embedding").cast(ArrayType(DoubleType)),
             x => floor(x * 1e6)).cast(ArrayType(DoubleType)).as("q"))
-      val cents = e.orderBy("vec_id").limit(16)
-        .select(col("q")).collect().map(_.getSeq[Double](0).toArray).toSeq
       // fanOut: 16-centroid assignment + per-cell sort ran on the
       // single-file scan's one partition before
-      Dedup.semanticDedup(fanOut(e, col("vec_id")), "vec_id", "q", cents, tau = 0.4)
+      Dedup.semanticDedup(fanOut(e, col("vec_id")), "vec_id", "q",
+          lowestCentroids(e, "q", 16), tau = 0.4, "centroid_id", "centroid")
         .orderBy("vec_id")
     }),
 
@@ -964,7 +968,7 @@ object QueriesLLM {
     "bpe_train" -> ((s, dir) => {
       import s.implicits._
       val (merges, _) = graft.operators.Bpe.train(
-        rd(s, dir, "documents").select("text"), "text", bpeMerges)(s)
+        rd(s, dir, "documents").select("text"), "text", bpeMerges)
       merges.toDF().select("step", "lft", "rgt", "merged", "cnt")
         .orderBy("step")
     }),
@@ -977,7 +981,7 @@ object QueriesLLM {
       val docs = fanOut(rd(s, dir, "documents").select("doc_id", "text"),
         col("doc_id"))
       val (merges, vocab) = graft.operators.Bpe.train(
-        docs.select("text"), "text", bpeMerges)(s)
+        docs.select("text"), "text", bpeMerges)
       graft.operators.Bpe.encodeCountsFromVocab(docs, "doc_id", "text",
         vocab, merges)
         .orderBy("doc_id")
@@ -1483,29 +1487,29 @@ object QueriesLLM {
     }),
 
     // ---------------- IVF-cell-scoped k-NN join (the scale path of
-    // ann_knn_join): explicit integerized centroids, 2-probe candidate
-    // join, exact re-rank — the whole pipeline under the hash gate
+    // ann_knn_join): the 32 lowest-id integerized vectors as the centroid
+    // table, 2-probe candidate join, exact re-rank — the whole pipeline
+    // under the hash gate
     "ann_knn_join_ivf" -> ((s, dir) => {
       val e0 = rd(s, dir, "embeddings")
         .select(col("vec_id"),
           transform(col("embedding").cast(ArrayType(DoubleType)),
             x => floor(x * 1e6)).cast(ArrayType(DoubleType)).as("q"))
-      val cents = e0.filter(col("vec_id") < 32).orderBy("vec_id")
-        .select("q").collect().map(_.getSeq[Double](0).toArray).toSeq
-      // fanOut: the 8-centroid assignment + candidate join + exact rerank
+      val cents = e0.filter(col("vec_id") < 32)
+        .select(col("vec_id").as("centroid_id"), col("q").as("centroid"))
+      // fanOut: the centroid assignment + candidate join + exact rerank
       // ran on 1-2 tasks of the single-file scan (StageProbe: ~2.8 s)
       val e = fanOut(e0, col("vec_id"))
       graft.operators.Similarity.knnJoinIvf(e, "vec_id", "q", cents,
-        k = 3, nProbe = 2)
+        k = 3, nProbe = 2, "centroid_id", "centroid")
         .orderBy("id", "rank")
     }),
 
-    // ---------------- IVF assignment via the centroids-as-DATA path: the
-    // 64 lowest-id vectors form a (centroid_id, centroid) DataFrame that
-    // broadcast-hash-joins against every row — k = 64 is past what the
-    // expression-literal encoding should carry, and at 100 TB this is the
-    // form whose k reaches SemDeDup's √N. Integerized vectors make every
-    // distance double exact, so the argmin assignment hash-matches.
+    // ---------------- IVF assignment with centroids as DATA: the 64
+    // lowest-id vectors form a (centroid_id, centroid) DataFrame that
+    // broadcast-hash-joins against every row — at 100 TB the same plan
+    // carries SemDeDup's k ≈ √N. Integerized vectors make every distance
+    // double exact, so the argmin assignment hash-matches.
     "ivf_assign_join" -> ((s, dir) => {
       val e = rd(s, dir, "embeddings")
         .select(col("vec_id"),
@@ -1518,10 +1522,9 @@ object QueriesLLM {
         .orderBy("vec_id")
     }),
 
-    // ---------------- SemDeDup end-to-end on the centroids-as-data path:
-    // same pipeline as semantic_dedup but with a 64-centroid DataFrame
-    // quantizer (assignment + centroid-similarity in one broadcast-join
-    // pass) — the full dedup wiring of the scale path under the hash gate.
+    // ---------------- SemDeDup with a 64-centroid quantizer: the same
+    // pipeline as semantic_dedup at 4× its centroid count (assignment +
+    // centroid-similarity in one broadcast-join pass) under the hash gate.
     "semantic_dedup_join" -> ((s, dir) => {
       val e = rd(s, dir, "embeddings")
         .select(col("vec_id"),
@@ -2284,18 +2287,14 @@ object QueriesLLM {
     }),
 
     // ---------------- same classifier through the weights-as-DATA apply
-    // path (classifierScoreWeights): the (bucket, w_milli) table — here the
-    // md5 fixture materialized as 32k rows, in deployment the coefficients
-    // classifierTrain/classifierExportWeights learn — rides a
-    // BroadcastHashJoin; must reproduce the expression path bit-for-bit
+    // (classifierScoreWeights) called directly: the (bucket, w_milli)
+    // table — here the md5 fixture's 32k rows, in deployment the
+    // coefficients classifierTrain/classifierExportWeights learn — rides a
+    // BroadcastHashJoin; same hash as quality_classifier
     "quality_classifier_join" -> ((s, dir) => {
-      val wtab = s.range(0, 1L << 15).select(
-        col("id").cast(IntegerType).as("bucket"),
-        (graft.operators.TextAnalysis.tokenHash(
-          concat(lit("qc1:"), col("id").cast(StringType))) % 2001 - 1000)
-          .as("w_milli"))
       graft.operators.TextAnalysis.classifierScoreWeights(
-        rd(s, dir, "documents"), "doc_id", "text", wtab)
+        rd(s, dir, "documents"), "doc_id", "text",
+        graft.operators.TextAnalysis.classifierFixtureWeights(s, 1 << 15, "qc1"))
         .orderBy("doc_id")
     }),
 
@@ -3765,7 +3764,7 @@ object QueriesLLM {
          GROUP BY vec_id ORDER BY adc ASC, vec_id ASC LIMIT 10""",
     "ann_ivfpq" ->
       ivfPqOracleSql("SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings"),
-    "ann_ivfpq_join" -> // literal-path ≡ join-path: same oracle
+    "ann_ivfpq_join" -> // centroid ids by position ≡ by vec_id: same oracle
       ivfPqOracleSql("SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings"),
     "w2v_ivfpq" ->
       // same IVF-PQ math over the deterministic pretrained-w2v fixture the

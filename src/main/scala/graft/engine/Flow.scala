@@ -27,25 +27,29 @@ import scala.jdk.CollectionConverters._
  * iteratee machinery to port: Catalyst is the scheduler.
  */
 object Flow {
-  private val mapper = new ObjectMapper()
+  private[engine] val mapper = new ObjectMapper()
 
   final case class Node(id: String, name: String, config: JsonNode, next: Seq[String],
                         result: String)
 
   def parse(json: String): (Seq[Node], Seq[Node]) = {
     val root = mapper.readTree(json)
-    def nodes(field: String): Seq[Node] =
-      Option(root.get(field)).map(_.elements().asScala.toSeq).getOrElse(Nil).zipWithIndex.map {
-        case (n, i) =>
-          Node(
-            id = Option(n.get("id")).map(_.asText).getOrElse(s"$field$i"),
-            name = n.get("name").asText,
-            config = Option(n.get("config")).getOrElse(mapper.createObjectNode()),
-            next = Option(n.get("next")).map(_.elements().asScala.map(_.asText).toSeq).getOrElse(Nil),
-            result = Option(n.get("result")).map(_.asText).getOrElse("result"))
-      }
-    (nodes("generators"), nodes("processors"))
+    def field(f: String): Seq[JsonNode] =
+      Option(root.get(f)).map(_.elements().asScala.toSeq).getOrElse(Nil)
+    (nodes(field("generators"), "generators"), nodes(field("processors"), "processors"))
   }
+
+  /** Decode a JSON array of flow nodes; a node without an `id` gets
+    * `idPrefix` + its position. */
+  private[engine] def nodes(items: Seq[JsonNode], idPrefix: String): Seq[Node] =
+    items.zipWithIndex.map { case (n, i) =>
+      Node(
+        id = Option(n.get("id")).map(_.asText).getOrElse(s"$idPrefix$i"),
+        name = n.get("name").asText,
+        config = Option(n.get("config")).getOrElse(mapper.createObjectNode()),
+        next = Option(n.get("next")).map(_.elements().asScala.map(_.asText).toSeq).getOrElse(Nil),
+        result = Option(n.get("result")).map(_.asText).getOrElse("result"))
+    }
 
   // ------------------------------------------------------------ generators
   private def generate(spark: SparkSession, n: Node): DataFrame = {
@@ -260,31 +264,8 @@ object Flow {
     val procById = procs.map(p => p.id -> p).toMap
     // a processor id shadows a generator with the same id
     val genById = gens.map(g => g.id -> g).toMap -- procById.keySet
-    // one frame per node id, generators included: a generator feeding
-    // several processors is built (and its schema inferred) once
-    val memo = scala.collection.mutable.Map.empty[String, DataFrame]
-
-    // predecessors: generator or processor ids pointing at a node
-    val preds: Map[String, Seq[Node]] =
-      (gens ++ procs).flatMap(n => n.next.map(_ -> n)).groupBy(_._1)
-        .map { case (k, v) => k -> v.map(_._2) }
-
-    // cycle guard: getOrElseUpdate memoizes only after the body returns, so
-    // a `next` cycle would recurse unboundedly — fail with the cycle's id
-    val inProgress = scala.collection.mutable.Set.empty[String]
-    def eval(id: String): DataFrame = memo.getOrElseUpdate(id, genById.get(id) match {
-      case Some(g) => generate(spark, g)
-      case None =>
-        require(inProgress.add(id), s"flow cycle at '$id'")
-        try {
-          val node = procById(id)
-          val inputs = preds.getOrElse(id, Nil).map(p => eval(p.id))
-          require(inputs.nonEmpty, s"processor ${node.id} has no reachable input")
-          // fan-in = union of predecessor outputs (EOF-merge ⇄ plan union)
-          apply1(inputs.reduce(_.unionByName(_, allowMissingColumns = true)), node)
-        } finally inProgress.remove(id)
-    })
-
+    val eval = evaluator(procById, predecessors(gens ++ procs),
+      id => genById.get(id).map(generate(spark, _)))
     val terminals = procs.filter(_.next.isEmpty)
     if (terminals.isEmpty)
       gens.map(g => g.id -> generate(spark, g)).toMap
@@ -317,28 +298,44 @@ object Flow {
       reachable ++= step
       frontier = step
     }
-    val preds: Map[String, Seq[Node]] =
-      procs.filter(n => reachable(n.id)).flatMap(n => n.next.map(_ -> n))
-        .groupBy(_._1).map { case (k, v) => k -> v.map(_._2) }
+    // `start` reads `df` alone, under an id no node can carry
+    val input = "\u0000input"
+    val eval = evaluator(procById,
+      predecessors(procs.filter(n => reachable(n.id))) + (start -> Seq(input)),
+      id => if (id == input) Some(df) else None)
+    union(procs.filter(n => reachable(n.id) &&
+      n.next.forall(nx => !procById.contains(nx))).map(t => eval(t.id)))
+  }
+
+  /** Ids of the nodes whose `next` names each node. */
+  private def predecessors(nodes: Seq[Node]): Map[String, Seq[String]] =
+    nodes.flatMap(n => n.next.map(_ -> n.id)).groupBy(_._1)
+      .map { case (k, v) => k -> v.map(_._2) }
+
+  /** Fan-in: the union of predecessor outputs (EOF-merge ⇄ plan union). */
+  private def union(dfs: Seq[DataFrame]): DataFrame =
+    dfs.reduce(_.unionByName(_, allowMissingColumns = true))
+
+  /** The demand-driven evaluator [[run]] and [[subFlow]] share: `source`
+    * yields a frame for a source id (a generator, or a sub-flow's input);
+    * any other id is a processor over the union of its predecessors.
+    * One frame per id, so a node feeding several others is built (and its
+    * schema inferred) once. */
+  private def evaluator(procById: Map[String, Node], preds: Map[String, Seq[String]],
+                        source: String => Option[DataFrame]): String => DataFrame = {
     val memo = scala.collection.mutable.Map.empty[String, DataFrame]
-    // getOrElseUpdate memoizes only AFTER the body returns, so a `next`
-    // cycle would re-enter eval unboundedly — fail with the cycle's id
-    // instead of a StackOverflowError
+    // cycle guard: getOrElseUpdate memoizes only after the body returns, so
+    // a `next` cycle would recurse unboundedly — fail with the cycle's id
     val inProgress = scala.collection.mutable.Set.empty[String]
-    def eval(id: String): DataFrame = memo.getOrElseUpdate(id, {
-      require(inProgress.add(id), s"sub-flow cycle at '$id'")
+    def eval(id: String): DataFrame = memo.getOrElseUpdate(id, source(id).getOrElse {
+      require(inProgress.add(id), s"flow cycle at '$id'")
       try {
         val node = procById(id)
-        val input =
-          if (id == start) df
-          else preds.getOrElse(id, Nil).map(p => eval(p.id))
-            .reduce(_.unionByName(_, allowMissingColumns = true))
-        apply1(input, node)
+        val inputs = preds.getOrElse(id, Nil).map(eval)
+        require(inputs.nonEmpty, s"processor ${node.id} has no reachable input")
+        apply1(union(inputs), node)
       } finally inProgress.remove(id)
     })
-    val terminals = procs.filter(n => reachable(n.id) &&
-      n.next.forall(nx => !procById.contains(nx)))
-    terminals.map(t => eval(t.id))
-      .reduce(_.unionByName(_, allowMissingColumns = true))
+    eval
   }
 }

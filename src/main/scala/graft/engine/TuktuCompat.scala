@@ -52,8 +52,6 @@ object TuktuCompat {
     * config directory. */
   @volatile var configRepo: String = "configs"
 
-  private val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-
   private def loadConfigRaw(name: String): String = {
     val fn = if (name.endsWith(".json")) name else name + ".json"
     new String(java.nio.file.Files.readAllBytes(
@@ -61,18 +59,10 @@ object TuktuCompat {
   }
 
   private def loadConfig(name: String): JsonNode =
-    mapper.readTree(loadConfigRaw(name))
+    Flow.mapper.readTree(loadConfigRaw(name))
 
-  /** Processor-array JSON → Flow nodes (the shape Flow.parse reads). */
-  private def flowNodes(procs: Seq[JsonNode]): Seq[Flow.Node] =
-    procs.zipWithIndex.map { case (n, i) =>
-      Flow.Node(
-        id = str(n, "id").getOrElse(s"p$i"),
-        name = n.get("name").asText,
-        config = Option(n.get("config")).getOrElse(mapper.createObjectNode()),
-        next = strs(n, "next"),
-        result = str(n, "result").getOrElse("result"))
-    }
+  /** Processor-array JSON → Flow nodes; an id-less node is `p<index>`. */
+  private def flowNodes(procs: Seq[JsonNode]): Seq[Flow.Node] = Flow.nodes(procs, "p")
 
   /** Navigate a (possibly nested) path from the row root. */
   private def colPath(path: Seq[String]): Column =
@@ -1208,7 +1198,7 @@ object TuktuCompat {
                 .map(r => str(r, "source").get -> str(r, "target").get)).toMap
               val raw = Flow.interpolateVars(
                 loadConfigRaw(str(pl, "config_path").get), repl)
-              val nodes = flowNodes(arr(mapper.readTree(raw), "processors"))
+              val nodes = flowNodes(arr(Flow.mapper.readTree(raw), "processors"))
               strs(pl, "start").map(s0 => Flow.subFlow(input, nodes, s0))
             }
           }

@@ -1,5 +1,6 @@
 package graft.ml
 
+import graft.operators.Similarity
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType}
@@ -45,11 +46,6 @@ object DeepLearn {
 
   /** pow(E,·) form matches the reference's sigmoid bit-for-bit. */
   def sigmoid(x: Double): Double = 1.0 / (1.0 + math.pow(math.E, -x))
-
-  /** Native codegen integer dot product ([[graft.plans.VecDotLong]],
-    * registered as `vec_idot` by `GraftExtensions`) — the quantized
-    * forward passes' per-unit kernel. */
-  private def idot(a: Column, b: Column): Column = call_function("vec_idot", a, b)
 
   /** The reference nets' random stream: java.util.Random under
     * scala.util.Random(1234), one nextDouble per uniform/bernoulli. */
@@ -448,7 +444,7 @@ object DeepLearn {
     // bit-identical to the HOF fold it replaces, minus the interpreted
     // per-element lambda dispatch
     val z1 = w1.zip(b1).map { case (row, bias) =>
-      lit(bias * xScale.toLong) + idot(col("__xq"), typedlit(row))
+      lit(bias * xScale.toLong) + Similarity.idot(col("__xq"), typedlit(row))
     }
     // array() would resurrect a null input into a non-null array of null
     // elements, so re-null explicitly: null embedding → null outputs
@@ -457,7 +453,7 @@ object DeepLearn {
         floor(lit(10000.0) / (lit(1.0) + exp(-(z.cast(DoubleType) / zDenom))))
           .cast(LongType)): _*)).as("__a1"))
     val z2 = w2.zip(b2).map { case (row, bias) =>
-      lit(bias) + idot(col("__a1"), typedlit(row))
+      lit(bias) + Similarity.idot(col("__a1"), typedlit(row))
     }
     val lg = hid.select(col(idCol), col("__a1"),
       when(col("__a1").isNull, lit(null)).otherwise(array(z2: _*)).as("__z2"))
@@ -555,7 +551,7 @@ object DeepLearn {
     var inScale: Long = 1L << xScaleBits
     for ((w, b) <- layers) {
       val z = w.zip(b).map { case (row, bias) =>
-        lit(bias * inScale) + idot(col("__act"), typedlit(row))
+        lit(bias * inScale) + Similarity.idot(col("__act"), typedlit(row))
       }
       val denom = inScale.toDouble * wScale
       // array() would turn a null previous layer into a non-null array of
@@ -567,7 +563,7 @@ object DeepLearn {
       inScale = 10000L
     }
     val z3 = headW.zip(headB).map { case (row, bias) =>
-      lit(bias * inScale) + idot(col("__act"), typedlit(row))
+      lit(bias * inScale) + Similarity.idot(col("__act"), typedlit(row))
     }
     cur = cur.select(col(idCol), col("__act"),
       when(col("__act").isNull, lit(null)).otherwise(array(z3: _*)).as("__z3"))

@@ -108,8 +108,7 @@ object Bpe {
     * `MaterializeEvery` merges, bounding both replay and plan depth to one
     * window; the practical merge-count ceiling is then driver memory for
     * the merge list, not Catalyst. */
-  def train(df: DataFrame, textCol: String, numMerges: Int)
-           (implicit spark: SparkSession): (Seq[Merge], DataFrame) =
+  def train(df: DataFrame, textCol: String, numMerges: Int): (Seq[Merge], DataFrame) =
     trainFromBase(wordFreqs(df, textCol)
       .select(col("w"), initRep(col("w")).as("rep"), col("freq")),
       numMerges)

@@ -715,39 +715,22 @@ object Dedup {
 
   /** SemDeDup (Abbas et al. 2023, arXiv:2303.09540 — public): semantic
     * near-duplicate removal over an embedding column. Assign every vector to
-    * its nearest explicit centroid ([[Similarity.ivfAssignExplicit]] —
-    * deterministic argmin L2, expression-only), form candidate pairs ONLY
-    * within a cluster, keep pairs with cosine ≥ `tau` as semantic
-    * duplicates, group them with the large/small-star component loop, and
-    * retain per group the member LEAST similar to its centroid (the paper's
-    * keep rule: extreme points carry the information), ties to the lowest
-    * id. Returns one row per input: (id, cluster, keep).
+    * its nearest centroid ([[Similarity.ivfAssignJoin]] — argmin L2, ties
+    * to the lowest centroid id), form candidate pairs ONLY within a
+    * cluster, keep pairs with cosine ≥ `tau` as semantic duplicates, group
+    * them with the large/small-star component loop, and retain per group
+    * the member LEAST similar to its centroid (the paper's keep rule:
+    * extreme points carry the information), ties to the lowest id. Returns
+    * one row per input: (id, cluster, keep).
     *
-    * 100 TB shape: the quadratic term is cluster-scoped — the centroid count
-    * plays the paper's k ≈ √N role, bounding every bucket of the self-join;
-    * the join carries only (centroid, id) and vectors hash-join back once
-    * per side (the pairs-first layout minhash LSH uses), so the wide stages
-    * are three hash joins plus the component loop — never all-pairs. */
-  def semanticDedup(df: DataFrame, idCol: String, vecCol: String,
-                    centroids: Seq[Array[Double]], tau: Double): DataFrame = {
-    val v = col(vecCol).cast(ArrayType(DoubleType))
-    val assigned = Similarity.ivfAssignExplicit(df, vecCol, centroids)
-    val centsLit = array(centroids.map(c => array(c.map(lit): _*)): _*)
-    val centSim = Similarity.cosine(v, element_at(centsLit, col("__centroid") + 1))
-    // evaluates the k·d centroid-literal tree once; ~24 B/row, no vectors
-    val nodes = assigned
-      .select(col(idCol).as("node"), col("__centroid"), centSim.as("__centsim"))
-      .transform(Ops.materialize)
-    semanticDedupFrom(df, idCol, vecCol, nodes, tau)
-  }
-
-  /** [[semanticDedup]] with centroids as DATA
-    * ([[Similarity.ivfAssignJoin]]) — the form whose centroid count can
-    * reach the paper's k ≈ √N at 100 TB (10⁵–10⁶ centroids never fit an
-    * expression tree). Assignment AND centroid-similarity ride the same
-    * broadcast-hash join pass; identical output to the literal path on the
-    * same centroid set (spec-asserted: the join computes the same vec_l2sq
-    * / cosine doubles and the same (dist, id) argmin tie rule). */
+    * 100 TB shape: the centroids are a table, so their count can reach the
+    * paper's k ≈ √N (10⁵–10⁶ centroids never fit an expression tree), and
+    * assignment AND centroid-similarity ride the same broadcast-hash join
+    * pass. The quadratic term is cluster-scoped — the centroid count
+    * bounds every bucket of the self-join; the join carries only
+    * (centroid, id) and vectors hash-join back once per side (the
+    * pairs-first layout minhash LSH uses), so the wide stages are three
+    * hash joins plus the component loop — never all-pairs. */
   def semanticDedup(df: DataFrame, idCol: String, vecCol: String,
                     cents: DataFrame, tau: Double,
                     centIdCol: String, centVecCol: String): DataFrame = {
@@ -755,14 +738,6 @@ object Dedup {
         centIdCol, centVecCol, withCentSim = true)
       .select(col(idCol).as("node"), col("__centroid"), col("__centsim"))
       .transform(Ops.materialize) // 3 consumers: both pair sides + keep rule
-    semanticDedupFrom(df, idCol, vecCol, nodes, tau)
-  }
-
-  /** Shared SemDeDup core over the slim `nodes` = (node, __centroid,
-    * __centsim) frame: cluster-scoped candidate pairs, cosine-τ gate,
-    * connected components, keep-least-central. */
-  private def semanticDedupFrom(df: DataFrame, idCol: String, vecCol: String,
-                                nodes: DataFrame, tau: Double): DataFrame = {
     val v = col(vecCol).cast(ArrayType(DoubleType))
     val cand = nodes.select(col("__centroid"), col("node").as("id1"))
       .join(nodes.select(col("__centroid"), col("node").as("id2")), Seq("__centroid"))

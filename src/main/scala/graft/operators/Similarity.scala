@@ -200,109 +200,52 @@ object Similarity {
     * posting lists → probe the `nProbe` nearest centroids only. The scale
     * path for billion-vector corpora: train on a sample, assign in one pass
     * (each a narrow shuffle), and a query touches nProbe/k of the data.
-    * Returns (model, assigned) — reuse `assigned` across queries. */
-  def ivfIndex(df: DataFrame, idCol: String, vecCol: String, k: Int,
-               seed: Long = 42): (org.apache.spark.ml.clustering.KMeansModel, DataFrame) = {
+    * Trains the quantizer; its `clusterCenters`, as a (centroid_id,
+    * centroid) table, are what [[ivfAssignJoin]], [[ivfTopK]] and
+    * [[ivfPqTopK]] take. */
+  def ivfIndex(df: DataFrame, vecCol: String, k: Int,
+               seed: Long = 42): org.apache.spark.ml.clustering.KMeansModel = {
     import org.apache.spark.ml.functions.array_to_vector
-    val withVec = df.withColumn("__v",
-      array_to_vector(col(vecCol).cast(org.apache.spark.sql.types.ArrayType(
-        org.apache.spark.sql.types.DoubleType))))
-    val model = new org.apache.spark.ml.clustering.KMeans()
-      .setK(k).setSeed(seed).setFeaturesCol("__v").setPredictionCol("__centroid")
-      .fit(withVec)
-    (model, model.transform(withVec).drop("__v"))
+    new org.apache.spark.ml.clustering.KMeans()
+      .setK(k).setSeed(seed).setFeaturesCol("__v")
+      .fit(df.select(array_to_vector(col(vecCol).cast(ArrayType(DoubleType))).as("__v")))
   }
 
-  def ivfTopK(assigned: DataFrame, model: org.apache.spark.ml.clustering.KMeansModel,
-              idCol: String, vecCol: String, queryId: Long, kResults: Int = 10,
-              nProbe: Int = 2): DataFrame = {
-    val q = assigned.filter(col(idCol) === queryId)
-      .select(col(vecCol).as("__qv")).head.getSeq[Float](0).toArray
-    // nearest centroids to the query (tiny driver-side computation on k rows)
-    val probes = model.clusterCenters.zipWithIndex.map { case (c, i) =>
-      val d = c.toArray.zip(q).map { case (a, b) => (a - b) * (a - b) }.sum
-      (i, d)
-    }.sortBy(_._2).take(nProbe).map(_._1)
-    val qvec = array(q.map(v => lit(v)): _*)
-    assigned.filter(col("__centroid").isin(probes: _*) && col(idCol) =!= queryId)
-      .select(col(idCol), cosine(col(vecCol), qvec).as("cosine"))
-      .filter(col("cosine").isNotNull)
-      .orderBy(col("cosine").desc, col(idCol).asc)
-      .limit(kResults)
+  // ------------------------------------------------- IVF centroids as DATA
+  // Every IVF operator takes its coarse quantizer as a (centroid_id,
+  // centroid) DataFrame: a trained model's centers, seed rows of the table
+  // itself, or SemDeDup's k ≈ √N set at 100 TB (10⁵–10⁶ centroids × 768
+  // dims, which no expression tree could carry). The centroid table
+  // broadcast-hash-joins against the data (constant-key equi-join, so the
+  // build side is the k-row table and the plan is a BroadcastHashJoin — k
+  // never appears in any expression), each (row, centroid) pair scores ONE
+  // codegen'd vec_l2sq, and the per-row argmin folds in the partial
+  // aggregate, map-side: k pair-rows collapse to one before the exchange,
+  // so the only shuffle carries (id, centroid) — the vectors never leave
+  // their scan. Ties go to the lowest centroid id on every path: the
+  // (distance, id) struct order is the tie rule.
+
+  /** Every (row, centroid) pair as (idCol, __v, __cid, __cv), the
+    * centroid table broadcast. The join key is 0 on both sides, but
+    * computed from a column as pmod(hash(·), 1): the optimizer folds a
+    * literal key (and `hash(·) * 0`) into an always-true condition, and
+    * the join then plans as a nested loop instead of a hash join. */
+  private def centroidPairs(df: DataFrame, idCol: String, vecCol: String,
+                            cents: DataFrame, centIdCol: String,
+                            centVecCol: String): DataFrame = {
+    def zero(c: Column): Column = pmod(hash(c), lit(1)).as("__ck")
+    val c = cents.select(col(centIdCol).cast(IntegerType).as("__cid"),
+      col(centVecCol).cast(ArrayType(DoubleType)).as("__cv"))
+    df.select(col(idCol), col(vecCol).cast(ArrayType(DoubleType)).as("__v"),
+        zero(col(idCol)))
+      .join(broadcast(c.select(col("*"), zero(col("__cid")))), Seq("__ck"))
   }
 
-  /** IVF assignment with EXPLICIT centroids — deterministic and
-    * expression-only (no k-means training), so the full IVF path
-    * (assign → probe → re-rank) is replicable by the SQL oracle. Centroids
-    * can be an exported KMeansModel's centers or any deterministic seed set.
-    * Assignment is argmin squared-L2 with ties to the lowest centroid index;
-    * the per-row distance array is materialized once (HOF lambdas get no
-    * codegen subexpression elimination). */
-  def ivfAssignExplicit(df: DataFrame, vecCol: String,
-                        centroids: Seq[Array[Double]]): DataFrame = {
-    require(centroids.nonEmpty, "need at least one centroid")
-    val v = col(vecCol).cast(ArrayType(DoubleType))
-    val dists = centroids.map { c =>
-      val cl = array(c.map(lit): _*)
-      l2sq(v, cl)
-    }
-    val withD = df.withColumn("__dists", array(dists: _*))
-    // argmin as array_position(min): FIRST occurrence = lowest centroid
-    // index on ties (same semantics as the old per-index when-chain), and
-    // crucially only TWO references to __dists. Downstream filters on
-    // __centroid get the alias substituted by predicate pushdown — the
-    // when-chain form blew the pushed predicate up to 16 copies of the
-    // full 16-kernel distance array (measured 2.8 s vs 0.2 s on the probe
-    // filter at sf0.1).
-    val centroid =
-      (array_position(col("__dists"), array_min(col("__dists"))) - 1)
-        .cast(org.apache.spark.sql.types.IntegerType)
-    withD.withColumn("__centroid", centroid).drop("__dists")
-  }
-
-  /** Like [[ivfAssignExplicit]] but also emits each vector's `__probes` —
-    * the indices of its `nProbe` nearest centroids, same (distance, index)
-    * tie order as the home assignment. The per-row sort runs over the
-    * |centroids|-sized array, not the data. */
-  def ivfAssignProbes(df: DataFrame, vecCol: String,
-                      centroids: Seq[Array[Double]], nProbe: Int): DataFrame = {
-    require(centroids.nonEmpty && nProbe >= 1, "need centroids and nProbe >= 1")
-    val v = col(vecCol).cast(ArrayType(DoubleType))
-    val dists = centroids.map { c =>
-      val cl = array(c.map(lit): _*)
-      l2sq(v, cl)
-    }
-    val zipped = array(centroids.indices.map(j =>
-      struct(dists(j).as("d"), lit(j).as("j"))): _*)
-    val sorted = array_sort(zipped) // lexicographic: (distance, index)
-    df.withColumn("__sorted", sorted)
-      .withColumn("__centroid", element_at(col("__sorted"), 1).getField("j"))
-      .withColumn("__probes", transform(
-        slice(col("__sorted"), 1, math.min(nProbe, centroids.size)),
-        s => s.getField("j")))
-      .drop("__sorted")
-  }
-
-  // ------------------------------------------- centroids as DATA, not code
-  // ivfAssignExplicit/ivfAssignProbes embed the centroids in the expression
-  // tree — fine at the k ≤ ~256 the oracle rows use, but SemDeDup's own
-  // k ≈ √N prescription at 100 TB (10⁵–10⁶ centroids × 768 dims) cannot
-  // ride a projection. These variants take a (centroid_id, vector)
-  // DataFrame instead: the centroid table broadcast-hash-joins against the
-  // data (constant-key equi-join, so the build side is the k-row table and
-  // the plan is a BroadcastHashJoin — k never appears in any expression),
-  // each (row, centroid) pair scores ONE codegen'd vec_l2sq, and the
-  // per-row argmin folds in the partial aggregate, map-side: k pair-rows
-  // collapse to one before the exchange, so the only shuffle carries
-  // (id, centroid) — the vectors never leave their scan.
-
-  /** Assignment with centroids as data: returns the SLIM frame
-    * (idCol, __centroid[, __centsim]) — join it back by id where the
-    * payload is needed; the pairs-first consumers (semanticDedup,
-    * knnJoinIvf) never need to. Tie rule matches [[ivfAssignExplicit]]
-    * when `centIdCol` carries the centroid's index: argmin squared-L2 with
-    * ties to the lowest centroid id (`min` over (dist, id) structs — the
-    * struct ordering is the tie rule, so the aggregate is deterministic).
+  /** IVF assignment: returns the SLIM frame (idCol, __centroid[,
+    * __centsim]) — join it back by id where the payload is needed; the
+    * pairs-first consumers (semanticDedup, knnJoinIvf) never need to.
+    * Argmin squared-L2 with ties to the lowest centroid id (`min` over
+    * (dist, id) structs, so the aggregate is deterministic).
     * The struct-typed min buffer plans as a partial SortAggregate (struct
     * buffers are not UnsafeRow-mutable); the sorted input is the slim
     * (id, dist, cid) pair stream whose ids arrive clustered from the
@@ -311,11 +254,7 @@ object Similarity {
                     cents: DataFrame, centIdCol: String = "centroid_id",
                     centVecCol: String = "centroid",
                     withCentSim: Boolean = false): DataFrame = {
-    val v = col(vecCol).cast(ArrayType(DoubleType))
-    val c = cents.select(col(centIdCol).cast(IntegerType).as("__cid"),
-      col(centVecCol).cast(ArrayType(DoubleType)).as("__cv"), lit(1).as("__ck"))
-    val pairs = df.select(col(idCol), v.as("__v"), lit(1).as("__ck"))
-      .join(broadcast(c), Seq("__ck"))
+    val pairs = centroidPairs(df, idCol, vecCol, cents, centIdCol, centVecCol)
     val d = l2sq(col("__v"), col("__cv"))
     if (withCentSim)
       // cs never tie-breaks (cid is unique), it just rides the argmin
@@ -330,21 +269,16 @@ object Similarity {
         .select(col(idCol), col("__m.j").as("__centroid"))
   }
 
-  /** [[ivfAssignJoin]] plus each row's `__probes` (its `nProbe` nearest
-    * centroid ids, (distance, id) order — same contract as
-    * [[ivfAssignProbes]]). The per-group collect_list buffer holds k
-    * (dist, id) structs — the same transient the literal path's per-row
-    * sorted array materializes, so the memory bound is unchanged. */
+  /** [[ivfAssignJoin]] plus each row's `__probes`: its `nProbe` nearest
+    * centroid ids in (distance, id) order, so `__probes(0)` is the home
+    * cell. The per-group collect_list buffer holds k (dist, id) structs —
+    * centroid-sized, never vector-sized. */
   def ivfAssignProbesJoin(df: DataFrame, idCol: String, vecCol: String,
                           cents: DataFrame, nProbe: Int,
                           centIdCol: String = "centroid_id",
                           centVecCol: String = "centroid"): DataFrame = {
     require(nProbe >= 1, "need nProbe >= 1")
-    val v = col(vecCol).cast(ArrayType(DoubleType))
-    val c = cents.select(col(centIdCol).cast(IntegerType).as("__cid"),
-      col(centVecCol).cast(ArrayType(DoubleType)).as("__cv"), lit(1).as("__ck"))
-    df.select(col(idCol), v.as("__v"), lit(1).as("__ck"))
-      .join(broadcast(c), Seq("__ck"))
+    centroidPairs(df, idCol, vecCol, cents, centIdCol, centVecCol)
       .select(col(idCol),
         struct(l2sq(col("__v"), col("__cv")).as("d"), col("__cid").as("j")).as("__dj"))
       .groupBy(col(idCol))
@@ -354,23 +288,39 @@ object Similarity {
         transform(col("__top"), s => s.getField("j")).as("__probes"))
   }
 
-  /** Deterministic IVF top-k over explicit centroids: probe the `nProbe`
-    * nearest centroids (model-sized driver computation with the same
-    * left-to-right fold order as the assignment expressions), then exact
-    * cosine re-rank of the probed posting lists only. */
-  def ivfTopKExplicit(df: DataFrame, idCol: String, vecCol: String,
-                      centroids: Seq[Array[Double]], queryId: Long,
-                      kResults: Int = 10, nProbe: Int = 2): DataFrame = {
-    val assigned = ivfAssignExplicit(df, vecCol, centroids)
+  /** The `nProbe` centroid ids nearest the row of `queryId`: a scan of the
+    * k-row centroid table in (distance, id) order — vec_l2sq is the fold
+    * the assignment uses, so the query's own home cell comes first. Only
+    * the nProbe ids reach the driver. */
+  private def nearestCentroids(df: DataFrame, idCol: String, vecCol: String,
+                               cents: DataFrame, queryId: Long, nProbe: Int,
+                               centIdCol: String, centVecCol: String): Seq[Int] = {
     val q = df.filter(col(idCol) === queryId)
-      .select(col(vecCol).cast(ArrayType(DoubleType)))
-      .head.getSeq[Double](0).toArray
-    val probes = centroids.zipWithIndex.map { case (c, j) =>
-      (j, c.zip(q).foldLeft(0.0) { case (acc, (a, b)) => acc + (a - b) * (a - b) })
-    }.sortBy { case (j, d) => (d, j) }.take(nProbe).map(_._1)
-    val qvec = array(q.map(lit): _*)
-    assigned.filter(col("__centroid").isin(probes: _*) && col(idCol) =!= queryId)
-      .select(col(idCol), cosine(col(vecCol), qvec).as("cosine"))
+      .select(col(vecCol).cast(ArrayType(DoubleType)).as("__qv"))
+    cents.select(col(centIdCol).cast(IntegerType).as("__cid"),
+        col(centVecCol).cast(ArrayType(DoubleType)).as("__cv"))
+      .crossJoin(broadcast(q))
+      .select(col("__cid"), l2sq(col("__qv"), col("__cv")).as("__d"))
+      .orderBy(col("__d").asc, col("__cid").asc).limit(nProbe)
+      .collect().map(_.getInt(0)).toSeq
+  }
+
+  /** IVF top-k over a (centroid_id, centroid) quantizer table: probe the
+    * `nProbe` centroids nearest the query, then exact cosine re-rank of
+    * the vectors homed in those cells only (ties to the lower id).
+    * Deterministic for any centroid set — with seed rows as centroids the
+    * whole assign → probe → re-rank path is oracle-replayable. */
+  def ivfTopK(df: DataFrame, idCol: String, vecCol: String, cents: DataFrame,
+              queryId: Long, kResults: Int = 10, nProbe: Int = 2): DataFrame = {
+    val probes = nearestCentroids(df, idCol, vecCol, cents, queryId, nProbe,
+      "centroid_id", "centroid")
+    val probed = ivfAssignJoin(df, idCol, vecCol, cents)
+      .filter(col("__centroid").isin(probes: _*) && col(idCol) =!= queryId)
+      .select(col(idCol))
+    val q = df.filter(col(idCol) === queryId).select(col(vecCol).as("__qv"))
+    df.join(probed, Seq(idCol), "left_semi")
+      .crossJoin(broadcast(q))
+      .select(col(idCol), cosine(col(vecCol), col("__qv")).as("cosine"))
       .filter(col("cosine").isNotNull)
       .orderBy(col("cosine").desc, col(idCol).asc)
       .limit(kResults)
@@ -476,50 +426,22 @@ object Similarity {
     * posting lists, PQ-encode the vectors, and answer a query by probing
     * only the `nProbe` nearest lists and ADC-scoring their codes — the
     * scan touches nProbe/k of the corpus and reads m-byte codes instead of
-    * raw floats. The query's own nearest centroid is always probed, so its
-    * row is present for the table build. */
-  def ivfPqTopK(df: DataFrame, idCol: String, vecCol: String,
-                centroids: Seq[Array[Double]], books: Seq[Seq[Array[Double]]],
-                queryId: Long, kResults: Int = 10, nProbe: Int = 2): DataFrame = {
-    val q = df.filter(col(idCol) === queryId)
-      .select(col(vecCol).cast(ArrayType(DoubleType)))
-      .head.getSeq[Double](0).toArray
-    val probes = centroids.zipWithIndex.map { case (c, j) =>
-      (j, c.zip(q).foldLeft(0.0) { case (acc, (a, b)) => acc + (a - b) * (a - b) })
-    }.sortBy { case (j, d) => (d, j) }.take(nProbe).map(_._1)
-    // 2 consumers in pqAdcTopK: query-row extraction and the scoring scan
-    val probed = pqEncodeExplicit(
-        ivfAssignExplicit(df, vecCol, centroids)
-          .filter(col("__centroid").isin(probes: _*)),
-        vecCol, books)
-      .transform(Ops.materialize)
-    pqAdcTopK(probed, idCol, vecCol, books, queryId, kResults)
-  }
-
-  /** [[ivfPqTopK]] with the coarse quantizer's centroids as DATA (see
-    * [[ivfAssignJoin]]): query-to-centroid probing is a k-row broadcast
-    * scan collected down to `nProbe` ids, assignment is the broadcast-hash
-    * join, and only the probed posting lists are PQ-encoded. The PQ
-    * codebooks stay driver-side — m·k_pq·dsub doubles, model-sized by
-    * construction, a different animal from the √N coarse centroids. */
+    * raw floats. The coarse quantizer is a centroid table (see
+    * [[ivfAssignJoin]]); only the probed posting lists are PQ-encoded. The
+    * query's own nearest centroid is always probed, so its row is present
+    * for the table build. The PQ codebooks stay driver-side — m·k_pq·dsub
+    * doubles, model-sized by construction, a different animal from the √N
+    * coarse centroids. */
   def ivfPqTopK(df: DataFrame, idCol: String, vecCol: String,
                 cents: DataFrame, books: Seq[Seq[Array[Double]]],
                 queryId: Long, kResults: Int, nProbe: Int,
                 centIdCol: String, centVecCol: String): DataFrame = {
-    val q = df.filter(col(idCol) === queryId)
-      .select(col(vecCol).cast(ArrayType(DoubleType)).as("__qv"))
-    // nProbe nearest centroids to the query: a scan of the k-row centroid
-    // table, nProbe ids collected (model-sized, same (dist, id) tie order
-    // as the driver fold in the literal path — vec_l2sq IS that fold)
-    val probes = cents.select(col(centIdCol).cast(IntegerType).as("__cid"),
-        col(centVecCol).cast(ArrayType(DoubleType)).as("__cv"))
-      .crossJoin(broadcast(q))
-      .select(col("__cid"), l2sq(col("__qv"), col("__cv")).as("__d"))
-      .orderBy(col("__d").asc, col("__cid").asc).limit(nProbe)
-      .collect().map(_.getInt(0)).toSeq
+    val probes = nearestCentroids(df, idCol, vecCol, cents, queryId, nProbe,
+      centIdCol, centVecCol)
     val probedIds = ivfAssignJoin(df, idCol, vecCol, cents, centIdCol, centVecCol)
       .filter(col("__centroid").isin(probes: _*))
       .select(col(idCol))
+    // 2 consumers in pqAdcTopK: query-row extraction and the scoring scan
     val probed = pqEncodeExplicit(
         df.join(probedIds, Seq(idCol), "left_semi"), vecCol, books)
       .transform(Ops.materialize)
@@ -692,36 +614,14 @@ object Similarity {
     * centroid; each vector probes its `nProbe` nearest cells and re-ranks
     * exactly against the vectors HOMED there. One cell-keyed shuffle whose
     * fan-out is nProbe·|cell| per vector — the standard recall/cost dial.
-    * With nProbe = |centroids| this degenerates to [[knnJoinExact]]. */
-  def knnJoinIvf(df: DataFrame, idCol: String, vecCol: String,
-                 centroids: Seq[Array[Double]], k: Int,
-                 nProbe: Int = 2): DataFrame = {
-    val assigned = ivfAssignProbes(df, vecCol, centroids, nProbe)
-      .select(col(idCol).as("__kid"), col("__centroid").as("__home"),
-        col("__probes"))
-    knnJoinIvfFrom(assigned,
-      df.select(col(idCol).as("__kid"), col(vecCol).as("__kv")), k)
-  }
-
-  /** [[knnJoinIvf]] with centroids as DATA (see [[ivfAssignJoin]]) — the
-    * form whose k can reach √N at 100 TB. Identical output to the literal
-    * path on the same centroid set (spec-asserted). */
-  def knnJoinIvf(df: DataFrame, idCol: String, vecCol: String,
-                 cents: DataFrame, k: Int, nProbe: Int,
-                 centIdCol: String, centVecCol: String): DataFrame = {
-    val assigned = ivfAssignProbesJoin(df, idCol, vecCol, cents, nProbe,
-        centIdCol, centVecCol)
-      .select(col(idCol).as("__kid"), col("__centroid").as("__home"),
-        col("__probes"))
-    knnJoinIvfFrom(assigned,
-      df.select(col(idCol).as("__kid"), col(vecCol).as("__kv")), k)
-  }
-
-  /** Shared pairs-first core: `assigned` = (__kid, __home, __probes) slim
-    * frame, `vecs` = (__kid, __kv). The cell join carries only scalar ids
-    * (the LSH band-join discipline) — vectors join back once per DISTINCT
-    * surviving pair, so the dedup of multi-cell collisions shuffles ids,
-    * never the embedding payloads.
+    * With nProbe = |centroids| this degenerates to [[knnJoinExact]]. The
+    * centroids are a table (see [[ivfAssignJoin]]), so k can reach √N at
+    * 100 TB.
+    *
+    * Pairs first: the cell join carries only scalar ids (the LSH band-join
+    * discipline) — vectors join back once per DISTINCT surviving pair, so
+    * the dedup of multi-cell collisions shuffles ids, never the embedding
+    * payloads.
     *
     * Exchange sharing (r16, guide §2.4 "two operations keyed the same way
     * share one exchange"): the pair stream is hash(id)-repartitioned ONCE
@@ -735,16 +635,26 @@ object Similarity {
     * two key streams, pivot per pair) moves |V| + 2·|pairs| vector
     * payloads through its pair-group exchange vs 2·|V| + |pairs| here,
     * and |pairs| ≈ nProbe·|cell|·N ≥ |V| by construction. */
-  private def knnJoinIvfFrom(assigned: DataFrame, vecs: DataFrame,
-                             k: Int): DataFrame = {
+  def knnJoinIvf(df: DataFrame, idCol: String, vecCol: String,
+                 cents: DataFrame, k: Int, nProbe: Int,
+                 centIdCol: String, centVecCol: String): DataFrame = {
+    val assigned = ivfAssignProbesJoin(df, idCol, vecCol, cents, nProbe,
+        centIdCol, centVecCol)
+      .select(col(idCol).as("__kid"), col("__centroid").as("__home"),
+        col("__probes"))
+    val vecs = df.select(col(idCol).as("__kid"), col(vecCol).as("__kv"))
     val home = assigned.select(col("__home").as("__cell"),
       col("__kid").as("neighbor_id"))
     val probing = assigned.select(col("__kid").as("id"),
       explode(col("__probes")).as("__cell"))
+    // an explicit partition count: the pair stream is two longs per pair
+    // but feeds the vector join-back and the cosine scoring, and adaptive
+    // execution, which coalesces by bytes, would run all of that in one
+    // task (measured 2× slower at sf0.1)
     val pairs = probing.join(home, Seq("__cell"))
       .filter(col("id") =!= col("neighbor_id"))
       .select(col("id"), col("neighbor_id"))
-      .repartition(col("id"))
+      .repartition(df.sparkSession.sessionState.conf.numShufflePartitions, col("id"))
       .distinct()
     val scored = pairs
       .join(vecs.select(col("__kid").as("neighbor_id"), col("__kv").as("__v2")),

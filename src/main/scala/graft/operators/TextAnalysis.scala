@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.engine.Ops
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -127,52 +127,29 @@ object TextAnalysis {
   val gopherRequiredStops: Seq[String] =
     Seq("the", "be", "to", "of", "and", "that", "have", "with")
 
-  /** The Gopher document-quality rules (Rae et al. 2021, arXiv:2112.11446
-    * §A1.1 — public) as one pure-expression pass: word count in [50, 100k];
-    * mean word length in [3, 10]; hash-symbol and ellipsis symbol-to-word
-    * ratios ≤ 0.1; ≤ 90% of lines starting with a bullet (•, -, *); ≤ 30%
-    * of lines ending with "…"/"..."; ≥ 80% of words containing an
-    * alphabetic character; ≥ 2 of the required stopwords present. Emits the
-    * raw statistics plus the composite `keep`. Ratios are integer-count
-    * divisions — bit-identical in the SQL oracle. Zero shuffles. */
   /** Quality-classifier APPLY over a hashed bag-of-words linear model —
     * the FineWeb-Edu-shaped inference stage: a trained classifier scores
     * every document and a threshold keeps the head. The model here is a
-    * deterministic fixture (per-bucket integer milli-weights derived from
-    * md5 of the bucket id, so the oracle reproduces them); a real
-    * deployment feeds coefficients from `ml.ML`'s logistic regression into
-    * the same apply shape via a (bucket, w_milli) DataFrame.
-    *
-    * Determinism: weights are INTEGERS in [-1000, 1000] and the per-doc
-    * score is their order-free integer sum; the logit is one double
-    * division chain of exact integers. No exp/sigmoid in the compared
-    * output — monotone in the logit, so thresholding is equivalent.
-    *
-    * Scale shape: tokenize+hash+bucket runs in the scan stage (all
-    * codegen'd md5/conv expressions, no dictionary), one doc-keyed sum
-    * shuffle; there is no weight table at all — the fixture weight is an
-    * expression of the bucket id (a broadcast-join against learned
-    * coefficients replaces that one projection at deployment). */
+    * deterministic fixture ([[classifierFixtureWeights]]: per-bucket
+    * integer milli-weights derived from md5 of the bucket id, so the oracle
+    * reproduces them); a real deployment feeds coefficients from
+    * [[classifierTrain]] through [[classifierExportWeights]] into the same
+    * apply, [[classifierScoreWeights]]. */
   def classifierScore(df: DataFrame, idCol: String, textCol: String,
                       buckets: Int = 1 << 15, seed: String = "qc1",
-                      threshold: Double = 0.0): DataFrame = {
-    val tok = df.select(col(idCol), explode(tokens(col(textCol))).as("__t"))
-      .withColumn("__bucket", tokenHash(col("__t")) % buckets)
-      .withColumn("__w",
-        tokenHash(concat(lit(seed + ":"), col("__bucket"))) % 2001 - 1000)
-    val scored = tok.groupBy(col(idCol))
-      .agg(count(lit(1)).as("n_toks"), sum(col("__w")).as("score_milli"))
-    val base = df.select(col(idCol))
-    base.join(scored, Seq(idCol), "left")
-      .select(col(idCol),
-        coalesce(col("n_toks"), lit(0L)).as("n_toks"),
-        coalesce(col("score_milli"), lit(0L)).as("score_milli"))
-      .withColumn("logit",
-        when(col("n_toks") > 0,
-          col("score_milli") / lit(1000.0) / col("n_toks"))
-          .otherwise(lit(0.0)))
-      .withColumn("keep", col("logit") > threshold)
-  }
+                      threshold: Double = 0.0): DataFrame =
+    classifierScoreWeights(df, idCol, textCol,
+      classifierFixtureWeights(df.sparkSession, buckets, seed), buckets, threshold)
+
+  /** The fixture model of [[classifierScore]] as a (bucket, w_milli)
+    * table: w_milli = md5("seed:bucket") mod 2001 − 1000, one row per
+    * bucket (32k rows at the default — kilobytes, broadcast). */
+  def classifierFixtureWeights(spark: SparkSession, buckets: Int,
+                               seed: String): DataFrame =
+    spark.range(0, buckets).select(
+      col("id").cast(IntegerType).as("bucket"),
+      (tokenHash(concat(lit(seed + ":"), col("id").cast(StringType))) % 2001 - 1000)
+        .as("w_milli"))
 
   /** Quality-classifier TRAIN — the other half of the FineWeb-Edu shape
     * (label a seed set → fit a linear model on hashed bag-of-words →
@@ -234,12 +211,20 @@ object TextAnalysis {
     buf.toSeq.toDF("bucket", "w_milli")
   }
 
-  /** Quality-classifier APPLY with the weights as DATA — the deployment
-    * form of [[classifierScore]]: the learned (bucket, w_milli) table rides
-    * a BroadcastHashJoin against the tokenized corpus (it is at most
-    * `buckets` rows — kilobytes), so the scoring pass stays one scan plus
-    * one doc-keyed sum, identical to the fixture-expression path. Buckets
-    * absent from the table contribute 0 (unseen features). */
+  /** Quality-classifier APPLY with the weights as DATA: the (bucket,
+    * w_milli) table — learned, or [[classifierFixtureWeights]] — rides a
+    * BroadcastHashJoin against the tokenized corpus (it is at most
+    * `buckets` rows — kilobytes). Buckets absent from the table contribute
+    * 0 (unseen features).
+    *
+    * Determinism: weights are INTEGERS (milli-units) and the per-doc score
+    * is their order-free integer sum; the logit is one double division
+    * chain of exact integers. No exp/sigmoid in the compared output —
+    * monotone in the logit, so thresholding is equivalent.
+    *
+    * Scale shape: tokenize+hash+bucket runs in the scan stage (all
+    * codegen'd md5/conv expressions, no dictionary), then the broadcast
+    * join and one doc-keyed sum shuffle. */
   def classifierScoreWeights(df: DataFrame, idCol: String, textCol: String,
                              weights: DataFrame, buckets: Int = 1 << 15,
                              threshold: Double = 0.0): DataFrame = {
@@ -275,54 +260,31 @@ object TextAnalysis {
     * between engines). Docs containing no query term are absent (standard
     * retrieval semantics).
     *
-    * Scale shape: corpus stats (N, Σdl) and the ≤|terms| df/idf table ride
-    * as broadcast one-row/tiny frames; the only corpus-wide work is the
-    * tokenize+filter scan stage and one doc-keyed sum; top-k is a
-    * TakeOrderedAndProject, never a full sort. */
+    * One query through [[bm25TopKJoin]] (the terms become a one-query
+    * table); rows come back in rank order (score desc, id asc). */
   def bm25TopK(df: DataFrame, idCol: String, textCol: String,
                terms: Seq[String], k: Int = 10,
                k1: Double = 1.2, b: Double = 0.75): DataFrame = {
-    // tokens() lowercases the corpus, so an uppercase query term would
-    // silently match nothing — normalize the seed list to the token space
-    val termsLc = terms.map(_.toLowerCase)
-    val base = df.select(col(idCol).as("id"), tokens(col(textCol)).as("__toks"))
-      .withColumn("__dl", size(col("__toks")))
-    val stats = base.agg(count(lit(1)).as("__n"),
-      (sum(col("__dl")).cast(DoubleType) / count(lit(1))).as("__avgdl"))
-    // 2 consumers: the idf branch and the scoring branch
-    val tf = base
-      .select(col("id"), col("__dl"), explode(col("__toks")).as("__t"))
-      .filter(col("__t").isin(termsLc: _*))
-      .groupBy(col("id"), col("__dl"), col("__t"))
-      .agg(count(lit(1)).as("__tf"))
-      .transform(Ops.materialize)
-    val idf = tf.groupBy(col("__t"))
-      .agg(count_distinct(col("id")).as("__df"))
-      .crossJoin(broadcast(stats))
-      .select(col("__t"),
-        floor(lit(1e4) * log((col("__n") - col("__df") + lit(0.5)) /
-          (col("__df") + lit(0.5)) + lit(1.0))).as("__idf_q4"))
-    val contrib = tf.join(broadcast(idf), Seq("__t"))
-      .crossJoin(broadcast(stats))
-      .select(col("id"),
-        floor(lit(100.0) * col("__idf_q4") * (col("__tf") * (lit(k1) + lit(1.0))) /
-          (col("__tf") + lit(k1) * (lit(1.0) - lit(b) +
-            lit(b) * col("__dl") / col("__avgdl")))).as("__c"))
-    contrib.groupBy(col("id")).agg(sum(col("__c")).as("score_q"))
-      .orderBy(col("score_q").desc, col("id").asc)
-      .limit(k)
-      .select(col("id").as(idCol), col("score_q"))
+    val spark = df.sparkSession
+    import spark.implicits._
+    bm25TopKJoin(df, idCol, textCol, terms.map(t => (0, t)).toDF("query_id", "term"),
+        k, k1, b)
+      .orderBy(col("score_q").desc, col(idCol).asc)
+      .drop("query_id")
   }
 
-  /** BM25 with the query terms as DATA — the at-scale form of [[bm25TopK]]:
-    * targeted curation ranks a corpus against THOUSANDS of seed queries, so
-    * the term set must be a (query_id, term) DataFrame, not a literal
-    * compiled into an `isin` filter. Same quantized-idf / integer-sum
-    * arithmetic as the literal path (single-query results are identical).
+  /** [[bm25TopK]] for many queries at once: targeted curation ranks a
+    * corpus against THOUSANDS of seed queries, so the term set is a
+    * (query_id, term) DataFrame (terms lowercased into the token space —
+    * tokens() lowercases the corpus). Returns (query_id, id, score_q), the
+    * top `k` per query.
     *
-    * Scale shape: the corpus-side work — tokenize, filter to the DISTINCT
-    * term vocabulary (one BroadcastHashJoin), per-(doc, term) tf, per-term
-    * idf — happens ONCE regardless of query count; fanning out to queries
+    * Scale shape: corpus stats (N, Σdl) and the per-term df/idf table ride
+    * as broadcast one-row/tiny frames, and the (doc, term) tf postings are
+    * materialized once for their two consumers (idf and scoring). The
+    * corpus-side work — tokenize, filter to the DISTINCT term vocabulary
+    * (one BroadcastHashJoin), per-(doc, term) tf, per-term idf — happens
+    * ONCE regardless of query count; fanning out to queries
     * is a second broadcast join of the ≤|qt| row term table against the
     * already-tiny (doc, term, contribution) frame. Per-query top-k is a
     * row_number window partitioned BY QUERY — each query's candidates sort
@@ -367,6 +329,14 @@ object TextAnalysis {
       .select(col("query_id"), col("id").as(idCol), col("score_q"))
   }
 
+  /** The Gopher document-quality rules (Rae et al. 2021, arXiv:2112.11446
+    * §A1.1 — public) as one pure-expression pass: word count in [50, 100k];
+    * mean word length in [3, 10]; hash-symbol and ellipsis symbol-to-word
+    * ratios ≤ 0.1; ≤ 90% of lines starting with a bullet (•, -, *); ≤ 30%
+    * of lines ending with "…"/"..."; ≥ 80% of words containing an
+    * alphabetic character; ≥ 2 of the required stopwords present. Emits the
+    * raw statistics plus the composite `keep`. Ratios are integer-count
+    * divisions — bit-identical in the SQL oracle. Zero shuffles. */
   def gopherFilter(df: DataFrame, textCol: String): DataFrame = {
     // staged projections: HOF lambdas get no codegen CSE (see repetitionStats)
     val staged = df

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.operators.{Dedup, Multimodal, Similarity, TextAnalysis}
 
@@ -14,6 +15,48 @@ class LLMOpsSpec extends SparkSpec {
     (3L, "completely different content about spark query engines at scale"),
     (4L, "el rapido zorro marron salta sobre el perro perezoso la la")
   ).toDF("doc_id", "text")
+
+  /** Centroids as the (centroid_id, centroid) table the IVF operators
+    * take; ids are positions. */
+  private def centroidTable(cents: Seq[Array[Double]], s: SparkSession = spark): DataFrame =
+    s.createDataFrame(cents.zipWithIndex.map { case (c, j) => (j, c.toSeq) })
+      .toDF("centroid_id", "centroid")
+
+  /** The planted-cluster IVF fixture: 200 vectors around the axis
+    * directions e0, e4, e8, e12 (16 dims) — those four are the centroids —
+    * plus vector 200 = ½e0 + ½e4, at squared L2 exactly 0.5 from each of
+    * the first two centroids: a planted tie. */
+  private def plantedTie: (Seq[(Long, Array[Float])], Seq[Array[Double]]) = {
+    val rnd = new scala.util.Random(23)
+    val rows = (0L until 200L).map { i =>
+      val base = Array.fill(16)(0f)
+      base((i % 4).toInt * 4) = 1f
+      (i, base.map(v => v + (rnd.nextFloat() - 0.5f) * 0.2f))
+    }
+    val tie = Array.fill(16)(0f)
+    tie(0) = 0.5f; tie(4) = 0.5f
+    val cents = (0 until 4).map { c =>
+      val a = Array.fill(16)(0.0); a(c * 4) = 1.0; a
+    }
+    (rows :+ (200L -> tie), cents)
+  }
+
+  /** Driver-side squared L2, in vec_l2sq's left-to-right fold order. */
+  private def l2sqRef(a: Array[Double], b: Array[Double]): Double =
+    a.indices.foldLeft(0.0)((acc, i) => acc + (a(i) - b(i)) * (a(i) - b(i)))
+
+  /** Centroid indices nearest first, ties to the lower index. */
+  private def nearestCells(v: Array[Double], cents: Seq[Array[Double]]): Seq[Int] =
+    cents.indices.sortBy(j => (l2sqRef(v, cents(j)), j))
+
+  /** Driver-side cosine in Similarity.cosine's operation order; None
+    * where a norm is zero. */
+  private def cosineRef(a: Array[Double], b: Array[Double]): Option[Double] = {
+    def dot(x: Array[Double], y: Array[Double]) =
+      x.indices.foldLeft(0.0)((acc, i) => acc + x(i) * y(i))
+    val d = math.sqrt(dot(a, a)) * math.sqrt(dot(b, b))
+    if (d == 0.0) None else Some(dot(a, b) / d)
+  }
 
   test("exactDedup groups identical texts") {
     val out = Dedup.exactDedup(docs, "text", "doc_id")
@@ -1023,7 +1066,8 @@ class LLMOpsSpec extends SparkSpec {
       (3L, Seq(9.0, 0.0, 3.0, 0.0)),    // tilted: cos to 1/2 ≈ 0.95, to c0 lower
       (4L, Seq(0.0, 5.0, 0.0, 0.0)))    // alone near c1
     val df = rows.toDF("id", "v")
-    val out = Dedup.semanticDedup(df, "id", "v", Seq(c0, c1), tau = 0.9)
+    val out = Dedup.semanticDedup(df, "id", "v", centroidTable(Seq(c0, c1)), 0.9,
+        "centroid_id", "centroid")
       .as[(Long, Long, Boolean)].collect().map(r => r._1 -> ((r._2, r._3))).toMap
     assert(out(1L) == ((1L, false)) && out(2L) == ((1L, false)),
       "central dups are dropped")
@@ -1174,10 +1218,11 @@ class LLMOpsSpec extends SparkSpec {
       (i, base.map(v => v + (rnd.nextFloat() - 0.5f) * 0.2f))
     }
     val vecs = rows.toDF("vec_id", "embedding")
-    val (model, assigned) = Similarity.ivfIndex(vecs, "vec_id", "embedding", k = 4)
+    val model = Similarity.ivfIndex(vecs, "embedding", k = 4)
     val exact = Similarity.cosineTopK(vecs, "vec_id", "embedding", 0L, 10)
       .select("vec_id").as[Long].collect().toSet
-    val ivf = Similarity.ivfTopK(assigned, model, "vec_id", "embedding", 0L, 10, nProbe = 1)
+    val ivf = Similarity.ivfTopK(vecs, "vec_id", "embedding",
+        centroidTable(model.clusterCenters.map(_.toArray).toSeq), 0L, 10, nProbe = 1)
       .select("vec_id").as[Long].collect().toSet
     val recall = exact.intersect(ivf).size / 10.0
     assert(recall >= 0.8, s"recall $recall") // clusters are well separated
@@ -1196,13 +1241,14 @@ class LLMOpsSpec extends SparkSpec {
     val cents = (0 until 4).map { c =>
       val a = Array.fill(16)(0.0); a(c * 4) = 1.0; a
     }
-    val assigned = Similarity.ivfAssignExplicit(vecs, "embedding", cents)
+    val assigned = Similarity.ivfAssignJoin(vecs, "vec_id", "embedding",
+      centroidTable(cents))
     // every vector must land on its planted cluster's centroid
     assert(assigned.filter(col("__centroid") =!= col("vec_id") % 4).count() == 0)
     // probing the query's own cluster reaches full recall vs brute force
     val exact = Similarity.cosineTopK(vecs, "vec_id", "embedding", 0L, 10)
       .select("vec_id").as[Long].collect().toSet
-    val ivf = Similarity.ivfTopKExplicit(vecs, "vec_id", "embedding", cents,
+    val ivf = Similarity.ivfTopK(vecs, "vec_id", "embedding", centroidTable(cents),
       queryId = 0L, kResults = 10, nProbe = 1)
       .select("vec_id").as[Long].collect().toSet
     assert(ivf == exact)
@@ -1270,8 +1316,8 @@ class LLMOpsSpec extends SparkSpec {
       val a = Array.fill(16)(0.0); a(c * 4) = 1.0; a
     }
     val books = Similarity.pqTrain(vecs, "embedding", m = 4, k = 8)
-    val out = Similarity.ivfPqTopK(vecs, "vec_id", "embedding", cents, books,
-      queryId = 0L, kResults = 10, nProbe = 1)
+    val out = Similarity.ivfPqTopK(vecs, "vec_id", "embedding", centroidTable(cents),
+      books, queryId = 0L, kResults = 10, nProbe = 1, "centroid_id", "centroid")
       .select("vec_id").as[Long].collect().toSet
     // one probed list = the query's planted cluster: only cluster-0 ids
     assert(out.forall(_ % 4 == 0), out)
@@ -1491,7 +1537,7 @@ class LLMOpsSpec extends SparkSpec {
       (3L, "cat dog"), (4L, "zebra only here"), (5L, "dog"),
       (6L, "mouse bird"), (7L, "bird bird bird"))
       .toDF("doc_id", "text")
-    // single query ≡ literal path, scores included
+    // single query ≡ the term-list form, scores included
     val lit1 = TextAnalysis.bm25TopK(d, "doc_id", "text", Seq("cat", "dog"), k = 10)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
     val qt1 = Seq(("q1", "cat"), ("q1", "dog")).toDF("query_id", "term")
@@ -1857,67 +1903,71 @@ class LLMOpsSpec extends SparkSpec {
       .select("rank", "cosine").as[(Int, Double)].collect()
     assert(r0.map(_._1).toSeq == Seq(1, 2) && r0(0)._2 >= r0(1)._2)
     // IVF with all cells probed reproduces the exact join bit-for-bit
-    val cents = Seq(Array(1.0, 0.0), Array(0.0, 1.0), Array(-1.0, -1.0))
+    val cents = centroidTable(Seq(Array(1.0, 0.0), Array(0.0, 1.0), Array(-1.0, -1.0)))
     val full = Similarity.knnJoinIvf(df, "vec_id", "v", cents, k = 2,
-      nProbe = 3)
+      nProbe = 3, "centroid_id", "centroid")
     assert(full.collect().map(_.toSeq).toSet ==
       exact.collect().map(_.toSeq).toSet)
     // single-probe: cluster members still find their mates (home cell)
     val one = Similarity.knnJoinIvf(df, "vec_id", "v", cents, k = 2,
-      nProbe = 1)
+      nProbe = 1, "centroid_id", "centroid")
     val oneMap = one.collect().groupBy(_.getLong(0)).view
       .mapValues(_.map(_.getLong(1)).toSet).toMap
     assert(oneMap(0L) == Set(1L, 2L) && oneMap(10L) == Set(11L, 12L))
   }
 
   test("centroids-as-data: join path ≡ literal path across the IVF family") {
-    // the same planted-cluster fixture as the explicit-centroid tests: the
-    // join path must reproduce the literal path EXACTLY (same vec_l2sq /
-    // cosine doubles, same (dist, id) argmin tie rule), not approximately
-    val rnd = new scala.util.Random(23)
-    val rows = (0L until 200L).map { i =>
-      val c = (i % 4).toInt
-      val base = Array.fill(16)(0f)
-      base(c * 4) = 1f
-      (i, base.map(v => v + (rnd.nextFloat() - 0.5f) * 0.2f))
-    }
+    // the literal path is a driver-side reference over the literal centroid
+    // arrays: every result recomputed from exact squared L2 and cosine in
+    // the operators' fold order, so equality is exact; the planted tie
+    // must go to the lower centroid id
+    val (rows, cents) = plantedTie
     val vecs = rows.toDF("vec_id", "embedding")
-    val cents = (0 until 4).map { c =>
-      val a = Array.fill(16)(0.0); a(c * 4) = 1.0; a
-    }
-    val centsDf = cents.zipWithIndex.map { case (c, j) => (j, c.toSeq) }
-      .toDF("centroid_id", "centroid")
+    val centsDf = centroidTable(cents)
+    val dv = rows.map { case (i, v) => i -> v.map(_.toDouble) }.toMap
+    val cells = dv.map { case (i, v) => i -> nearestCells(v, cents) }
+    assert(l2sqRef(dv(200L), cents(0)) == l2sqRef(dv(200L), cents(1)) &&
+      cells(200L).take(2) == Seq(0, 1), "the planted vector ties cells 0 and 1")
 
-    val litA = Similarity.ivfAssignExplicit(vecs, "embedding", cents)
-      .select(col("vec_id"), col("__centroid"))
-      .collect().map(r => (r.getLong(0), r.getInt(1))).sortBy(_._1).toSeq
-    val joinA = Similarity.ivfAssignJoin(vecs, "vec_id", "embedding", centsDf)
-      .collect().map(r => (r.getLong(0), r.getInt(1))).sortBy(_._1).toSeq
-    assert(joinA == litA)
+    val assign = Similarity.ivfAssignJoin(vecs, "vec_id", "embedding", centsDf)
+      .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
+    assert(assign == cells.map { case (i, c) => i -> c.head })
 
-    val litP = Similarity.ivfAssignProbes(vecs, "embedding", cents, nProbe = 2)
-      .select(col("vec_id"), col("__centroid"), col("__probes"))
-      .collect().map(r => (r.getLong(0), r.getInt(1), r.getSeq[Int](2)))
-      .sortBy(_._1).toSeq
-    val joinP = Similarity.ivfAssignProbesJoin(vecs, "vec_id", "embedding",
+    val probes = Similarity.ivfAssignProbesJoin(vecs, "vec_id", "embedding",
         centsDf, nProbe = 2)
-      .collect().map(r => (r.getLong(0), r.getInt(1), r.getSeq[Int](2)))
-      .sortBy(_._1).toSeq
-    assert(joinP == litP)
+      .collect().map(r => r.getLong(0) -> ((r.getInt(1), r.getSeq[Int](2)))).toMap
+    assert(probes == cells.map { case (i, c) => i -> ((c.head, c.take(2))) })
 
-    val litKnn = Similarity.knnJoinIvf(vecs, "vec_id", "embedding", cents,
-      k = 3, nProbe = 2).collect().map(_.toSeq).toSet
-    val joinKnn = Similarity.knnJoinIvf(vecs, "vec_id", "embedding", centsDf,
-      k = 3, nProbe = 2, "centroid_id", "centroid").collect().map(_.toSeq).toSet
-    assert(joinKnn == litKnn)
+    // the tied vector as the query probes both of its cells
+    val q = 200L
+    def homedIn(p: Seq[Int]): Seq[Long] = dv.keys.filter(i => p.contains(cells(i).head)).toSeq
+    def ranked(i: Long, cand: Seq[Long], k: Int): Seq[(Long, Double)] =
+      cand.filter(_ != i).flatMap(n => cosineRef(dv(i), dv(n)).map(n -> _))
+        .sortBy { case (n, c) => (-c, n) }.take(k)
+    val top = Similarity.ivfTopK(vecs, "vec_id", "embedding", centsDf, queryId = q,
+        kResults = 10, nProbe = 2)
+      .collect().map(r => r.getLong(0) -> r.getDouble(1)).toSeq
+    assert(top.nonEmpty && top == ranked(q, homedIn(cells(q).take(2)), 10))
 
+    val knn = Similarity.knnJoinIvf(vecs, "vec_id", "embedding", centsDf,
+        k = 3, nProbe = 2, "centroid_id", "centroid")
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2), r.getDouble(3))).toSet
+    val expectKnn = dv.keys.toSeq.flatMap { i =>
+      ranked(i, homedIn(cells(i).take(2)), 3).zipWithIndex
+        .map { case ((n, c), r) => (i, n, r + 1, c) }
+    }.toSet
+    assert(knn == expectKnn)
+
+    // IVF-PQ = ADC top-k over exactly the query's probed posting lists
     val books = Similarity.pqCodebooksFrom(cents, m = 4)
-    val litPq = Similarity.ivfPqTopK(vecs, "vec_id", "embedding", cents, books,
-      queryId = 0L, kResults = 10, nProbe = 2).collect().map(_.toSeq).toSeq
-    val joinPq = Similarity.ivfPqTopK(vecs, "vec_id", "embedding", centsDf,
-      books, queryId = 0L, kResults = 10, nProbe = 2, "centroid_id", "centroid")
+    val pq = Similarity.ivfPqTopK(vecs, "vec_id", "embedding", centsDf,
+        books, queryId = q, kResults = 10, nProbe = 2, "centroid_id", "centroid")
       .collect().map(_.toSeq).toSeq
-    assert(joinPq == litPq)
+    val slice = vecs.filter(col("vec_id").isin(homedIn(cells(q).take(2)): _*))
+    val expectPq = Similarity.pqAdcTopK(Similarity.pqEncodeExplicit(slice, "embedding", books),
+        "vec_id", "embedding", books, q, 10)
+      .collect().map(_.toSeq).toSeq
+    assert(pq.nonEmpty && pq == expectPq)
 
     // the plan is a broadcast HASH join of the centroid table — k lives in
     // data, not in a k-term projection of the expression tree
@@ -1927,23 +1977,63 @@ class LLMOpsSpec extends SparkSpec {
     assert(!plan.contains("vec_l2sq(vec_l2sq"), "no unrolled per-centroid terms")
   }
 
+  /** SemDeDup fixture: around c0 an exact pair (1, 2) and a tilted dup 3;
+    * 4 alone near c1; 5 = (5, 5) equidistant from c0 and c1 (a planted
+    * tie) with its near-dup 7 = (6, 5), strictly nearer c0. */
+  private def semDedupFixture: (Seq[(Long, Seq[Double])], Seq[Array[Double]]) = (
+    Seq(
+      (1L, Seq(10.0, 0.0, 0.0, 0.0)), (2L, Seq(10.0, 0.0, 0.0, 0.0)),
+      (3L, Seq(9.0, 0.0, 3.0, 0.0)), (4L, Seq(0.0, 5.0, 0.0, 0.0)),
+      (5L, Seq(5.0, 5.0, 0.0, 0.0)), (7L, Seq(6.0, 5.0, 0.0, 0.0))),
+    Seq(Array(1.0, 0.0, 0.0, 0.0), Array(0.0, 1.0, 0.0, 0.0)))
+
   test("centroids-as-data: semanticDedup join path ≡ literal path") {
-    val c0 = Array(1.0, 0.0, 0.0, 0.0)
-    val c1 = Array(0.0, 1.0, 0.0, 0.0)
-    val rows = Seq(
-      (1L, Seq(10.0, 0.0, 0.0, 0.0)),
-      (2L, Seq(10.0, 0.0, 0.0, 0.0)),
-      (3L, Seq(9.0, 0.0, 3.0, 0.0)),
-      (4L, Seq(0.0, 5.0, 0.0, 0.0)))
-    val df = rows.toDF("id", "v")
-    val centsDf = Seq(c0, c1).zipWithIndex.map { case (c, j) => (j, c.toSeq) }
-      .toDF("centroid_id", "centroid")
-    val lit = Dedup.semanticDedup(df, "id", "v", Seq(c0, c1), tau = 0.9)
-      .collect().map(_.toSeq).sortBy(_.head.asInstanceOf[Long]).toSeq
-    val join = Dedup.semanticDedup(df, "id", "v", centsDf, 0.9,
-        "centroid_id", "centroid")
-      .collect().map(_.toSeq).sortBy(_.head.asInstanceOf[Long]).toSeq
-    assert(join == lit)
+    // the literal path is a driver-side SemDeDup over the literal centroid
+    // arrays; the planted tie must home to the lower centroid id
+    val (rows, cents) = semDedupFixture
+    val tau = 0.9
+    val out = Dedup.semanticDedup(rows.toDF("id", "v"), "id", "v", centroidTable(cents),
+        tau, "centroid_id", "centroid")
+      .as[(Long, Long, Boolean)].collect().map(r => r._1 -> ((r._2, r._3))).toMap
+    // driver-side SemDeDup: home cell by argmin (ties low), dup pairs inside
+    // a cell, min-id components, keep the least centroid-similar member
+    val v = rows.map { case (i, x) => i -> x.toArray }.toMap
+    val home = v.map { case (i, x) => i -> nearestCells(x, cents).head }
+    assert(home(5L) == 0, "the tie homes to the lower id")
+    val dups = for ((a, _) <- rows; (b, _) <- rows
+      if a < b && home(a) == home(b) && cosineRef(v(a), v(b)).exists(_ >= tau)) yield (a, b)
+    var label = v.keys.map(i => i -> i).toMap
+    for ((a, b) <- dups) {
+      val m = math.min(label(a), label(b))
+      label = label.map { case (i, l) => i -> (if (l == label(a) || l == label(b)) m else l) }
+    }
+    val keeper = label.groupBy(_._2).map { case (c, members) =>
+      c -> members.keys.minBy(i => (cosineRef(v(i), cents(home(i))).get, i)) }
+    assert(out == label.map { case (i, c) => i -> ((c, keeper(c) == i)) })
+    assert(out(5L)._1 == out(7L)._1, "the tied vector groups with its dup in cell 0")
+  }
+
+  test("IVF operators give the same output at 1 and 7 shuffle partitions") {
+    val (rows, cents) = plantedTie
+    val (sdRows, sdCents) = semDedupFixture
+    def outputs(s: SparkSession): Seq[Seq[Seq[Any]]] = {
+      import s.implicits._
+      val vecs = rows.toDF("vec_id", "embedding")
+      val centsDf = centroidTable(cents, s)
+      val sdCentsDf = centroidTable(sdCents, s)
+      Seq(
+        Similarity.ivfAssignJoin(vecs, "vec_id", "embedding", centsDf),
+        Similarity.ivfAssignProbesJoin(vecs, "vec_id", "embedding", centsDf, nProbe = 2),
+        Similarity.knnJoinIvf(vecs, "vec_id", "embedding", centsDf, k = 3, nProbe = 2,
+          "centroid_id", "centroid"),
+        Dedup.semanticDedup(sdRows.toDF("id", "v"), "id", "v", sdCentsDf, 0.9,
+          "centroid_id", "centroid")
+      ).map(_.collect().map(_.toSeq).toSeq.sortBy(_.mkString("|")))
+    }
+    val one = outputs(SparkEntry.childSession(spark, "spark.sql.shuffle.partitions" -> "1"))
+    val seven = outputs(SparkEntry.childSession(spark, "spark.sql.shuffle.partitions" -> "7"))
+    assert(one.forall(_.nonEmpty))
+    assert(one == seven)
   }
 
   test("unimax: waterfill allocation caps small domains, shares the rest") {

@@ -13,21 +13,27 @@ class StreamsSpec extends SparkSpec {
     Timestamp.valueOf(f"2024-01-01 10:$min%02d:$sec%02d")
 
   test("IVF assignment runs under Structured Streaming (online near-dup path)") {
+    // the batch operator applied per micro-batch — stateless, so each
+    // batch's assignments are final when foreachBatch returns
     implicit val sql = spark.sqlContext
     val in = MemoryStream[(Long, Seq[Float])]
-    val assigned = graft.operators.Similarity.ivfAssignExplicit(
-      in.toDF.toDF("id", "vec"), "vec",
-      Seq(Array(0.0, 0.0), Array(10.0, 10.0)))
-    val q = assigned.writeStream.format("memory").queryName("ivf_stream")
-      .outputMode("append").start()
+    val got = new java.util.concurrent.ConcurrentLinkedQueue[(Long, Int)]()
+    val q = in.toDF.toDF("id", "vec").writeStream
+      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
+        val cents = batch.sparkSession.createDataFrame(
+            Seq((0, Seq(0.0, 0.0)), (1, Seq(10.0, 10.0))))
+          .toDF("centroid_id", "centroid")
+        graft.operators.Similarity.ivfAssignJoin(batch, "id", "vec", cents)
+          .collect().foreach(r => got.add((r.getLong(0), r.getInt(1))))
+      }
+      .start()
     try {
       in.addData((1L, Seq(1.0f, 0.5f)), (2L, Seq(9.0f, 11.0f)))
       q.processAllAvailable()
       in.addData((3L, Seq(6.0f, 6.0f)))
       q.processAllAvailable()
-      val got = spark.table("ivf_stream").orderBy("id")
-        .select(col("id"), col("__centroid")).as[(Long, Int)].collect().toSeq
-      assert(got == Seq((1L, 0), (2L, 1), (3L, 1)))
+      import scala.jdk.CollectionConverters._
+      assert(got.asScala.toSeq.sortBy(_._1) == Seq((1L, 0), (2L, 1), (3L, 1)))
     } finally q.stop()
   }
 
