@@ -74,6 +74,11 @@ class SpreadsheetSpec extends SparkSpec {
     assert(got == Set(
       ("Q1", "North", "10"), ("Q1", "North", "20"), ("Q2", "North", "30"),
       ("Q1", "South", "40"), ("Q1", "South", "5.5"), ("Q2", "South", "6")))
+    // the same records through the verbatim XlsxGenerator config
+    val viaFlow = graft.engine.Flow.runSingle(spark,
+      SpreadsheetSpec.generatorFlow("XlsxGenerator", f.getAbsolutePath))
+      .select("quarter", "region", "sales").as[(String, String, String)].collect().toSet
+    assert(viaFlow == got)
   }
 
   test("csvFlattened parity: same hierarchy over the CSV cousin gives the same rows") {
@@ -220,4 +225,17 @@ object SpreadsheetSpec {
   def hierarchy(): List[Spreadsheet.ParseNode] = List(
     Spreadsheet.rowLocator("quarter", 0),
     Spreadsheet.columnLocator("region", 0, rowStart = 1))
+
+  /** [[hierarchy]] as a flattening generator's verbatim flow config. */
+  def generatorFlow(generator: String, path: String): String = s"""
+    { "generators": [
+        {"id": "g", "name": "tuktu.csv.generators.flattening.$generator", "result": "r",
+         "config": {"filename": "$path", "sheet_name": "data", "value_name": "sales",
+           "data_start_col": 1, "flattened": true,
+           "end_field": {"column": 0, "value": "END"},
+           "locators": [
+             {"name": "quarter", "type": "tuktu.csv.locators.Row", "params": {"offset": 0}},
+             {"name": "region", "type": "tuktu.csv.locators.Column",
+              "params": {"offset": 0, "row_start": 1}}]},
+         "next": []} ] }"""
 }

@@ -1,7 +1,8 @@
 package graft
 
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.functions.{col, expr, size}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.{col, concat_ws, countDistinct, expr, format_number, length, round, size}
 import graft.engine.Flow
 
 /** Verbatim reference configs through the compat layer — including the
@@ -1225,5 +1226,134 @@ class TuktuCompatSpec extends SparkSpec {
     val sets = fp.collect().map(r =>
       (r.getSeq[Long](0).toSet, r.getLong(1))).toMap
     assert(sets(Set(1L)) == 3L && sets(Set(1L, 2L)) == 2L && !sets.contains(Set(3L)))
+  }
+
+  test("pinning table: each FQCN entry no other spec names runs a minimal reference config") {
+    // one row per entry: processors over a three-row `list` fixture, the
+    // output column(s) rendered as strings in `k` order, and the values
+    // the entry gives. Mismatches are collected so one run shows them all.
+    val base = """[
+      {"k": "a", "x": 1, "y": 4, "s": "1;2", "xml": "<r><p>1</p><q>x</q></r>",
+       "t": "the cat sat on the mat", "toks": ["The", "cat", ",", "sat", "😀"],
+       "pos": ["DT", "NN", ",", "VBD", "SYM"]},
+      {"k": "b", "x": 2, "y": 6, "s": "3;4", "xml": "<r><p>2</p></r>",
+       "t": "der hund und die katze", "toks": ["a", "happy", "dog", "!"],
+       "pos": ["DT", "JJ", "NN", "."]},
+      {"k": "c", "x": 3, "y": 11, "s": "5;6", "xml": "<r/>",
+       "t": "le chat est sur le tapis", "toks": ["Café", "is", "bad"],
+       "pos": ["NN", "VBZ", "JJ"]}]"""
+    val ml = """[{"k": "a", "v": [0.0], "y": 0.0, "z": 1.0},
+      {"k": "b", "v": [1.0], "y": 0.0, "z": 3.0},
+      {"k": "c", "v": [10.0], "y": 1.0, "z": 21.0}]"""
+    def proc(name: String, config: String, id: String = "p0", next: String = ""): String =
+      s"""{"id": "$id", "name": "$name", "result": "r", "config": $config,
+           "next": [${if (next.isEmpty) "" else "\"" + next + "\""}]}"""
+    def byK(cols: String*)(df: DataFrame): Seq[String] =
+      df.orderBy("k").select(concat_ws(":", cols.map(c => col(c).cast("string")): _*))
+        .as[String].collect().toSeq
+    def oneRow(cols: String*)(df: DataFrame): Seq[String] =
+      df.select(cols.map(c => format_number(col(c), 6)): _*).collect().toSeq
+        .flatMap(_.toSeq.map(_.toString))
+    def trainApply(pkg: String, model: String, config: String, label: String) =
+      proc(s"tuktu.ml.processors.$pkg.${model}TrainProcessor",
+        s"""{"model_name": "pin_$model", "data_field": "v", "label_field": "$label"$config}""",
+        next = "p1") + "," +
+      proc(s"tuktu.ml.processors.$pkg.${model}ApplyProcessor",
+        s"""{"model_name": "pin_$model", "data_field": "v"}""", id = "p1")
+    val out = java.nio.file.Files.createTempDirectory("pin_fs").toString + "/out"
+    val passThrough = Seq("EOFBufferProcessor", "TimeBufferProcessor",
+      "DataPacketSplitterProcessor", "DelayProcessor", "CountEOFProcessor",
+      "RemoveEmptyPacketProcessor").map(n =>
+      (base, proc(s"tuktu.processors.$n", "{}"), byK("k", "x") _, Seq("a:1", "b:2", "c:3")))
+    val stats = "tuktu.processors.bucket.statistics"
+    val classes = Seq("a:0.0", "b:0.0", "c:1.0")
+    val pins: Seq[(String, String, DataFrame => Seq[String], Seq[String])] = passThrough ++ Seq(
+      (base, proc(s"$stats.MedianProcessor", """{"fields": ["x", "y"]}"""),
+        oneRow("x", "y") _, Seq("2.000000", "6.000000")),
+      (base, proc(s"$stats.MidrangeProcessor", """{"fields": ["x", "y"]}"""),
+        oneRow("x", "y") _, Seq("2.000000", "7.500000")),
+      (base, proc(s"$stats.StDevProcessor", """{"fields": ["x", "y"]}"""),
+        oneRow("x", "y") _, Seq("0.816497", "2.943920")),
+      (base, proc(s"$stats.VarProcessor", """{"fields": ["x", "y"]}"""),
+        oneRow("x", "y") _, Seq("0.666667", "8.666667")),
+      (base, proc("tuktu.processors.arithmetics.MaxFieldByValueProcessor",
+        """{"fields": ["x", "y"]}"""), byK("r") _, Seq("4", "6", "11")),
+      (base, proc("tuktu.processors.GroupByProcessor", """{"fields": ["k"]}"""),
+        byK("k", "y") _, Seq("a:4", "b:6", "c:11")),
+      (base, proc("tuktu.processors.UUIDAdderProcessor", "{}"),
+        (df: DataFrame) => Seq(df.select(countDistinct("r")).head.get(0).toString) ++
+          byK("k")(df.filter(length(col("r")) === 36)), Seq("3", "a", "b", "c")),
+      (base, proc("tuktu.processors.XmlToMapProcessor", """{"field": "xml"}"""),
+        byK("r") _, Seq("{p -> 1, q -> x}", "{p -> 2}", "{}")),
+      (base, proc("tuktu.processors.DatumToFieldProcessor", "{}"),
+        (df: DataFrame) => df.columns.toSeq ++ df.select("r.k", "r.y")
+          .orderBy("k").as[(String, Long)].collect().map(_.toString), Seq("r", "(a,4)", "(b,6)", "(c,11)")),
+      (base, proc("tuktu.processors.EvaluateNestedTuktuExpressionsProcessor",
+        """{"expression": "${k}-${x}"}"""), byK("r") _, Seq("a-1", "b-2", "c-3")),
+      (base, proc("tuktu.processors.BatchedFileStreamProcessor",
+        s"""{"file_name": "$out", "fields": ["k", "x"], "field_separator": "|"}"""),
+        (df: DataFrame) => byK("k")(df) ++
+          spark.read.text(out).as[String].collect().sorted, Seq("a", "b", "c", "a|1", "b|2", "c|3")),
+      (base, proc("tuktu.csv.processors.CSVReaderProcessor",
+        """{"field": "s", "headers": ["p", "q"]}"""), byK("k", "p", "q", "s") _, Seq("a:1:2:1;2", "b:3:4:3;4", "c:5:6:5;6")),
+      (base, proc("tuktu.nlp.processors.LangDetProcessor", """{"field": "t"}"""),
+        byK("r") _, Seq("en", "de", "fr")),
+      (base, proc("tuktu.nlp.processors.RBEMEmotionProcessor",
+        """{"language": "en", "tokens": "toks", "pos": "pos"}"""), byK("r") _, Seq("{happiness -> 0.0, sadness -> 0.0, anger -> 0.0, fear -> 0.0}",
+          "{happiness -> 1.0, sadness -> 0.0, anger -> 0.0, fear -> 0.0}",
+          "{happiness -> 0.0, sadness -> 0.0, anger -> 0.0, fear -> 0.0}")),
+      (base, proc("tuktu.nlp.processors.cleanup.EmojiRemoverProcessor",
+        """{"field": "toks"}"""), byK("r") _, Seq("[The, cat, ,, sat, ]", "[a, happy, dog, !]", "[Café, is, bad]")),
+      (base, proc("tuktu.nlp.processors.cleanup.NCharsRemoverProcessor",
+        """{"field": "toks", "n": 2}"""), byK("r") _, Seq("[The, cat, sat]", "[happy, dog]", "[Café, bad]")),
+      (base, proc("tuktu.nlp.processors.cleanup.OddCharacterRemoverProcessor",
+        """{"field": "toks"}"""), byK("r") _, Seq("[The, cat, , sat, ]", "[a, happy, dog, ]", "[Cafe, is, bad]")),
+      (base, proc("tuktu.nlp.processors.cleanup.PunctuationRemoverProcessor",
+        """{"field": "toks"}"""), byK("r") _, Seq("[The, cat, sat, 😀]", "[a, happy, dog]", "[Café, is, bad]")),
+      (base, proc("tuktu.nlp.processors.cleanup.StopwordRemoverProcessor",
+        """{"field": "toks", "lang": "en"}"""), byK("r") _, Seq("[The, cat, ,, sat, 😀]", "[happy, dog, !]", "[Café, bad]")),
+      (base, proc("tuktu.web.processors.RESTProcessor",
+        """{"url": "http://127.0.0.1:1/x"}"""),
+        (df: DataFrame) => byK("k")(df.filter(col("r_status") < 0)), Seq("a", "b", "c")),
+      (base, proc("tuktu.web.processors.URLCheckerProcessor",
+        """{"url": "http://127.0.0.1:1/x", "codes": [200]}"""), byK("r") _, Seq("false", "false", "false")),
+      (base, proc("tuktu.processors.meta.ParallelProcessor",
+        """{"merger": "tuktu.processors.merge.PaddingMerger", "processors": [
+             {"start": "a0", "pipeline": [
+               {"id": "a0", "name": "tuktu.processors.sample.TakeProcessor",
+                "config": {"amount": 1}, "next": ["a1"]},
+               {"id": "a1", "name": "tuktu.processors.FieldConstantAdderProcessor",
+                "result": "left", "config": {"value": "L"}, "next": []} ]},
+             {"start": "b0", "pipeline": [
+               {"id": "b0", "name": "tuktu.processors.SkipProcessor",
+                "config": {}, "next": []} ]} ]}"""), byK("k", "left") _, Seq("a:L", "b:L", "c:L")),
+      (ml, trainApply("regression", "RidgeRegression", """, "lambda": 0.0""", "z"),
+        (df: DataFrame) => byK("k", "r")(df.withColumn("r", round(col("r"), 6))),
+        Seq("a:1.0", "b:3.0", "c:21.0")),
+      (ml, trainApply("regression", "LogisticRegression", "", "y"), byK("k", "r") _, classes),
+      (ml, trainApply("svm", "SVM", """, "penalty": 100.0""", "y"), byK("k", "r") _, classes),
+      (ml, trainApply("decisiontrees", "DecisionTree", """, "max_nodes": 2""", "y"),
+        byK("k", "r") _, classes),
+      (ml, trainApply("decisiontrees", "GradientTreeBoost",
+        """, "num_trees": 3, "shrinkage": 1.0, "sampling_rate": 1.0""", "y"), byK("k", "r") _, classes))
+    val bad = pins.flatMap { case (rows, procs, render, expected) =>
+      val got = render(Flow.runSingle(spark, listFlow(rows, procs)))
+      if (got == expected) None else Some(s"$procs\n  got ${got.map("\"" + _ + "\"").mkString(", ")}")
+    }
+    Seq("RidgeRegression", "LogisticRegression", "SVM", "DecisionTree", "GradientTreeBoost")
+      .foreach(m => graft.ml.ModelRegistry.destroy(s"pin_$m"))
+    assert(bad.isEmpty, bad.mkString("\n"))
+
+    // the one generator no other spec names
+    val dummy = Flow.runSingle(spark, """{ "generators": [
+      {"id": "g", "name": "tuktu.generators.DummyGenerator", "result": "r",
+       "config": {"message": "hi", "max_amount": 2}, "next": []} ] }""")
+    assert(dummy.as[String].collect().toSeq == Seq("hi", "hi"))
+
+    // a rejecting mode of an executing entry fails with its reason
+    val groovy = intercept[IllegalArgumentException](Flow.runSingle(spark, listFlow(base,
+      proc("tuktu.processors.PacketFilterProcessor",
+        """{"type": "groovy", "expression": "true"}"""))))
+    assert(groovy.getMessage.contains("groovy expressions are not supported"))
   }
 }

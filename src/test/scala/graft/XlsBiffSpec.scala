@@ -603,5 +603,10 @@ class XlsBiffSpec extends SparkSpec {
     assert(got == Set(
       ("Q1", "North", "10"), ("Q1", "North", "20"), ("Q2", "North", "30"),
       ("Q1", "South", "40"), ("Q1", "South", "5.5"), ("Q2", "South", "6")))
+    // the same records through the verbatim XlsGenerator config
+    val viaFlow = graft.engine.Flow.runSingle(spark,
+      SpreadsheetSpec.generatorFlow("XlsGenerator", f.getAbsolutePath))
+      .select("quarter", "region", "sales").as[(String, String, String)].collect().toSet
+    assert(viaFlow == got)
   }
 }
