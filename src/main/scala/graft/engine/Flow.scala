@@ -25,186 +25,224 @@ import scala.jdk.CollectionConverters._
  * unreachable from a generator are dropped (Dispatcher.scala:94-104 — free
  * here since evaluation is demand-driven from the terminals). There is no
  * iteratee machinery to port: Catalyst is the scheduler.
+ *
+ * Node names resolve through one registry held as data: [[generators]]
+ * and [[processors]] map each name — engine-native (`"filter"`, `"csv"`,
+ * …) or a reference FQCN ([[TuktuCompat]]) — to a plain function of the
+ * node, and [[TuktuCompat.rejects]] holds the names rejected by design
+ * with their porting guidance. [[parse]] resolves every node, so an
+ * unknown name fails before anything is built. (Tuktu resolved nodes by
+ * FQCN reflection, ref api.scala:180-183; this is the typed lookup.)
  */
 object Flow {
   private[engine] val mapper = new ObjectMapper()
 
+  /** A flow node. Its methods are the one config reader: entries read
+    * `config` (or, through [[at]], an object nested in it) by key, and a
+    * missing required key fails naming the node and the key. */
   final case class Node(id: String, name: String, config: JsonNode, next: Seq[String],
-                        result: String)
+                        result: String) {
+    def opt(k: String): Option[JsonNode] = Option(config.get(k))
+    def req(k: String): JsonNode = opt(k).getOrElse(throw new IllegalArgumentException(
+      s"flow node '$id' ($name): missing key '$k'"))
+    def str(k: String): String = req(k).asText
+    def strOpt(k: String): Option[String] = opt(k).map(_.asText)
+    /** The elements of an array; absent = empty. */
+    def arr(k: String): Seq[JsonNode] = opt(k).fold(Seq.empty[JsonNode])(_.elements().asScala.toSeq)
+    def strs(k: String): Seq[String] = arr(k).map(_.asText)
+    /** The objects of an array, each read like a config. */
+    def objs(k: String): Seq[Node] = arr(k).map(at)
+    def bool(k: String): Boolean = opt(k).exists(_.asBoolean)
+    def pairs(k: String): Seq[(String, String)] =
+      req(k).properties().asScala.toSeq.map(e => e.getKey -> e.getValue.asText)
+    /** The same reader over `json`, an object nested in the config. */
+    def at(json: JsonNode): Node = copy(config = json)
+  }
+
+  type Generator = (SparkSession, Node) => DataFrame
+  type Processor = (DataFrame, Node) => DataFrame
 
   def parse(json: String): (Seq[Node], Seq[Node]) = {
     val root = mapper.readTree(json)
     def field(f: String): Seq[JsonNode] =
       Option(root.get(f)).map(_.elements().asScala.toSeq).getOrElse(Nil)
-    (nodes(field("generators"), "generators"), nodes(field("processors"), "processors"))
+    (nodes(field("generators"), "generators", generatorOf),
+      nodes(field("processors"), "processors", processorOf))
   }
 
-  /** Decode a JSON array of flow nodes; a node without an `id` gets
-    * `idPrefix` + its position. */
-  private[engine] def nodes(items: Seq[JsonNode], idPrefix: String): Seq[Node] =
-    items.zipWithIndex.map { case (n, i) =>
-      Node(
-        id = Option(n.get("id")).map(_.asText).getOrElse(s"$idPrefix$i"),
-        name = n.get("name").asText,
-        config = Option(n.get("config")).getOrElse(mapper.createObjectNode()),
-        next = Option(n.get("next")).map(_.elements().asScala.map(_.asText).toSeq).getOrElse(Nil),
-        result = Option(n.get("result")).map(_.asText).getOrElse("result"))
+  /** Decode a JSON array of flow nodes, resolving each through `entry`; a
+    * node without an `id` gets `idPrefix` + its position. */
+  private[engine] def nodes(items: Seq[JsonNode], idPrefix: String,
+                            entry: Node => Any): Seq[Node] =
+    items.zipWithIndex.map { case (j, i) =>
+      val raw = Node(Option(j.get("id")).map(_.asText).getOrElse(s"$idPrefix$i"),
+        "unnamed", j, Nil, "result")
+      val n = Node(raw.id, raw.str("name"), raw.opt("config").getOrElse(mapper.createObjectNode()),
+        raw.strs("next"), raw.strOpt("result").getOrElse("result"))
+      entry(n)
+      n
     }
+
+  private def generatorOf(n: Node): Generator =
+    generators.getOrElse(n.name, unknown(n, generators.keySet))
+
+  private[engine] def processorOf(n: Node): Processor =
+    processors.get(n.name).orElse(TuktuCompat.mlDeserialize(n.name))
+      .getOrElse(unknown(n, processors.keySet))
+
+  /** A name with no entry: a reject fails with its porting guidance, any
+    * other name with the node id and the names that position knows. */
+  private def unknown(n: Node, known: Set[String]): Nothing =
+    TuktuCompat.rejects.get(n.name) match {
+      case Some(guidance) => throw new UnsupportedOperationException(guidance)
+      case None => throw new IllegalArgumentException(
+        s"flow node '${n.id}': unknown name '${n.name}'; known names: " +
+          known.toSeq.sorted.mkString(", "))
+    }
+
+  /** Config-level "result" wins, then the node-level attribute (the form
+    * the Tuktu FQCN path uses), then the literal default. */
+  private def result(c: Node): String = c.strOpt("result").getOrElse(c.result)
+
+  /** Benchmark side of the decontamination entries: a Registry bucket
+    * (tuktu.db Write/Read). */
+  private def bench(c: Node): DataFrame = graft.sources.Registry.get(c.str("bench"))
+    .getOrElse(throw new IllegalArgumentException(
+      s"${c.name}: no Registry bucket named '${c.str("bench")}'"))
 
   // ------------------------------------------------------------ generators
-  private def generate(spark: SparkSession, n: Node): DataFrame = {
-    if (TuktuCompat.isCompat(n.name)) return TuktuCompat.generator(spark, n)
-    def str(k: String): String = n.config.get(k).asText
-    def strOpt(k: String): Option[String] = Option(n.config.get(k)).map(_.asText)
-    n.name match {
-      case "parquet" => spark.read.parquet(str("path"))
-      case "csv" =>
-        spark.read
-          .option("header", strOpt("header").getOrElse("true"))
-          .option("sep", strOpt("separator").getOrElse(","))
-          .csv(str("path"))
-      case "json" => spark.read.json(str("path"))
-      case "text" => spark.read.text(str("path"))
-      // ListGenerator / CustomPacketGenerator (ref DummyGenerator.scala:120-190):
-      // inline rows as a JSON array of objects
-      case "list" =>
-        import spark.implicits._
-        val ds = spark.createDataset(
-          n.config.get("rows").elements().asScala.map(_.toString).toSeq)
-        spark.read.json(ds)
-      // DummyGenerator batch mode (ref DummyGenerator.scala:34-86)
-      case "range" => spark.range(n.config.get("n").asLong).toDF("id")
-      case other => throw new IllegalArgumentException(s"unknown generator: $other")
-    }
-  }
+  /** The registry's generators: native names, then [[TuktuCompat]]'s FQCNs. */
+  val generators: Map[String, Generator] = Map[String, Generator](
+    "parquet" -> ((spark, c) => spark.read.parquet(c.str("path"))),
+    "csv" -> ((spark, c) =>
+      spark.read
+        .option("header", c.strOpt("header").getOrElse("true"))
+        .option("sep", c.strOpt("separator").getOrElse(","))
+        .csv(c.str("path"))),
+    "json" -> ((spark, c) => spark.read.json(c.str("path"))),
+    "text" -> ((spark, c) => spark.read.text(c.str("path"))),
+    // ListGenerator / CustomPacketGenerator (ref DummyGenerator.scala:120-190):
+    // inline rows as a JSON array of objects
+    "list" -> { (spark, c) =>
+      import spark.implicits._
+      spark.read.json(spark.createDataset(
+        c.req("rows").elements().asScala.map(_.toString).toSeq))
+    },
+    // DummyGenerator batch mode (ref DummyGenerator.scala:34-86)
+    "range" -> ((spark, c) => spark.range(c.req("n").asLong).toDF("id"))
+  ) ++ TuktuCompat.generators
 
   // ------------------------------------------------------------ processors
-  private def apply1(df: DataFrame, n: Node): DataFrame = {
-    if (TuktuCompat.isCompat(n.name)) return TuktuCompat.processor(df, n)
-    val c = n.config
-    def str(k: String): String = c.get(k).asText
-    def strOpt(k: String): Option[String] = Option(c.get(k)).map(_.asText)
-    def pairs(k: String): Seq[(String, String)] =
-      c.get(k).properties().asScala.toSeq.map(e => e.getKey -> e.getValue.asText)
-    def strs(k: String): Seq[String] =
-      c.get(k).elements().asScala.map(_.asText).toSeq
-    // config-level "result" wins, then the node-level attribute (the form
-    // the Tuktu FQCN path uses), then the literal default
-    def result: String = strOpt("result").getOrElse(n.result)
-
-    n.name match {
-      case "skip"            => df // SkipProcessor (BaseProcessors.scala:23)
-      case "field_filter"    => Ops.fieldFilter(df, pairs("fields"))
-      case "field_remove"    => Ops.fieldRemove(df, strs("fields"))
-      case "field_copy"      => Ops.fieldCopy(df, pairs("fields"))
-      case "field_rename"    => Ops.fieldRename(df, pairs("fields"))
-      case "constant_adder"  => Ops.constantAdder(df, result, str("value"))
-      case "filter"          => Ops.filter(df, str("predicate"))
-      case "predicate_field" => Ops.predicateField(df, str("predicate"), result)
-      case "arithmetic"      => Ops.arithmetic(df, str("expression"), result)
-      case "explode"         => Ops.sequenceExplode(df, str("field"), result)
-      case "split"           => Ops.stringSplit(df, str("field"), str("separator"), result)
-      case "implode"         => Ops.stringImplode(df, str("field"), str("separator"), result)
-      case "flatten"         => Ops.flatten(df, strOpt("separator").getOrElse("."))
-      case "json_path"       => Ops.getJsonPath(df, str("field"), str("path"), result)
-      case "sort" =>
-        Ops.sort(df, strs("fields").map(f =>
-          if (strOpt("order").contains("desc")) col(f).desc else col(f).asc))
-      case "take" => Ops.take(df, c.get("n").asInt)
-      case "dedup" => Ops.dedupFirstSeen(df, strs("fields"), strs("order_by").map(col))
-      // GroupByProcessor + bucket aggregate (AggregateByValue semantics)
-      case "aggregate" =>
-        Ops.aggregateByValue(df, strs("group"), pairs("aggs"))
-      // round-2 operators reachable from flow configs
-      case "json_merge" => Ops.jsonMerge(df, str("a"), str("b"), result)
-      // HTTP enrichment family (ref modules/web processors)
-      case "rest" =>
-        graft.operators.Http.restEnrich(df, str("url"), result,
-          method = strOpt("http_method").getOrElse("GET"),
-          // object-shaped bodies render as JSON (asText on a container is "")
-          bodyTemplate = Option(c.get("body")).map(b =>
-            if (b.isTextual) b.asText else b.toString))
-      case "url_check" =>
-        graft.operators.Http.urlChecker(df, str("url"), result,
-          codes = Option(c.get("codes")).map(_.elements().asScala.map(_.asInt).toSeq))
-      case "geoip" =>
-        graft.operators.Http.freeGeoIp(df, str("ip"), result,
-          geoipUrl = strOpt("geoipurl").getOrElse("http://freegeoip.net"),
-          format = strOpt("format").getOrElse("json"))
-      // round-3 operators reachable from engine-native flow configs
-      case "lines_per_row"  => graft.sources.Sources.linesPerRow(df, str("path_field"), result)
-      case "file_to_string" => graft.sources.Sources.fileToString(df, str("path_field"), result)
-      case "file_to_json"   => graft.sources.Sources.fileToJson(df, str("path_field"), result)
-      case "evaluate_nested" => Ops.evaluateNested(df, str("template"), result)
-      case "keyword_tag" =>
-        val kws = Option(c.get("keywords")).map(_.elements().asScala.toSeq).getOrElse(Nil)
-          .map(k =>
-            if (k.isTextual) graft.operators.TextAnalysis.Keyword(k.asText)
-            else graft.operators.TextAnalysis.Keyword(k.get("keyword").asText,
-              Option(k.get("case_sensitive")).exists(_.asBoolean),
-              Option(k.get("exact")).exists(_.asBoolean)))
-        graft.operators.TextAnalysis.keywordTagger(df, str("field"), kws, result,
-          excludeOnNone = Option(c.get("exclude_on_none")).exists(_.asBoolean))
-      case "model_apply" => graft.ml.ModelRegistry(str("model"), df)
-      case "stem" => graft.operators.Nlp.stemTokens(df, str("field"), result)
-      case "pos_tag" => graft.operators.Nlp.posTags(df, str("field"), result)
-      case "sentiment" =>
-        graft.operators.Nlp.polarity(df, str("tokens"), str("pos"), result,
-          discretize = Option(c.get("discretize")).exists(_.asBoolean))
-      case "summarize" =>
-        graft.operators.Nlp.summarize(df, str("text_field"), str("tfidf_field"), result,
-          numLines = Option(c.get("num_lines")).map(_.asInt).getOrElse(3),
-          optimalLength = Option(c.get("optimal_sentence_length")).map(_.asInt).getOrElse(11),
-          base = Option(c.get("base")).map(_.asDouble).getOrElse(1.1))
-      case "document" =>
-        graft.operators.Nlp.assembleDocument(df, strs("group"), str("field"),
-          str("order_by"), result,
-          sep = strOpt("separator").getOrElse(" "))
-      // round-4 operators reachable from engine-native flow configs
-      case "url_normalize" =>
-        df.withColumn(result, graft.operators.Url.normalize(col(str("field"))))
-      case "url_host" =>
-        df.withColumn(result, graft.operators.Url.host(col(str("field"))))
-      case "url_domain" =>
-        df.withColumn(result, graft.operators.Url.registrableDomain(col(str("field"))))
-      case "line_dedup" =>
-        graft.operators.Dedup.lineDedup(df, str("id_field"), str("field"),
-          maxDocs = Option(c.get("max_docs")).map(_.asLong).getOrElse(5L))
-      case "near_dup_clusters" =>
-        graft.operators.Dedup.nearDupClusters(df, str("field"), str("id_field"),
-          n = Option(c.get("n")).map(_.asInt).getOrElse(3),
-          k = Option(c.get("k")).map(_.asInt).getOrElse(16),
-          bands = Option(c.get("bands")).map(_.asInt).getOrElse(4),
-          threshold = Option(c.get("threshold")).map(_.asDouble).getOrElse(0.5))
-      case "connected_components" =>
-        graft.operators.Dedup.connectedComponents(df, str("src"), str("dst"))
-      // benchmark side comes from a Registry bucket (tuktu.db Write/Read)
-      case "decontaminate" =>
-        val bench = graft.sources.Registry.get(str("bench"))
-          .getOrElse(throw new IllegalArgumentException(
-            s"decontaminate: no Registry bucket named '${str("bench")}'"))
-        graft.operators.Dedup.decontaminate(df, bench, str("id_field"), str("field"),
-          n = Option(c.get("n")).map(_.asInt).getOrElse(8))
-      case "decontaminate_bloom" =>
-        val bench = graft.sources.Registry.get(str("bench"))
-          .getOrElse(throw new IllegalArgumentException(
-            s"decontaminate_bloom: no Registry bucket named '${str("bench")}'"))
-        graft.operators.Dedup.decontaminateBloom(df, bench, str("id_field"), str("field"),
-          n = Option(c.get("n")).map(_.asInt).getOrElse(8),
-          fpp = Option(c.get("fpp")).map(_.asDouble).getOrElse(0.01))
-      case "corpus_mix" =>
-        graft.operators.Corpus.mixtureSample(df, str("domain_field"), str("id_field"),
-          alpha = Option(c.get("alpha")).map(_.asDouble).getOrElse(0.5))
-      case "lm_score" =>
-        graft.operators.LangModel.selfScore(df, str("id_field"), str("field"))
-      case "pack_sequences" =>
-        graft.operators.Corpus.packSequences(df, str("id_field"),
-          size(graft.operators.TextAnalysis.tokens(col(str("field")))),
-          nShards = Option(c.get("shards")).map(_.asInt).getOrElse(64),
-          budget = Option(c.get("budget")).map(_.asLong).getOrElse(2048L))
-      case other => throw new IllegalArgumentException(s"unknown processor: $other")
-    }
-  }
+  /** The registry's processors: native names, then [[TuktuCompat]]'s FQCNs. */
+  val processors: Map[String, Processor] = Map[String, Processor](
+    "skip"            -> ((df, _) => df), // SkipProcessor (BaseProcessors.scala:23)
+    "field_filter"    -> ((df, c) => Ops.fieldFilter(df, c.pairs("fields"))),
+    "field_remove"    -> ((df, c) => Ops.fieldRemove(df, c.strs("fields"))),
+    "field_copy"      -> ((df, c) => Ops.fieldCopy(df, c.pairs("fields"))),
+    "field_rename"    -> ((df, c) => Ops.fieldRename(df, c.pairs("fields"))),
+    "constant_adder"  -> ((df, c) => Ops.constantAdder(df, result(c), c.str("value"))),
+    "filter"          -> ((df, c) => Ops.filter(df, c.str("predicate"))),
+    "predicate_field" -> ((df, c) => Ops.predicateField(df, c.str("predicate"), result(c))),
+    "arithmetic"      -> ((df, c) => Ops.arithmetic(df, c.str("expression"), result(c))),
+    "explode"         -> ((df, c) => Ops.sequenceExplode(df, c.str("field"), result(c))),
+    "split" -> ((df, c) => Ops.stringSplit(df, c.str("field"), c.str("separator"), result(c))),
+    "implode" ->
+      ((df, c) => Ops.stringImplode(df, c.str("field"), c.str("separator"), result(c))),
+    "flatten"         -> ((df, c) => Ops.flatten(df, c.strOpt("separator").getOrElse("."))),
+    "json_path" -> ((df, c) => Ops.getJsonPath(df, c.str("field"), c.str("path"), result(c))),
+    "sort" -> ((df, c) =>
+      Ops.sort(df, c.strs("fields").map(f =>
+        if (c.strOpt("order").contains("desc")) col(f).desc else col(f).asc))),
+    "take" -> ((df, c) => Ops.take(df, c.req("n").asInt)),
+    "dedup" -> ((df, c) => Ops.dedupFirstSeen(df, c.strs("fields"), c.strs("order_by").map(col))),
+    // GroupByProcessor + bucket aggregate (AggregateByValue semantics)
+    "aggregate" -> ((df, c) => Ops.aggregateByValue(df, c.strs("group"), c.pairs("aggs"))),
+    // round-2 operators reachable from flow configs
+    "json_merge" -> ((df, c) => Ops.jsonMerge(df, c.str("a"), c.str("b"), result(c))),
+    // HTTP enrichment family (ref modules/web processors)
+    "rest" -> ((df, c) =>
+      graft.operators.Http.restEnrich(df, c.str("url"), result(c),
+        method = c.strOpt("http_method").getOrElse("GET"),
+        // object-shaped bodies render as JSON (asText on a container is "")
+        bodyTemplate = c.opt("body").map(b =>
+          if (b.isTextual) b.asText else b.toString))),
+    "url_check" -> ((df, c) =>
+      graft.operators.Http.urlChecker(df, c.str("url"), result(c),
+        codes = c.opt("codes").map(_.elements().asScala.map(_.asInt).toSeq))),
+    "geoip" -> ((df, c) =>
+      graft.operators.Http.freeGeoIp(df, c.str("ip"), result(c),
+        geoipUrl = c.strOpt("geoipurl").getOrElse("http://freegeoip.net"),
+        format = c.strOpt("format").getOrElse("json"))),
+    // round-3 operators reachable from engine-native flow configs
+    "lines_per_row" ->
+      ((df, c) => graft.sources.Sources.linesPerRow(df, c.str("path_field"), result(c))),
+    "file_to_string" ->
+      ((df, c) => graft.sources.Sources.fileToString(df, c.str("path_field"), result(c))),
+    "file_to_json" ->
+      ((df, c) => graft.sources.Sources.fileToJson(df, c.str("path_field"), result(c))),
+    "evaluate_nested" -> ((df, c) => Ops.evaluateNested(df, c.str("template"), result(c))),
+    "keyword_tag" -> { (df, c) =>
+      val kws = c.arr("keywords").map(k =>
+        if (k.isTextual) graft.operators.TextAnalysis.Keyword(k.asText)
+        else {
+          val kw = c.at(k)
+          graft.operators.TextAnalysis.Keyword(kw.str("keyword"),
+            kw.bool("case_sensitive"), kw.bool("exact"))
+        })
+      graft.operators.TextAnalysis.keywordTagger(df, c.str("field"), kws, result(c),
+        excludeOnNone = c.bool("exclude_on_none"))
+    },
+    "model_apply" -> ((df, c) => graft.ml.ModelRegistry(c.str("model"), df)),
+    "stem" -> ((df, c) => graft.operators.Nlp.stemTokens(df, c.str("field"), result(c))),
+    "pos_tag" -> ((df, c) => graft.operators.Nlp.posTags(df, c.str("field"), result(c))),
+    "sentiment" -> ((df, c) =>
+      graft.operators.Nlp.polarity(df, c.str("tokens"), c.str("pos"), result(c),
+        discretize = c.bool("discretize"))),
+    "summarize" -> ((df, c) =>
+      graft.operators.Nlp.summarize(df, c.str("text_field"), c.str("tfidf_field"), result(c),
+        numLines = c.opt("num_lines").map(_.asInt).getOrElse(3),
+        optimalLength = c.opt("optimal_sentence_length").map(_.asInt).getOrElse(11),
+        base = c.opt("base").map(_.asDouble).getOrElse(1.1))),
+    "document" -> ((df, c) =>
+      graft.operators.Nlp.assembleDocument(df, c.strs("group"), c.str("field"),
+        c.str("order_by"), result(c),
+        sep = c.strOpt("separator").getOrElse(" "))),
+    // round-4 operators reachable from engine-native flow configs
+    "url_normalize" ->
+      ((df, c) => df.withColumn(result(c), graft.operators.Url.normalize(col(c.str("field"))))),
+    "url_host" ->
+      ((df, c) => df.withColumn(result(c), graft.operators.Url.host(col(c.str("field"))))),
+    "url_domain" -> ((df, c) =>
+      df.withColumn(result(c), graft.operators.Url.registrableDomain(col(c.str("field"))))),
+    "line_dedup" -> ((df, c) =>
+      graft.operators.Dedup.lineDedup(df, c.str("id_field"), c.str("field"),
+        maxDocs = c.opt("max_docs").map(_.asLong).getOrElse(5L))),
+    "near_dup_clusters" -> ((df, c) =>
+      graft.operators.Dedup.nearDupClusters(df, c.str("field"), c.str("id_field"),
+        n = c.opt("n").map(_.asInt).getOrElse(3),
+        k = c.opt("k").map(_.asInt).getOrElse(16),
+        bands = c.opt("bands").map(_.asInt).getOrElse(4),
+        threshold = c.opt("threshold").map(_.asDouble).getOrElse(0.5))),
+    "connected_components" ->
+      ((df, c) => graft.operators.Dedup.connectedComponents(df, c.str("src"), c.str("dst"))),
+    "decontaminate" -> ((df, c) =>
+      graft.operators.Dedup.decontaminate(df, bench(c), c.str("id_field"), c.str("field"),
+        n = c.opt("n").map(_.asInt).getOrElse(8))),
+    "decontaminate_bloom" -> ((df, c) =>
+      graft.operators.Dedup.decontaminateBloom(df, bench(c), c.str("id_field"), c.str("field"),
+        n = c.opt("n").map(_.asInt).getOrElse(8),
+        fpp = c.opt("fpp").map(_.asDouble).getOrElse(0.01))),
+    "corpus_mix" -> ((df, c) =>
+      graft.operators.Corpus.mixtureSample(df, c.str("domain_field"), c.str("id_field"),
+        alpha = c.opt("alpha").map(_.asDouble).getOrElse(0.5))),
+    "lm_score" ->
+      ((df, c) => graft.operators.LangModel.selfScore(df, c.str("id_field"), c.str("field"))),
+    "pack_sequences" -> ((df, c) =>
+      graft.operators.Corpus.packSequences(df, c.str("id_field"),
+        size(graft.operators.TextAnalysis.tokens(col(c.str("field")))),
+        nShards = c.opt("shards").map(_.asInt).getOrElse(64),
+        budget = c.opt("budget").map(_.asLong).getOrElse(2048L)))
+  ) ++ TuktuCompat.processors
 
   /** GeneratorConfigProcessor-style `#{var}` config interpolation
     * (ref: app/tuktu/processors/meta/MetaProcessors.scala:26): substitute
@@ -264,11 +302,11 @@ object Flow {
     val procById = procs.map(p => p.id -> p).toMap
     // a processor id shadows a generator with the same id
     val genById = gens.map(g => g.id -> g).toMap -- procById.keySet
-    val eval = evaluator(procById, predecessors(gens ++ procs),
-      id => genById.get(id).map(generate(spark, _)))
+    def generate(g: Node): DataFrame = generatorOf(g)(spark, g)
+    val eval = evaluator(procById, predecessors(gens ++ procs), genById.get(_).map(generate))
     val terminals = procs.filter(_.next.isEmpty)
     if (terminals.isEmpty)
-      gens.map(g => g.id -> generate(spark, g)).toMap
+      gens.map(g => g.id -> generate(g)).toMap
     else terminals.map(t => t.id -> eval(t.id)).toMap
   }
 
@@ -333,7 +371,7 @@ object Flow {
         val node = procById(id)
         val inputs = preds.getOrElse(id, Nil).map(eval)
         require(inputs.nonEmpty, s"processor ${node.id} has no reachable input")
-        apply1(union(inputs), node)
+        processorOf(node)(union(inputs), node)
       } finally inProgress.remove(id)
     })
     eval

@@ -1,39 +1,23 @@
 package graft
 
 import java.nio.file.{Files, Paths}
-import graft.engine.{CompatCoverage, Flow, TuktuCompat}
+import graft.engine.{Flow, TuktuCompat}
 
-/** Keeps the COVERAGE.md FQCN tally honest: every name the dispatcher
-  * matches in case position must be classified in [[CompatCoverage]]
-  * (executes or rejects), and vice versa — a name added to one side
-  * without the other fails here, so the tally cannot drift. */
+/** Keeps the COVERAGE.md FQCN tally honest: the tally is the flow-node
+  * registry's FQCN keys plus [[TuktuCompat.rejects]], and COVERAGE.md must
+  * state the same counts. */
 class CompatCoverageSpec extends SparkSpec {
 
-  private val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-
-  /** FQCN literals in case position of the dispatcher source: `case "x"`,
-    * alternation continuations `| "x"`, and grouped `("x"` openings. The
-    * `tuktu.ml.processors.` prefix literal (the generic Deserialize rule)
-    * is positional, not a concrete name. */
-  private def dispatcherNames: Set[String] = {
-    val src = new String(Files.readAllBytes(
-      Paths.get("src/main/scala/graft/engine/TuktuCompat.scala")))
-    val casePos = """(?m)(?:case\s+(?:\w+\s*@\s*)?\(?|^\s*\|\s*)"(tuktu\.[A-Za-z0-9_.]+)"""".r
-    casePos.findAllMatchIn(src).map(_.group(1)).toSet - CompatCoverage.mlDeserializePrefix
-  }
-
-  test("every dispatcher case name is classified, every classified name dispatched") {
-    val inSource = dispatcherNames
-    val classified = CompatCoverage.all
-    val unclassified = inSource -- classified
-    val stale = classified -- inSource
-    assert(unclassified.isEmpty, s"dispatcher names missing from CompatCoverage: $unclassified")
-    assert(stale.isEmpty, s"CompatCoverage names absent from the dispatcher: $stale")
-  }
+  private val fqcnGenerators = Flow.generators.keySet.filter(_.startsWith("tuktu."))
+  private val fqcnProcessors = Flow.processors.keySet.filter(_.startsWith("tuktu."))
 
   test("executes and rejects are disjoint; mode-limited names execute") {
-    assert(CompatCoverage.executes.intersect(CompatCoverage.rejects.keySet).isEmpty)
-    assert(CompatCoverage.modeLimited.keySet.subsetOf(CompatCoverage.executes))
+    val entries = Flow.generators.keySet ++ Flow.processors.keySet
+    assert(entries.intersect(TuktuCompat.rejects.keySet).isEmpty)
+    // entries with one rejecting mode (PacketFilter's groovy type,
+    // MapMerger's priority-less combine) are still entries
+    assert(Set("tuktu.processors.PacketFilterProcessor",
+      "tuktu.dlib.processors.MapMergerProcessor").subsetOf(fqcnProcessors))
   }
 
   test("the COVERAGE.md round-list tally equals the declared query ledger") {
@@ -62,6 +46,13 @@ class CompatCoverageSpec extends SparkSpec {
     }
     assert(arrows.last._2 == decl.last,
       s"last arrow lands on ${arrows.last._2}, declared tally ${decl.last}")
+    // the "Flow-config compatibility" paragraph states the registry's counts
+    val fqcns = ("""\*\*(\d+) reference FQCNs are registry entries \((\d+) generators, """ +
+      """(\d+) processors\), and (\d+) are rejected by name""").r
+    val stated = fqcns.findFirstMatchIn(md.replaceAll("\\s+", " "))
+      .map(_.subgroups.map(_.toInt)).getOrElse(fail("COVERAGE.md FQCN tally not found"))
+    assert(stated == Seq(fqcnGenerators.size + fqcnProcessors.size, fqcnGenerators.size,
+      fqcnProcessors.size, TuktuCompat.rejects.size), "COVERAGE.md FQCN tally is stale")
     // every declared query carries its DuckDB oracle (the "0 rows-only"
     // status the ledger reports)
     assert(SparkEntry.queries.keySet == SparkEntry.oracleSql.keySet,
@@ -70,15 +61,13 @@ class CompatCoverageSpec extends SparkSpec {
   }
 
   test("each by-name rejection throws with porting guidance, not a generic unknown-name error") {
-    val df = spark.range(1).toDF("x")
-    CompatCoverage.rejects.keys.foreach { fqcn =>
-      val node = Flow.Node(id = "r", name = fqcn,
-        config = mapper.createObjectNode(), next = Nil, result = "result")
-      val e = intercept[Exception](TuktuCompat.processor(df, node))
-      assert(e.isInstanceOf[UnsupportedOperationException] ||
-        e.isInstanceOf[IllegalArgumentException], s"$fqcn: ${e.getClass}")
-      assert(!e.getMessage.contains("unsupported compat processor"),
-        s"$fqcn fell through to the generic unknown-name case")
+    TuktuCompat.rejects.foreach { case (fqcn, guidance) =>
+      // a reject fails at parse in either node position
+      Seq(s"""{"generators": [{"id": "r", "name": "$fqcn", "next": []}]}""",
+          s"""{"processors": [{"id": "r", "name": "$fqcn", "next": []}]}""").foreach { flow =>
+        val e = intercept[UnsupportedOperationException](Flow.parse(flow))
+        assert(e.getMessage == guidance && guidance.startsWith(fqcn), fqcn)
+      }
     }
   }
 }

@@ -255,11 +255,57 @@ class FlowSpec extends SparkSpec {
   }
 
   test("unknown processor fails with a clear message") {
-    val flow = """
+    // names resolve at parse time: nothing is built for a flow that names
+    // an unknown node, and the message lists the names the position knows
+    val unknownProc = """
     { "generators": [ {"id": "g", "name": "range", "config": {"n": 1}, "next": ["bad"]} ],
       "processors": [ {"id": "bad", "name": "nope", "config": {}, "next": []} ] }"""
-    val e = intercept[IllegalArgumentException](Flow.runSingle(spark, flow).collect())
-    assert(e.getMessage.contains("unknown processor"))
+    val e = intercept[IllegalArgumentException](Flow.parse(unknownProc))
+    assert(e.getMessage.contains("'bad'") && e.getMessage.contains("unknown name 'nope'"))
+    assert(e.getMessage.contains("filter") &&
+      e.getMessage.contains("tuktu.processors.FieldFilterProcessor"))
+
+    val unknownGen = """
+    { "generators": [ {"id": "g", "name": "nope", "config": {}, "next": []} ] }"""
+    val g = intercept[IllegalArgumentException](Flow.parse(unknownGen))
+    assert(g.getMessage.contains("'g'") && g.getMessage.contains("unknown name 'nope'"))
+    assert(g.getMessage.contains("parquet") && !g.getMessage.contains("filter"))
+
+    // a name rejected by design carries its porting guidance
+    val rejected = unknownProc.replace("\"nope\"",
+      "\"tuktu.processors.meta.GeneratorConfigProcessor\"")
+    val r = intercept[UnsupportedOperationException](Flow.parse(rejected))
+    assert(r.getMessage.contains("compose the topology statically"))
+
+    // an inline sub-flow pipeline is config, decoded when its processor is
+    // built: the same check fails the build, before any action
+    val inline = """
+    { "generators": [ {"id": "g", "name": "range", "config": {"n": 1}, "next": ["par"]} ],
+      "processors": [
+        {"id": "par", "name": "tuktu.processors.meta.ParallelProcessor",
+         "config": {"merger": "tuktu.processors.merge.SerialMerger", "processors": [
+           {"start": "a", "pipeline": [{"id": "a", "name": "nope", "next": []}]} ]},
+         "next": []} ] }"""
+    Flow.parse(inline)
+    val i = intercept[IllegalArgumentException](Flow.run(spark, inline))
+    assert(i.getMessage.contains("'a'") && i.getMessage.contains("unknown name 'nope'"))
+  }
+
+  test("a missing config key fails naming the node and the key") {
+    def flow(proc: String) = s"""
+    { "generators": [ {"id": "g", "name": "range", "config": {"n": 1}, "next": ["p"]} ],
+      "processors": [ $proc ] }"""
+    val native = intercept[IllegalArgumentException](
+      Flow.run(spark, flow("""{"id": "p", "name": "filter", "config": {}, "next": []}""")))
+    assert(native.getMessage.contains("'p' (filter)") && native.getMessage.contains("'predicate'"))
+    val compat = intercept[IllegalArgumentException](Flow.run(spark, """
+    { "generators": [ {"id": "lines", "name": "tuktu.generators.LineGenerator",
+                       "config": {}, "next": []} ] }"""))
+    assert(compat.getMessage.contains("'lines' (tuktu.generators.LineGenerator)") &&
+      compat.getMessage.contains("'filename'"))
+    val unnamed = intercept[IllegalArgumentException](
+      Flow.parse(flow("""{"id": "p", "config": {}, "next": []}""")))
+    assert(unnamed.getMessage.contains("'p'") && unnamed.getMessage.contains("'name'"))
   }
 
   test("mergeConfig overlays generators by index, processors by id (UtilsTest cases)") {

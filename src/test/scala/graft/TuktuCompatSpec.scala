@@ -1287,36 +1287,46 @@ class TuktuCompatSpec extends SparkSpec {
         byK("r") _, Seq("{p -> 1, q -> x}", "{p -> 2}", "{}")),
       (base, proc("tuktu.processors.DatumToFieldProcessor", "{}"),
         (df: DataFrame) => df.columns.toSeq ++ df.select("r.k", "r.y")
-          .orderBy("k").as[(String, Long)].collect().map(_.toString), Seq("r", "(a,4)", "(b,6)", "(c,11)")),
+          .orderBy("k").as[(String, Long)].collect().map(_.toString),
+        Seq("r", "(a,4)", "(b,6)", "(c,11)")),
       (base, proc("tuktu.processors.EvaluateNestedTuktuExpressionsProcessor",
         """{"expression": "${k}-${x}"}"""), byK("r") _, Seq("a-1", "b-2", "c-3")),
       (base, proc("tuktu.processors.BatchedFileStreamProcessor",
         s"""{"file_name": "$out", "fields": ["k", "x"], "field_separator": "|"}"""),
         (df: DataFrame) => byK("k")(df) ++
-          spark.read.text(out).as[String].collect().sorted, Seq("a", "b", "c", "a|1", "b|2", "c|3")),
+          spark.read.text(out).as[String].collect().sorted,
+        Seq("a", "b", "c", "a|1", "b|2", "c|3")),
       (base, proc("tuktu.csv.processors.CSVReaderProcessor",
-        """{"field": "s", "headers": ["p", "q"]}"""), byK("k", "p", "q", "s") _, Seq("a:1:2:1;2", "b:3:4:3;4", "c:5:6:5;6")),
+        """{"field": "s", "headers": ["p", "q"]}"""), byK("k", "p", "q", "s") _,
+        Seq("a:1:2:1;2", "b:3:4:3;4", "c:5:6:5;6")),
       (base, proc("tuktu.nlp.processors.LangDetProcessor", """{"field": "t"}"""),
         byK("r") _, Seq("en", "de", "fr")),
       (base, proc("tuktu.nlp.processors.RBEMEmotionProcessor",
-        """{"language": "en", "tokens": "toks", "pos": "pos"}"""), byK("r") _, Seq("{happiness -> 0.0, sadness -> 0.0, anger -> 0.0, fear -> 0.0}",
+        """{"language": "en", "tokens": "toks", "pos": "pos"}"""), byK("r") _,
+        Seq("{happiness -> 0.0, sadness -> 0.0, anger -> 0.0, fear -> 0.0}",
           "{happiness -> 1.0, sadness -> 0.0, anger -> 0.0, fear -> 0.0}",
           "{happiness -> 0.0, sadness -> 0.0, anger -> 0.0, fear -> 0.0}")),
       (base, proc("tuktu.nlp.processors.cleanup.EmojiRemoverProcessor",
-        """{"field": "toks"}"""), byK("r") _, Seq("[The, cat, ,, sat, ]", "[a, happy, dog, !]", "[Café, is, bad]")),
+        """{"field": "toks"}"""), byK("r") _,
+        Seq("[The, cat, ,, sat, ]", "[a, happy, dog, !]", "[Café, is, bad]")),
       (base, proc("tuktu.nlp.processors.cleanup.NCharsRemoverProcessor",
-        """{"field": "toks", "n": 2}"""), byK("r") _, Seq("[The, cat, sat]", "[happy, dog]", "[Café, bad]")),
+        """{"field": "toks", "n": 2}"""), byK("r") _,
+        Seq("[The, cat, sat]", "[happy, dog]", "[Café, bad]")),
       (base, proc("tuktu.nlp.processors.cleanup.OddCharacterRemoverProcessor",
-        """{"field": "toks"}"""), byK("r") _, Seq("[The, cat, , sat, ]", "[a, happy, dog, ]", "[Cafe, is, bad]")),
+        """{"field": "toks"}"""), byK("r") _,
+        Seq("[The, cat, , sat, ]", "[a, happy, dog, ]", "[Cafe, is, bad]")),
       (base, proc("tuktu.nlp.processors.cleanup.PunctuationRemoverProcessor",
-        """{"field": "toks"}"""), byK("r") _, Seq("[The, cat, sat, 😀]", "[a, happy, dog]", "[Café, is, bad]")),
+        """{"field": "toks"}"""), byK("r") _,
+        Seq("[The, cat, sat, 😀]", "[a, happy, dog]", "[Café, is, bad]")),
       (base, proc("tuktu.nlp.processors.cleanup.StopwordRemoverProcessor",
-        """{"field": "toks", "lang": "en"}"""), byK("r") _, Seq("[The, cat, ,, sat, 😀]", "[happy, dog, !]", "[Café, bad]")),
+        """{"field": "toks", "lang": "en"}"""), byK("r") _,
+        Seq("[The, cat, ,, sat, 😀]", "[happy, dog, !]", "[Café, bad]")),
       (base, proc("tuktu.web.processors.RESTProcessor",
         """{"url": "http://127.0.0.1:1/x"}"""),
         (df: DataFrame) => byK("k")(df.filter(col("r_status") < 0)), Seq("a", "b", "c")),
       (base, proc("tuktu.web.processors.URLCheckerProcessor",
-        """{"url": "http://127.0.0.1:1/x", "codes": [200]}"""), byK("r") _, Seq("false", "false", "false")),
+        """{"url": "http://127.0.0.1:1/x", "codes": [200]}"""), byK("r") _,
+        Seq("false", "false", "false")),
       (base, proc("tuktu.processors.meta.ParallelProcessor",
         """{"merger": "tuktu.processors.merge.PaddingMerger", "processors": [
              {"start": "a0", "pipeline": [
@@ -1335,10 +1345,12 @@ class TuktuCompatSpec extends SparkSpec {
       (ml, trainApply("decisiontrees", "DecisionTree", """, "max_nodes": 2""", "y"),
         byK("k", "r") _, classes),
       (ml, trainApply("decisiontrees", "GradientTreeBoost",
-        """, "num_trees": 3, "shrinkage": 1.0, "sampling_rate": 1.0""", "y"), byK("k", "r") _, classes))
+        """, "num_trees": 3, "shrinkage": 1.0, "sampling_rate": 1.0""", "y"), byK("k", "r") _,
+        classes))
     val bad = pins.flatMap { case (rows, procs, render, expected) =>
       val got = render(Flow.runSingle(spark, listFlow(rows, procs)))
-      if (got == expected) None else Some(s"$procs\n  got ${got.map("\"" + _ + "\"").mkString(", ")}")
+      if (got == expected) None
+      else Some(s"$procs\n  got ${got.map("\"" + _ + "\"").mkString(", ")}")
     }
     Seq("RidgeRegression", "LogisticRegression", "SVM", "DecisionTree", "GradientTreeBoost")
       .foreach(m => graft.ml.ModelRegistry.destroy(s"pin_$m"))
