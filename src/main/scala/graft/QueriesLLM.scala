@@ -30,6 +30,12 @@ object QueriesLLM {
     *    replay under 32 partitions pays 32 store open/commit cycles per
     *    batch for ~16 rows each; four keeps the multi-partition state merge
     *    under test at a fraction of the fixed cost;
+    *  - the child writes its checkpoint, a temporary directory deleted
+    *    after the replay, through the FileSystem-based checkpoint manager
+    *    and without checksum sidecar files. Without Hadoop's native
+    *    library the default FileContext manager starts a `readlink` child
+    *    process for each side of every rename and a `chmod` per create, and
+    *    a checksum protects nothing in a directory that is thrown away;
     *  - the caller's streaming listeners are added to the child, whose
     *    progress events would otherwise reach no one. They are not removed
     *    after `stop()`, which would race the bus's asynchronous delivery
@@ -45,7 +51,11 @@ object QueriesLLM {
   private def replay[A: Encoder](s: SparkSession, outputMode: String, batches: Seq[Seq[A]])(
       build: (SparkSession, DataFrame) => DataFrame): DataFrame = {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    val c = SparkEntry.childSession(s, "spark.sql.shuffle.partitions" -> "4")
+    val c = SparkEntry.childSession(s, "spark.sql.shuffle.partitions" -> "4",
+      "spark.sql.streaming.checkpointFileManagerClass" ->
+        classOf[org.apache.spark.sql.execution.streaming.checkpointing
+          .FileSystemBasedCheckpointFileManager].getName,
+      "spark.sql.streaming.checkpoint.fileChecksum.enabled" -> "false")
     s.streams.listListeners().foreach(c.streams.addListener)
     val in = MemoryStream[A](implicitly[Encoder[A]], c)
     val name = "replay_" + java.util.UUID.randomUUID.toString.replace("-", "")
@@ -3913,7 +3923,8 @@ object QueriesLLM {
       }.reverse.mkString(" ")
       s"""WITH t AS (SELECT doc_id, string_split_regex(trim(lower(text)), '\\s+') AS toks FROM documents),
           sc AS (SELECT doc_id, $scores FROM t)
-          SELECT doc_id, CASE $decode ELSE 'und' END AS pred_lang FROM sc ORDER BY doc_id"""
+          SELECT doc_id, CASE WHEN $best < 8 THEN 'und' $decode END AS pred_lang
+          FROM sc ORDER BY doc_id"""
     },
     "quality_score" -> {
       val stopList = TextAnalysis.stopwords.map(w => s"'$w'").mkString(", ")

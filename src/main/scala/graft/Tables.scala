@@ -19,7 +19,7 @@ import org.apache.spark.sql.types._
   *    oracle's naive reading. */
 object Tables {
   def read(s: SparkSession, dir: String, name: String): DataFrame = {
-    val df = s.read.parquet(s"$dir/$name.parquet")
+    val df = graft.sources.Sources.load(s, "parquet", Map.empty, s"$dir/$name.parquet")
     if (name == "events") df.schema("ts").dataType match {
       case LongType => df.withColumn("ts", timestamp_micros(expr("ts div 1000")))
       case TimestampNTZType => df.withColumn("ts", col("ts").cast(TimestampType))

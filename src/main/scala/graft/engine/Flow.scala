@@ -67,7 +67,17 @@ object Flow {
     def field(f: String): Seq[JsonNode] =
       Option(root.get(f)).map(_.elements().asScala.toSeq).getOrElse(Nil)
     (nodes(field("generators"), "generators", generatorOf),
-      nodes(field("processors"), "processors", processorOf))
+      nodes(field("processors"), "processors", resolveProcessor))
+  }
+
+  /** A processor's entry. The nodes of the sub-pipelines it embeds inline
+    * ([[TuktuCompat.inlinePipelines]]) are resolved too, so an unknown name
+    * anywhere in the config fails at parse. */
+  private def resolveProcessor(n: Node): Processor = {
+    val p = processorOf(n)
+    TuktuCompat.inlinePipelines.get(n.name)
+      .foreach(_(n).foreach(nodes(_, "p", resolveProcessor)))
+    p
   }
 
   /** Decode a JSON array of flow nodes, resolving each through `entry`; a
@@ -113,13 +123,11 @@ object Flow {
   // ------------------------------------------------------------ generators
   /** The registry's generators: native names, then [[TuktuCompat]]'s FQCNs. */
   val generators: Map[String, Generator] = Map[String, Generator](
-    "parquet" -> ((spark, c) => spark.read.parquet(c.str("path"))),
-    "csv" -> ((spark, c) =>
-      spark.read
-        .option("header", c.strOpt("header").getOrElse("true"))
-        .option("sep", c.strOpt("separator").getOrElse(","))
-        .csv(c.str("path"))),
-    "json" -> ((spark, c) => spark.read.json(c.str("path"))),
+    "parquet" -> ((spark, c) =>
+      graft.sources.Sources.load(spark, "parquet", Map.empty, c.str("path"))),
+    "csv" -> ((spark, c) => graft.sources.Sources.csv(spark, c.str("path"),
+      header = c.strOpt("header").forall(_.toBoolean), sep = c.strOpt("separator").getOrElse(","))),
+    "json" -> ((spark, c) => graft.sources.Sources.json(spark, c.str("path"))),
     "text" -> ((spark, c) => spark.read.text(c.str("path"))),
     // ListGenerator / CustomPacketGenerator (ref DummyGenerator.scala:120-190):
     // inline rows as a JSON array of objects

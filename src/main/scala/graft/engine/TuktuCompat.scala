@@ -62,6 +62,13 @@ object TuktuCompat {
   private def flowNodes(procs: Seq[JsonNode]): Seq[Flow.Node] =
     Flow.nodes(procs, "p", Flow.processorOf)
 
+  /** The processor arrays a meta processor embeds inline in its config,
+    * which `Flow.parse` resolves with the node itself. (Pipelines loaded
+    * from [[configRepo]] are read only when their processor is built.) */
+  private[engine] val inlinePipelines: Map[String, Flow.Node => Seq[Seq[JsonNode]]] = Map(
+    "tuktu.processors.meta.ParallelProcessor" -> (c => c.objs("processors").map(_.arr("pipeline"))),
+    "tuktu.processors.cache.CachingProcessor" -> (c => Seq(c.arr("processors"))))
+
   /** Navigate a (possibly nested) path from the row root. */
   private def colPath(path: Seq[String]): Column =
     path.tail.foldLeft(col(s"`${path.head}`"))(_.getField(_))

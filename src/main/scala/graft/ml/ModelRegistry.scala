@@ -51,7 +51,8 @@ object ModelRegistry {
     * model's own companion `load`). */
   def deserialize(name: String, path: String): Transformer = {
     val spark = org.apache.spark.sql.SparkSession.active
-    val meta = spark.read.json(s"$path/metadata").select("class").head.getString(0)
+    val meta = graft.sources.Sources.json(spark, s"$path/metadata")
+      .select("class").head.getString(0)
     val companion = Class.forName(meta + "$")
     val module = companion.getField("MODULE$").get(null)
     val model = companion.getMethod("load", classOf[String])

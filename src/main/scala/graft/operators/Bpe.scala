@@ -176,7 +176,8 @@ object Bpe {
   /** Load a merge table saved by [[saveMerges]], in application order. */
   def loadMerges(spark: SparkSession, path: String): Seq[Merge] = {
     import spark.implicits._
-    spark.read.parquet(path).as[Merge].collect().toSeq.sortBy(_.step)
+    graft.sources.Sources.load(spark, "parquet", Map.empty, path)
+      .as[Merge].collect().toSeq.sortBy(_.step)
   }
 
   /** Encode against a trained vocab table (w, rep, freq) — the final reps

@@ -29,7 +29,8 @@ object TextAnalysis {
   // ---------------------------------------------------------------- language id
   /** Marker words per language; tiny n-gram-free heuristic. Scores are
     * marker-token counts; argmax with alphabetical tie-break, encoded as
-    * score*8+priority so the DuckDB oracle is identical integer math. */
+    * score*8+priority so the DuckDB oracle is identical integer math. A
+    * text with no marker word of any language is "und" (undetermined). */
   val langMarkers: Seq[(String, Seq[String])] = Seq(
     "de" -> Seq("der", "die", "das", "und", "nicht", "ist"),
     "en" -> Seq("the", "a", "of", "and", "is", "not"),
@@ -54,7 +55,7 @@ object TextAnalysis {
     val prios = array(langMarkers.indices.map(i => lit(7 - i)): _*)
     val langs = array(langMarkers.map { case (l, _) => lit(l) }: _*)
     val best = array_max(zip_with(counts, prios, (c, p) => c * 8 + p))
-    element_at(langs, lit(8) - best % 8)
+    when(best < 8, lit("und")).otherwise(element_at(langs, lit(8) - best % 8))
   }
 
   // ---------------------------------------------------------------- quality

@@ -13,15 +13,67 @@ import org.apache.spark.sql.types._
  */
 object Sources {
 
+  /** The one inferring file read: `format` (parquet, json, csv) with
+    * `options` over `path`. Spark infers a file source's schema with a job
+    * of its own on every read (a footer read for parquet, a full scan for
+    * JSON, the header line for CSV), so a flow or query rebuilt over the
+    * same files would pay that job on every build. Here the schema is
+    * inferred once per key and later reads pass it with `.schema`, which
+    * launches no job. The key is the format, the options, the path, the
+    * path's listing (name, length, mtime of the file, or of each child of a
+    * flat directory) and the session's conf, so a rewritten file or a conf
+    * that changes inference (`spark.sql.legacy.parquet.nanosAsLong`) is
+    * inferred afresh. Globs, nested (partitioned) directories and missing
+    * paths keep Spark's own inference and errors. */
+  def load(spark: SparkSession, format: String, options: Map[String, String],
+           path: String): DataFrame = {
+    val reader = spark.read.format(format).options(options)
+    listing(spark, path).fold(reader.load(path)) { files =>
+      val key = (format, options, path, files, spark.conf.getAll)
+      schemas.synchronized(Option(schemas.get(key))) match {
+        case Some(schema) => reader.schema(schema).load(path)
+        case None =>
+          val df = reader.load(path)
+          schemas.synchronized(schemas.put(key, df.schema))
+          df
+      }
+    }
+  }
+
+  /** Inferred schemas by read key, least recently used evicted first. */
+  private val schemas = new java.util.LinkedHashMap[Any, StructType](64, 0.75f, true) {
+    override def removeEldestEntry(e: java.util.Map.Entry[Any, StructType]): Boolean =
+      size > 256
+  }
+
+  /** (name, length, mtime) of `path` if it is a file, or of each child if
+    * it is a directory of files; None for a glob, a nested directory or a
+    * missing path. */
+  private def listing(spark: SparkSession, path: String): Option[Seq[(String, Long, Long)]] =
+    if (path.exists("*?[{\\".contains(_))) None
+    else {
+      val p = new org.apache.hadoop.fs.Path(path)
+      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      def entry(f: org.apache.hadoop.fs.FileStatus) =
+        (f.getPath.getName, f.getLen, f.getModificationTime)
+      try {
+        val st = fs.getFileStatus(p)
+        if (!st.isDirectory) Some(Seq(entry(st)))
+        else {
+          val children = fs.listStatus(p).toSeq
+          if (children.exists(_.isDirectory)) None
+          else Some(children.map(entry).sortBy(_._1))
+        }
+      } catch { case _: java.io.FileNotFoundException => None }
+    }
+
   /** CSVGenerator (ref: modules/csv/.../CsvGenerator.scala:111): header,
     * separator, quote, escape, optional line range. */
   def csv(spark: SparkSession, path: String, header: Boolean = true, sep: String = ",",
           quote: String = "\"", escape: String = "\\",
           startLine: Option[Long] = None, endLine: Option[Long] = None): DataFrame = {
-    val df = spark.read
-      .option("header", header).option("sep", sep)
-      .option("quote", quote).option("escape", escape)
-      .csv(path)
+    val df = load(spark, "csv", Map("header" -> header.toString, "sep" -> sep,
+      "quote" -> quote, "escape" -> escape), path)
     lineRange(df, startLine, endLine)
   }
 
@@ -180,7 +232,7 @@ object Sources {
   }
 
   /** JSON file source (JSONParse-at-source). */
-  def json(spark: SparkSession, path: String): DataFrame = spark.read.json(path)
+  def json(spark: SparkSession, path: String): DataFrame = load(spark, "json", Map.empty, path)
 
   /** FilesGenerator (ref: FileGenerators.scala:145): recursive file listing
     * with glob, as a DataFrame of paths + metadata. */

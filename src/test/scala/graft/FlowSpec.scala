@@ -277,8 +277,7 @@ class FlowSpec extends SparkSpec {
     val r = intercept[UnsupportedOperationException](Flow.parse(rejected))
     assert(r.getMessage.contains("compose the topology statically"))
 
-    // an inline sub-flow pipeline is config, decoded when its processor is
-    // built: the same check fails the build, before any action
+    // the nodes of an inline sub-flow pipeline resolve at parse too
     val inline = """
     { "generators": [ {"id": "g", "name": "range", "config": {"n": 1}, "next": ["par"]} ],
       "processors": [
@@ -286,9 +285,17 @@ class FlowSpec extends SparkSpec {
          "config": {"merger": "tuktu.processors.merge.SerialMerger", "processors": [
            {"start": "a", "pipeline": [{"id": "a", "name": "nope", "next": []}]} ]},
          "next": []} ] }"""
-    Flow.parse(inline)
-    val i = intercept[IllegalArgumentException](Flow.run(spark, inline))
+    val i = intercept[IllegalArgumentException](Flow.parse(inline))
     assert(i.getMessage.contains("'a'") && i.getMessage.contains("unknown name 'nope'"))
+    val caching = """
+    { "generators": [ {"id": "g", "name": "range", "config": {"n": 1}, "next": ["c"]} ],
+      "processors": [
+        {"id": "c", "name": "tuktu.processors.cache.CachingProcessor",
+         "config": {"cache_key": "k", "start": "a",
+                    "processors": [{"id": "a", "name": "nope", "next": []}]},
+         "next": []} ] }"""
+    val c = intercept[IllegalArgumentException](Flow.parse(caching))
+    assert(c.getMessage.contains("'a'") && c.getMessage.contains("unknown name 'nope'"))
   }
 
   test("a missing config key fails naming the node and the key") {

@@ -1301,6 +1301,10 @@ class TuktuCompatSpec extends SparkSpec {
         Seq("a:1:2:1;2", "b:3:4:3;4", "c:5:6:5;6")),
       (base, proc("tuktu.nlp.processors.LangDetProcessor", """{"field": "t"}"""),
         byK("r") _, Seq("en", "de", "fr")),
+      // Dutch has no marker words: every language scores 0
+      ("""[{"k": "a", "t": "de kat zat op de mat"}]""",
+        proc("tuktu.nlp.processors.LangDetProcessor", """{"field": "t"}"""),
+        byK("r") _, Seq("und")),
       (base, proc("tuktu.nlp.processors.RBEMEmotionProcessor",
         """{"language": "en", "tokens": "toks", "pos": "pos"}"""), byK("r") _,
         Seq("{happiness -> 0.0, sadness -> 0.0, anger -> 0.0, fear -> 0.0}",
