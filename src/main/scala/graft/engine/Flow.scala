@@ -131,11 +131,8 @@ object Flow {
     "text" -> ((spark, c) => spark.read.text(c.str("path"))),
     // ListGenerator / CustomPacketGenerator (ref DummyGenerator.scala:120-190):
     // inline rows as a JSON array of objects
-    "list" -> { (spark, c) =>
-      import spark.implicits._
-      spark.read.json(spark.createDataset(
-        c.req("rows").elements().asScala.map(_.toString).toSeq))
-    },
+    "list" -> ((spark, c) => graft.sources.Sources.jsonRows(spark,
+      c.req("rows").elements().asScala.map(_.toString).toSeq)),
     // DummyGenerator batch mode (ref DummyGenerator.scala:34-86)
     "range" -> ((spark, c) => spark.range(c.req("n").asLong).toDF("id"))
   ) ++ TuktuCompat.generators

@@ -120,5 +120,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // plan-quality rule: range θ-joins → binned equality joins (gated on
     // spark.graft.rangeJoin.binWidth; see RangeBinJoinRule)
     ext.injectOptimizerRule(_ => RangeBinJoinRule)
+    // small global sorts: one-partition shuffle, no range-sampling job
+    ext.injectQueryStagePrepRule(_ => SmallGlobalSort)
   }
 }

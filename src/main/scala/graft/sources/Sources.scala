@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, DataFrameReader, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -26,14 +26,30 @@ object Sources {
     * inferred afresh. Globs, nested (partitioned) directories and missing
     * paths keep Spark's own inference and errors. */
   def load(spark: SparkSession, format: String, options: Map[String, String],
-           path: String): DataFrame = {
+           path: String): DataFrame =
+    read(spark, format, options, listing(spark, path).map((path, _)))(_.load(path))
+
+  /** Inline JSON rows (the `list` generator), one object per string. Spark
+    * infers their schema with a job, so it is inferred once per rows and
+    * session conf, through the same cache as [[load]]. */
+  def jsonRows(spark: SparkSession, rows: Seq[String]): DataFrame = {
+    import spark.implicits._
+    read(spark, "json", Map.empty, Some(rows))(_.json(spark.createDataset(rows)))
+  }
+
+  /** `from` over a reader of `format` with `options`. With a `version` that
+    * identifies the input, the schema is inferred once per (format,
+    * options, version, session conf) and later reads pass it with
+    * `.schema`; without one, Spark infers it on every read. */
+  private def read(spark: SparkSession, format: String, options: Map[String, String],
+                   version: Option[Any])(from: DataFrameReader => DataFrame): DataFrame = {
     val reader = spark.read.format(format).options(options)
-    listing(spark, path).fold(reader.load(path)) { files =>
-      val key = (format, options, path, files, spark.conf.getAll)
+    version.fold(from(reader)) { v =>
+      val key = (format, options, v, spark.conf.getAll)
       schemas.synchronized(Option(schemas.get(key))) match {
-        case Some(schema) => reader.schema(schema).load(path)
+        case Some(schema) => from(reader.schema(schema))
         case None =>
-          val df = reader.load(path)
+          val df = from(reader)
           schemas.synchronized(schemas.put(key, df.schema))
           df
       }

@@ -20,33 +20,6 @@ class SourcesLoadSpec extends SparkSpec {
   private def writeLines(path: String, lines: String*): Unit =
     Files.write(Paths.get(path), lines.asJava)
 
-  /** The Spark jobs `body` launches. A marker job follows it under its own
-    * group: the listener bus delivers in order, so once the marker's start
-    * arrives every job of `body` has been counted. */
-  private def jobsIn[A](body: => A): (A, Int) = {
-    val sc = spark.sparkContext
-    val group = "sources_load_" + java.util.UUID.randomUUID
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val flushed = new java.util.concurrent.CountDownLatch(1)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
-          case Some(`group`) => jobs.incrementAndGet()
-          case Some(g) if g == group + "_marker" => flushed.countDown()
-          case _ =>
-        }
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, "body")
-      val out = try body finally sc.clearJobGroup()
-      sc.setJobGroup(group + "_marker", "marker")
-      try spark.range(1).count() finally sc.clearJobGroup()
-      assert(flushed.await(60, java.util.concurrent.TimeUnit.SECONDS))
-      (out, jobs.get)
-    } finally sc.removeSparkListener(listener)
-  }
-
   /** An events table like the fixtures', written without Spark's schema
     * metadata: `ts` is a parquet TIMESTAMP(NANOS), which Spark reads only
     * as a long, under `spark.sql.legacy.parquet.nanosAsLong` (or `unit`
@@ -163,15 +136,18 @@ class SourcesLoadSpec extends SparkSpec {
     val flow = s"""
     { "generators": [
         {"id": "li", "name": "csv", "config": {"path": "$csv"}, "next": ["big"]},
-        {"id": "ev", "name": "json", "config": {"path": "$json"}, "next": ["buy"]} ],
+        {"id": "ev", "name": "json", "config": {"path": "$json"}, "next": ["buy"]},
+        {"id": "ls", "name": "list", "next": ["many"],
+         "config": {"rows": [{"id": 3, "qty": 1}, {"id": 4, "qty": 7}]}} ],
       "processors": [
         {"id": "big", "name": "filter", "config": {"predicate": "$${qty} > 5"}, "next": []},
+        {"id": "many", "name": "filter", "config": {"predicate": "$${qty} > 5"}, "next": []},
         {"id": "buy", "name": "filter",
          "config": {"predicate": "$${kind} == \\"buy\\""}, "next": []} ] }"""
     def ids(out: Map[String, DataFrame]): Map[String, Seq[String]] =
       out.map { case (k, df) => k -> df.select(col("id").cast("string")).as[String].collect().toSeq }
     val first = ids(Flow.run(spark, flow))
-    assert(first == Map("big" -> Seq("2"), "buy" -> Seq("1")))
+    assert(first == Map("big" -> Seq("2"), "buy" -> Seq("1"), "many" -> Seq("4")))
     val (second, jobs) = jobsIn(Flow.run(spark, flow))
     assert(jobs == 0, s"the second flow build ran $jobs jobs")
     assert(ids(second) == first)
@@ -194,11 +170,10 @@ class SourcesLoadSpec extends SparkSpec {
     }
     val fileRead = """\.read\b.*?\.(parquet|json|csv)\(|\.read\.format\((?!"(binaryFile|jdbc)")""".r
     val sites = code.filter { case (_, l) => fileRead.findFirstIn(l).isDefined }
-    // besides Sources.load: `list` rows are an in-memory Dataset, not a
-    // file, and the smoke entry reads one table once per JVM
+    // besides the one reader in Sources: the smoke entry reads one table
+    // once per JVM
     val allowed = Seq(
       "graft/sources/Sources.scala" -> "val reader = spark.read.format(format).options(options)",
-      "graft/engine/Flow.scala" -> "spark.read.json(spark.createDataset(",
       "graft/SparkEntry.scala" -> "lineitem.parquet")
     val outside = sites.filterNot { case (f, l) =>
       allowed.exists { case (af, marker) => f == af && l.contains(marker) }

@@ -15,11 +15,13 @@ SF = sys.argv[1] if len(sys.argv) > 1 and not sys.argv[1].startswith("-") else "
 OUT = sys.argv[2] if len(sys.argv) > 2 and not sys.argv[2].startswith("-") else "/tmp/verify_out"
 SKIP = "--skip-verify" in sys.argv
 ONLY = [a for a in sys.argv[3:] if not a.startswith("-")]
+# the checkout this script belongs to: a worktree's copy checks its own build
+REPO = Path(__file__).resolve().parents[1]
 
 if not SKIP:
     r = subprocess.run(
         ["sbt", "-batch", f'runMain graft.Verify {SF} {OUT} {" ".join(ONLY)}'.strip()],
-        cwd="/root/repo", capture_output=True, text=True, timeout=1800)
+        cwd=REPO, capture_output=True, text=True, timeout=1800)
     for line in r.stdout.splitlines():
         if "[verify]" in line or "error" in line.lower():
             print(line)
