@@ -70,12 +70,12 @@ object Flow {
       nodes(field("processors"), "processors", resolveProcessor))
   }
 
-  /** A processor's entry. The nodes of the sub-pipelines it embeds inline
-    * ([[TuktuCompat.inlinePipelines]]) are resolved too, so an unknown name
-    * anywhere in the config fails at parse. */
+  /** A processor's entry. The nodes of the sub-pipelines it embeds, inline
+    * or in a config file ([[TuktuCompat.subPipelines]]), are resolved too,
+    * so an unknown name anywhere in the flow fails at parse. */
   private def resolveProcessor(n: Node): Processor = {
     val p = processorOf(n)
-    TuktuCompat.inlinePipelines.get(n.name)
+    TuktuCompat.subPipelines.get(n.name)
       .foreach(_(n).foreach(nodes(_, "p", resolveProcessor)))
     p
   }
@@ -114,11 +114,15 @@ object Flow {
     * the Tuktu FQCN path uses), then the literal default. */
   private def result(c: Node): String = c.strOpt("result").getOrElse(c.result)
 
-  /** Benchmark side of the decontamination entries: a Registry bucket
-    * (tuktu.db Write/Read). */
-  private def bench(c: Node): DataFrame = graft.sources.Registry.get(c.str("bench"))
-    .getOrElse(throw new IllegalArgumentException(
-      s"${c.name}: no Registry bucket named '${c.str("bench")}'"))
+  /** Benchmark side of the decontamination entries: a named bucket
+    * (tuktu.db Write/Read), which is a temp view in the flow's own session
+    * catalog — a bucket one session registers is invisible to another. */
+  private def bench(df: DataFrame, c: Node): DataFrame =
+    try df.sparkSession.table(c.str("bench")) catch {
+      case e: org.apache.spark.sql.AnalysisException => throw new IllegalArgumentException(
+        s"flow node '${c.id}' (${c.name}): no bucket named '${c.str("bench")}' " +
+          "in the session catalog", e)
+    }
 
   // ------------------------------------------------------------ generators
   /** The registry's generators: native names, then [[TuktuCompat]]'s FQCNs. */
@@ -197,7 +201,8 @@ object Flow {
       graft.operators.TextAnalysis.keywordTagger(df, c.str("field"), kws, result(c),
         excludeOnNone = c.bool("exclude_on_none"))
     },
-    "model_apply" -> ((df, c) => graft.ml.ModelRegistry(c.str("model"), df)),
+    "model_apply" -> ((df, c) => graft.ml.ModelRegistry
+      .get[org.apache.spark.ml.Transformer](c.str("model")).transform(df)),
     "stem" -> ((df, c) => graft.operators.Nlp.stemTokens(df, c.str("field"), result(c))),
     "pos_tag" -> ((df, c) => graft.operators.Nlp.posTags(df, c.str("field"), result(c))),
     "sentiment" -> ((df, c) =>
@@ -231,10 +236,10 @@ object Flow {
     "connected_components" ->
       ((df, c) => graft.operators.Dedup.connectedComponents(df, c.str("src"), c.str("dst"))),
     "decontaminate" -> ((df, c) =>
-      graft.operators.Dedup.decontaminate(df, bench(c), c.str("id_field"), c.str("field"),
+      graft.operators.Dedup.decontaminate(df, bench(df, c), c.str("id_field"), c.str("field"),
         n = c.opt("n").map(_.asInt).getOrElse(8))),
     "decontaminate_bloom" -> ((df, c) =>
-      graft.operators.Dedup.decontaminateBloom(df, bench(c), c.str("id_field"), c.str("field"),
+      graft.operators.Dedup.decontaminateBloom(df, bench(df, c), c.str("id_field"), c.str("field"),
         n = c.opt("n").map(_.asInt).getOrElse(8),
         fpp = c.opt("fpp").map(_.asDouble).getOrElse(0.01))),
     "corpus_mix" -> ((df, c) =>

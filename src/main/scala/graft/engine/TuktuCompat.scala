@@ -54,19 +54,35 @@ object TuktuCompat {
       java.nio.file.Paths.get(configRepo, fn)), java.nio.charset.StandardCharsets.UTF_8)
   }
 
-  private def loadConfig(name: String): JsonNode =
-    Flow.mapper.readTree(loadConfigRaw(name))
-
   /** Processor-array JSON → Flow nodes; an id-less node is `p<index>`.
     * Each name must resolve in the registry. */
   private def flowNodes(procs: Seq[JsonNode]): Seq[Flow.Node] =
     Flow.nodes(procs, "p", Flow.processorOf)
 
-  /** The processor arrays a meta processor embeds inline in its config,
-    * which `Flow.parse` resolves with the node itself. (Pipelines loaded
-    * from [[configRepo]] are read only when their processor is built.) */
-  private[engine] val inlinePipelines: Map[String, Flow.Node => Seq[Seq[JsonNode]]] = Map(
+  /** An IfThenElse branch's processors: the `config` of the `{config,
+    * start}` object under `key`, loaded from [[configRepo]]. */
+  private def branchPipeline(c: Flow.Node, key: String): Seq[JsonNode] =
+    c.at(Flow.mapper.readTree(loadConfigRaw(c.at(c.req(key)).str("config"))))
+      .arr("processors")
+
+  /** A ParallelConfig pipeline's processors: its `config_path` file from
+    * [[configRepo]], read after the global and then the pipeline's own
+    * `#{source→target}` replacements (the pipeline's win). */
+  private def configPathPipeline(c: Flow.Node, pl: Flow.Node): Seq[JsonNode] = {
+    def repl(n: Flow.Node) = n.objs("replacements").map(r => r.str("source") -> r.str("target"))
+    c.at(Flow.mapper.readTree(Flow.interpolateVars(
+      loadConfigRaw(pl.str("config_path")), (repl(c) ++ repl(pl)).toMap))).arr("processors")
+  }
+
+  /** The processor arrays a meta processor embeds, inline in its config or
+    * loaded from [[configRepo]], which `Flow.parse` resolves with the node
+    * itself; the build reads the same arrays. */
+  private[engine] val subPipelines: Map[String, Flow.Node => Seq[Seq[JsonNode]]] = Map(
     "tuktu.processors.meta.ParallelProcessor" -> (c => c.objs("processors").map(_.arr("pipeline"))),
+    "tuktu.processors.meta.ParallelConfigProcessor" ->
+      (c => c.objs("pipelines").map(configPathPipeline(c, _))),
+    "tuktu.processors.meta.IfThenElseProcessor" ->
+      (c => Seq("then_pipeline", "else_pipeline").map(branchPipeline(c, _))),
     "tuktu.processors.cache.CachingProcessor" -> (c => Seq(c.arr("processors"))))
 
   /** Navigate a (possibly nested) path from the row root. */
@@ -1095,12 +1111,8 @@ object TuktuCompat {
       val pred = try Expr.predicate(df, c.str("expression")) catch {
         case e: Exception => default.map(lit).getOrElse(throw e)
       }
-      def side(key: String, p: Column): DataFrame = {
-        val pl = c.at(c.req(key))
-        val sub = loadConfig(pl.str("config"))
-        Flow.subFlow(df.filter(p), flowNodes(pl.at(sub).arr("processors")),
-          pl.str("start"))
-      }
+      def side(key: String, p: Column): DataFrame = Flow.subFlow(df.filter(p),
+        flowNodes(branchPipeline(c, key)), c.at(c.req(key)).str("start"))
       side("then_pipeline", pred)
         .unionByName(side("else_pipeline", !pred), allowMissingColumns = true)
     },
@@ -1108,23 +1120,19 @@ object TuktuCompat {
     // ref: app/tuktu/processors/cache/CachingProcessor.scala:24-92 —
     // {cache_key, result_field, start, processors:[...]}: attach a cached
     // value, running the INLINE embedded pipeline to produce it on a
-    // miss. Batch mapping: the Play cache is the Registry; a miss runs
-    // the sub-flow over this packet and registers it under cache_key, and
-    // every datum gets the cached packet's rows as an array of structs
-    // under the node result — the DataPacket-as-value semantics of the
-    // reference's `datum + (resultName -> result)`. (`result_field` is
-    // read but unused by the reference's processor() — mirrored here.)
+    // miss. Batch mapping: a flow run is one packet and the evaluator
+    // builds each node once per run, so the sub-flow runs over this run's
+    // input and nothing is stored across runs (a store keyed by name alone
+    // would hand a later run the first run's rows). Every datum gets the
+    // sub-flow's rows as an array of structs under the node result — the
+    // DataPacket-as-value semantics of the reference's `datum +
+    // (resultName -> result)`. `cache_key` is required but unused, as
+    // `result_field` is by the reference's processor().
     "tuktu.processors.cache.CachingProcessor" -> { (df, c) =>
-      val key = c.str("cache_key")
-      val cached = graft.sources.Registry.get(key).getOrElse {
-        val out = Flow.subFlow(df, flowNodes(c.arr("processors")),
-          c.str("start"))
-        graft.sources.Registry.put(key, out)
-        out
-      }
+      c.req("cache_key")
+      val sub = Flow.subFlow(df, flowNodes(c.arr("processors")), c.str("start"))
       df.crossJoin(broadcast(
-        cached.agg(collect_list(struct(cached.columns.map(col).toSeq: _*))
-          .as(c.result))))
+        sub.agg(collect_list(struct(sub.columns.map(col).toSeq: _*)).as(c.result))))
     },
 
     // ref: app/tuktu/processors/meta/MetaProcessors.scala:349 (Parallel)
@@ -1143,18 +1151,10 @@ object TuktuCompat {
       parallel(df, c)(input => c.objs("processors").map(pl =>
         Flow.subFlow(input, flowNodes(pl.arr("pipeline")), pl.str("start"))))),
     "tuktu.processors.meta.ParallelConfigProcessor" -> { (df, c) =>
-      parallel(df, c) { input =>
-        val globalRepl = c.objs("replacements")
-          .map(r => r.str("source") -> r.str("target"))
-        c.objs("pipelines").flatMap { pl =>
-          val repl = (globalRepl ++ pl.objs("replacements")
-            .map(r => r.str("source") -> r.str("target"))).toMap
-          val raw = Flow.interpolateVars(
-            loadConfigRaw(pl.str("config_path")), repl)
-          val nodes = flowNodes(pl.at(Flow.mapper.readTree(raw)).arr("processors"))
-          pl.strs("start").map(s0 => Flow.subFlow(input, nodes, s0))
-        }
-      }
+      parallel(df, c)(input => c.objs("pipelines").flatMap { pl =>
+        val nodes = flowNodes(configPathPipeline(c, pl))
+        pl.strs("start").map(s0 => Flow.subFlow(input, nodes, s0))
+      })
     },
 
     // ------------------------------------------------------- tuktu.ml module
@@ -1248,14 +1248,15 @@ object TuktuCompat {
     // ref: hmm/HMM.scala:107 — Viterbi per datum; the result is the
     // reference's {delta, sequence} map as a struct
     "tuktu.ml.processors.hmm.HMMApplyDecodeProcessor" -> ((df, c) =>
-      df.withColumn(c.result,
-        hmmOf(c).decodeColumn(col(c.str("observations_field"))))),
+      df.withColumn(c.result, graft.ml.ModelRegistry.get[graft.ml.HmmTransformer](
+        c.str("model_name")).decodeColumn(col(c.str("observations_field"))))),
     // ref: hmm/HMM.scala:135 + models/hmm/PredictAlgorithm.scala:9 —
     // the reference draws with a wall-clock Random per datum; a config
     // seed (default 42) replaces it, one reproducible draw per packet
     "tuktu.ml.processors.hmm.HMMApplyPredictProcessor" -> ((df, c) =>
       df.withColumn(c.result, typedlit(graft.ml.HMM.predictSteps(
-        hmmOf(c).model, c.req("steps").asInt,
+        graft.ml.ModelRegistry.get[graft.ml.HmmTransformer](c.str("model_name")).model,
+        c.req("steps").asInt,
         c.opt("seed").map(_.asLong).getOrElse(42L))))),
     // ref: hmm/HMM.scala:159 — JSON parameter matrices instead of the
     // reference's java serialization (num_hidden/num_observable travel
@@ -1292,13 +1293,7 @@ object TuktuCompat {
     // ref: ARIMA.scala:75 — {model_name, data_field, n_future}: the
     // forecast vector (ts.length + n_future values, reference shape)
     "tuktu.ml.processors.timeseries.ARIMAApplyProcessor" -> { (df, c) =>
-      val t = graft.ml.ModelRegistry.get(c.str("model_name")) match {
-        case Some(a: graft.ml.AriTransformer) => a
-        case Some(other) => throw new IllegalArgumentException(
-          s"model '${c.str("model_name")}' is ${other.getClass.getSimpleName}, not an ARI model")
-        case None => throw new IllegalArgumentException(
-          s"no model '${c.str("model_name")}' in the registry")
-      }
+      val t = graft.ml.ModelRegistry.get[graft.ml.AriTransformer](c.str("model_name"))
       df.withColumn(c.result,
         t.forecastColumn(col(c.str("data_field")), c.req("n_future").asInt))
     },
@@ -1404,14 +1399,7 @@ object TuktuCompat {
       df
     },
     "tuktu.ml.processors.preprocessing.NormalizationApplyProcessor" -> { (df, c) =>
-      val name = c.str("model_name")
-      val norm = graft.ml.ModelRegistry.get(name) match {
-        case Some(n: graft.ml.FieldNormalizer) => n
-        case Some(other) => throw new IllegalArgumentException(
-          s"model '$name' is ${other.getClass.getSimpleName}, not a Normalization")
-        case None => throw new IllegalArgumentException(
-          s"no model '$name' in the registry — run NormalizationTrainProcessor first")
-      }
+      val norm = graft.ml.ModelRegistry.get[graft.ml.FieldNormalizer](c.str("model_name"))
       c.opt("fields").map(_ => c.strs("fields"))
         .fold(norm)(norm.restrictTo).transform(df)
     },
@@ -1521,8 +1509,8 @@ object TuktuCompat {
     // ref: app/tuktu/processors/meta/MetaProcessors.scala — per-datum
     // generator flows; Spark flows compose statically
     val meta = "spawns generator flows dynamically per datum; compose the " +
-      "topology statically with Flow generators/branches (Registry " +
-      "caches intermediates) — see COVERAGE.md §2.9"
+      "topology statically with Flow generators/branches (a node feeding " +
+      "several branches is built once) — see COVERAGE.md §2.9"
     // ref: modules/crawler/app/tuktu/crawler/generators/
     // GenericCrawlerGenerator.scala:27 / WikipediaContentGenerator.scala:32;
     // archives scale to a 100 TB crawl where re-fetching it does not
@@ -1561,7 +1549,8 @@ object TuktuCompat {
   private[engine] def mlDeserialize(name: String): Option[Flow.Processor] =
     Option.when(name.startsWith("tuktu.ml.processors.") &&
       name.endsWith("DeserializeProcessor")) { (df, c) =>
-      graft.ml.ModelRegistry.deserialize(c.str("model_name"), c.str("file_name"))
+      graft.ml.ModelRegistry.deserialize(df.sparkSession, c.str("model_name"),
+        c.str("file_name"))
       df
     }
 
@@ -1687,24 +1676,9 @@ object TuktuCompat {
     df
   }
 
-  private def hmmOf(c: Flow.Node): graft.ml.HmmTransformer = {
-    val name = c.str("model_name")
-    graft.ml.ModelRegistry.get(name) match {
-      case Some(h: graft.ml.HmmTransformer) => h
-      case Some(other) => throw new IllegalArgumentException(
-        s"model '$name' is ${other.getClass.getSimpleName}, not an HMM")
-      case None => throw new IllegalArgumentException(
-        s"no model '$name' in the registry — run HMMTrainProcessor or " +
-          "HMMDeserializeProcessor first")
-    }
-  }
-
   private def mlApply(df: DataFrame, c: Flow.Node): DataFrame = {
-    val name = c.str("model_name")
-    val model = graft.ml.ModelRegistry.get(name).getOrElse(
-      throw new IllegalArgumentException(s"no model '$name' in the registry — " +
-        "run the matching TrainProcessor or DeserializeProcessor first"))
-    model.transform(withMlVec(df, c.str("data_field")))
+    graft.ml.ModelRegistry.get[org.apache.spark.ml.Transformer](c.str("model_name"))
+      .transform(withMlVec(df, c.str("data_field")))
       .withColumn(c.result, col("prediction"))
       .drop("prediction", "rawPrediction", "probability", MlFeatures)
   }

@@ -2,8 +2,9 @@ package graft.ml
 
 import org.apache.spark.ml.Transformer
 import org.apache.spark.ml.util.MLWritable
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import scala.collection.concurrent.TrieMap
+import scala.reflect.{ClassTag, classTag}
 
 /**
  * Model lifecycle (ref: modules/ml/app/tuktu/ml/processors/
@@ -18,46 +19,43 @@ import scala.collection.concurrent.TrieMap
 object ModelRegistry {
   private val models = TrieMap.empty[String, Transformer]
 
-  /** TrainProcessor: fit (caller supplies the fit) and register. */
-  def train(name: String, fit: => Transformer): Transformer = {
-    val m = fit
-    models.put(name, m)
-    m
-  }
-
+  /** TrainProcessor / DeserializeProcessor: register under `name`. */
   def put(name: String, model: Transformer): Unit = models.put(name, model)
-  def get(name: String): Option[Transformer] = models.get(name)
-  def names: Seq[String] = models.keys.toSeq.sorted
 
-  /** ApplyProcessor: score with a registered model. */
-  def apply(name: String, df: DataFrame): DataFrame =
-    models.getOrElse(name,
-      throw new IllegalArgumentException(s"no model '$name' in registry")).transform(df)
-
-  /** SerializeProcessor: persist to any Hadoop-visible path. */
-  def serialize(name: String, path: String): Unit =
-    models.getOrElse(name,
-      throw new IllegalArgumentException(s"no model '$name' in registry")) match {
-      case w: MLWritable => w.write.overwrite().save(path)
-      case h: HmmTransformer => HMM.save(h.model, path)
-      case a: AriTransformer => TimeSeries.saveAri(a.model, path)
-      case other => throw new IllegalArgumentException(
-        s"model '$name' (${other.getClass.getSimpleName}) is not MLWritable")
+  /** The model registered under `name`, as a `T`: a missing name or a
+    * model of another type fails naming the model. The one lookup every
+    * apply, serialize and flow entry goes through. */
+  def get[T <: Transformer: ClassTag](name: String): T =
+    models.getOrElse(name, throw new IllegalArgumentException(
+      s"no model '$name' in the registry — run its train or deserialize step first")) match {
+      case t: T => t
+      case other => throw new IllegalArgumentException(s"model '$name' is " +
+        s"${other.getClass.getSimpleName}, not a ${classTag[T].runtimeClass.getSimpleName}")
     }
 
+  /** SerializeProcessor: persist to any Hadoop-visible path. */
+  def serialize(name: String, path: String): Unit = get[Transformer](name) match {
+    case w: MLWritable => w.write.overwrite().save(path)
+    case h: HmmTransformer => HMM.save(h.model, path)
+    case a: AriTransformer => TimeSeries.saveAri(a.model, path)
+    case other => throw new IllegalArgumentException(
+      s"model '$name' (${other.getClass.getSimpleName}) is not MLWritable")
+  }
+
   /** DeserializeProcessor: load a previously saved model. The saved
-    * metadata names the concrete class, so any MLReadable model round-trips
-    * — not just PipelineModel (the className is dispatched through the
-    * model's own companion `load`). */
-  def deserialize(name: String, path: String): Transformer = {
-    val spark = org.apache.spark.sql.SparkSession.active
+    * metadata (read on `spark`, the flow's session) names the concrete
+    * class, so any MLReadable model round-trips — not just PipelineModel
+    * (the className is dispatched through the model's own companion
+    * `load`). */
+  def deserialize(spark: SparkSession, name: String, path: String): Transformer = {
     val meta = graft.sources.Sources.json(spark, s"$path/metadata")
       .select("class").head.getString(0)
     val companion = Class.forName(meta + "$")
     val module = companion.getField("MODULE$").get(null)
     val model = companion.getMethod("load", classOf[String])
       .invoke(module, path).asInstanceOf[Transformer]
-    train(name, model)
+    put(name, model)
+    model
   }
 
   /** DestroyProcessor. */

@@ -1,13 +1,16 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import scala.collection.concurrent.TrieMap
+import org.apache.spark.sql.DataFrame
 
 /**
  * Sink operators (SURVEY.md §2.2). File sinks are `df.write` with explicit
  * format/partitioning — the reference's per-datum streams and time-based file
  * rotation map to partitioned directory layouts (rotation = partitionBy on a
  * time-derived column, which also gives partition pruning on read-back).
+ * TuktuDB buckets (ref: modules/tuktudb/.../DBDaemon.scala:36-214, a
+ * replicated TrieMap) are the session catalog's temp views: write is
+ * `createOrReplaceTempView`, read `spark.table`, delete `dropTempView`,
+ * list `spark.catalog.listTables` — named per session, nothing JVM-global.
  */
 object Sinks {
 
@@ -40,33 +43,4 @@ object Sinks {
   /** SQLProcessor write mode (ref: modules/nosql/.../sql.scala:11). */
   def jdbc(df: DataFrame, url: String, table: String, mode: String = "append"): Unit =
     df.write.format("jdbc").option("url", url).option("dbtable", table).mode(mode).save()
-}
-
-/**
- * TuktuDB ⇄ named cached DataFrames + temp views
- * (ref: modules/tuktudb/app/tuktu/db/actors/DBDaemon.scala:36-214 — a
- * replicated TrieMap of keyed buckets; here the cluster-replication concern
- * is Spark's, the registry only tracks names).
- */
-object Registry {
-  private val buckets = TrieMap.empty[String, DataFrame]
-
-  /** WriteProcessor (ref: modules/tuktudb/.../WriteProcessor.scala:21). */
-  def put(name: String, df: DataFrame): Unit = {
-    val cached = df.cache()
-    cached.createOrReplaceTempView(name)
-    buckets.put(name, cached)
-  }
-
-  /** ReadGenerator / ReadProcessor (ref: .../ReadGenerator.scala:16). */
-  def get(name: String): Option[DataFrame] = buckets.get(name)
-
-  /** DeleteProcessor (ref: .../DeleteProcessor.scala:18). */
-  def drop(spark: SparkSession, name: String): Unit = {
-    buckets.remove(name).foreach(_.unpersist())
-    spark.catalog.dropTempView(name)
-  }
-
-  /** GetBucketsProcessor (ref: .../ReadProcessor.scala:46). */
-  def names: Seq[String] = buckets.keys.toSeq.sorted
 }

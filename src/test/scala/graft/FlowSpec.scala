@@ -189,16 +189,23 @@ class FlowSpec extends SparkSpec {
         {"id": "dec", "name": "decontaminate", "result": "x",
          "config": {"bench": "flow4_bench", "id_field": "id", "field": "text",
                     "n": 5}, "next": []} ] }"""
-    import spark.implicits._
-    graft.sources.Registry.put("flow4_bench",
-      Seq((9L, "alpha beta gamma delta epsilon")).toDF("id", "text"))
-    try {
-      val r = Flow.runSingle(spark, decFlow).head
-      assert(r.getAs[Long]("n_hits") == 1L && r.getAs[Boolean]("contaminated"))
-      val rb = Flow.runSingle(spark,
-        decFlow.replace("\"decontaminate\"", "\"decontaminate_bloom\"")).head
-      assert(rb.getAs[Long]("n_hits") == 1L && rb.getAs[Boolean]("contaminated"))
-    } finally graft.sources.Registry.drop(spark, "flow4_bench")
+    // the bench bucket is a temp view of the flow's own session: two child
+    // sessions each register `flow4_bench` (one or both of the doc's two
+    // 5-grams) before either runs, and each run sees only its own rows
+    val sessions = Seq("alpha beta gamma delta epsilon" -> 1L,
+      "alpha beta gamma delta epsilon words" -> 2L).map { case (text, hits) =>
+      val s = SparkEntry.childSession(spark)
+      s.createDataFrame(Seq((9L, text))).toDF("id", "text")
+        .createOrReplaceTempView("flow4_bench")
+      s -> hits
+    }
+    for ((s, hits) <- sessions; op <- Seq("decontaminate", "decontaminate_bloom")) {
+      val r = Flow.runSingle(s, decFlow.replace("\"decontaminate\"", s"\"$op\"")).head
+      assert(r.getAs[Long]("n_hits") == hits && r.getAs[Boolean]("contaminated"), op)
+    }
+    // the parent session has no such bucket: the error names node and bucket
+    val noBench = intercept[IllegalArgumentException](Flow.runSingle(spark, decFlow))
+    assert(noBench.getMessage.contains("'dec'") && noBench.getMessage.contains("'flow4_bench'"))
 
     val mixFlow = """
     { "generators": [ {"id": "g", "name": "list", "config": {"rows": [
@@ -296,6 +303,37 @@ class FlowSpec extends SparkSpec {
          "next": []} ] }"""
     val c = intercept[IllegalArgumentException](Flow.parse(caching))
     assert(c.getMessage.contains("'a'") && c.getMessage.contains("unknown name 'nope'"))
+
+    // and so do the pipelines a meta processor loads from configRepo,
+    // ParallelConfig's after its #{} replacements
+    val repo = java.nio.file.Files.createTempDirectory("cfgrepo_parse")
+    java.nio.file.Files.write(repo.resolve("sub.json"),
+      """{"processors": [{"id": "s0", "name": "#{proc}", "next": []}]}""".getBytes)
+    val prev = graft.engine.TuktuCompat.configRepo
+    graft.engine.TuktuCompat.configRepo = repo.toString
+    try {
+      val parallelConfig = """
+      { "generators": [ {"id": "g", "name": "range", "config": {"n": 1}, "next": ["pc"]} ],
+        "processors": [
+          {"id": "pc", "name": "tuktu.processors.meta.ParallelConfigProcessor",
+           "config": {"merger": "tuktu.processors.merge.SerialMerger",
+             "replacements": [{"source": "proc", "target": "nope"}],
+             "pipelines": [{"config_path": "sub", "start": ["s0"]}]},
+           "next": []} ] }"""
+      val pc = intercept[IllegalArgumentException](Flow.parse(parallelConfig))
+      assert(pc.getMessage.contains("'s0'") && pc.getMessage.contains("unknown name 'nope'"))
+      // IfThenElse applies no replacements: its branch names '#{proc}'
+      val ite = """
+      { "generators": [ {"id": "g", "name": "range", "config": {"n": 1}, "next": ["i"]} ],
+        "processors": [
+          {"id": "i", "name": "tuktu.processors.meta.IfThenElseProcessor",
+           "config": {"expression": "true",
+             "then_pipeline": {"config": "sub", "start": "s0"},
+             "else_pipeline": {"config": "sub", "start": "s0"}},
+           "next": []} ] }"""
+      val i2 = intercept[IllegalArgumentException](Flow.parse(ite))
+      assert(i2.getMessage.contains("'s0'") && i2.getMessage.contains("unknown name '#{proc}'"))
+    } finally graft.engine.TuktuCompat.configRepo = prev
   }
 
   test("a missing config key fails naming the node and the key") {

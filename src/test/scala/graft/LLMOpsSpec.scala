@@ -1357,16 +1357,21 @@ class LLMOpsSpec extends SparkSpec {
     import graft.ml.{ML, ModelRegistry}
     val train = Seq((1.0, 2.0), (2.0, 4.0), (3.0, 6.0), (4.0, 8.0))
       .toDF("x", "y")
-    ModelRegistry.train("m", ML.linearRegression(train, Seq("x"), "y"))
-    val scored = ModelRegistry("m", train).select("prediction")
+    import org.apache.spark.ml.Transformer
+    ModelRegistry.put("m", ML.linearRegression(train, Seq("x"), "y"))
+    val scored = ModelRegistry.get[Transformer]("m").transform(train).select("prediction")
       .as[Double].collect()
+    // the typed lookup's two errors name the model
+    val wrongType = intercept[IllegalArgumentException](
+      ModelRegistry.get[graft.ml.HmmTransformer]("m"))
+    assert(wrongType.getMessage.contains("model 'm' is PipelineModel, not a HmmTransformer"))
     val dir = java.nio.file.Files.createTempDirectory("graft_model").toString
     ModelRegistry.serialize("m", s"$dir/m")
     ModelRegistry.destroy("m")
-    assert(ModelRegistry.get("m").isEmpty)
-    intercept[IllegalArgumentException](ModelRegistry("m", train))
-    ModelRegistry.deserialize("m", s"$dir/m")
-    val rescored = ModelRegistry("m", train).select("prediction")
+    val missing = intercept[IllegalArgumentException](ModelRegistry.get[Transformer]("m"))
+    assert(missing.getMessage.contains("no model 'm' in the registry"))
+    ModelRegistry.deserialize(spark, "m", s"$dir/m")
+    val rescored = ModelRegistry.get[Transformer]("m").transform(train).select("prediction")
       .as[Double].collect()
     assert(scored.toSeq == rescored.toSeq) // loaded model scores identically
     // non-pipeline MLWritable models round-trip too (className-dispatched load)
@@ -1375,9 +1380,9 @@ class LLMOpsSpec extends SparkSpec {
     ModelRegistry.put("b", buck)
     ModelRegistry.serialize("b", s"$dir/b")
     ModelRegistry.destroy("b")
-    ModelRegistry.deserialize("b", s"$dir/b")
-    assert(ModelRegistry("b", train).select("bucket").as[Double].collect().toSeq ==
-      Seq(0.0, 0.0, 1.0, 1.0))
+    ModelRegistry.deserialize(spark, "b", s"$dir/b")
+    assert(ModelRegistry.get[Transformer]("b").transform(train).select("bucket")
+      .as[Double].collect().toSeq == Seq(0.0, 0.0, 1.0, 1.0))
   }
 
   test("langId picks the language with most marker tokens") {
@@ -1501,7 +1506,7 @@ class LLMOpsSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("qc_model").toString
     ModelRegistry.serialize("qc_test", dir)
     ModelRegistry.destroy("qc_test")
-    val back = ModelRegistry.deserialize("qc_test2", dir)
+    val back = ModelRegistry.deserialize(spark, "qc_test2", dir)
       .asInstanceOf[org.apache.spark.ml.classification.LogisticRegressionModel]
     assert(back.coefficients == model.coefficients)
     ModelRegistry.destroy("qc_test2")

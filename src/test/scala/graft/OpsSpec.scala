@@ -62,9 +62,7 @@ class OpsSpec extends SparkSpec {
       Seq("def materialize(df: DataFrame): DataFrame = df.localCheckpoint()"),
       s"localCheckpoint outside Ops.materialize: ${sites(".localCheckpoint(")}")
     assert(sites(".persist(").isEmpty, s"persist in src/main: ${sites(".persist(")}")
-    assert(sites(".cache()").map(_._2) == Seq("val cached = df.cache()") &&
-      sites(".cache()").forall(_._1.startsWith("graft/sources/Sinks.scala")),
-      s".cache() outside Registry.put: ${sites(".cache()")}")
+    assert(sites(".cache()").isEmpty, s".cache() in src/main: ${sites(".cache()")}")
   }
 
   test("withGlobalIndex stays in DataFrame land: no RDD scan, no global window") {

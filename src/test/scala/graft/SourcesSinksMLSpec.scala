@@ -2,10 +2,10 @@ package graft
 
 import java.nio.file.Files
 import org.apache.spark.sql.functions._
-import graft.sources.{Registry, Sinks, Sources}
+import graft.sources.{Sinks, Sources}
 import graft.ml.ML
 
-/** Sources/sinks round-trips, registry buckets, ML wrappers. */
+/** Sources/sinks round-trips, ML wrappers. */
 class SourcesSinksMLSpec extends SparkSpec {
   import spark.implicits._
 
@@ -153,17 +153,6 @@ class SourcesSinksMLSpec extends SparkSpec {
     val benign = Seq("<r>hello</r>").toDF("xml")
       .select(Xslt.transformColumn(col("xml"), idXsl).as("t")).as[String].head
     assert(benign == "hello")
-  }
-
-  test("registry: put/get/names/drop named buckets") {
-    Registry.put("bucket_a", Seq(1, 2, 3).toDF("x"))
-    Registry.put("bucket_b", Seq(4).toDF("x"))
-    assert(Registry.names == Seq("bucket_a", "bucket_b"))
-    assert(Registry.get("bucket_a").get.count() == 3)
-    assert(spark.sql("SELECT sum(x) FROM bucket_a").head.getLong(0) == 6L)
-    Registry.drop(spark, "bucket_a")
-    assert(Registry.names == Seq("bucket_b"))
-    Registry.drop(spark, "bucket_b")
   }
 
   test("kmeans separates two obvious clusters") {

@@ -827,13 +827,13 @@ class TuktuCompatSpec extends SparkSpec {
     } finally graft.engine.TuktuCompat.configRepo = prev
   }
 
-  test("CachingProcessor runs the embedded pipeline on a miss and hits the Registry after") {
-    graft.sources.Registry.drop(spark, "compat_cache_mean")
-    val flow = """
+  test("CachingProcessor attaches this run's sub-flow rows") {
+    // nothing is kept across runs under cache_key: a second run over the
+    // rewritten input file attaches the new mean, not the first run's
+    val in = Files.createTempDirectory("compat_cache").resolve("in.json")
+    val flow = s"""
     { "generators": [
-        {"id": "g", "name": "list", "config": {"rows": [
-          {"v": 1}, {"v": 2}, {"v": 3}
-        ]}, "next": ["cp"]} ],
+        {"id": "g", "name": "json", "config": {"path": "$in"}, "next": ["cp"]} ],
       "processors": [
         {"id": "cp", "name": "tuktu.processors.cache.CachingProcessor",
          "result": "cached",
@@ -843,15 +843,14 @@ class TuktuCompatSpec extends SparkSpec {
              {"id": "c0", "name": "tuktu.processors.bucket.statistics.MeanProcessor",
               "result": "", "config": {"fields": ["v"]}, "next": []} ]},
          "next": []} ] }"""
-    val out = Flow.runSingle(spark, flow)
-    assert(out.count() == 3) // every datum keeps its row, cache attached
-    val cachedVals = out.select("cached").collect().map(
-      _.getSeq[org.apache.spark.sql.Row](0).map(_.getDouble(0)))
-    assert(cachedVals.forall(_ == Seq(2.0))) // mean of 1,2,3 per datum
-    // the miss registered the sub-flow result; a second run is a cache hit
-    assert(graft.sources.Registry.get("compat_cache_mean").isDefined)
-    assert(Flow.runSingle(spark, flow).count() == 3)
-    graft.sources.Registry.drop(spark, "compat_cache_mean")
+    // every datum keeps its row, with the packet's mean attached
+    def attached(vs: Int*): Seq[Seq[Double]] = {
+      Files.write(in, vs.map(v => s"""{"v": $v}""").mkString("\n").getBytes)
+      Flow.runSingle(spark, flow).select("cached").collect().toSeq
+        .map(_.getSeq[org.apache.spark.sql.Row](0).map(_.getDouble(0)))
+    }
+    assert(attached(1, 2, 3) == Seq.fill(3)(Seq(2.0)))
+    assert(attached(10, 20) == Seq.fill(2)(Seq(15.0)))
   }
 
   test("ParallelProcessor compiles inline pipelines and merges per the named merger") {
@@ -1017,7 +1016,8 @@ class TuktuCompatSpec extends SparkSpec {
          "next": []} ] }"""
     val re = Flow.runSingle(spark, lifecycle).head
     assert(math.abs(re.getAs[Double]("pred") - 7.0) < 1e-6)
-    assert(graft.ml.ModelRegistry.get("lr_compat").isEmpty) // destroyed
+    intercept[IllegalArgumentException](
+      graft.ml.ModelRegistry.get[org.apache.spark.ml.Transformer]("lr_compat")) // destroyed
     graft.ml.ModelRegistry.destroy("lr_reloaded")
   }
 
@@ -1186,10 +1186,8 @@ class TuktuCompatSpec extends SparkSpec {
     val armaFc = graft.engine.Flow.runSingle(spark, armaFlow).head.getSeq[Double](1)
     assert(armaFc.length == noisy.length + 3)
     assert(armaFc.forall(v => !v.isNaN && !v.isInfinite))
-    graft.ml.ModelRegistry.get("arma_compat") match {
-      case Some(t: graft.ml.AriTransformer) => assert(t.model.theta.length == 1)
-      case other => fail(s"unexpected registry entry: $other")
-    }
+    assert(graft.ml.ModelRegistry.get[graft.ml.AriTransformer]("arma_compat")
+      .model.theta.length == 1)
     graft.ml.ModelRegistry.destroy("arma_compat")
 
     // changepoint: per-key timestamp-bucket means, hydra scan; one row per
