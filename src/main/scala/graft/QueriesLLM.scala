@@ -2938,9 +2938,9 @@ object QueriesLLM {
 
     // ---------------- WordPiece greedy longest-match-first (r9): the
     // third tokenizer family (BERT inference shape) — ##-prefixed
-    // continuation pieces as DATA, greedy walk as one per-word HOF fold
-    // over a piece-keyed edge join; same distinct-word-table scale shape
-    // as BPE/unigram, same enriched corpus as unigram_segment
+    // continuation pieces as driver DATA, greedy walk as one compiled
+    // per-word function; same distinct-word-table scale shape as
+    // BPE/unigram, same enriched corpus as unigram_segment
     "wordpiece_segment" -> ((s, dir) => {
       val wf = graft.operators.Unigram.wordFreqs(
         fanOut(rd(s, dir, "documents"), col("doc_id")).select(col("doc_id"),

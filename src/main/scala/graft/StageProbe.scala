@@ -9,7 +9,8 @@ import scala.collection.mutable
   * task metrics: executor run time, shuffle read/write bytes, fetch wait,
   * GC. Prints one line per stage (slowest first) so the expensive stage —
   * and whether it is compute, shuffle or scheduling — is visible without
-  * the UI. Run: sbt "runMain graft.StageProbe <sfDir> <query...>" */
+  * the UI, after the job and stage counts. Run:
+  * sbt "runMain graft.StageProbe <sfDir> <query...>" */
 object StageProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
@@ -24,7 +25,9 @@ object StageProbe {
                   var shufReadB: Long = 0L, var fetchWaitMs: Long = 0L,
                   var shufWriteB: Long = 0L, var tasks: Int = 0)
     val stages = mutable.LinkedHashMap[Int, St]()
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
     val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
       override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
         stages.synchronized {
           stages(e.stageInfo.stageId) =
@@ -51,6 +54,7 @@ object StageProbe {
       try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
       catch { case e: Throwable => println(s"[probe] $n warmup FAILED: ${SparkEntry.describe(e)}") }
       stages.synchronized(stages.clear())
+      jobs.set(0)
       spark.sparkContext.addSparkListener(listener)
       val t0 = System.nanoTime()
       try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
@@ -71,7 +75,7 @@ object StageProbe {
       spark.sparkContext.removeSparkListener(listener)
       val snap = stages.synchronized(stages.values.toVector)
       val totalStage = snap.map(s => math.max(0L, s.completed - s.submitted)).sum
-      println(f"[probe] $n wall=$wall%.2fs stages=${snap.size} stageWallSum=${totalStage / 1000.0}%.2fs")
+      println(f"[probe] $n wall=$wall%.2fs jobs=${jobs.get} stages=${snap.size} stageWallSum=${totalStage / 1000.0}%.2fs")
       for (s <- snap.sortBy(s => -(s.completed - s.submitted)).take(14)) {
         val dur = math.max(0L, s.completed - s.submitted) / 1000.0
         println(f"[probe]   ${dur}%6.2fs tasks=${s.tasks}%4d run=${s.runMs / 1000.0}%7.2fs gc=${s.gcMs}%5dms " +

@@ -1,6 +1,6 @@
 package graft.engine
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -68,6 +68,19 @@ object Ops {
     *     job over it with `CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND` instead of
     *     recomputing. Surviving executor loss means changing this body. */
   def materialize(df: DataFrame): DataFrame = df.localCheckpoint()
+
+  /** Collect a model-sized frame (a benchmark gram set, a tokenizer
+    * vocabulary) to the driver under a hard row cap: `limit(cap + 1)`
+    * bounds the driver allocation in the SAME single job (no extra count
+    * scan) — at or under the cap the limit is a no-op, over it we see
+    * cap + 1 rows and fail loudly, naming `what` and the cap, before
+    * materializing the rest. A LocalRelation collects without a job. */
+  private[graft] def collectBounded(df: DataFrame, cap: Int, what: String,
+                                    advice: String): Array[Row] = {
+    val rows = df.limit(cap + 1).collect()
+    require(rows.length <= cap, s"$what exceeds $cap rows — $advice")
+    rows
+  }
 
   /** Scalable global row index in `orderBy` order: range-partition on the
     * sort keys, sort within partitions, then number by layout.

@@ -391,19 +391,13 @@ object Dedup {
     * benchmark suite truly fits the driver. */
   val DefaultMaxBenchGrams: Int = 32 * 1024 * 1024
 
-  /** Collect a gram table with a hard row cap — `limit(max+1)` bounds the
-    * driver allocation in the SAME single job (no extra count scan): at or
-    * under the cap the limit is a no-op, over it we see max+1 rows and
-    * fail loudly before materializing the rest. */
-  private def collectGramsBounded(bg: DataFrame, maxGrams: Int): Array[Long] = {
-    val rows = bg.limit(maxGrams + 1).collect()
-    require(rows.length <= maxGrams,
-      s"benchmark gram table exceeds $maxGrams grams — the decontamination " +
-        "gate broadcasts the benchmark set and is sized for eval-suite " +
-        "inputs, not corpora; shrink the benchmark or raise maxGrams " +
-        "explicitly if the driver can hold it")
-    rows.map(_.getLong(0)).sorted
-  }
+  /** The gram table as one sorted array, collected under `maxGrams`. */
+  private def collectGramsBounded(bg: DataFrame, maxGrams: Int): Array[Long] =
+    Ops.collectBounded(bg, maxGrams, "benchmark gram table",
+      "the decontamination gate broadcasts the benchmark set and is sized " +
+        "for eval-suite inputs, not corpora; shrink the benchmark or raise " +
+        "maxGrams explicitly if the driver can hold it")
+      .map(_.getLong(0)).sorted
 
   /** Both gate probes from ONE benchmark scan: the gram table collects
     * once (it is eval-suite-sized by contract), the sorted array backs the

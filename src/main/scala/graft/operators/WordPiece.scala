@@ -1,8 +1,11 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+
+import scala.annotation.tailrec
+import scala.jdk.CollectionConverters._
 
 /**
  * WordPiece subword tokenization (the BERT inference shape, Wu et al.
@@ -18,42 +21,54 @@ import org.apache.spark.sql.types._
  *
  * Scale shape (the bpe_train / unigram lesson): after the one corpus
  * token-count scan, everything runs on the DISTINCT-WORD table. The
- * candidate explode is O(len·maxPieceLen) per distinct word, the vocab
- * join is piece-keyed, and the greedy walk is a pure per-row fold over
- * the word's own matched-edge list — no shuffle, no state, at most L
- * steps each consuming ≥ 1 character. Encoding 100 TB costs one
- * token-count pass plus vocabulary-sized work and a broadcast join back.
+ * vocabulary is model-sized, so it comes to the driver once under the
+ * hard cap [[Unigram.MaxVocabPieces]] and is never joined: the greedy
+ * walk is one compiled per-word function over a driver set — no shuffle,
+ * no state, at most L steps each consuming ≥ 1 character. Encoding
+ * 100 TB costs one token-count pass plus vocabulary-sized work and a
+ * broadcast join back.
  */
 object WordPiece {
 
   val UNK = "[UNK]"
 
-  /** Candidate piece at (j, i): the substring with the `##` continuation
-    * prefix when it does not start the word. */
-  private def prefixed(w: Column, j: Column, i: Column): Column =
-    when(j === 0, w.substr(j + 1, i - j))
-      .otherwise(concat(lit("##"), w.substr(j + 1, i - j)))
-
   /** Frequency-seeded piece vocabulary: every (position-aware) candidate
     * piece of every distinct word weighted by word frequency, top `k` by
     * (freq desc, piece asc), UNION every single-character piece in both
     * its initial and `##` forms so the greedy walk never dead-ends on
-    * in-corpus words. Returns one `piece` column. */
+    * in-corpus words. Fetched in one bounded collect; returns a
+    * LocalRelation of one `piece` column. */
   def vocab(wf: DataFrame, k: Int, maxPieceLen: Int = 6): DataFrame = {
     val pieces = wf
-      .select(col("w"), col("freq"), length(col("w")).as("L"))
-      .select(explode(expr(
-        s"""flatten(transform(sequence(1, L), j ->
-              transform(sequence(1, least($maxPieceLen, L - j + 1)), len ->
-                CASE WHEN j = 1 THEN substr(w, j, len)
-                     ELSE '##' || substr(w, j, len) END)))""")).as("piece"),
-        col("freq"))
+      .select(explode(Unigram.substringsCol(maxPieceLen, "##")(col("w")))
+        .as("piece"), col("freq"))
       .groupBy("piece").agg(sum("freq").as("freq"))
     val top = pieces.orderBy(col("freq").desc, col("piece").asc).limit(k)
     val chars = pieces.filter(
       length(col("piece")) === 1 ||
         (length(col("piece")) === 3 && col("piece").startsWith("##")))
-    top.unionAll(chars).select("piece").distinct()
+    val kept = Unigram.collectVocab(top.unionAll(chars).select("piece"))
+      .map(_.getString(0)).distinct.sorted
+    wf.sparkSession.createDataFrame(kept.toSeq.map(Row(_)).asJava,
+      StructType(Seq(StructField("piece", StringType, nullable = false))))
+  }
+
+  /** Greedy longest-match-first walk of one word: (n_pieces, seg,
+    * is_unk). Each step takes the LONGEST piece (≤ `maxPieceLen` code
+    * points, `##`-prefixed past the word start) in `pieces` at the current
+    * position; a dead end voids the whole word to one [[UNK]]. */
+  private def walk(w: String, pieces: Set[String],
+                   maxPieceLen: Int): (Long, String, Boolean) = {
+    val cp = w.codePoints.toArray
+    @tailrec def go(pos: Int, acc: List[String]): (Long, String, Boolean) =
+      if (pos == cp.length) (acc.length.toLong, acc.reverse.mkString(" "), false)
+      else (math.min(cp.length, pos + maxPieceLen) until pos by -1).iterator
+        .map(i => i -> ((if (pos == 0) "" else "##") + new String(cp, pos, i - pos)))
+        .find(p => pieces(p._2)) match {
+        case Some((i, piece)) => go(i, piece :: acc)
+        case None => (1L, UNK, true)
+      }
+    go(0, Nil)
   }
 
   /** Greedy longest-match-first encode of every distinct word of `wf`
@@ -61,55 +76,21 @@ object WordPiece {
     * marks continuations): returns (w, n_pieces, seg, is_unk) — BERT's
     * whole-word [[UNK]] fallback when any position has no matching piece.
     *
-    * Matched edges (j → i when the prefixed piece ∈ vocab) come from one
-    * piece-keyed equality join; the walk is a single aggregate() fold per
-    * word over its own edge array — each step takes the LONGEST edge at
-    * the current position, so ≤ L steps always terminate. */
+    * The vocabulary is collected once under [[Unigram.MaxVocabPieces]]
+    * (no job for a LocalRelation) into a set, and the walk runs as one
+    * compiled per-word function over it — no candidate explode, no join,
+    * no shuffle. */
   def encodeWords(wf: DataFrame, vocab: DataFrame, maxPieceLen: Int = 6,
                   maxWordLen: Int = 16): DataFrame = {
-    val dw = wf.select(col("w"), length(col("w")).as("L"))
-      .filter(col("L") >= 1 && col("L") <= maxWordLen)
-    val cand = dw.select(col("w"), col("L"),
-      explode(expr(
-        s"""flatten(transform(sequence(1, L), j ->
-              transform(sequence(1, least($maxPieceLen, L - j + 1)), len ->
-                struct(j - 1 AS j, j - 1 + len AS i,
-                  CASE WHEN j = 1 THEN substr(w, j, len)
-                       ELSE '##' || substr(w, j, len) END AS piece))))"""))
-        .as("e"))
-      .select(col("w"), col("e.j").as("j"), col("e.i").as("i"),
-        col("e.piece").as("piece"))
-    val matched = cand.join(vocab.select(col("piece")).distinct(), "piece")
-      .groupBy("w")
-      .agg(collect_list(struct(col("j"), col("i"))).as("edges"))
-    val edges = dw.join(matched, Seq("w"), "left")
-      .select(col("w"), col("L"),
-        coalesce(col("edges"), array().cast(
-          ArrayType(StructType(Seq(StructField("j", IntegerType),
-            StructField("i", IntegerType)))))).as("edges"))
-    // greedy fold: state (pos, n, seg, unk); a step from a completed or
-    // failed state is the identity, so folding L steps is always enough
-    val walk = aggregate(
-      sequence(lit(1), col("L")),
-      struct(lit(0).as("pos"), lit(0L).as("n"), lit("").as("seg"),
-        lit(false).as("unk")),
-      (acc: Column, _: Column) => {
-        val best = array_max(transform(
-          filter(col("edges"), e => e("j") === acc("pos")), e => e("i")))
-        val piece = prefixed(col("w"), acc("pos"), best)
-        when(acc("unk") || acc("pos") >= col("L"), acc)
-          .otherwise(when(best.isNull,
-            struct(col("L").as("pos"), lit(1L).as("n"), lit(UNK).as("seg"),
-              lit(true).as("unk")))
-            .otherwise(struct(best.as("pos"), (acc("n") + 1L).as("n"),
-              concat(acc("seg"),
-                when(acc("seg") === "", lit("")).otherwise(lit(" ")),
-                piece).as("seg"),
-              lit(false).as("unk"))))
-      })
-    edges.withColumn("__s", walk)
-      .select(col("w"), col("__s.n").as("n_pieces"), col("__s.seg").as("seg"),
-        col("__s.unk").as("is_unk"))
+    val pieces = Unigram.collectVocab(vocab.select(col("piece")))
+      .collect { case r if !r.isNullAt(0) => r.getString(0) }.toSet
+    val greedy = udf((w: String) => walk(w, pieces, maxPieceLen))
+      .withName("wordpiece_walk")
+    wf.select(col("w"))
+      .filter(length(col("w")) >= 1 && length(col("w")) <= maxWordLen)
+      .select(col("w"), greedy(col("w")).as("__s"))
+      .select(col("w"), col("__s._1").as("n_pieces"), col("__s._2").as("seg"),
+        col("__s._3").as("is_unk"))
   }
 
   /** Per-document WordPiece token counts: distinct words encoded once,

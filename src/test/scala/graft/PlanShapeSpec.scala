@@ -1,6 +1,10 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.{ArrayAggregate, ArrayFilter, ArrayTransform, ScalaUDF}
+import org.apache.spark.sql.execution.{SparkPlan, WholeStageCodegenExec}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.joins.BaseJoinExec
 
 /** Structural invariants of the scale-critical executed plans — the
   * properties each round's plan audit checks by hand, pinned as a
@@ -9,15 +13,16 @@ import org.apache.spark.sql.DataFrame
   * join, demote a broadcast to a shuffle join, lose whole-stage codegen
   * on a scoring hot loop, or grow a UDF. Runs on the sf0.001 fixture
   * (cancelled, not failed, when the test data directory is absent). */
-class PlanShapeSpec extends SparkSpec {
+class PlanShapeSpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
   private val sfDir = "/root/testdata/sf0.001"
-  private def planOf(name: String): String = {
+  private def executedPlanOf(name: String): SparkPlan = {
     assume(new java.io.File(sfDir).isDirectory, s"$sfDir not present")
     val df: DataFrame = SparkEntry.queries(name)(spark, sfDir)
     df.queryExecution.toRdd.foreach(_ => ()) // finalize under AQE
-    df.queryExecution.executedPlan.toString
+    df.queryExecution.executedPlan
   }
+  private def planOf(name: String): String = executedPlanOf(name).toString
   private def codegenSpans(plan: String): Int =
     raw"\*\((\d+)\)".r.findAllMatchIn(plan).map(_.group(1)).toSet.size
 
@@ -135,5 +140,24 @@ class PlanShapeSpec extends SparkSpec {
     assert("Exchange".r.findAllIn(p).size <= 2,
       "chunkSliding must not shuffle the corpus")
     assert(codegenSpans(p) >= 1)
+  }
+
+  test("tokenizer walks are one compiled per-word function: no lambda folds, no vocabulary join") {
+    for ((q, fn) <- Seq("unigram_segment" -> "unigram_viterbi",
+                        "wordpiece_segment" -> "wordpiece_walk")) {
+      val plan = executedPlanOf(q)
+      val lambdas = flatMap(plan)(_.expressions.flatMap(_.collect {
+        case e @ (_: ArrayAggregate | _: ArrayFilter | _: ArrayTransform) => e.prettyName
+      }))
+      assert(lambdas.isEmpty, s"$q runs interpreted lambdas again: $lambdas")
+      assert(collect(plan) { case j: BaseJoinExec => j }.isEmpty,
+        s"$q joins again (the vocabulary is driver data)")
+      val compiled = collect(plan) { case w: WholeStageCodegenExec => w }
+        .exists(_.child.exists(_.expressions.exists(_.exists {
+          case u: ScalaUDF => u.udfName.contains(fn)
+          case _ => false
+        })))
+      assert(compiled, s"$q: $fn is not under WholeStageCodegen")
+    }
   }
 }

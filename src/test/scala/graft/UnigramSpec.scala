@@ -55,6 +55,52 @@ class UnigramSpec extends SparkSpec {
     assert(out.getAs[String]("seg") == "x y z")
   }
 
+  test("segmentWords breaks score and piece-count ties toward the smaller split point") {
+    // "abc": a+bc and ab+c both score -10 in 2 pieces; the split at 1
+    // (a|bc) is smaller than the split at 2 (ab|c)
+    val out = Unigram.segmentWords(
+      wfDf("abc" -> 1L),
+      vocabDf("a" -> -5L, "bc" -> -5L, "ab" -> -5L, "c" -> -5L, "b" -> -50L))
+      .head()
+    assert(out.getAs[Long]("n_pieces") == 2L)
+    assert(out.getAs[Long]("score_q") == -10L)
+    assert(out.getAs[String]("last_piece") == "bc")
+    assert(out.getAs[String]("seg") == "a bc")
+  }
+
+  test("segmentWords keeps the max score of a duplicated piece") {
+    val out = Unigram.segmentWords(
+      wfDf("ab" -> 1L),
+      vocabDf("ab" -> -11L, "ab" -> -10L, "a" -> -100L, "b" -> -100L)).head()
+    assert(out.getAs[Long]("n_pieces") == 1L)
+    assert(out.getAs[Long]("score_q") == -10L)
+  }
+
+  test("segmentWords returns nulls for a word the vocabulary cannot cover") {
+    // no piece covers "q": there is no segmentation, so no made-up one
+    val out = Unigram.segmentWords(
+      wfDf("xqz" -> 1L, "xz" -> 1L),
+      vocabDf("x" -> -7L, "z" -> -9L))
+      .collect().map(r => r.getString(0) -> r).toMap
+    assert(out("xqz").toSeq.tail.forall(_ == null), out("xqz"))
+    assert(out("xz").getAs[String]("seg") == "x z")
+  }
+
+  test("the vocabulary collect fails loudly past its cap") {
+    val e = intercept[IllegalArgumentException](
+      Unigram.collectVocab(vocabDf("a" -> -1L, "b" -> -2L, "c" -> -3L), cap = 2))
+    assert(e.getMessage.contains("tokenizer vocabulary exceeds 2 rows"), e.getMessage)
+    assert(Unigram.collectVocab(vocabDf("a" -> -1L, "b" -> -2L), cap = 2).length == 2)
+  }
+
+  test("a driver-built vocabulary enters segmentWords without a job") {
+    val wf = wfDf("abab" -> 3L, "ba" -> 1L)
+    val vocab = Unigram.pieceVocab(wf, k = 4, maxPieceLen = 3)
+    val (out, jobs) = jobsIn(Unigram.segmentWords(wf, vocab))
+    assert(jobs == 0, s"building segmentWords over a LocalRelation ran $jobs jobs")
+    assert(out.count() == 2)
+  }
+
   test("pieceVocab keeps top-k plus every single character") {
     val wf = Unigram.wordFreqs(
       Seq("the the the cat sat", "the cat").toDF("text"), "text")

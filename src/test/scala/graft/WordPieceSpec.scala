@@ -50,6 +50,12 @@ class WordPieceSpec extends SparkSpec {
     assert(out("ab") == ((1L, "[UNK]", true)))
   }
 
+  test("duplicate vocabulary rows encode the same as the deduplicated vocabulary") {
+    val words = Seq("unaffable", "abcd", "xyz")
+    val v = Seq("un", "##aff", "##able", "abc", "##d", "x", "##y")
+    assert(enc(words, v ++ v ++ Seq("un", "##d")) == enc(words, v))
+  }
+
   test("frequency-seeded vocab keeps every single char so corpus words never UNK") {
     implicit val s = spark
     val corpus = Seq((1L, "the cat sat"), (2L, "the bat"), (3L, "zq"))
