@@ -100,7 +100,7 @@ object QueriesCore {
     // ---------------- §2.3 FieldFilterProcessor
     "field_filter" -> ((s, dir) => {
       Ops.fieldFilter(rd(s, dir, "customer"),
-        Seq("c_custkey" -> "key", "c_name" -> "name", "c_mktsegment" -> "segment"))
+        Seq(Seq("c_custkey") -> "key", Seq("c_name") -> "name", Seq("c_mktsegment") -> "segment"))
         .orderBy("key")
     }),
 
@@ -113,14 +113,14 @@ object QueriesCore {
     // ---------------- §2.3 FieldCopyProcessor
     "field_copy" -> ((s, dir) => {
       Ops.fieldCopy(rd(s, dir, "orders").select("o_orderkey", "o_orderstatus"),
-        Seq("o_orderstatus" -> "status_copy"))
+        Seq(Seq("o_orderstatus") -> "status_copy"))
         .orderBy("o_orderkey")
     }),
 
     // ---------------- §2.3 FieldRenameProcessor
     "field_rename" -> ((s, dir) => {
       Ops.fieldRename(rd(s, dir, "orders").select("o_orderkey", "o_totalprice"),
-        Seq("o_totalprice" -> "total"))
+        Seq(Seq("o_totalprice") -> "total"))
         .orderBy("o_orderkey")
     }),
 
@@ -155,15 +155,17 @@ object QueriesCore {
 
     // ---------------- §2.3 StringSplitterProcessor
     "string_split" -> ((s, dir) => {
-      Ops.stringSplit(rd(s, dir, "part").select("p_partkey", "p_name"), "p_name", " ", "words")
+      Ops.stringSplit(rd(s, dir, "part").select("p_partkey", "p_name"), "p_name",
+        java.util.regex.Pattern.quote(" "), removeEmpty = false, "words")
         .withColumn("words", array_join(col("words"), "|"))
         .orderBy("p_partkey")
     }),
 
     // ---------------- §2.3 StringImploderProcessor
     "string_implode" -> ((s, dir) => {
-      val p = Ops.stringSplit(rd(s, dir, "part").select("p_partkey", "p_name"), "p_name", " ", "words")
-      Ops.stringImplode(p, "words", "_", "joined").drop("words")
+      val p = Ops.stringSplit(rd(s, dir, "part").select("p_partkey", "p_name"), "p_name",
+        java.util.regex.Pattern.quote(" "), removeEmpty = false, "words")
+      Ops.stringImplode(p, Seq("words"), "_", "joined").drop("words")
         .orderBy("p_partkey")
     }),
 
@@ -217,7 +219,7 @@ object QueriesCore {
     // ---------------- §2.3 ReplaceProcessor (regex replace chain)
     "replace_processor" -> ((s, dir) => {
       Ops.replace(rd(s, dir, "part").select("p_partkey", "p_name"), "p_name",
-        Seq("[aeiou]" -> "_", "^sm" -> "SM"))
+        Seq("[aeiou]" -> "_", "^sm" -> "SM"), "p_name")
         .orderBy("p_partkey")
     }),
 
@@ -247,7 +249,7 @@ object QueriesCore {
     "max_of_fields" -> ((s, dir) => {
       Ops.maxOfFields(rd(s, dir, "lineitem")
         .select("l_orderkey", "l_linenumber", "l_discount", "l_tax"),
-        "l_discount", "l_tax", "max_rate")
+        Seq("l_discount", "l_tax"), "max_rate")
         .orderBy("l_orderkey", "l_linenumber")
     }),
 
@@ -424,7 +426,7 @@ object QueriesCore {
     // ---------------- §2.8 TimestampNormalizerProcessor ⇄ tumbling window
     "timestamp_normalizer" -> ((s, dir) => {
       val e = rd(s, dir, "events")
-      Ops.timestampNormalize(e, "ts", "hour", "hour_ts")
+      Ops.timestampNormalize(e, "ts", None, Map("hours" -> 1), "hour_ts")
         .groupBy(tstr(col("hour_ts")).as("hour"))
         .agg(count(lit(1)).as("n"), vsum(col("value")).as("sum_vmicros"))
         .orderBy("hour")
@@ -456,14 +458,15 @@ object QueriesCore {
 
     // ---------------- §2.8 GroupByProcessor + KeyImploderProcessor
     "key_imploder" -> ((s, dir) => {
-      Ops.keyImploder(rd(s, dir, "events"), Seq("user_id"), "event_type", "event_id", "types")
-        .withColumn("types", array_join(col("types"), ","))
+      Ops.keyImploder(rd(s, dir, "events"), Seq("user_id"), Seq("event_type"), Some("event_id"))
+        .select(col("user_id"), array_join(col("event_type"), ",").as("types"))
         .orderBy("user_id")
     }),
 
     // ---------------- §2.8 SizeBufferProcessor — count-based batching
     "size_buffer" -> ((s, dir) => {
-      Ops.sizeBuffer(rd(s, dir, "events").select("event_id", "value"), 1000, Seq(col("event_id")))
+      Ops.sizeBuffer(rd(s, dir, "events").select("event_id", "value"), 1000, Seq(col("event_id")),
+        "batch_id")
         .groupBy(col("batch_id"))
         .agg(count(lit(1)).as("n"), vsum(col("value")).as("sum_vmicros"))
         .orderBy("batch_id")
@@ -487,11 +490,14 @@ object QueriesCore {
 
     // ---------------- §2.3 TupleListImploder — "k=v|k=v" rendering
     "tuple_implode" -> ((s, dir) => {
+      // a null event_type leaves its entry out, as the oracle's string_agg
+      // skips the null `k=v` (the imploder renders a null field as "")
       val grouped = rd(s, dir, "events").groupBy(col("user_id"))
-        .agg(array_sort(collect_list(
-          struct(col("event_id").as("k"), col("event_type").as("v")))).as("recs"))
-      Ops.tupleListImplode(grouped, "recs", "k", "v", "=", "|", "kv")
-        .drop("recs").orderBy("user_id")
+        .agg(array_sort(collect_list(when(col("event_type").isNotNull,
+          struct(col("event_id").as("k"), col("event_type").as("v"))))).as("recs"))
+      Ops.tupleListImplode(grouped, Seq("recs"), "=", "kv")
+        .select(col("user_id"), array_join(col("kv"), "|").as("kv"))
+        .orderBy("user_id")
     }),
 
     // ---------------- §2.3 ColorHexToRGB — hex decode as expressions

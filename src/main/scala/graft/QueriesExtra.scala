@@ -23,14 +23,14 @@ object QueriesExtra {
       val o = rd(s, dir, "orders").select(col("o_orderkey"),
         struct(col("o_orderstatus").as("status"),
           struct(col("o_totalprice").as("price")).as("inner")).as("meta"))
-      Ops.flatten(o, "_").orderBy("o_orderkey")
+      Ops.flatten(o, o.columns.toSeq, "_").orderBy("o_orderkey")
     }),
 
     // ---------------- §2.3 MapFlattenerProcessor — splice struct entries
     "map_flattener" -> ((s, dir) => {
       val r = rd(s, dir, "region")
         .withColumn("meta", struct(col("r_name").as("name_inner")))
-      Ops.mapFlattener(r, "meta").orderBy("r_regionkey")
+      Ops.mapFlattener(r, "meta").drop("meta").orderBy("r_regionkey")
     }),
 
     // ---------------- §2.3 ListMapFlattenerProcessor — inner field of array<struct>
@@ -59,7 +59,7 @@ object QueriesExtra {
       val p = rd(s, dir, "part")
         .withColumn("a", split(col("p_name"), " "))
         .withColumn("b", split(col("p_type"), " "))
-      Ops.imploder(p, Seq("a", "b"), "merged")
+      Ops.imploder(p, Some(Seq("a", "b")), "merged")
         .select(col("p_partkey"), array_join(col("merged"), "|").as("merged"))
         .orderBy("p_partkey")
     }),
@@ -68,7 +68,7 @@ object QueriesExtra {
     "convert_to_date" -> ((s, dir) => {
       val o = rd(s, dir, "orders").select("o_orderkey", "o_orderdate")
         .withColumn("ds", date_format(col("o_orderdate"), "yyyy-MM-dd"))
-      Ops.toDate(o, "ds", "yyyy-MM-dd", "parsed")
+      Ops.toDate(o, "ds", Some("yyyy-MM-dd"), "parsed")
         .select(col("o_orderkey"), col("ds"),
           date_format(col("parsed"), "yyyy-MM-dd HH:mm:ss").as("parsed_str"))
         .orderBy("o_orderkey")
@@ -243,7 +243,7 @@ object QueriesExtra {
       val perUser = rd(s, dir, "events")
         .groupBy(col("user_id"))
         .agg(array_distinct(collect_list(struct(col("event_type").as("et")))).as("recs"))
-      Ops.containsAllFilter(perUser, "recs", "et", Seq("click", "purchase"))
+      Ops.containsAllFilter(perUser, "recs", "et", array(lit("click"), lit("purchase")))
         .select("user_id")
         .orderBy("user_id")
     }),

@@ -3,10 +3,12 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
+/** Driver contract — see SURVEY.md §7.
   *
   * Queries are assembled from:
   *  - [[QueriesCore]]: the reference's operator inventory (SURVEY.md §2)
+  *  - [[QueriesExtra]]: struct/JSON reshaping, window analytics,
+  *    sessionization, rollup and the recursive lookup
   *  - [[QueriesLLM]]: training-data-pipeline extras (dedup, similarity,
   *    text analysis, multimodal)
   */

@@ -114,6 +114,10 @@ object Flow {
     * the Tuktu FQCN path uses), then the literal default. */
   private def result(c: Node): String = c.strOpt("result").getOrElse(c.result)
 
+  /** The native field ops' `fields` object, `{"a.b": "c"}`: dot path → result. */
+  private def pathPairs(c: Node): Seq[(Seq[String], String)] =
+    c.pairs("fields").map { case (p, r) => (p.split('.').toSeq, r) }
+
   /** Benchmark side of the decontamination entries: a named bucket
     * (tuktu.db Write/Read), which is a temp view in the flow's own session
     * catalog — a bucket one session registers is invisible to another. */
@@ -145,19 +149,22 @@ object Flow {
   /** The registry's processors: native names, then [[TuktuCompat]]'s FQCNs. */
   val processors: Map[String, Processor] = Map[String, Processor](
     "skip"            -> ((df, _) => df), // SkipProcessor (BaseProcessors.scala:23)
-    "field_filter"    -> ((df, c) => Ops.fieldFilter(df, c.pairs("fields"))),
+    "field_filter"    -> ((df, c) => Ops.fieldFilter(df, pathPairs(c))),
     "field_remove"    -> ((df, c) => Ops.fieldRemove(df, c.strs("fields"))),
-    "field_copy"      -> ((df, c) => Ops.fieldCopy(df, c.pairs("fields"))),
-    "field_rename"    -> ((df, c) => Ops.fieldRename(df, c.pairs("fields"))),
+    "field_copy"      -> ((df, c) => Ops.fieldCopy(df, pathPairs(c))),
+    "field_rename"    -> ((df, c) => Ops.fieldRename(df, pathPairs(c))),
     "constant_adder"  -> ((df, c) => Ops.constantAdder(df, result(c), c.str("value"))),
     "filter"          -> ((df, c) => Ops.filter(df, c.str("predicate"))),
     "predicate_field" -> ((df, c) => Ops.predicateField(df, c.str("predicate"), result(c))),
     "arithmetic"      -> ((df, c) => Ops.arithmetic(df, c.str("expression"), result(c))),
     "explode"         -> ((df, c) => Ops.sequenceExplode(df, c.str("field"), result(c))),
-    "split" -> ((df, c) => Ops.stringSplit(df, c.str("field"), c.str("separator"), result(c))),
-    "implode" ->
-      ((df, c) => Ops.stringImplode(df, c.str("field"), c.str("separator"), result(c))),
-    "flatten"         -> ((df, c) => Ops.flatten(df, c.strOpt("separator").getOrElse("."))),
+    // a literal separator, empty parts kept
+    "split" -> ((df, c) => Ops.stringSplit(df, c.str("field"),
+      java.util.regex.Pattern.quote(c.str("separator")), removeEmpty = false, result(c))),
+    "implode" -> ((df, c) => Ops.stringImplode(df, c.str("field").split('.').toSeq,
+      c.str("separator"), result(c))),
+    // every column
+    "flatten" -> ((df, c) => Ops.flatten(df, df.columns.toSeq, c.strOpt("separator").getOrElse("."))),
     "json_path" -> ((df, c) => Ops.getJsonPath(df, c.str("field"), c.str("path"), result(c))),
     "sort" -> ((df, c) =>
       Ops.sort(df, c.strs("fields").map(f =>

@@ -13,43 +13,75 @@ import org.apache.spark.sql.types._
  * Naming/semantics contract: the reference writes each processor's output to
  * its `resultName` field, overwriting any existing field — mirrored here with
  * `withColumn` semantics.
+ *
+ * One body per processor: a processor's function here carries the
+ * reference semantics, and its reference-FQCN entry ([[TuktuCompat]]), its
+ * native flow name ([[Flow]]) and its suite query each decode their own
+ * config or arguments into a call of it. So the oracle that checks the
+ * suite query checks the code a reference flow config runs.
  */
 object Ops {
 
   // ------------------------------------------------- §2.3 projections / field ops
 
+  /** The column at a dot path from the row root, one field name per step;
+    * a one-step path is a top-level column even when its name holds a dot
+    * (a flattened `a.b`), where `col(name)` would look for a nested field. */
+  private[engine] def colPath(path: Seq[String]): Column =
+    path.tail.foldLeft(col(s"`${path.head}`"))(_.getField(_))
+
+  /** A fresh column name: a fixed temp name would silently replace (then
+    * drop) a same-named input column. */
+  private[engine] def uniq(prefix: String): String =
+    prefix + "_" + java.util.UUID.randomUUID.toString.take(8)
+
   /** FieldFilterProcessor (app/tuktu/processors/BaseProcessors.scala:120):
-    * keep only listed dot-path fields, rename, optional default. */
-  def fieldFilter(df: DataFrame, fields: Seq[(String, String)],
-                  defaults: Map[String, Any] = Map.empty): DataFrame =
-    df.select(fields.map { case (path, alias) =>
-      defaults.get(alias) match {
-        case Some(d) => coalesce(col(path), lit(d)).alias(alias)
-        case None    => col(path).alias(alias)
-      }
+    * keep only the listed dot paths, each under its result name. A default
+    * (keyed by result name) fills nulls, and stands alone when the path's
+    * head is absent entirely. */
+  def fieldFilter(df: DataFrame, fields: Seq[(Seq[String], String)],
+                  defaults: Map[String, String] = Map.empty): DataFrame =
+    df.select(fields.map { case (p, out) =>
+      (defaults.get(out) match {
+        case Some(d) if df.columns.contains(p.head) => coalesce(colPath(p), lit(d))
+        case Some(d) => lit(d)
+        case None    => colPath(p)
+      }).alias(out)
     }: _*)
 
   /** FieldRemoveProcessor (BaseProcessors.scala:144). */
   def fieldRemove(df: DataFrame, fields: Seq[String]): DataFrame = df.drop(fields: _*)
 
-  /** FieldCopyProcessor (BaseProcessors.scala:160): copy dot-paths to new
-    * top-level names. */
-  def fieldCopy(df: DataFrame, pairs: Seq[(String, String)]): DataFrame =
-    pairs.foldLeft(df) { case (d, (path, name)) => d.withColumn(name, col(path)) }
+  /** FieldCopyProcessor (BaseProcessors.scala:160): copy dot paths to
+    * top-level result names. One select with every copy read from the
+    * ORIGINAL row: sequential withColumn would let a later copy read an
+    * earlier copy's overwrite. */
+  def fieldCopy(df: DataFrame, copies: Seq[(Seq[String], String)]): DataFrame = {
+    val results = copies.map(_._2).toSet
+    df.select(df.columns.toSeq.filterNot(results.contains).map(n => colPath(Seq(n))) ++
+      copies.map { case (p, r) => colPath(p).alias(r) }: _*)
+  }
 
-  /** FieldRenameProcessor (BaseProcessors.scala:292). */
-  def fieldRename(df: DataFrame, pairs: Seq[(String, String)]): DataFrame =
-    pairs.foldLeft(df) { case (d, (from, to)) => d.withColumnRenamed(from, to) }
+  /** FieldRenameProcessor (BaseProcessors.scala:292): copy, then remove the
+    * path heads, keeping results that recycle a source name; sources read
+    * from the original row (as in fieldCopy), and a path whose head is
+    * absent is skipped. A rename takes its source head's position. */
+  def fieldRename(df: DataFrame, renames: Seq[(Seq[String], String)]): DataFrame = {
+    val present = renames.filter(r => df.columns.contains(r._1.head))
+    val replaced = present.map(_._1.head).toSet ++ present.map(_._2)
+    df.select(df.columns.toSeq.flatMap { n =>
+      present.collect { case (p, r) if p.head == n => colPath(p).alias(r) } ++
+        Option.when(!replaced(n))(colPath(Seq(n)))
+    }: _*)
+  }
 
-  /** JsonFetcherProcessor (BaseProcessors.scala:234): hoist nested path to top
-    * level with default. */
-  def jsonFetcher(df: DataFrame, path: String, result: String, default: Option[Any]): DataFrame =
-    df.withColumn(result, default.fold(col(path))(d => coalesce(col(path), lit(d))))
-
-  /** FieldConstantAdderProcessor (BaseProcessors.scala:574): add constant
-    * field; value supports `${}` interpolation. */
-  def constantAdder(df: DataFrame, result: String, template: String): DataFrame =
-    df.withColumn(result, Expr.interpolate(template))
+  /** FieldConstantAdderProcessor (BaseProcessors.scala:574): add a constant
+    * field; the value supports `${}` interpolation. */
+  def constantAdder(df: DataFrame, result: String, template: String,
+                    numeric: Boolean = false): DataFrame = {
+    val v = Expr.interpolate(template)
+    df.withColumn(result, if (numeric) v.cast(LongType) else v)
+  }
 
   /** The one materialization point of graft: every frame that is computed
     * once and then read several times, pinned to a layout, or cut out of a
@@ -128,14 +160,21 @@ object Ops {
       .drop(pid, mid, off)
   }
 
-  /** RunningCountProcessor (BaseProcessors.scala:184): sequence number in
-    * explicit `orderBy` order (reference semantics are inherently sequential;
-    * the index itself is computed scalably — see withGlobalIndex). */
+  /** The 0-based row index under `result`: in arrival order (the current
+    * layout, [[indexByLayout]]) when `orderBy` is empty, else in `orderBy`
+    * order ([[withGlobalIndex]]). */
+  private def rowIndex(df: DataFrame, orderBy: Seq[Column], result: String): DataFrame =
+    if (orderBy.isEmpty) indexByLayout(df, result) else withGlobalIndex(df, orderBy, result)
+
+  /** RunningCountProcessor (BaseProcessors.scala:184): startAt, startAt +
+    * stepSize, … in arrival order, or in `orderBy` order. The reference
+    * semantics are sequential; the index is computed scalably (rowIndex).
+    * `perBlock` counts DataPackets: the batch frame is ONE packet, so every
+    * row gets startAt. */
   def runningCount(df: DataFrame, orderBy: Seq[Column], startAt: Long = 0, stepSize: Long = 1,
-                   result: String = "count"): DataFrame =
-    withGlobalIndex(df, orderBy, "__idx")
-      .withColumn(result, col("__idx") * stepSize + startAt)
-      .drop("__idx")
+                   perBlock: Boolean = false, result: String = "count"): DataFrame =
+    if (perBlock) df.withColumn(result, lit(startAt))
+    else rowIndex(df, orderBy, result).withColumn(result, col(result) * stepSize + startAt)
 
   /** UUIDAdderProcessor (BaseProcessors.scala:1216). */
   def uuidAdder(df: DataFrame, result: String): DataFrame = df.withColumn(result, expr("uuid()"))
@@ -144,17 +183,43 @@ object Ops {
   def fieldsToList(df: DataFrame, fields: Seq[String], result: String): DataFrame =
     df.withColumn(result, array(fields.map(col): _*))
 
-  /** ImploderProcessor (BaseProcessors.scala:760): merge array fields into one. */
-  def imploder(df: DataFrame, fields: Seq[String], result: String): DataFrame =
-    df.withColumn(result, concat(fields.map(col): _*))
+  /** ImploderProcessor (BaseProcessors.scala:760): concat the listed
+    * fields' values (arrays splice, scalars wrap) into one list under
+    * `result`. Element types must agree for concat, so heterogeneous fields
+    * fall back to strings like the reference's untyped datum. Without
+    * fields: every value, as a string, in column-name order. */
+  def imploder(df: DataFrame, fields: Option[Seq[String]], result: String): DataFrame =
+    df.withColumn(result, fields match {
+      case Some(fs) =>
+        val typed = fs.map { f =>
+          df.schema(f).dataType match {
+            case ArrayType(et, _) => (col(f), et)
+            case dt               => (array(col(f)), dt)
+          }
+        }
+        concat((if (typed.map(_._2).distinct.sizeIs == 1) typed.map(_._1)
+                else typed.map(_._1.cast(ArrayType(StringType)))): _*)
+      case None => array(df.columns.sorted.map(col(_).cast(StringType)).toSeq: _*)
+    })
 
-  /** KeyImploderProcessor (BaseProcessors.scala:785): collapse group: one row
-    * whose field is the list of that field across rows, in explicit order. */
-  def keyImploder(df: DataFrame, groupKeys: Seq[String], field: String, orderField: String,
-                  result: String): DataFrame =
-    df.groupBy(groupKeys.map(col): _*)
-      .agg(transform(array_sort(collect_list(struct(col(orderField).as("o"), col(field).as("v")))),
-        x => x.getField("v")).as(result))
+  /** KeyImploderProcessor (BaseProcessors.scala:785): collapse each group
+    * (no keys: the whole frame, the reference's packet) to one row; each
+    * listed field becomes the list of its values in arrival order, or in
+    * `orderField` order. `merge` keeps the first row's other fields. */
+  def keyImploder(df: DataFrame, groupKeys: Seq[String], fields: Seq[String],
+                  orderField: Option[String] = None, merge: Boolean = false): DataFrame = {
+    val ord = orderField.getOrElse(uniq("__ord"))
+    val dense = if (orderField.isEmpty) indexByLayout(df, ord) else df
+    val listAggs = fields.map(f =>
+      transform(array_sort(collect_list(struct(col(ord).as("o"), col(f).as("v")))),
+        x => x.getField("v")).as(f))
+    val keepAggs =
+      if (merge) df.columns.toSeq.filterNot(c => fields.contains(c) || groupKeys.contains(c))
+        .map(f => min_by(col(f), col(ord)).as(f))
+      else Nil
+    val aggs = keepAggs ++ listAggs
+    dense.groupBy(groupKeys.map(col): _*).agg(aggs.head, aggs.tail: _*)
+  }
 
   /** DatumMergeProcessor (app/tuktu/processors/DatumMergeProcessor.scala:14):
     * fold all rows of a group into one — last non-null value per column in
@@ -173,25 +238,24 @@ object Ops {
   def datumToField(df: DataFrame, result: String): DataFrame =
     df.select(struct(df.columns.map(col): _*).as(result))
 
-  /** FlattenerProcessor (BaseProcessors.scala:844): recursively flatten
-    * nested structs into `parent<sep>child` columns. */
-  def flatten(df: DataFrame, sep: String = "."): DataFrame = {
-    def cols(prefix: String, schema: StructType, path: String): Seq[Column] =
-      schema.fields.flatMap { f =>
-        val p = if (path.isEmpty) s"`${f.name}`" else s"$path.`${f.name}`"
-        val n = if (prefix.isEmpty) f.name else s"$prefix$sep${f.name}"
-        f.dataType match {
-          case s: StructType => cols(n, s, p)
-          case _             => Seq(col(p).alias(n))
-        }
-      }
-    df.select(cols("", df.schema, ""): _*)
+  /** FlattenerProcessor (BaseProcessors.scala:844): hoist each listed
+    * struct field's nested entries, recursively, to top-level
+    * `field<sep>sub<sep>…` columns; other columns stay. */
+  def flatten(df: DataFrame, fields: Seq[String], sep: String): DataFrame = {
+    def walk(path: Column, name: String, dt: DataType): Seq[Column] = dt match {
+      case s: StructType =>
+        s.fields.toSeq.flatMap(f => walk(path.getField(f.name), name + sep + f.name, f.dataType))
+      case _ => Seq(path.alias(name))
+    }
+    df.select(df.columns.toSeq.filterNot(fields.contains).map(n => colPath(Seq(n))) ++
+      fields.flatMap(f => walk(colPath(Seq(f)), f, df.schema(f).dataType)): _*)
   }
 
-  /** MapFlattenerProcessor (BaseProcessors.scala:1134): splice struct field's
-    * entries to top level. */
+  /** MapFlattenerProcessor (BaseProcessors.scala:1134): splice a struct
+    * field's entries to the top level, KEEPING the field (the reference's
+    * datum ++ map only adds). */
   def mapFlattener(df: DataFrame, field: String): DataFrame =
-    df.select(col("*"), col(s"$field.*")).drop(field)
+    df.select(col("*"), col(s"`$field`.*"))
 
   /** ListMapFlattenerProcessor (BaseProcessors.scala:1030): from
     * array-of-structs, project inner field into array. */
@@ -199,7 +263,8 @@ object Ops {
                        result: String): DataFrame =
     df.withColumn(result, transform(col(listField), x => x.getField(innerField)))
 
-  /** SequenceExploderProcessor (BaseProcessors.scala:900). */
+  /** SequenceExploderProcessor (BaseProcessors.scala:900): one row per
+    * element under `result` (the reference explodes in place: result = field). */
   def sequenceExplode(df: DataFrame, field: String, result: String): DataFrame =
     df.withColumn(result, explode(col(field)))
 
@@ -216,42 +281,61 @@ object Ops {
   def sequenceLength(df: DataFrame, field: String, result: String): DataFrame =
     df.withColumn(result, size(col(field)))
 
-  /** DistinctSequenceProcessor (BaseProcessors.scala:966). */
-  def distinctSequence(df: DataFrame, field: String, result: String): DataFrame =
-    df.withColumn(result, array_distinct(col(field)))
-
   /** GetListElementProcessor (BaseProcessors.scala:1291) — 0-based in ref;
     * element_at is 1-based. */
   def getListElement(df: DataFrame, field: String, index: Int, result: String): DataFrame =
     df.withColumn(result, element_at(col(field), index + 1))
 
-  /** HeadOfListProcessor (BaseProcessors.scala:92). */
-  def headOfList(df: DataFrame, field: String, result: String): DataFrame =
-    df.withColumn(result, element_at(col(field), 1))
+  /** HeadOfListProcessor (BaseProcessors.scala:92): the list's first
+    * element. On an empty list the reference REMOVES the result field (null
+    * here) unless `keepOriginal`, which keeps a pre-existing result value. */
+  def headOfList(df: DataFrame, field: String, result: String,
+                 keepOriginal: Boolean = false): DataFrame = {
+    val head = when(size(col(field)) > 0, element_at(col(field), 1))
+    df.withColumn(result,
+      if (keepOriginal && df.columns.contains(result)) coalesce(head, col(result)) else head)
+  }
 
-  /** ReplaceProcessor (BaseProcessors.scala:213): chained regex replaces. */
-  def replace(df: DataFrame, field: String, replacements: Seq[(String, String)]): DataFrame =
-    df.withColumn(field, replacements.foldLeft(col(field)) {
+  /** ReplaceProcessor (BaseProcessors.scala:213): chained regex replaces of
+    * `field`, written to `result`. */
+  def replace(df: DataFrame, field: String, replacements: Seq[(String, String)],
+              result: String): DataFrame =
+    df.withColumn(result, replacements.foldLeft(col(field)) {
       case (c, (from, to)) => regexp_replace(c, from, to)
     })
 
-  /** StringSplitterProcessor (BaseProcessors.scala:1004). */
-  def stringSplit(df: DataFrame, field: String, sep: String, result: String): DataFrame =
-    df.withColumn(result, split(col(field), java.util.regex.Pattern.quote(sep)))
+  /** StringSplitterProcessor (BaseProcessors.scala:1004): split on a REGEX
+    * separator (String.split), dropping empty parts when `removeEmpty`. */
+  def stringSplit(df: DataFrame, field: String, sepRegex: String, removeEmpty: Boolean,
+                  result: String): DataFrame = {
+    val parts = split(col(field), sepRegex)
+    df.withColumn(result,
+      if (removeEmpty) org.apache.spark.sql.functions.filter(parts, _ =!= "") else parts)
+  }
 
-  /** StringImploderProcessor (BaseProcessors.scala:668). */
-  def stringImplode(df: DataFrame, field: String, sep: String, result: String): DataFrame =
-    df.withColumn(result, array_join(col(field), sep))
+  /** StringImploderProcessor (BaseProcessors.scala:668): join the list at
+    * a dot path with `sep`. */
+  def stringImplode(df: DataFrame, path: Seq[String], sep: String, result: String): DataFrame =
+    df.withColumn(result, array_join(colPath(path), sep))
 
-  /** TupleListStringImploder / JsObjectImploderProcessor
-    * (BaseProcessors.scala:701, 807): render array<struct> to a joined
-    * string of "key<kvSep>value" entries. */
-  def tupleListImplode(df: DataFrame, field: String, keyField: String, valField: String,
-                       kvSep: String, entrySep: String, result: String): DataFrame =
-    df.withColumn(result, array_join(
-      transform(col(field), x =>
-        concat(x.getField(keyField).cast(StringType), lit(kvSep),
-          x.getField(valField).cast(StringType))), entrySep))
+  /** TupleListStringImploder (BaseProcessors.scala:701): each tuple
+    * (struct) in the list at a dot path renders as its fields joined by
+    * `sep`; the list of rendered strings goes to `result`. An explicit
+    * interleave with null fields as "", not concat_ws: concat_ws drops null
+    * fields AND their separators, corrupting the rendered arity. */
+  def tupleListImplode(df: DataFrame, path: Seq[String], sep: String,
+                       result: String): DataFrame = {
+    val elemType = df.select(colPath(path)).schema.head.dataType match {
+      case ArrayType(s: StructType, _) => s
+      case other => throw new IllegalArgumentException(
+        s"TupleListStringImploder needs array<struct>, got $other")
+    }
+    df.withColumn(result, transform(colPath(path), x => {
+      val parts = elemType.fieldNames.toSeq
+        .map(fn => coalesce(x.getField(fn).cast(StringType), lit("")))
+      concat(parts.head +: parts.tail.flatMap(f => Seq(lit(sep), f)): _*)
+    }))
+  }
 
   /** ColorHexToRGBProcessor (modules/web/.../ColorHexToRGB-like enrichment):
     * '#RRGGBB' → (r, g, b) ints, pure expressions. */
@@ -276,12 +360,23 @@ object Ops {
       .drop("__r")
   }
 
-  /** ConvertToNumber / ConvertToBigDecimal / ConvertAnyToString / ConvertToDate
-    * (app/tuktu/processors/ConvertTo*.scala). */
-  def cast(df: DataFrame, field: String, to: DataType, result: String): DataFrame =
-    df.withColumn(result, col(field).cast(to))
-  def toDate(df: DataFrame, field: String, fmt: String, result: String): DataFrame =
-    df.withColumn(result, to_timestamp(col(field), fmt))
+  /** ConvertToDate (app/tuktu/processors/ConvertToDate.scala:19): parse a
+    * string field to a timestamp with `format`. The reference default
+    * ("EEE MMM dd HH:mm:ss zzz yyyy", java.util.Date toString) uses pattern
+    * letters Spark's parser rejects, so without a format the parse goes
+    * through a SimpleDateFormat UDF instead of failing analysis. */
+  def toDate(df: DataFrame, field: String, format: Option[String], result: String): DataFrame =
+    df.withColumn(result, format match {
+      case Some(fmt) => to_timestamp(col(field), fmt)
+      case None =>
+        val parse = udf { (s: String) =>
+          if (s == null) null
+          else try new java.sql.Timestamp(new java.text.SimpleDateFormat(
+            "EEE MMM dd HH:mm:ss zzz yyyy", java.util.Locale.US).parse(s).getTime)
+          catch { case _: java.text.ParseException => null }
+        }
+        parse(col(field))
+    })
 
   /** JSONParseProcessor (app/tuktu/processors/json/JSONParseProcessor.scala:15):
     * parse a JSON-string field. Schema-on-read: caller supplies the schema DDL,
@@ -348,7 +443,7 @@ object Ops {
     * recursively. Schemaful translation: a null field models an absent key,
     * so leaves resolve as coalesce(b, a) and struct-struct pairs recurse.
     * Pure expressions — the whole merge stays in codegen. */
-  def mergeStructs(a: Column, b: Column, aType: StructType, bType: StructType): Column = {
+  private def mergeStructs(a: Column, b: Column, aType: StructType, bType: StructType): Column = {
     val bFields = bType.fields.map(f => f.name -> f).toMap
     val merged = aType.fields.map { af =>
       bFields.get(af.name) match {
@@ -372,10 +467,6 @@ object Ops {
     df.withColumn(result, mergeStructs(col(fieldA), col(fieldB), at, bt))
   }
 
-  /** Flat map merge (utils.scala mergeMap, single level): b wins per key. */
-  def mapMerge(a: Column, b: Column): Column =
-    map_zip_with(a, b, (_, va, vb) => coalesce(vb, va))
-
   /** ArithmeticProcessor (app/tuktu/processors/arithmetics/ArithmeticProcessor.scala:16). */
   def arithmetic(df: DataFrame, exprStr: String, result: String, round: Option[Int] = None): DataFrame = {
     val c = Expr.arithmetic(df, exprStr)
@@ -389,8 +480,8 @@ object Ops {
     df.withColumn(result, coalesce(Expr.predicate(df, predStr), lit(false)))
 
   /** MaxFieldByValueProcessor (app/tuktu/processors/arithmetics/MaxByFieldProcessor.scala:10). */
-  def maxOfFields(df: DataFrame, a: String, b: String, result: String): DataFrame =
-    df.withColumn(result, greatest(col(a), col(b)))
+  def maxOfFields(df: DataFrame, fields: Seq[String], result: String): DataFrame =
+    df.withColumn(result, greatest(fields.map(col): _*))
 
   // ------------------------------------------------- §2.4 filters
 
@@ -398,34 +489,43 @@ object Ops {
     * grammar compiled to a pushdown-friendly Column. */
   def filter(df: DataFrame, predStr: String): DataFrame = df.filter(Expr.predicate(df, predStr))
 
+  /** Keep a whole packet iff at least `minCount` rows satisfy `cond` —
+    * the reference's `batch`/`batch_min_count` filter mode
+    * (BaseProcessors.scala:415-425). Broadcast count gate, no driver action. */
+  private[engine] def batchGate(df: DataFrame, cond: Column, minCount: Long): DataFrame = {
+    val g = uniq("__gate")
+    df.crossJoin(broadcast(df.filter(cond).select(count(lit(1)).as(g))))
+      .filter(col(g) >= minCount).drop(g)
+  }
+
   /** PacketRegexFilterProcessor (BaseProcessors.scala:501-569): and/or/negate
-    * nested regex tree. */
+    * nested regex tree; an empty Or is false, an empty And true. With
+    * `batchMinCount` the tree gates the whole packet ([[batchGate]]). */
   sealed trait RegexNode
   final case class RegexLeaf(field: String, pattern: String) extends RegexNode
   final case class RegexAnd(children: Seq[RegexNode]) extends RegexNode
   final case class RegexOr(children: Seq[RegexNode]) extends RegexNode
   final case class RegexNot(child: RegexNode) extends RegexNode
-  def regexFilter(df: DataFrame, tree: RegexNode): DataFrame = {
+  def regexFilter(df: DataFrame, tree: RegexNode, batchMinCount: Option[Long] = None): DataFrame = {
     def c(n: RegexNode): Column = n match {
       case RegexLeaf(f, p)  => col(f).rlike(p)
-      case RegexAnd(ch)     => ch.map(c).reduce(_ && _)
-      case RegexOr(ch)      => ch.map(c).reduce(_ || _)
+      case RegexAnd(ch)     => ch.map(c).reduceOption(_ && _).getOrElse(lit(true))
+      case RegexOr(ch)      => ch.map(c).reduceOption(_ || _).getOrElse(lit(false))
       case RegexNot(child)  => !c(child)
     }
-    df.filter(c(tree))
+    batchMinCount.fold(df.filter(c(tree)))(batchGate(df, c(tree), _))
   }
 
   /** AbsentFieldsFilterProcessor (BaseProcessors.scala:1201). */
   def absentFieldsFilter(df: DataFrame, required: Seq[String]): DataFrame =
     df.filter(required.map(col(_).isNotNull).reduce(_ && _))
 
-  /** ContainsAllFilterProcessor (BaseProcessors.scala:1102): keep row iff
-    * array-of-structs field covers all needle values on `innerField`. */
+  /** ContainsAllFilterProcessor (BaseProcessors.scala:1102): keep a row iff
+    * every value of the `needles` array appears at `innerField` in the
+    * array-of-structs `listField`. */
   def containsAllFilter(df: DataFrame, listField: String, innerField: String,
-                        needles: Seq[Any]): DataFrame =
-    df.filter(size(array_except(
-      array(needles.map(lit): _*),
-      transform(col(listField), x => x.getField(innerField)))) === 0)
+                        needles: Column): DataFrame =
+    df.filter(forall(needles, v => exists(col(listField), m => m.getField(innerField) === v)))
 
   // ------------------------------------------------- §2.5 aggregation / stats
 
@@ -660,13 +760,14 @@ object Ops {
   /** TakeProcessor (sample/TakeProcessor.scala:13). */
   def take(df: DataFrame, n: Int): DataFrame = df.limit(n)
 
-  /** DropProcessor (sample/DropProcessor.scala:13): drop first N in explicit
-    * order. Routed through the scalable global index — a bare
-    * `row_number().over(Window.orderBy(...))` would funnel every row through
-    * one task. */
-  def drop(df: DataFrame, n: Int, orderBy: Seq[Column]): DataFrame =
-    withGlobalIndex(df, orderBy, "__idx")
-      .filter(col("__idx") >= n).drop("__idx")
+  /** DropProcessor (sample/DropProcessor.scala:13): drop the first N in
+    * arrival order, or in `orderBy` order. Routed through the scalable row
+    * index — a bare `row_number().over(Window.orderBy(...))` would funnel
+    * every row through one task. */
+  def drop(df: DataFrame, n: Int, orderBy: Seq[Column]): DataFrame = {
+    val idx = uniq("__idx")
+    rowIndex(df, orderBy, idx).filter(col(idx) >= n).drop(idx)
+  }
 
   /** DeduplicationProcessor (bucket/DeduplicationProcessor.scala:13): first-seen
     * dedup by key in explicit order — deterministic (row_number=1), unlike a
@@ -677,52 +778,100 @@ object Ops {
       .filter(col("__rn") === 1).drop("__rn")
 
   /** StratifiedSamplingProcessor (sample/StratifiedSamplingProcessor.scala:14):
-    * equal-size (min class count) per-class sample, deterministic order. */
-  def stratifiedSample(df: DataFrame, classField: String, orderBy: Seq[Column]): DataFrame = {
-    val minCount = df.groupBy(col(classField)).count().agg(min("count")).first().getLong(0)
-    df.withColumn("__rn",
-        row_number().over(Window.partitionBy(col(classField)).orderBy(orderBy: _*)))
-      .filter(col("__rn") <= minCount).drop("__rn")
+    * per class, the first min-class-count rows (capped by `sampleCount`) in
+    * `orderBy` order, or else in arrival order — or, with `random`, in the
+    * order of a deterministic hash of the arrival index (reproducible where
+    * the reference's Random.shuffle is not). An empty frame samples no rows. */
+  def stratifiedSample(df: DataFrame, classField: String, orderBy: Seq[Column],
+                       random: Boolean = false, sampleCount: Option[Long] = None): DataFrame = {
+    val (ord, rn) = (uniq("__ord"), uniq("__rn"))
+    // arrival order: 2 consumers of the index, the min-count job and the
+    // final window
+    val base = if (orderBy.nonEmpty) df else materialize(indexByLayout(df, ord))
+    val order =
+      if (orderBy.nonEmpty) orderBy
+      else Seq(if (random) md5(col(ord).cast(StringType)).asc else col(ord).asc)
+    val minRow = base.groupBy(col(classField)).count().agg(min("count")).first()
+    if (minRow.isNullAt(0)) df.limit(0)
+    else {
+      val cap = sampleCount.fold(minRow.getLong(0))(math.min(minRow.getLong(0), _))
+      base.withColumn(rn, row_number().over(Window.partitionBy(col(classField)).orderBy(order: _*)))
+        .filter(col(rn) <= cap).drop(rn, ord)
+    }
   }
 
   // ------------------------------------------------- §2.8 time / windows
 
   /** TimestampNormalizerProcessor (time/TimestampNormalizerProcessor.scala:17):
-    * floor timestamp to unit grid — the tumbling event-time window assigner. */
-  def timestampNormalize(df: DataFrame, field: String, unit: String, result: String): DataFrame =
-    df.withColumn(result, date_trunc(unit, col(field)))
+    * floor a timestamp (parsed with `format` if given) to n-unit buckets on
+    * the reference's millis→years grid — the tumbling event-time window
+    * assigner. `time` holds the reference's {unit: n} config: the first of
+    * years, months, weeks, days, hours, minutes, millis with n > 0 wins,
+    * else n seconds (default 1). Sub-month units floor on the
+    * UTC epoch-millis grid with weeks ISO-Monday-aligned (epoch day 0 is a
+    * Thursday — Joda weeks start Monday); months and years bucket on
+    * calendar months via an integer month index. */
+  def timestampNormalize(df: DataFrame, field: String, format: Option[String],
+                         time: Map[String, Int], result: String): DataFrame = {
+    val ts = format.fold(col(field).cast(TimestampType))(to_timestamp(col(field).cast(StringType), _))
+    def n(k: String): Int = time.getOrElse(k, 0)
+    def epochFloor(ms: Long): Column =
+      timestamp_millis((floor(unix_millis(ts) / ms) * ms).cast(LongType))
+    val monthIdx = year(ts) * 12 + month(ts) - 1 // months since year 0
+    def monthFloor(nMonths: Int): Column = {
+      val b = floor(monthIdx / nMonths) * nMonths
+      to_timestamp(concat((b / 12).cast(IntegerType), lit("-"),
+        lpad((pmod(b, lit(12)) + 1).cast(StringType), 2, "0"), lit("-01")))
+    }
+    df.withColumn(result,
+      if (n("years") > 0) monthFloor(12 * n("years"))
+      else if (n("months") > 0) monthFloor(n("months"))
+      else if (n("weeks") > 0) // shift so buckets land on Monday
+        timestamp_millis(((floor((unix_millis(ts) - 345600000L) /
+          (604800000L * n("weeks"))) * (604800000L * n("weeks"))) + 345600000L).cast(LongType))
+      else if (n("days") > 0) epochFloor(86400000L * n("days"))
+      else if (n("hours") > 0) epochFloor(3600000L * n("hours"))
+      else if (n("minutes") > 0) epochFloor(60000L * n("minutes"))
+      else if (n("millis") > 0) epochFloor(n("millis").toLong)
+      else epochFloor(1000L * math.max(1, n("seconds"))))
+  }
 
-  /** TimestampAdderProcessor (time/TimestampAdderProcessor.scala:13). */
-  def timestampAdder(df: DataFrame, result: String): DataFrame =
-    df.withColumn(result, current_timestamp())
-
-  /** TimestampPeriodAdderProcessor (time/TimestampPeriodAdderProcessor.scala:18). */
-  def periodAdd(df: DataFrame, field: String, result: String,
+  /** TimestampPeriodAdderProcessor (time/TimestampPeriodAdderProcessor.scala:18):
+    * add a static period, typed like the reference: a string field parses
+    * and formats back with `format`, an integer field is epoch millis, and
+    * anything else is a timestamp. */
+  def periodAdd(df: DataFrame, field: String, result: String, format: Option[String] = None,
                 years: Int = 0, months: Int = 0, weeks: Int = 0, days: Int = 0,
-                hours: Int = 0, minutes: Int = 0, seconds: Int = 0): DataFrame =
-    df.withColumn(result, col(field) + make_interval(
-      lit(years), lit(months), lit(weeks), lit(days), lit(hours), lit(minutes), lit(seconds)))
+                hours: Int = 0, minutes: Int = 0, seconds: Int = 0): DataFrame = {
+    val dt = df.schema(field).dataType
+    def fmt = format.getOrElse(throw new IllegalArgumentException(
+      "TimestampPeriodAdder: string time_field needs format"))
+    val base = dt match {
+      case StringType => to_timestamp(col(field), fmt)
+      case IntegerType | LongType => timestamp_millis(col(field).cast(LongType))
+      case _ => col(field)
+    }
+    val added = base + make_interval(
+      lit(years), lit(months), lit(weeks), lit(days), lit(hours), lit(minutes), lit(seconds))
+    df.withColumn(result, dt match {
+      case StringType => date_format(added, fmt)
+      case IntegerType | LongType => unix_millis(added)
+      case _ => added
+    })
+  }
 
-  /** DateToMillisProcessor (time/DateToMillisProcessor.scala:15). */
+  /** DateToMillisProcessor (time/DateToMillisProcessor.scala:16): unix_millis
+    * keeps sub-second precision like the reference's getMillis. */
   def dateToMillis(df: DataFrame, field: String, result: String): DataFrame =
-    df.withColumn(result, unix_millis(col(field)))
-
-  /** DurationProcessor (time/DurationProcessor.scala:15): difference of two
-    * datetimes in `unit`. */
-  def duration(df: DataFrame, a: String, b: String, unit: String, result: String): DataFrame =
-    df.withColumn(result, expr(s"timestampdiff($unit, $a, $b)"))
-
-  /** GroupByProcessor + bucket op (BufferProcessors.scala:58): the packet
-    * reshaping collapses into a plain groupBy in Spark. */
-  def groupBy(df: DataFrame, keys: Seq[String]): org.apache.spark.sql.RelationalGroupedDataset =
-    df.groupBy(keys.map(col): _*)
+    df.withColumn(result, unix_millis(col(field).cast(TimestampType)))
 
   /** SizeBufferProcessor (BufferProcessors.scala:94): N-row batches become an
-    * explicit batch-id column derived from a total order (scalable index). */
-  def sizeBuffer(df: DataFrame, n: Int, orderBy: Seq[Column], result: String = "batch_id"): DataFrame =
-    withGlobalIndex(df, orderBy, "__idx")
-      .withColumn(result, floor(col("__idx") / n))
-      .drop("__idx")
+    * explicit batch-id column over arrival order, or `orderBy` order
+    * (scalable row index); downstream groupBy(result) = packets. */
+  def sizeBuffer(df: DataFrame, n: Int, orderBy: Seq[Column], result: String): DataFrame = {
+    val idx = uniq("__idx")
+    rowIndex(df, orderBy, idx).withColumn(result, floor(col(idx) / n)).drop(idx)
+  }
 
   /** CountEOFProcessor (BaseProcessors.scala:74): pass-through that reports
     * how many rows flowed past at stream end. Spark-native: an Observation

@@ -31,6 +31,7 @@ import scala.jdk.CollectionConverters._
  *    DataFrame schema is static by design.
  */
 object TuktuCompat {
+  import Ops.{colPath, uniq}
 
   /** JsonFetcher contract (BaseProcessors.scala:247-252): a single-element
     * path containing dots is itself a dotted path. */
@@ -38,8 +39,6 @@ object TuktuCompat {
     val p = f.req("path").elements().asScala.map(_.asText).toSeq
     if (p.size == 1) p.head.split('.').toSeq else p
   }
-  private def uniq(prefix: String): String =
-    prefix + "_" + java.util.UUID.randomUUID.toString.take(8)
 
   /** Sub-flow config repository for meta-processors that reference pipeline
     * configs by NAME (ref modules/api/app/tuktu/api/utils.scala:605 — the
@@ -85,18 +84,17 @@ object TuktuCompat {
       (c => Seq("then_pipeline", "else_pipeline").map(branchPipeline(c, _))),
     "tuktu.processors.cache.CachingProcessor" -> (c => Seq(c.arr("processors"))))
 
-  /** Navigate a (possibly nested) path from the row root. */
-  private def colPath(path: Seq[String]): Column =
-    path.tail.foldLeft(col(s"`${path.head}`"))(_.getField(_))
+  /** The `fields:[{path, result}]` pairs of the field processors. */
+  private def pathResults(c: Flow.Node): Seq[(Seq[String], String)] =
+    c.objs("fields").map(f => (pathList(f), f.str("result")))
 
-  /** Keep a whole packet iff at least `minCount` rows satisfy `cond` —
-    * the reference's `batch`/`batch_min_count` filter mode
-    * (BaseProcessors.scala:415-425). Broadcast count gate, no driver action. */
-  private def batchGate(df: DataFrame, cond: Column, minCount: Long): DataFrame = {
-    val g = uniq("__gate")
-    df.crossJoin(broadcast(df.filter(cond).select(count(lit(1)).as(g))))
-      .filter(col(g) >= minCount).drop(g)
-  }
+  /** The `default`s of those fields, keyed by result. */
+  private def fieldDefaults(c: Flow.Node): Map[String, String] =
+    c.objs("fields").flatMap(f => f.strOpt("default").map(f.str("result") -> _)).toMap
+
+  /** The packet filters' `batch`/`batch_min_count` mode ([[Ops.batchGate]]). */
+  private def batchMinCount(c: Flow.Node): Option[Long] =
+    Option.when(c.bool("batch"))(c.opt("batch_min_count").map(_.asLong).getOrElse(1L))
 
   // ---------------------------------------------------------------- generators
   private[engine] val generators: Map[String, Flow.Generator] = Map(
@@ -186,44 +184,17 @@ object TuktuCompat {
   // ---------------------------------------------------------------- processors
   private[engine] val processors: Map[String, Flow.Processor] = Map(
     // ref: BaseProcessors.scala:120 — {fields:[{path:[...], result, default?}]}
-    "tuktu.processors.FieldFilterProcessor" -> { (df, c) =>
-      df.select(c.objs("fields").map { f =>
-        val p = pathList(f)
-        val out = f.str("result")
-        f.opt("default") match {
-          case Some(d) if df.columns.contains(p.head) =>
-            coalesce(colPath(p), lit(d.asText)).alias(out)
-          case Some(d) => lit(d.asText).alias(out) // path absent entirely
-          case None    => colPath(p).alias(out)
-        }
-      }: _*)
-    },
+    "tuktu.processors.FieldFilterProcessor" -> ((df, c) =>
+      Ops.fieldFilter(df, pathResults(c), fieldDefaults(c))),
 
     // ref: BaseProcessors.scala:144 — {fields:["k1","k2"]}
-    "tuktu.processors.FieldRemoveProcessor" -> ((df, c) => df.drop(c.strs("fields"): _*)),
+    "tuktu.processors.FieldRemoveProcessor" -> ((df, c) => Ops.fieldRemove(df, c.strs("fields"))),
 
-    // ref: BaseProcessors.scala:160 — {fields:[{path:[...], result}]}.
-    // One select with every copy read from the ORIGINAL row: sequential
-    // withColumn would let a later copy read an earlier copy's overwrite.
-    "tuktu.processors.FieldCopyProcessor" -> { (df, c) =>
-      val copies = c.objs("fields").map(f => (pathList(f), f.str("result")))
-      val newNames = copies.map(_._2).toSet
-      df.select(df.columns.filterNot(newNames.contains).map(col).toSeq ++
-        copies.map { case (p, r) => colPath(p).alias(r) }: _*)
-    },
+    // ref: BaseProcessors.scala:160 — {fields:[{path:[...], result}]}
+    "tuktu.processors.FieldCopyProcessor" -> ((df, c) => Ops.fieldCopy(df, pathResults(c))),
 
-    // ref: BaseProcessors.scala:292 — copy then remove the path heads,
-    // keeping results that recycle a source name; all sources read from
-    // the original row (same single-select rationale as FieldCopy)
-    "tuktu.processors.FieldRenameProcessor" -> { (df, c) =>
-      val present = c.objs("fields").filter(f => df.columns.contains(pathList(f).head))
-      val renames = present.map(f => (pathList(f), f.str("result")))
-      val results = renames.map(_._2).toSet
-      val cleanUp = present.map(pathList(_).head).toSet -- results
-      df.select(
-        df.columns.filterNot(n => results.contains(n) || cleanUp.contains(n)).map(col).toSeq ++
-          renames.map { case (p, r) => colPath(p).alias(r) }: _*)
-    },
+    // ref: BaseProcessors.scala:292 — {fields:[{path:[...], result}]}
+    "tuktu.processors.FieldRenameProcessor" -> ((df, c) => Ops.fieldRename(df, pathResults(c))),
 
     // ref: BaseProcessors.scala:234 — {fields:[{path, result, default?}]};
     // fetches (possibly nested) values as top-level citizens
@@ -240,31 +211,20 @@ object TuktuCompat {
       Ops.evaluateNested(df, c.str("expression"), c.result)),
 
     // ref: BaseProcessors.scala:574 — {value, is_numeric?} + node result
-    "tuktu.processors.FieldConstantAdderProcessor" -> { (df, c) =>
-      val v = Expr.interpolate(c.strOpt("value").getOrElse(""))
-      df.withColumn(c.result,
-        if (c.bool("is_numeric")) v.cast(LongType) else v)
-    },
+    "tuktu.processors.FieldConstantAdderProcessor" -> ((df, c) =>
+      Ops.constantAdder(df, c.result, c.strOpt("value").getOrElse(""), c.bool("is_numeric"))),
 
     // ref: BaseProcessors.scala:213 — {field, sources:[regex], targets:[str]};
     // writes the replaced value to the node's result field (per test corpus)
-    "tuktu.processors.ReplaceProcessor" -> { (df, c) =>
-      val field = c.str("field")
-      val pairs = c.strs("sources").zip(c.strs("targets"))
-      df.withColumn(c.result,
-        pairs.foldLeft(col(field)) { case (e, (s, t)) => regexp_replace(e, s, t) })
-    },
+    "tuktu.processors.ReplaceProcessor" -> ((df, c) =>
+      Ops.replace(df, c.str("field"), c.strs("sources").zip(c.strs("targets")), c.result)),
 
     // ref: BaseProcessors.scala:184 — {start_at?, step_size?, per_block?};
-    // numbering in input order (= current layout order). per_block counts
-    // DataPackets: the batch frame is ONE packet, so every row gets start_at.
-    "tuktu.processors.RunningCountProcessor" -> { (df, c) =>
-      val startAt = c.opt("start_at").map(_.asLong).getOrElse(0L)
-      val step = c.opt("step_size").map(_.asLong).getOrElse(1L)
-      if (c.bool("per_block")) df.withColumn(c.result, lit(startAt))
-      else Ops.indexByLayout(df, c.result)
-        .withColumn(c.result, col(c.result) * step + startAt)
-    },
+    // numbering in input order (= current layout order)
+    "tuktu.processors.RunningCountProcessor" -> ((df, c) =>
+      Ops.runningCount(df, Nil, startAt = c.opt("start_at").map(_.asLong).getOrElse(0L),
+        stepSize = c.opt("step_size").map(_.asLong).getOrElse(1L),
+        perBlock = c.bool("per_block"), result = c.result)),
 
     // ref: BaseProcessors.scala:374-497 — the CURRENT reference schema is
     // FLAT: {type: simple|negate|groovy, expression, batch?,
@@ -290,31 +250,25 @@ object TuktuCompat {
       val cond =
         if (c.opt("expression").isDefined) leaf(c.strOpt("type"), c.req("expression"))
         else c.objs("expressions").map(build).reduceOption(_ || _).getOrElse(lit(false))
-      if (c.bool("batch"))
-        batchGate(df, cond, c.opt("batch_min_count").map(_.asLong).getOrElse(1L))
-      else df.filter(cond)
+      batchMinCount(c).fold(df.filter(cond))(Ops.batchGate(df, cond, _))
     },
 
     // ref: BaseProcessors.scala:501 — {expressions:[{type, and_or, expression, field}],
     // batch?, batch_min_count?}. Top level is expressions.exists(...): a pure
     // OR over the entries; and_or only combines a NESTED expression array.
     "tuktu.processors.PacketRegexFilterProcessor" -> { (df, c) =>
-      def build(e: Flow.Node): Column =
+      def build(e: Flow.Node): Ops.RegexNode =
         if (e.req("expression").isArray) {
           // ref BaseProcessors.scala:501 ignores `type:negate` on nested
           // expression arrays — negate applies to string leaves only.
           val children = e.objs("expression").map(build)
-          if (e.strOpt("and_or").contains("or")) children.reduceOption(_ || _).getOrElse(lit(false))
-          else children.reduceOption(_ && _).getOrElse(lit(true))
+          if (e.strOpt("and_or").contains("or")) Ops.RegexOr(children) else Ops.RegexAnd(children)
         } else {
-          val leaf = col(e.str("field")).rlike(e.str("expression"))
-          if (e.strOpt("type").contains("negate")) !leaf else leaf
+          val leaf = Ops.RegexLeaf(e.str("field"), e.str("expression"))
+          if (e.strOpt("type").contains("negate")) Ops.RegexNot(leaf) else leaf
         }
       // exists over an empty expressions list is false: drop everything
-      val cond = c.objs("expressions").map(build).reduceOption(_ || _).getOrElse(lit(false))
-      if (c.bool("batch"))
-        batchGate(df, cond, c.opt("batch_min_count").map(_.asLong).getOrElse(1L))
-      else df.filter(cond)
+      Ops.regexFilter(df, Ops.RegexOr(c.objs("expressions").map(build)), batchMinCount(c))
     },
 
     // ref: BaseProcessors.scala:641 — pass-through (console print is a
@@ -324,67 +278,25 @@ object TuktuCompat {
     // ref: BaseProcessors.scala:92 — {field, keep_original_field?}: on an
     // empty list the reference REMOVES the result field (null here) unless
     // keep_original_field, which preserves a pre-existing result value
-    "tuktu.processors.HeadOfListProcessor" -> { (df, c) =>
-      val f = col(c.str("field"))
-      val head = when(size(f) > 0, element_at(f, 1))
-      val out =
-        if (c.bool("keep_original_field") && df.columns.contains(c.result))
-          coalesce(head, col(c.result))
-        else head
-      df.withColumn(c.result, out)
-    },
+    "tuktu.processors.HeadOfListProcessor" -> ((df, c) =>
+      Ops.headOfList(df, c.str("field"), c.result, c.bool("keep_original_field"))),
 
     // ref: BaseProcessors.scala:668 — {fields:[{path, separator}]};
     // overwrites the path HEAD with the joined string
-    "tuktu.processors.StringImploderProcessor" -> { (df, c) =>
+    "tuktu.processors.StringImploderProcessor" -> ((df, c) =>
       c.objs("fields").foldLeft(df) { (d, f) =>
         val p = pathList(f)
-        d.withColumn(p.head, array_join(colPath(p), f.str("separator")))
-      }
-    },
+        Ops.stringImplode(d, p, f.str("separator"), p.head)
+      }),
 
-    // ref: BaseProcessors.scala:760 — {fields?}: concat listed fields'
-    // values (arrays splice, scalars wrap) into one list under result;
-    // without fields: all values in column-name order
-    "tuktu.processors.ImploderProcessor" -> { (df, c) =>
-      c.opt("fields") match {
-        case Some(_) =>
-          // element types must agree for concat; heterogeneous fields fall
-          // back to strings like the reference's untyped datum (and the
-          // no-fields branch below)
-          val typed = c.strs("fields").map { f =>
-            df.schema(f).dataType match {
-              case ArrayType(et, _) => (col(f), et)
-              case dt               => (array(col(f)), dt)
-            }
-          }
-          val parts =
-            if (typed.map(_._2).distinct.sizeIs == 1) typed.map(_._1)
-            else typed.map(_._1.cast(ArrayType(StringType)))
-          df.withColumn(c.result, concat(parts: _*))
-        case None =>
-          val cols = df.columns.sorted.map(col(_).cast(StringType))
-          df.withColumn(c.result, array(cols.toSeq: _*))
-      }
-    },
+    // ref: BaseProcessors.scala:760 — {fields?}
+    "tuktu.processors.ImploderProcessor" -> ((df, c) =>
+      Ops.imploder(df, c.opt("fields").map(_ => c.strs("fields")), c.result)),
 
-    // ref: BaseProcessors.scala:785 — {fields:[...], merge?}: collapse the
-    // WHOLE packet (frame) to one row; each listed field becomes the list
-    // of its values in arrival order; merge keeps the first row's other fields
-    "tuktu.processors.KeyImploderProcessor" -> { (df, c) =>
-      val fields = c.strs("fields")
-      val ord = uniq("__ord")
-      val dense = Ops.indexByLayout(df, ord)
-      val listAggs = fields.map(f =>
-        transform(array_sort(collect_list(struct(col(ord).as("o"), col(f).as("v")))),
-          x => x.getField("v")).as(f))
-      val keepAggs =
-        if (c.bool("merge"))
-          df.columns.filterNot(fields.contains).toSeq.map(f => min_by(col(f), col(ord)).as(f))
-        else Nil
-      val aggs = keepAggs ++ listAggs
-      dense.groupBy().agg(aggs.head, aggs.tail: _*)
-    },
+    // ref: BaseProcessors.scala:785 — {fields:[...], merge?}: the WHOLE
+    // packet (frame) is one group, in arrival order
+    "tuktu.processors.KeyImploderProcessor" -> ((df, c) =>
+      Ops.keyImploder(df, Nil, c.strs("fields"), merge = c.bool("merge"))),
 
     // ref: BaseProcessors.scala:807 — {fields:[{path, subpath, separator}]};
     // array-of-objects → subpath strings joined, overwriting the path head
@@ -399,36 +311,23 @@ object TuktuCompat {
       }
     },
 
-    // ref: BaseProcessors.scala:844 — {fields, separator}: hoist each named
-    // struct field's nested entries to `field<sep>sub<sep>...` columns
-    "tuktu.processors.FlattenerProcessor" -> { (df, c) =>
-      val sep = c.strOpt("separator").getOrElse(".")
-      val targets = c.strs("fields")
-      def hoist(field: String): Seq[Column] = {
-        def walk(path: Column, name: String, dt: DataType): Seq[Column] = dt match {
-          case s: StructType =>
-            s.fields.toSeq.flatMap(f => walk(path.getField(f.name), name + sep + f.name, f.dataType))
-          case _ => Seq(path.alias(name))
-        }
-        walk(col(s"`$field`"), field, df.schema(field).dataType)
-      }
-      df.select(df.columns.filterNot(targets.contains).map(col).toSeq ++
-        targets.flatMap(hoist): _*)
-    },
+    // ref: BaseProcessors.scala:844 — {fields, separator?}
+    "tuktu.processors.FlattenerProcessor" -> ((df, c) =>
+      Ops.flatten(df, c.strs("fields"), c.strOpt("separator").getOrElse("."))),
 
     // ref: BaseProcessors.scala:900 — {field}: explode in place
     "tuktu.processors.SequenceExploderProcessor" -> { (df, c) =>
       val f = c.str("field")
-      df.withColumn(f, explode(col(f)))
+      Ops.sequenceExplode(df, f, f)
     },
 
     // ref: BaseProcessors.scala:923 — {field}
     "tuktu.processors.SequenceLengthProcessor" -> ((df, c) =>
-      df.withColumn(c.result, size(col(c.str("field"))))),
+      Ops.sequenceLength(df, c.str("field"), c.result)),
 
     // ref: BaseProcessors.scala:946 — {field}
     "tuktu.processors.SequenceFlattenerProcessor" -> ((df, c) =>
-      df.withColumn(c.result, flatten(col(c.str("field"))))),
+      Ops.sequenceFlatten(df, c.str("field"), c.result)),
 
     // ref: BaseProcessors.scala:966 — {field}
     "tuktu.processors.DistinctSequenceProcessor" -> ((df, c) =>
@@ -447,41 +346,27 @@ object TuktuCompat {
 
     // ref: BaseProcessors.scala:1004 — {field, separator, remove_empty?};
     // separator is a REGEX (String.split)
-    "tuktu.processors.StringSplitterProcessor" -> { (df, c) =>
-      val parts = split(col(c.str("field")), c.str("separator"))
-      val cleaned =
-        if (c.opt("remove_empty").forall(_.asBoolean)) // default true
-          filter(parts, x => x =!= "")
-        else parts
-      df.withColumn(c.result, cleaned)
-    },
+    "tuktu.processors.StringSplitterProcessor" -> ((df, c) =>
+      Ops.stringSplit(df, c.str("field"), c.str("separator"),
+        removeEmpty = c.opt("remove_empty").forall(_.asBoolean), c.result)),
 
     // ref: BaseProcessors.scala:1030 — {list_field, map_field} → result list
     "tuktu.processors.ListMapFlattenerProcessor" -> ((df, c) =>
-      df.withColumn(c.result,
-        transform(col(c.str("list_field")), x => x.getField(c.str("map_field"))))),
+      Ops.listMapFlattener(df, c.str("list_field"), c.str("map_field"), c.result)),
 
     // ref: BaseProcessors.scala:1066 — {list_field, map_fields}: one
     // top-level list per inner field, original list kept
-    "tuktu.processors.MultiListMapFlattenerProcessor" -> { (df, c) =>
-      c.strs("map_fields").foldLeft(df) { (d, f) =>
-        d.withColumn(f, transform(col(c.str("list_field")), x => x.getField(f)))
-      }
-    },
+    "tuktu.processors.MultiListMapFlattenerProcessor" -> ((df, c) =>
+      c.strs("map_fields").foldLeft(df)((d, f) => Ops.listMapFlattener(d, c.str("list_field"), f, f))),
 
     // ref: BaseProcessors.scala:1102 — {field, contains_field, field_list}:
     // keep row iff every value in contains_field appears at `field` in the
     // list-of-maps under field_list
-    "tuktu.processors.ContainsAllFilterProcessor" -> { (df, c) =>
-      val inner = c.str("field")
-      df.filter(forall(col(c.str("contains_field")),
-        v => exists(col(c.str("field_list")), m => m.getField(inner) === v)))
-    },
+    "tuktu.processors.ContainsAllFilterProcessor" -> ((df, c) =>
+      Ops.containsAllFilter(df, c.str("field_list"), c.str("field"), col(c.str("contains_field")))),
 
-    // ref: BaseProcessors.scala:1134 — {field}: hoist entries, KEEP original
-    // (the reference's datum ++ map only adds)
-    "tuktu.processors.MapFlattenerProcessor" -> ((df, c) =>
-      df.select(col("*"), col(s"`${c.str("field")}`.*"))),
+    // ref: BaseProcessors.scala:1134 — {field}
+    "tuktu.processors.MapFlattenerProcessor" -> ((df, c) => Ops.mapFlattener(df, c.str("field"))),
 
     // ref: BaseProcessors.scala:1175 — {field_1, field_2}: zip + explode,
     // overwriting both
@@ -532,34 +417,16 @@ object TuktuCompat {
       }
     },
 
-    // ref: ConvertToDate.scala:19 — {field, format?}: overwrite. The
-    // reference default ("EEE MMM dd HH:mm:ss zzz yyyy", java.util.Date
-    // toString) uses pattern letters Spark's parser rejects — that path
-    // goes through a SimpleDateFormat UDF instead of failing analysis.
+    // ref: ConvertToDate.scala:19 — {field, format?}: overwrite
     "tuktu.processors.ConvertToDate" -> { (df, c) =>
       val f = c.str("field")
-      c.strOpt("format") match {
-        case Some(fmt) => df.withColumn(f, to_timestamp(col(f), fmt))
-        case None =>
-          val parse = udf { (s: String) =>
-            if (s == null) null
-            else try new java.sql.Timestamp(new java.text.SimpleDateFormat(
-              "EEE MMM dd HH:mm:ss zzz yyyy", java.util.Locale.US).parse(s).getTime)
-            catch { case _: java.text.ParseException => null }
-          }
-          df.withColumn(f, parse(col(f)))
-      }
+      Ops.toDate(df, f, c.strOpt("format"), f)
     },
 
     // ref: BufferProcessorTestSuite.scala:24 / BufferProcessors.scala —
-    // {size}: tag rows with a batch id every `size` rows in arrival order
-    // (packets become batch groups; downstream groupBy(result) = packets)
-    "tuktu.processors.SizeBufferProcessor" -> { (df, c) =>
-      val ord = uniq("__ord")
-      Ops.indexByLayout(df, ord)
-        .withColumn(c.result, floor(col(ord) / c.req("size").asInt))
-        .drop(ord)
-    },
+    // {size}: batch ids in arrival order
+    "tuktu.processors.SizeBufferProcessor" -> ((df, c) =>
+      Ops.sizeBuffer(df, c.req("size").asInt, Nil, c.result)),
 
     // buffer all until EOF: the batch frame already IS the EOF buffer
     "tuktu.processors.EOFBufferProcessor" -> ((df, _) => df),
@@ -593,21 +460,20 @@ object TuktuCompat {
     // expression}: expression's bare agg fns apply to the evaluated base
     "tuktu.processors.bucket.aggregate.AggregateByValueProcessor" -> { (df, c) =>
       val baseCol = uniq("__base")
-      val withBase = df.withColumn(baseCol,
-        Expr.arithmetic(df, c.str("base_value")))
       val aggFns = Seq("count", "distinct", "avg", "median", "sum", "max", "min", "stdev")
       val exprStr = aggFns.foldLeft(c.str("expression")) { (a, fn) =>
         a.replace(fn + "()", fn + "(${" + baseCol + "})")
       }
-      withBase.groupBy(c.strs("group").map(col): _*)
-        .agg(Expr.aggregate(withBase, exprStr).as(c.result))
+      Ops.aggregateByValue(df.withColumn(baseCol, Expr.arithmetic(df, c.str("base_value"))),
+        c.strs("group"), Seq(c.result -> exprStr))
     },
 
     // ref: BaseProcessors.scala:23 — pass-through
     "tuktu.processors.SkipProcessor" -> ((df, _) => df),
-    // ref: BaseProcessors.scala:74 — pass-through diagnostics; the engine
-    // analog is Ops.countEof's Observation (zero extra scan)
-    "tuktu.processors.CountEOFProcessor" -> ((df, _) => df),
+    // ref: BaseProcessors.scala:74 — pass-through diagnostics: the row
+    // count rides the action as an Observation (zero extra scan); the
+    // name is unique, as two observations of one plan may not share one
+    "tuktu.processors.CountEOFProcessor" -> ((df, _) => Ops.countEof(df, uniq("count_eof"))._1),
     // ref: BaseProcessors.scala:56 — throttling has no batch meaning;
     // streaming throttling = trigger interval (documented)
     "tuktu.processors.DelayProcessor" -> ((df, _) => df),
@@ -621,18 +487,11 @@ object TuktuCompat {
         if (c.bool("is_numeric")) v.cast(LongType)
         else if (c.bool("is_decimal")) v.cast(DoubleType)
         else v
-      val copies = c.objs("fields").map { fld =>
-        val p = pathList(fld)
-        val out = fld.str("result")
-        // absent path + default → constant, like FieldFilterProcessor and
-        // the reference's fieldParser(...).getOrElse(default)
-        (fld.opt("default") match {
-          case Some(d) if df.columns.contains(p.head) => coalesce(colPath(p), lit(d.asText))
-          case Some(d)                                => lit(d.asText)
-          case None                                   => colPath(p)
-        }).alias(out)
-      } :+ valueCol.alias(c.result)
-      val projected = df.select(copies: _*)
+      // the listed paths read like FieldFilterProcessor's (absent path +
+      // default → constant: the reference's fieldParser(...).getOrElse)
+      val value = uniq("__value")
+      val projected = Ops.fieldFilter(df.withColumn(value, valueCol),
+        pathResults(c) :+ (Seq(value) -> c.result), fieldDefaults(c))
       if (c.bool("batch")) {
         val ord = uniq("__ord")
         val dense = Ops.indexByLayout(projected, ord)
@@ -644,24 +503,11 @@ object TuktuCompat {
     // ref: BaseProcessors.scala:701 — {fields:[{path, separator}]}: each
     // tuple (struct) in the array renders as its fields joined by the
     // separator; the LIST of rendered strings overwrites the path head
-    "tuktu.processors.TupleListStringImploder" -> { (df, c) =>
+    "tuktu.processors.TupleListStringImploder" -> ((df, c) =>
       c.objs("fields").foldLeft(df) { (d, fld) =>
         val p = pathList(fld)
-        val sep = fld.str("separator")
-        val elemType = d.select(colPath(p)).schema.head.dataType match {
-          case ArrayType(s: StructType, _) => s
-          case other => throw new IllegalArgumentException(
-            s"TupleListStringImploder needs array<struct>, got $other")
-        }
-        // explicit interleave, not concat_ws: concat_ws drops null fields
-        // AND their separators, corrupting the rendered arity
-        d.withColumn(p.head, transform(colPath(p), x => {
-          val parts = elemType.fieldNames.toSeq
-            .map(fn => coalesce(x.getField(fn).cast(StringType), lit("")))
-          concat(parts.head +: parts.tail.flatMap(f => Seq(lit(sep), f)): _*)
-        }))
-      }
-    },
+        Ops.tupleListImplode(d, p, fld.str("separator"), p.head)
+      }),
 
     // ref: arithmetics/ArithmeticProcessor.scala:16 — {calculate,
     // number_of_decimals?, do_rounding?}
@@ -675,7 +521,7 @@ object TuktuCompat {
 
     // ref: arithmetics/MaxByFieldProcessor.scala:10 — {fields}
     "tuktu.processors.arithmetics.MaxFieldByValueProcessor" -> ((df, c) =>
-      df.withColumn(c.result, greatest(c.strs("fields").map(col): _*))),
+      Ops.maxOfFields(df, c.strs("fields"), c.result)),
 
     // ref: BaseProcessors.scala:355 — {predicate}
     "tuktu.processors.PredicateProcessor" -> ((df, c) =>
@@ -687,46 +533,16 @@ object TuktuCompat {
       df.withColumn(c.result, try_parse_json(col(c.str("field")).cast(StringType)))),
 
     // ref: time/TimestampNormalizerProcessor.scala:17 — {datetime_field,
-    // datetime_format?, time:{unit: n}}: floor to n-unit buckets on the
-    // reference's full millis→years grid. Sub-month units floor on the
-    // UTC epoch-millis grid with weeks ISO-Monday-aligned (epoch day 0 is
-    // a Thursday — Joda weeks start Monday); months/years bucket on
-    // calendar months via integer month index.
-    "tuktu.processors.time.TimestampNormalizerProcessor" -> { (df, c) =>
-      val f = c.str("datetime_field")
-      val ts = c.strOpt("datetime_format") match {
-        case Some(fmt) => to_timestamp(col(f).cast(StringType), fmt)
-        case None      => col(f).cast(TimestampType)
-      }
-      def n(k: String): Int =
-        c.opt("time").flatMap(t => c.at(t).opt(k)).fold(0)(_.asInt)
-      def epochFloor(ms: Long): Column =
-        timestamp_millis((floor(unix_millis(ts) / ms) * ms).cast(LongType))
-      val monthIdx = (year(ts) * 12 + month(ts) - 1) // months since year 0
-      def monthFloor(nMonths: Int): Column = {
-        val b = floor(monthIdx / nMonths) * nMonths
-        to_timestamp(concat((b / 12).cast(IntegerType), lit("-"),
-          lpad((pmod(b, lit(12)) + 1).cast(StringType), 2, "0"), lit("-01")))
-      }
-      val out =
-        if (n("years") > 0) monthFloor(12 * n("years"))
-        else if (n("months") > 0) monthFloor(n("months"))
-        else if (n("weeks") > 0) // shift so buckets land on Monday
-          timestamp_millis(((floor((unix_millis(ts) - 345600000L) /
-            (604800000L * n("weeks"))) * (604800000L * n("weeks"))) + 345600000L).cast(LongType))
-        else if (n("days") > 0) epochFloor(86400000L * n("days"))
-        else if (n("hours") > 0) epochFloor(3600000L * n("hours"))
-        else if (n("minutes") > 0) epochFloor(60000L * n("minutes"))
-        else if (n("millis") > 0) epochFloor(n("millis").toLong)
-        else epochFloor(1000L * math.max(1, n("seconds"))) // reference default: seconds=1
-      df.withColumn(c.result, out)
-    },
+    // datetime_format?, time:{unit: n}}
+    "tuktu.processors.time.TimestampNormalizerProcessor" -> ((df, c) =>
+      Ops.timestampNormalize(df, c.str("datetime_field"), c.strOpt("datetime_format"),
+        c.opt("time").fold(Map.empty[String, Int])(
+          _.properties().asScala.map(e => e.getKey -> e.getValue.asInt).toMap),
+        c.result)),
 
-    // ref: time/DateToMillisProcessor.scala:16 — {field}; unix_millis keeps
-    // sub-second precision like the reference's getMillis
+    // ref: time/DateToMillisProcessor.scala:16 — {field}
     "tuktu.processors.time.DateToMillisProcessor" -> ((df, c) =>
-      df.withColumn(c.result,
-        unix_millis(col(c.str("field")).cast(TimestampType)))),
+      Ops.dateToMillis(df, c.str("field"), c.result)),
 
     // ref: bucket/statistics/StatisticsProcessors.scala — {fields}: one row,
     // one column per field
@@ -812,28 +628,15 @@ object TuktuCompat {
     // format?, years..seconds}: typed like the reference (millis Long,
     // timestamp, or formatted string); period components are static config
     "tuktu.processors.time.TimestampPeriodAdderProcessor" -> { (df, c) =>
-      def iv(k: String): Column = {
+      def iv(k: String): Int = {
         val v = c.strOpt(k).getOrElse("0")
         require(!v.contains("${"),
           s"TimestampPeriodAdder: data-dependent '$k' not supported")
-        lit(v.toInt)
+        v.toInt
       }
-      val f = c.str("time_field")
-      val fmt = c.strOpt("format").filter(_.nonEmpty)
-      val base = df.schema(f).dataType match {
-        case StringType => to_timestamp(col(f), fmt.getOrElse(
-          throw new IllegalArgumentException(
-            "TimestampPeriodAdder: string time_field needs format")))
-        case IntegerType | LongType => timestamp_millis(col(f).cast(LongType))
-        case _ => col(f)
-      }
-      val added = base + make_interval(iv("years"), iv("months"), iv("weeks"),
-        iv("days"), iv("hours"), iv("minutes"), iv("seconds"))
-      df.withColumn(c.result, df.schema(f).dataType match {
-        case StringType => date_format(added, fmt.get)
-        case IntegerType | LongType => unix_millis(added)
-        case _ => added
-      })
+      Ops.periodAdd(df, c.str("time_field"), c.result, c.strOpt("format").filter(_.nonEmpty),
+        iv("years"), iv("months"), iv("weeks"), iv("days"), iv("hours"), iv("minutes"),
+        iv("seconds"))
     },
 
     // ref: time/DurationProcessor.scala:15 — {start, end} (TuktuStrings):
@@ -860,11 +663,8 @@ object TuktuCompat {
     // {amount, datums?}: with one frame per flow the packet and datum
     // variants coincide
     "tuktu.processors.sample.TakeProcessor" -> ((df, c) => Ops.take(df, c.req("amount").asInt)),
-    "tuktu.processors.sample.DropProcessor" -> { (df, c) =>
-      val ord = uniq("__ord")
-      Ops.indexByLayout(df, ord)
-        .filter(col(ord) >= c.req("amount").asInt).drop(ord)
-    },
+    "tuktu.processors.sample.DropProcessor" -> ((df, c) =>
+      Ops.drop(df, c.req("amount").asInt, Nil)),
 
     // ref: sample/ReverseProcessor.scala:12 — reverse arrival order
     "tuktu.processors.sample.ReverseProcessor" -> { (df, c) =>
@@ -876,30 +676,10 @@ object TuktuCompat {
     "tuktu.processors.RemoveEmptyPacketProcessor" -> ((df, _) => df),
 
     // ref: sample/StratifiedSamplingProcessor.scala:14 — {class_field,
-    // random?, sample_count?}: per-class min-count sample; `random` draws
-    // by a deterministic hash of the arrival index instead of arrival
-    // order (reproducible where the reference's Random.shuffle is not)
-    "tuktu.processors.sample.StratifiedSamplingProcessor" -> { (df, c) =>
-      val ord = uniq("__ord")
-      val rn = uniq("__rn")
-      // 2 consumers: the min-count job and the final window
-      val base = Ops.indexByLayout(df, ord).transform(Ops.materialize)
-      val orderBy =
-        if (c.bool("random")) md5(col(ord).cast(StringType)).asc
-        else col(ord).asc
-      val minRow = base.groupBy(col(c.str("class_field"))).count()
-        .agg(min("count")).first()
-      if (minRow.isNullAt(0)) df.limit(0) // empty input: nothing to sample
-      else {
-        val minCount = minRow.getLong(0)
-        val cap = c.opt("sample_count").map(_.asLong)
-          .fold(minCount)(s => math.min(minCount, s))
-        base.withColumn(rn, row_number().over(
-            org.apache.spark.sql.expressions.Window
-              .partitionBy(col(c.str("class_field"))).orderBy(orderBy)))
-          .filter(col(rn) <= cap).drop(rn, ord)
-      }
-    },
+    // random?, sample_count?}: arrival order
+    "tuktu.processors.sample.StratifiedSamplingProcessor" -> ((df, c) =>
+      Ops.stratifiedSample(df, c.str("class_field"), Nil, random = c.bool("random"),
+        sampleCount = c.opt("sample_count").map(_.asLong))),
 
     // ref: statistics/ProbabilityProcessors.scala:13 — {numbers:
     // [{number, probability}]}: normalized inverse-CDF draw

@@ -311,16 +311,6 @@ object Streams {
       .toDF("id", "dup_of", "band", "est_jaccard")
   }
 
-  /** Ingestion-time decontamination gate — the streaming side of
-    * `Dedup.decontaminateBloom`: per-row shingle hashes via the windowless
-    * HOF pipeline (a stream cannot sort, so the window-lead batch shape is
-    * unavailable), then a broadcast-Bloom membership probe per gram. Zero
-    * shuffle, zero state, append-mode safe — each doc gains
-    * `n_suspect` (DISTINCT grams that MIGHT appear in the benchmark; an
-    * upper bound including Bloom false positives at rate `fpp`) and
-    * `suspect`. Route suspect=true docs to the exact batch verify
-    * (`Dedup.decontaminate`) downstream; suspect=false is definitive
-    * (Bloom filters have no false negatives). */
   /** Streaming HLL distinct-count estimation — the ingestion-time form of
     * `Sketch.hllDistinct`: per group the state is the m = 2^p register
     * array (m BYTES, constant forever — even smaller than KMV's k longs),

@@ -98,6 +98,21 @@ class FlowSpec extends SparkSpec {
     assert(out.map(_.getLong(1)).toSeq == Seq(9L, 8L, 7L))
   }
 
+  test("native field_copy reads every source from the original row") {
+    // flatten first: the copy must keep a dotted top-level name (`s.x`)
+    val flow = """
+    { "generators": [
+        {"id": "g", "name": "list", "config": {"rows": [{"a": 1, "b": 2, "s": {"x": 3}}]},
+         "next": ["fl"]} ],
+      "processors": [
+        {"id": "fl", "name": "flatten", "config": {}, "next": ["cp"]},
+        {"id": "cp", "name": "field_copy",
+         "config": {"fields": {"a": "b", "b": "c"}}, "next": []} ] }"""
+    val r = Flow.runSingle(spark, flow).head
+    assert((r.getAs[Long]("a"), r.getAs[Long]("b"), r.getAs[Long]("c")) == ((1L, 1L, 2L)))
+    assert(r.getAs[Long]("s.x") == 3L)
+  }
+
   test("NLP pipeline through the flow front-end: split -> stem -> tag -> sentiment") {
     val flow = """
     { "generators": [
