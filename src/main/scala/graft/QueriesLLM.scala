@@ -711,12 +711,13 @@ object QueriesLLM {
         .orderBy("itemset")
     }),
 
-    // ---------------- MinMax normalization (r14, ref NormalizationProcessor):
-    // fit+transform over two derived features. The affine is exactly
-    // replayable: min/max are selections (no summation), the transform is
-    // ONE subtraction and ONE division per value (×1.0 and +0.0 from the
-    // default [0,1] range are IEEE identities), constant columns hit the
-    // documented 0.5 branch.
+    // ---------------- MinMax normalization (r14): the spark.ml MinMaxScaler
+    // capability, not the NormalizationTrain/Apply FQCN body (a constant
+    // field gives 0.5 here, 0 there). fit+transform over two derived
+    // features. The affine is exactly replayable: min/max are selections
+    // (no summation), the transform is ONE subtraction and ONE division per
+    // value (×1.0 and +0.0 from the default [0,1] range are IEEE
+    // identities), constant columns hit the documented 0.5 branch.
     "minmax_scale" -> ((s, dir) => {
       import org.apache.spark.ml.functions.vector_to_array
       val d = rd(s, dir, "documents").select(col("doc_id"),
@@ -729,7 +730,8 @@ object QueriesLLM {
         .orderBy("doc_id")
     }),
 
-    // ---------------- one-hot encoding (r14, ref DummyVariableProcessor):
+    // ---------------- one-hot encoding (r14): the spark.ml capability, not
+    // the DummyVariable FQCN body (a vector here, a digit string there).
     // StringIndexer(alphabetAsc) + OneHotEncoder(dropLast) over `lang`.
     // Output reduced to integers (index, vector size, active position —
     // -1 for the dropped last category), so the gate is exact: the oracle
@@ -745,8 +747,9 @@ object QueriesLLM {
         .orderBy("doc_id")
     }),
 
-    // ---------------- missing-value imputation (r14, ref
-    // MissingvaluesProcessor): Imputer in mode strategy — the only exactly
+    // ---------------- missing-value imputation (r14): the spark.ml Imputer
+    // capability, not the Missingvalues FQCN body (the mode here, the
+    // typed replacement there). Imputer in mode strategy — the only exactly
     // replayable one (mean is summation-order-dependent, median is
     // approxQuantile). The planted distribution makes the mode STRICTLY
     // unique at every prefix size (4-3-2 split per decade of doc_id), so

@@ -1220,17 +1220,19 @@ object TuktuCompat {
     // ref: association/FPGrowthProcessor.scala:15 — {field, min_support
     // (ABSOLUTE count, smile-style)}: the packet becomes one row per
     // frequent itemset. The count() is packet-scoped, like the
-    // reference's blocking learn over the whole packet.
+    // reference's blocking learn over the whole packet. spark.ml keeps an
+    // itemset seen at least ceil(s·n) times, so s = (a − ½)/n keeps
+    // exactly those seen a times or more; a > n keeps none.
     "tuktu.ml.processors.association.FPGrowthProcessor" -> { (df, c) =>
       val f = c.str("field")
       val minSup = c.req("min_support").asInt
-      val n = df.count().max(1L)
-      val model = new org.apache.spark.ml.fpm.FPGrowth()
-        .setItemsCol(f).setMinSupport(minSup.toDouble / n)
-        .fit(df.select(array_distinct(col(f)).as(f)))
-      model.freqItemsets
-        .select(col("items").as(c.result + "_items"),
-          col("freq").as(c.result + "_support"))
+      val tx = df.select(array_distinct(col(f)).as(f))
+      val n = tx.where(col(f).isNotNull).count()
+      val sets =
+        if (n == 0 || minSup > n)
+          tx.where(lit(false)).select(col(f).as("items"), lit(0L).as("freq"))
+        else graft.ml.ML.fpGrowth(tx, f, math.max(minSup - 0.5, 0.0) / n).freqItemsets
+      sets.select(col("items").as(c.result + "_items"), col("freq").as(c.result + "_support"))
     },
 
     // ref: modules/dlib/app/tuktu/dlib/processors/xsltProcessor.scala:29

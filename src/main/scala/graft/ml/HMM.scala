@@ -98,28 +98,12 @@ object HMM {
         norm((0 until nSymbols).map(o => emit.getOrElse((s, o), 0L) + 1.0))).toArray)
   }
 
-  /** Decode every sequence in parallel: one shuffle on the sequence key,
-    * per-group Viterbi on executors (model broadcast via closure). */
-  def decodeAll(df: DataFrame, seqCol: String, orderCol: String, symbolCol: String,
-                model: HmmModel)(implicit spark: SparkSession): DataFrame = {
-    import spark.implicits._
-    df.select(col(seqCol).cast("long"), col(orderCol).cast("long"),
-        col(symbolCol).cast("int"))
-      .as[(Long, Long, Int)]
-      .groupByKey(_._1)
-      .mapGroups { (key, rows) =>
-        val obs = rows.toSeq.sortBy(_._2).map(_._3)
-        (key, model.decode(obs), model.logLikelihood(obs))
-      }
-      .toDF(seqCol, "states", "log_likelihood")
-  }
-
   /** Decode every sequence in parallel, emitting the Viterbi path (comma-
-    * joined) and the LOG-space max path probability — the oracle-gated
-    * sibling of [[decodeAll]] (ref HMMApplyDecodeProcessor appends both
-    * the path and its delta; modules/ml/app/tuktu/ml/processors/hmm/
-    * HMM.scala:107). Same shape: one shuffle on the sequence key, the
-    * model broadcast via closure, per-group DP on executors. */
+    * joined) and the LOG-space max path probability (ref
+    * HMMApplyDecodeProcessor appends both the path and its delta;
+    * modules/ml/app/tuktu/ml/processors/hmm/HMM.scala:107): one shuffle on
+    * the sequence key, the model broadcast via closure, per-group DP on
+    * executors. */
   def decodeAllDelta(df: DataFrame, seqCol: String, orderCol: String,
                      symbolCol: String, model: HmmModel)
                     (implicit spark: SparkSession): DataFrame = {
@@ -213,11 +197,6 @@ object HMM {
       a = (0 until n).map(i => renorm(aA(i), model.a(i))).toArray,
       b = (0 until n).map(i => renorm(bA(i), model.b(i))).toArray)
   }
-
-  /** Iterated Baum-Welch. */
-  def baumWelch(df: DataFrame, obsCol: String, init: HmmModel,
-                nSymbols: Int, iters: Int = 1): HmmModel =
-    (1 to iters).foldLeft(init)((m, _) => baumWelchStep(df, obsCol, m, nSymbols))
 
   /** Uniform initial model (the reference HMMTrainProcessor's no-priors
     * branch: every entry 1/n resp. 1/m). */

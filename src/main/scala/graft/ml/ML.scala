@@ -1,100 +1,27 @@
 package graft.ml
 
-import org.apache.spark.ml.{Pipeline, PipelineModel}
-import org.apache.spark.ml.classification.{DecisionTreeClassifier, GBTClassifier, LinearSVC, LogisticRegression}
-import org.apache.spark.ml.clustering.KMeans
+import org.apache.spark.ml.classification.LinearSVC
 import org.apache.spark.ml.feature._
-import org.apache.spark.ml.fpm.FPGrowth
-import org.apache.spark.ml.regression.{DecisionTreeRegressor, GBTRegressor, LinearRegression}
+import org.apache.spark.ml.fpm.{FPGrowth, FPGrowthModel}
 import org.apache.spark.sql.DataFrame
 
 /**
- * ML/NLP capability parity (SURVEY.md §2.11) on spark.ml — the reference's
- * train/apply/serialize processors over an in-memory model repository become
- * Estimator/Transformer pipelines with MLWritable persistence. Each wrapper
- * assembles features from plain columns so callers stay in DataFrame land.
- *
- * Model lifecycle (ref: modules/ml/.../BaseMLProcessor.scala:22-239):
- * train ⇄ fit, apply ⇄ transform, (de)serialize ⇄ save/load.
+ * ML/NLP capabilities on spark.ml (SURVEY.md §2.11) that no `tuktu.ml`
+ * train entry builds. The reference's train/apply lifecycle processors fit
+ * their spark.ml estimators directly in `TuktuCompat` and keep the models
+ * in [[ModelRegistry]]; what stays here is FP-Growth (the FPGrowthProcessor
+ * entry and the `fpgrowth_itemsets` query), the preprocessing capabilities
+ * the suite queries gate, and the NBSVM, LDA and Word2Vec bodies.
  */
 object ML {
 
-  private def assemble(features: Seq[String], out: String = "features") =
-    new VectorAssembler().setInputCols(features.toArray).setOutputCol(out)
-
-  /** LinearRegression (ref: modules/ml/.../LinearRegression.scala:12);
-    * ridge = elasticNet 0 + regParam (ref RidgeRegression.scala:12). */
-  def linearRegression(df: DataFrame, features: Seq[String], label: String,
-                       regParam: Double = 0.0): PipelineModel =
-    new Pipeline().setStages(Array(assemble(features),
-      new LinearRegression().setLabelCol(label).setRegParam(regParam)
-        .setElasticNetParam(0.0))).fit(df)
-
-  /** LogisticRegression (ref: .../LogisticRegression.scala:18). */
-  def logisticRegression(df: DataFrame, features: Seq[String], label: String): PipelineModel =
-    new Pipeline().setStages(Array(assemble(features),
-      new LogisticRegression().setLabelCol(label))).fit(df)
-
-  /** SVM (ref: .../SupportVectorMachines.scala:12) ⇄ LinearSVC. */
-  def svm(df: DataFrame, features: Seq[String], label: String): PipelineModel =
-    new Pipeline().setStages(Array(assemble(features),
-      new LinearSVC().setLabelCol(label))).fit(df)
-
-  /** Decision tree (ref: modules/ml/.../decisiontrees/DecisionTrees.scala:12):
-    * classification and regression variants. Distributed histogram-based
-    * split search — each depth level is one pass over the data. */
-  def decisionTreeClassifier(df: DataFrame, features: Seq[String], label: String,
-                             maxDepth: Int = 5, seed: Long = 42): PipelineModel =
-    new Pipeline().setStages(Array(assemble(features),
-      new DecisionTreeClassifier().setLabelCol(label).setMaxDepth(maxDepth)
-        .setSeed(seed))).fit(df)
-
-  def decisionTreeRegressor(df: DataFrame, features: Seq[String], label: String,
-                            maxDepth: Int = 5, seed: Long = 42): PipelineModel =
-    new Pipeline().setStages(Array(assemble(features),
-      new DecisionTreeRegressor().setLabelCol(label).setMaxDepth(maxDepth)
-        .setSeed(seed))).fit(df)
-
-  /** Gradient tree boosting (ref: .../decisiontrees/GradientTreeBoost.scala:12). */
-  def gbtClassifier(df: DataFrame, features: Seq[String], label: String,
-                    maxIter: Int = 20, maxDepth: Int = 3, seed: Long = 42): PipelineModel =
-    new Pipeline().setStages(Array(assemble(features),
-      new GBTClassifier().setLabelCol(label).setMaxIter(maxIter)
-        .setMaxDepth(maxDepth).setSeed(seed))).fit(df)
-
-  def gbtRegressor(df: DataFrame, features: Seq[String], label: String,
-                   maxIter: Int = 20, maxDepth: Int = 3, seed: Long = 42): PipelineModel =
-    new Pipeline().setStages(Array(assemble(features),
-      new GBTRegressor().setLabelCol(label).setMaxIter(maxIter)
-        .setMaxDepth(maxDepth).setSeed(seed))).fit(df)
-
-  /** KMeans (ref: .../KMeansProcessor.scala:12). */
-  def kmeans(df: DataFrame, features: Seq[String], k: Int, seed: Long = 42): PipelineModel =
-    new Pipeline().setStages(Array(assemble(features),
-      new KMeans().setK(k).setSeed(seed))).fit(df)
-
-  /** FP-Growth association rules (ref: .../FPGrowthProcessor.scala:15). */
+  /** FP-Growth frequent itemsets (ref: .../FPGrowthProcessor.scala:15).
+    * `minSupport` is relative: spark.ml keeps an itemset seen at least
+    * ceil(minSupport · n) times, n the non-null transactions. */
   def fpGrowth(df: DataFrame, itemsCol: String, minSupport: Double = 0.3,
-               minConfidence: Double = 0.6): org.apache.spark.ml.fpm.FPGrowthModel =
+               minConfidence: Double = 0.6): FPGrowthModel =
     new FPGrowth().setItemsCol(itemsCol)
       .setMinSupport(minSupport).setMinConfidence(minConfidence).fit(df)
-
-  /** Tokenization (ref: modules/nlp/.../Tokenization.scala:20). */
-  def tokenize(df: DataFrame, in: String, out: String): DataFrame =
-    new RegexTokenizer().setInputCol(in).setOutputCol(out)
-      .setPattern("\\s+").transform(df)
-
-  /** N-grams (ref: .../NgramProcessor.scala:14). */
-  def ngrams(df: DataFrame, in: String, out: String, n: Int): DataFrame =
-    new NGram().setN(n).setInputCol(in).setOutputCol(out).transform(df)
-
-  /** TF-IDF (ref: .../TFIDF.scala:12) ⇄ HashingTF + IDF. */
-  def tfidf(df: DataFrame, tokensCol: String, out: String,
-            numFeatures: Int = 1 << 18): DataFrame = {
-    val tf = new HashingTF().setInputCol(tokensCol).setOutputCol("__tf")
-      .setNumFeatures(numFeatures).transform(df)
-    new IDF().setInputCol("__tf").setOutputCol(out).fit(tf).transform(tf).drop("__tf")
-  }
 
   /** Word2Vec (ref: .../Word2Vec.scala:13). */
   def word2vec(df: DataFrame, tokensCol: String, out: String, dim: Int = 16,
@@ -102,13 +29,16 @@ object ML {
     new Word2Vec().setInputCol(tokensCol).setOutputCol(out)
       .setVectorSize(dim).setSeed(seed).setMinCount(1).fit(df).transform(df)
 
-  /** Normalization (ref: modules/ml/.../NormalizationProcessor.scala:12). */
+  /** MinMaxScaler (ref NormalizationProcessor.scala:12); the Normalization
+    * FQCN entries keep the reference's per-field body. */
   def minMaxScale(df: DataFrame, features: Seq[String], out: String): DataFrame = {
-    val a = assemble(features, "__f").transform(df)
+    val a = new VectorAssembler().setInputCols(features.toArray).setOutputCol("__f")
+      .transform(df)
     new MinMaxScaler().setInputCol("__f").setOutputCol(out).fit(a).transform(a).drop("__f")
   }
 
-  /** Dummy variables (ref: .../DummyVariableProcessor.scala:10) ⇄ OneHot. */
+  /** StringIndexer + OneHotEncoder (ref DummyVariableProcessor.scala:10);
+    * the DummyVariable FQCN entry keeps the reference's digit string. */
   def oneHot(df: DataFrame, in: String, out: String): DataFrame = {
     val idx = new StringIndexer().setInputCol(in).setOutputCol("__idx")
       .setStringOrderType("alphabetAsc").fit(df).transform(df)
@@ -116,7 +46,8 @@ object ML {
       .fit(idx).transform(idx).drop("__idx")
   }
 
-  /** Missing values (ref: .../MissingvaluesProcessor.scala:14) ⇄ Imputer. */
+  /** Imputer (ref MissingvaluesProcessor.scala:14); the Missingvalues FQCN
+    * entry keeps the reference's typed replacement chain. */
   def impute(df: DataFrame, cols: Seq[String], strategy: String = "mean"): DataFrame =
     new Imputer().setInputCols(cols.toArray).setOutputCols(cols.toArray)
       .setStrategy(strategy).fit(df).transform(df)

@@ -28,16 +28,6 @@ object Dedup {
   /** 60-bit md5-prefix hash, then reduced mod P (DuckDB-replicable). */
   def hash60(c: Column): Column = TextAnalysis.tokenHash(c) % P
 
-  /** Word n-gram shingles of a text column: contiguous `n`-token windows
-    * joined by a single space. */
-  def shingles(text: Column, n: Int = 3): Column = {
-    val toks = TextAnalysis.tokens(text)
-    // sequence(1, k) is descending for k<1 — guard short docs to an empty set
-    when(size(toks) < n, array().cast(ArrayType(StringType)))
-      .otherwise(transform(sequence(lit(1), size(toks) - (n - 1)),
-        i => concat_ws(" ", slice(toks, i, lit(n)))))
-  }
-
   /** Per-token md5-based hashes in [0, P). */
   def tokenHashes(text: Column): Column =
     transform(TextAnalysis.tokens(text), t => TextAnalysis.tokenHash(t) % P)
@@ -57,11 +47,6 @@ object Dedup {
     df.withColumn("__th", tokenHashes(col(textCol)))
       .withColumn(out, shingleHashesFromTokens(col("__th"), n))
       .drop("__th")
-
-  /** Distinct shingle hashes as a single expression (prefer withShingleHashes
-    * in pipelines — this form re-evaluates tokenHashes at each reference). */
-  def shingleHashes(text: Column, n: Int = 3): Column =
-    array_distinct(transform(shingles(text, n), s => hash60(s)))
 
   /** MinHash signature: k independent affine permutations h_j(x)=(a_j·x+b_j) mod P,
     * minimum over the document's shingle-hash set. a_j odd, deterministic.
@@ -99,7 +84,7 @@ object Dedup {
     * via window `lead`, signature as k independent codegen'd `min` aggregates,
     * optional distinct shingle set via `collect_set` in the SAME aggregation.
     *
-    * Why not the array-HOF pipeline (shingleHashes + minhashSignature)?
+    * Why not the array-HOF pipeline (withShingleHashes + minhashSignature)?
     * Spark evaluates higher-order-function lambdas INTERPRETED (transform/
     * aggregate are CodegenFallback), so a corpus of T tokens costs ~T·(n+k)
     * interpreted expression steps — profiled 3-4× slower than this shape at
@@ -365,25 +350,6 @@ object Dedup {
     }
   }
 
-  /** Exact broadcast membership probe over a gram table — the verify stage
-    * the streaming gate stacks BEHIND [[gramBloomProbe]]'s prefilter so its
-    * per-row tag matches [[decontaminate]] exactly (no Bloom false
-    * positives in the output). The grams broadcast as one sorted long
-    * array (8 bytes/gram — an eval-suite union is millions of grams, tens
-    * of MB, comfortably broadcastable; the Bloom at ~10 bits/gram stays in
-    * front because it is the cache-resident reject path for the ~100% of
-    * grams that are clean). None when the table is empty. */
-  def gramExactProbe(bg: DataFrame,
-                     maxGrams: Int = DefaultMaxBenchGrams): Option[Column => Column] = {
-    val grams = collectGramsBounded(bg, maxGrams)
-    if (grams.isEmpty) None
-    else {
-      val b = bg.sparkSession.sparkContext.broadcast(grams)
-      val contains = udf((g: Long) => java.util.Arrays.binarySearch(b.value, g) >= 0)
-      Some(c => contains(c))
-    }
-  }
-
   /** Benchmark-sized driver state is a CONTRACT of the gate probes; this
     * cap turns a corpus-scale gram table into a clear error instead of a
     * driver OOM. 32M grams = 256 MB of longs, an eval-suite union's upper
@@ -403,7 +369,7 @@ object Dedup {
     * once (it is eval-suite-sized by contract), the sorted array backs the
     * exact probe, and the Bloom prefilter is built driver-side from the
     * same array — where the separate [[gramBloomProbe]] (count job +
-    * bloomFilter job) plus [[gramExactProbe]] (collect job) would scan the
+    * bloomFilter job) plus an exact probe's own collect job would scan the
     * tokenize→shingle→distinct pipeline three times. None when empty. */
   def gramProbes(bg: DataFrame, fpp: Double,
                  maxGrams: Int = DefaultMaxBenchGrams): Option[(Column => Column, Column => Column)] = {

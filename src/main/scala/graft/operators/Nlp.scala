@@ -381,9 +381,8 @@ object Nlp {
   }
 
   /** NgramProcessor (ref NgramProcessor.scala:14): n-grams over a token
-    * array (each gram an array of n elements); `flatten` concatenates each
-    * gram without separator and joins grams with spaces, like the
-    * reference. Empty when fewer than n tokens. */
+    * array (each gram an array of n elements). Empty when fewer than n
+    * tokens. */
   def ngrams(tokens: Column, n: Int): Column =
     // explicit empty guard: sequence(n, size) flips DESCENDING when
     // size < n and would fabricate grams
@@ -392,8 +391,6 @@ object Nlp {
         org.apache.spark.sql.types.ArrayType(org.apache.spark.sql.types.StringType))))
       .otherwise(transform(sequence(lit(n), size(tokens)),
         i => slice(tokens, i - n + 1, lit(n))))
-  def ngramsFlat(tokens: Column, n: Int): Column =
-    array_join(transform(ngrams(tokens, n), g => array_join(g, "")), " ")
 
   /** SnowballProcessor (ref Snowball.scala:17): stem a token-array field. */
   def stemTokens(df: DataFrame, tokensCol: String, out: String): DataFrame =

@@ -130,9 +130,17 @@ class CleanupSpec extends SparkSpec {
     val grams = d.select(Nlp.ngrams(col("toks"), 3)).as[Seq[Seq[String]]].collect()
     assert(grams(0) == Seq(Seq("a", "b", "c"), Seq("b", "c", "d")))
     assert(grams(1) == Seq.empty)
-    val flat = d.select(Nlp.ngramsFlat(col("toks"), 2)).as[String].collect()
-    assert(flat(0) == "ab bc cd")
-    assert(flat(1) == "")
+    // NgramProcessor's flatten form over a token array
+    val flow = """
+    { "generators": [
+        {"id": "g", "name": "list", "config": {"rows": [
+          {"i": 0, "toks": ["a", "b", "c", "d"]}, {"i": 1, "toks": ["x"]}
+        ]}, "next": ["n"]} ],
+      "processors": [
+        {"id": "n", "name": "tuktu.nlp.processors.NgramProcessor", "result": "flat",
+         "config": {"field": "toks", "n": 2, "flatten": true}, "next": []} ] }"""
+    val flat = Flow.runSingle(spark, flow).orderBy("i").select("flat").as[String].collect()
+    assert(flat.toSeq == Seq("ab bc cd", ""))
   }
 
   test("nlp-module FQCNs: tokenize → ngrams → stem → POS → polarity → langid") {

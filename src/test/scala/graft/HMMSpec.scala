@@ -37,8 +37,8 @@ class HMMSpec extends SparkSpec {
     implicit val s = spark
     val test = genSeq(99, 60).zipWithIndex.map { case ((st, o), t) => (0L, t.toLong, st, o) }
     val df = test.toDF("seq", "t", "state", "symbol")
-    val out = HMM.decodeAll(df, "seq", "t", "symbol", model).head
-    val decoded = out.getSeq[Int](1)
+    val out = HMM.decodeAllDelta(df, "seq", "t", "symbol", model).head
+    val decoded = out.getString(1).split(",").map(_.toInt).toSeq
     val truth = test.map(_._3)
     val acc = decoded.zip(truth).count { case (a, b) => a == b } / truth.size.toDouble
     assert(acc >= 0.85, s"accuracy $acc")
@@ -66,7 +66,7 @@ class HMMSpec extends SparkSpec {
       s"not monotone: $lls")
     assert(lls.last > lls.head + 10, s"no real improvement: $lls")
     // EM should sharpen self-transitions toward the planted 0.85
-    val fit = HMM.baumWelch(corpus, "obs", init, nSymbols = 4, iters = 10)
+    val fit = (1 to 10).foldLeft(init)((m, _) => HMM.baumWelchStep(corpus, "obs", m, 4))
     assert(math.exp(fit.a(0)(0)) > 0.7 && math.exp(fit.a(1)(1)) > 0.7)
   }
 

@@ -1354,11 +1354,14 @@ class LLMOpsSpec extends SparkSpec {
   }
 
   test("ModelRegistry: train/apply/serialize/destroy/deserialize lifecycle") {
-    import graft.ml.{ML, ModelRegistry}
+    import graft.ml.ModelRegistry
     val train = Seq((1.0, 2.0), (2.0, 4.0), (3.0, 6.0), (4.0, 8.0))
       .toDF("x", "y")
-    import org.apache.spark.ml.Transformer
-    ModelRegistry.put("m", ML.linearRegression(train, Seq("x"), "y"))
+    import org.apache.spark.ml.{Pipeline, Transformer}
+    ModelRegistry.put("m", new Pipeline().setStages(Array(
+      new org.apache.spark.ml.feature.VectorAssembler()
+        .setInputCols(Array("x")).setOutputCol("features"),
+      new org.apache.spark.ml.regression.LinearRegression().setLabelCol("y"))).fit(train))
     val scored = ModelRegistry.get[Transformer]("m").transform(train).select("prediction")
       .as[Double].collect()
     // the typed lookup's two errors name the model

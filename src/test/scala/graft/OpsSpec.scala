@@ -112,26 +112,45 @@ class OpsSpec extends SparkSpec {
     assert(!plan.contains("DeserializeToObject"), "row-object churn leaked into the plan")
   }
 
-  test("every public Ops def has a caller in src/main (source gate)") {
-    // library entry points that copy no processor, kept for callers outside graft
-    val exempt = Map(
-      "saltedJoin" -> "the explicit skew fallback past AQE's skew-join split (SCALE.md)",
-      "signalBuffer" -> "SignalBufferProcessor's batch barrier; flows use Streams.signalBuffer",
-      "dynamicFetch" -> "the data-dependent lookup the ListJsonFetcherProcessor reject points to")
+  /** Every public member def of `obj` (declared in `file`, two-space
+    * indent; local defs sit deeper) must have a caller in src/main: a
+    * qualified `obj.name` anywhere, or a bare `name(` inside `file`.
+    * `exempt` maps a name to why it may stand without one; `known` are
+    * defs the scan must find, so a broken scan cannot pass vacuously. */
+  private def assertCallers(file: String, obj: String, exempt: Map[String, String],
+                            known: Seq[String]): Unit = {
     // string literals blanked, so a name quoted in a message is no caller
     val code = mainCode.map { case (at, l) => (at, l.replaceAll("\"(?:[^\"\\\\]|\\\\.)*\"", "\"\"")) }
-    val inOps = code.filter(_._1.startsWith("graft/engine/Ops.scala:"))
-    // members of `object Ops`: two-space indent; local defs sit deeper
-    val defs = inOps.map(_._2).collect {
+    val inFile = code.filter(_._1.startsWith(s"$file:"))
+    val defs = inFile.map(_._2).collect {
       case l if l.startsWith("  def ") => l.drop(6).takeWhile(_.isLetterOrDigit)
     }
     def called(name: String): Boolean =
-      code.exists(_._2.matches(s".*\\bOps\\.$name\\b.*")) ||
-        inOps.exists { case (_, l) => !l.trim.startsWith(s"def $name") && l.matches(s".*\\b$name\\(.*") }
-    assert(defs.contains("materialize") && defs.contains("fieldFilter"), s"def scan found: $defs")
+      code.exists(_._2.matches(s".*\\b$obj\\.$name\\b.*")) ||
+        inFile.exists { case (_, l) => !l.trim.startsWith(s"def $name") && l.matches(s".*\\b$name\\(.*") }
+    assert(known.forall(defs.contains), s"def scan found: $defs")
     val uncalled = defs.distinct.filterNot(d => exempt.contains(d) || called(d))
-    assert(uncalled.isEmpty, s"public Ops defs without a src/main caller: ${uncalled.mkString(", ")}")
-    assert(exempt.keySet.forall(defs.contains), "an exempt name is no longer an Ops def")
+    assert(uncalled.isEmpty, s"public $obj defs without a src/main caller: ${uncalled.mkString(", ")}")
+    assert(exempt.keySet.forall(defs.contains), s"an exempt name is no longer a $obj def")
+  }
+
+  test("every public Ops def has a caller in src/main (source gate)") {
+    // library entry points that copy no processor, kept for callers outside graft
+    assertCallers("graft/engine/Ops.scala", "Ops", Map(
+      "saltedJoin" -> "the explicit skew fallback past AQE's skew-join split (SCALE.md)",
+      "signalBuffer" -> "SignalBufferProcessor's batch barrier; flows use Streams.signalBuffer",
+      "dynamicFetch" -> "the data-dependent lookup the ListJsonFetcherProcessor reject points to"),
+      known = Seq("materialize", "fieldFilter"))
+  }
+
+  test("every public ML def has a caller in src/main (source gate)") {
+    // API bodies of reference components no flow entry or suite query runs;
+    // a copy of an FQCN train body is never exempt
+    assertCallers("graft/ml/ML.scala", "ML", Map(
+      "nbsvm" -> "the reference NBSVM component's train body (NBSVMProcessor)",
+      "lda" -> "the reference LDA component's topic model (LDA.scala)",
+      "word2vec" -> "the reference Word2Vec component's training body (Word2Vec.scala)"),
+      known = Seq("fpGrowth", "nbsvm"))
   }
 
   test("array ops: explode, zip, flatten, element") {

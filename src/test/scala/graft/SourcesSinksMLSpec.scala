@@ -4,8 +4,10 @@ import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import graft.sources.{Sinks, Sources}
 import graft.ml.ML
+import graft.operators.Nlp
+import org.apache.spark.sql.DataFrame
 
-/** Sources/sinks round-trips, ML wrappers. */
+/** Sources/sinks round-trips; the tuktu.ml train/apply entries and graft.ml.ML. */
 class SourcesSinksMLSpec extends SparkSpec {
   import spark.implicits._
 
@@ -155,11 +157,32 @@ class SourcesSinksMLSpec extends SparkSpec {
     assert(benign == "hello")
   }
 
+  /** Fits `tuktu.ml.processors.<kind>TrainProcessor` on `df` and scores
+    * `df` with the matching ApplyProcessor, as a reference flow runs them:
+    * features are the array<double> column `vec`, the label is `label`.
+    * Returns the predictions in row order. */
+  private def trainApply(df: DataFrame, kind: String, config: String = ""): Array[Double] = {
+    val model = s"spec_${kind.replace('.', '_')}"
+    val procs = graft.engine.Flow.parse(s"""{"processors": [
+      {"id": "train", "name": "tuktu.ml.processors.${kind}TrainProcessor", "result": "",
+       "config": {"model_name": "$model", "data_field": "vec", "label_field": "label"$config},
+       "next": ["apply"]},
+      {"id": "apply", "name": "tuktu.ml.processors.${kind}ApplyProcessor", "result": "pred",
+       "config": {"model_name": "$model", "data_field": "vec"}, "next": []}]}""")._2
+    try graft.engine.Flow.subFlow(df, procs, "train")
+      .select(col("pred").cast("double")).as[Double].collect()
+    finally graft.ml.ModelRegistry.destroy(model)
+  }
+
+  private def accuracy(preds: Array[Double], df: DataFrame): Double = {
+    val labels = df.select("label").as[Double].collect()
+    preds.zip(labels).count { case (p, l) => p == l }.toDouble / labels.length
+  }
+
   test("kmeans separates two obvious clusters") {
     val pts = (Seq.fill(20)((0.0, 0.1)) ++ Seq.fill(20)((10.0, 9.9)))
-      .toDF("x", "y")
-    val model = ML.kmeans(pts, Seq("x", "y"), k = 2)
-    val preds = model.transform(pts).select("prediction").as[Int].collect()
+      .toDF("x", "y").withColumn("vec", array(col("x"), col("y")))
+    val preds = trainApply(pts, "clustering.KMeans", """, "k": 2""")
     assert(preds.slice(0, 20).toSet.size == 1)
     assert(preds.slice(20, 40).toSet.size == 1)
     assert(preds(0) != preds(39))
@@ -170,11 +193,8 @@ class SourcesSinksMLSpec extends SparkSpec {
       val x = i / 100.0
       (x, if (x > 0.5) 1.0 else 0.0)
     }
-    val df = rows.toDF("x", "label")
-    val model = ML.logisticRegression(df, Seq("x"), "label")
-    val acc = model.transform(df)
-      .filter(col("prediction") === col("label")).count() / 100.0
-    assert(acc >= 0.95)
+    val df = rows.toDF("x", "label").withColumn("vec", array(col("x")))
+    assert(accuracy(trainApply(df, "regression.LogisticRegression"), df) >= 0.95)
   }
 
   test("decision tree learns a planted axis-aligned split") {
@@ -183,10 +203,9 @@ class SourcesSinksMLSpec extends SparkSpec {
       val y = (i % 7) / 7.0 // irrelevant feature
       (x, y, if (x > 0.37) 1.0 else 0.0)
     }
-    val df = rows.toDF("x", "y", "label")
-    val model = ML.decisionTreeClassifier(df, Seq("x", "y"), "label", maxDepth = 3)
-    val acc = model.transform(df)
-      .filter(col("prediction") === col("label")).count() / 200.0
+    val df = rows.toDF("x", "y", "label").withColumn("vec", array(col("x"), col("y")))
+    // 8 leaves → depth 3
+    val acc = accuracy(trainApply(df, "decisiontrees.DecisionTree", """, "max_nodes": 8"""), df)
     assert(acc >= 0.99, s"acc $acc — a depth-3 tree must nail one planted threshold")
   }
 
@@ -196,27 +215,14 @@ class SourcesSinksMLSpec extends SparkSpec {
       val x = rnd.nextDouble(); val y = rnd.nextDouble()
       (x, y, if ((x > 0.5) != (y > 0.5)) 1.0 else 0.0)
     }
-    val df = rows.toDF("x", "y", "label")
-    def acc(m: org.apache.spark.ml.PipelineModel): Double =
-      m.transform(df).filter(col("prediction") === col("label")).count() / 300.0
-    val stump = acc(ML.decisionTreeClassifier(df, Seq("x", "y"), "label", maxDepth = 1))
-    val gbt = acc(ML.gbtClassifier(df, Seq("x", "y"), "label", maxIter = 10, maxDepth = 3))
+    val df = rows.toDF("x", "y", "label").withColumn("vec", array(col("x"), col("y")))
+    // 2 leaves → a depth-1 stump
+    val stump = accuracy(trainApply(df, "decisiontrees.DecisionTree", """, "max_nodes": 2"""), df)
+    // shrinkage set explicitly: the entry's default 0.005 barely moves 10 trees
+    val gbt = accuracy(trainApply(df, "decisiontrees.GradientTreeBoost",
+      """, "num_trees": 10, "max_nodes": 8, "shrinkage": 0.1, "sampling_rate": 1.0"""), df)
     assert(gbt >= 0.95, s"gbt acc $gbt")
     assert(gbt > stump, s"gbt $gbt should beat a depth-1 stump $stump on XOR")
-  }
-
-  test("decision tree / GBT regressors fit a step function") {
-    val rows = (0 until 200).map { i =>
-      val x = i / 200.0
-      (x, if (x > 0.5) 10.0 else -10.0)
-    }
-    val df = rows.toDF("x", "label")
-    for (m <- Seq(ML.decisionTreeRegressor(df, Seq("x"), "label", maxDepth = 2),
-                  ML.gbtRegressor(df, Seq("x"), "label", maxIter = 5, maxDepth = 2))) {
-      val mae = m.transform(df)
-        .select(abs(col("prediction") - col("label"))).as[Double].collect().sum / 200.0
-      assert(mae < 1.0, s"mae $mae")
-    }
   }
 
   test("fpGrowth finds frequent itemsets") {
@@ -268,12 +274,11 @@ class SourcesSinksMLSpec extends SparkSpec {
   }
 
   test("nlp: tokenize → ngrams → tfidf → word2vec shapes") {
-    val d = Seq("spark compiles plans", "spark runs fast plans").toDF("text")
-    val t = ML.tokenize(d, "text", "toks")
+    val d = Seq((1L, "spark compiles plans"), (2L, "spark runs fast plans")).toDF("id", "text")
+    val t = d.withColumn("toks", Nlp.defaultTokenize(col("text")))
     assert(t.select(size(col("toks"))).as[Int].collect().forall(_ >= 3))
-    val n = ML.ngrams(t, "toks", "bi", 2)
-    assert(n.select(size(col("bi"))).as[Int].head == 2)
-    val tf = ML.tfidf(t, "toks", "vec", numFeatures = 64)
+    assert(t.select(size(Nlp.ngrams(col("toks"), 2))).as[Int].collect().toSeq == Seq(2, 3))
+    val tf = Nlp.tfidfMap(t, "id", "toks", "vec")
     assert(tf.columns.contains("vec"))
     val w2v = ML.word2vec(t, "toks", "emb", dim = 8)
     assert(w2v.select("emb").head.get(0).asInstanceOf[org.apache.spark.ml.linalg.Vector].size == 8)

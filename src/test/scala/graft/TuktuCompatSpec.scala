@@ -1226,6 +1226,29 @@ class TuktuCompatSpec extends SparkSpec {
     assert(sets(Set(1L)) == 3L && sets(Set(1L, 2L)) == 2L && !sets.contains(Set(3L)))
   }
 
+  private def fpGrowthFlow(rowsJson: String, minSupport: Int): DataFrame =
+    Flow.runSingle(spark, listFlow(rowsJson,
+      s"""{"id": "p0", "name": "tuktu.ml.processors.association.FPGrowthProcessor",
+         "result": "freq", "config": {"field": "items", "min_support": $minSupport},
+         "next": []}"""))
+
+  test("FPGrowthProcessor keeps an itemset seen exactly min_support times") {
+    // 25 packets: {a, b} 7 times, {b} 3 times, 15 singletons. As a relative
+    // support 7/25, ceil(0.28 · 25) is 8 in floating point, which dropped
+    // {a} and {a, b}.
+    val rows = (Seq.fill(7)("""{"items": ["a", "b"]}""") ++ Seq.fill(3)("""{"items": ["b"]}""") ++
+      (0 until 15).map(i => s"""{"items": ["z$i"]}""")).mkString("[", ",", "]")
+    val sets = fpGrowthFlow(rows, 7).collect()
+      .map(r => r.getSeq[String](0).sorted.mkString(",") -> r.getLong(1)).toMap
+    assert(sets == Map("a" -> 7L, "b" -> 10L, "a,b" -> 7L))
+  }
+
+  test("FPGrowthProcessor with min_support above the packet size yields no itemsets") {
+    val out = fpGrowthFlow("""[{"items": [1, 2]}, {"items": [1]}, {"items": [1]}]""", 5)
+    assert(out.columns.toSeq == Seq("freq_items", "freq_support"))
+    assert(out.isEmpty)
+  }
+
   test("pinning table: each FQCN entry no other spec names runs a minimal reference config") {
     // one row per entry: processors over a three-row `list` fixture, the
     // output column(s) rendered as strings in `k` order, and the values
