@@ -1487,15 +1487,16 @@ object QueriesLLM {
         .orderBy("id", "rank")
     }),
 
-    // ---------------- the same k-NN join through the bounded-heap
-    // topk_by aggregate (r8): no window, no sort — the map side reduces
-    // to k pairs per id before the shuffle; output bit-identical
+    // ---------------- the same k-NN join over the slice spread across 7
+    // partitions: the bounded-heap topk_by aggregate merges per-partition
+    // partials, and its output must not depend on how the pairs were split
     "ann_knn_join_heap" -> ((s, dir) => {
       val e = rd(s, dir, "embeddings").filter(col("vec_id") < 300)
         .select(col("vec_id"),
           transform(col("embedding").cast(ArrayType(DoubleType)),
             x => floor(x * 1e6)).cast(ArrayType(DoubleType)).as("q"))
-      graft.operators.Similarity.knnJoinHeap(e, "vec_id", "q", k = 5)
+        .repartition(7)
+      graft.operators.Similarity.knnJoinExact(e, "vec_id", "q", k = 5)
         .orderBy("id", "rank")
     }),
 
@@ -1662,10 +1663,10 @@ object QueriesLLM {
         .drop("__src").orderBy("source")
     }),
 
-    // ---------------- Same sketch through the bounded-heap aggregator
-    // (plans.KmvBottomK): k-sized state at every stage, no window/sort in
-    // the plan — the unbounded-cardinality scale path. MUST hash-match the
-    // window path's oracle bit-for-bit (the bottom-k set is order-free).
+    // ---------------- Same sketch over the un-fanned scan: the
+    // bounded-heap bottom-k (plans.KmvBottomK) merges per-partition
+    // partials, and the bottom-k set is order-free, so the estimate must
+    // hash-match kmv_distinct's whatever the input partitioning.
     "kmv_distinct_heap" -> ((s, dir) => {
       val toks = rd(s, dir, "documents")
         .select(col("source"), graft.operators.TextAnalysis.tokens(col("text")).as("__toks"))
@@ -1675,7 +1676,7 @@ object QueriesLLM {
           explode(transform(sequence(lit(1), size(col("__toks")) - 1),
             i => concat(element_at(col("__toks"), i), lit(" "),
               element_at(col("__toks"), i + 1)))).as("bg"))
-      val est = graft.operators.Sketch.kmvDistinctHeap(bigrams, Seq("source"), col("bg"), k = 64)
+      val est = graft.operators.Sketch.kmvDistinct(bigrams, Seq("source"), col("bg"), k = 64)
       val exact = bigrams.groupBy(col("source"))
         .agg(count_distinct(col("bg")).as("n_exact"))
       val exactR = exact.withColumnRenamed("source", "__src")
@@ -1824,7 +1825,7 @@ object QueriesLLM {
     // (processing-time) TTL cannot be gated this way at all:
     // FlatMapGroupsWithStateExec.shouldRunAnotherBatch is unconditionally
     // true for it and both processAllAvailable and Trigger.AvailableNow
-    // spin forever (measured; see the ttlTimeoutConf scaladoc).
+    // spin forever (measured; see the Streams.keyedState scaladoc).
     "streaming_quantile_evict_3batch" -> ((s, dir) => {
       import s.implicits._
       val docs = rd(s, dir, "documents")

@@ -200,15 +200,14 @@ object Dedup {
 
   private def minhashNearDupsFrom(base: DataFrame, k: Int, bands: Int,
                                   threshold: Double): DataFrame = {
-    // Pairs-first (same shape as Similarity.lshCandidatePairs): the band
-    // self-join carries only (band, id) — the variable-width shingle arrays
-    // never ride the ×bands explode — then the distinct survivor pairs
-    // (few, by LSH design) pull each side's shingle set back with one hash
-    // join per side, so Jaccard is shuffled and computed exactly once per
-    // pair instead of once per shared band. Column pruning strips the
-    // collect_set from the band sides and the k min-aggregates from the
-    // set sides, so each of the four base instances only computes what its
-    // branch consumes.
+    // Pairs-first: the band self-join carries only (band, id) — the
+    // variable-width shingle arrays never ride the ×bands explode — then
+    // the distinct survivor pairs (few, by LSH design) pull each side's
+    // shingle set back with one hash join per side, so Jaccard is shuffled
+    // and computed exactly once per pair instead of once per shared band.
+    // Column pruning strips the collect_set from the band sides and the k
+    // min-aggregates from the set sides, so each of the four base
+    // instances only computes what its branch consumes.
     val banded = base
       .withColumn("band", explode(lshBands(col("sig"), bands, k / bands)))
       .select(col("band"), col("id"))
@@ -598,13 +597,6 @@ object Dedup {
       .join(cc, Seq("node"), "left")
       .select(col("node").as(idCol), coalesce(col("component"), col("node")).as("cluster"))
   }
-
-  /** Embedding-cosine near-dup: pairs with cosine ≥ threshold via the
-    * Similarity module's LSH-bucketed ANN (see Similarity.scala). */
-  def embeddingNearDups(df: DataFrame, idCol: String, vecCol: String,
-                        threshold: Double): DataFrame =
-    Similarity.lshCandidatePairs(df, idCol, vecCol)
-      .filter(col("cosine") >= threshold)
 
   /** Exact duplicate-substring removal (Lee et al. 2022, arXiv:2107.06499
     * "Deduplicating Training Data Makes Language Models Better" — public),

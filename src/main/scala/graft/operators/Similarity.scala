@@ -448,41 +448,23 @@ object Similarity {
     pqAdcTopK(probed, idCol, vecCol, books, queryId, kResults)
   }
 
-  /** All near-dup candidate pairs sharing an LSH bucket (for Dedup):
-    * explode tables×bucket, self-join per bucket on (bucket, id) ONLY, dedup
-    * the id pairs, then join the vectors back so each pair's cosine is
-    * shuffled and computed exactly once (not once per shared bucket). */
-  def lshCandidatePairs(df: DataFrame, idCol: String, vecCol: String,
-                        dim: Int = 64, tables: Int = 4, nPlanes: Int = 8): DataFrame = {
-    val base = df.select(col(idCol).as("id"), col(vecCol).as("v"))
-    val b = base.withColumn("bucket", explode(array(
-        (0 until tables).map(t => lshBucket(col("v"), dim, nPlanes, t)): _*)))
-      .select("bucket", "id")
-    val candidates = b.select(col("bucket"), col("id").as("id1"))
-      .join(b.select(col("bucket"), col("id").as("id2")), Seq("bucket"))
-      .filter(col("id1") < col("id2"))
-      .select("id1", "id2")
-      .distinct()
-    candidates
-      .join(base.select(col("id").as("id1"), col("v").as("v1")), Seq("id1"))
-      .join(base.select(col("id").as("id2"), col("v").as("v2")), Seq("id2"))
-      .select(col("id1"), col("id2"), cosine(col("v1"), col("v2")).as("cosine"))
-  }
-
   // ------------------------------------------------------------ k-NN join
   // Per-vector top-k neighbors over the WHOLE collection — the workhorse
   // behind hard-negative mining, semantic dedup sweeps, and diversity
-  // sampling. Two shapes: the exact all-pairs form (the correctness
-  // baseline, bounded corpora / oracle slices) and the IVF-cell-scoped
-  // form (the 100 TB path: candidates only from each vector's probed
-  // cells, so the join shuffles on cell id and never goes quadratic).
+  // sampling. Two candidate generators: the exact all-pairs form (the
+  // correctness baseline, bounded corpora / oracle slices) and the
+  // IVF-cell-scoped form (the 100 TB path: candidates only from each
+  // vector's probed cells, so the join shuffles on cell id and never goes
+  // quadratic). Both rank through one bounded-heap top-k per id.
 
   /** Exact cosine k-NN self-join: (id, neighbor_id, rank, cosine), rank
-    * 1..k by (cosine desc, neighbor asc). Integerize vectors first (the
+    * 1..k by (cosine desc, neighbor asc). `idCol` must be integral;
+    * `neighbor_id` keeps its type. Integerize vectors first (the
     * floor(x·1e6) convention) when oracle-exact output is needed. O(n²)
     * pair work by construction — at scale use [[knnJoinIvf]]. */
   def knnJoinExact(df: DataFrame, idCol: String, vecCol: String,
                    k: Int): DataFrame = {
+    requireIntegralId(df, idCol)
     val base = df.select(col(idCol).as("__kid"), col(vecCol).as("__kv"))
     val pairs = base.select(col("__kid").as("id"), col("__kv").as("v1"))
       .crossJoin(base.select(col("__kid").as("neighbor_id"), col("__kv").as("v2")))
@@ -584,39 +566,13 @@ object Similarity {
         col("nsum_src"), col("nsum_tgt"), col("margin"))
   }
 
-  /** [[knnJoinExact]]'s output through the bounded-heap
-    * [[graft.plans.TopKByScore]] aggregate instead of a row_number
-    * window: bit-identical rows (same (cosine desc, neighbor asc) total
-    * order), but the plan is ObjectHashAggregate — the map side reduces
-    * every partition to k pairs per id BEFORE the shuffle and nothing
-    * sorts the candidate stream. The same swap applies to any
-    * top-k-per-key stage (feed [[knnJoinIvf]]'s cell candidates through
-    * it at scale). */
-  def knnJoinHeap(df: DataFrame, idCol: String, vecCol: String,
-                  k: Int): DataFrame = {
-    val base = df.select(col(idCol).as("__kid"), col(vecCol).as("__kv"))
-    val pairs = base.select(col("__kid").as("id"), col("__kv").as("v1"))
-      .crossJoin(base.select(col("__kid").as("neighbor_id"), col("__kv").as("v2")))
-      .filter(col("id") =!= col("neighbor_id"))
-      .select(col("id"), col("neighbor_id"),
-        cosine(col("v1"), col("v2")).as("cosine"))
-    pairs.filter(col("cosine").isNotNull)
-      .groupBy("id")
-      .agg(call_function("topk_by", col("cosine"), col("neighbor_id"),
-        lit(k)).as("__tk"))
-      .select(col("id"), posexplode(col("__tk")))
-      .select(col("id"), col("col.id").as("neighbor_id"),
-        (col("pos") + 1).cast(IntegerType).as("rank"),
-        col("col.score").as("cosine"))
-  }
-
   /** IVF-cell-scoped k-NN join: every vector's home cell is its argmin-L2
     * centroid; each vector probes its `nProbe` nearest cells and re-ranks
     * exactly against the vectors HOMED there. One cell-keyed shuffle whose
     * fan-out is nProbe·|cell| per vector — the standard recall/cost dial.
-    * With nProbe = |centroids| this degenerates to [[knnJoinExact]]. The
-    * centroids are a table (see [[ivfAssignJoin]]), so k can reach √N at
-    * 100 TB.
+    * With nProbe = |centroids| this degenerates to [[knnJoinExact]], and
+    * the same id contract holds. The centroids are a table (see
+    * [[ivfAssignJoin]]), so k can reach √N at 100 TB.
     *
     * Pairs first: the cell join carries only scalar ids (the LSH band-join
     * discipline) — vectors join back once per DISTINCT surviving pair, so
@@ -627,17 +583,19 @@ object Similarity {
     * share one exchange"): the pair stream is hash(id)-repartitioned ONCE
     * and that partitioning is reused three times — the multi-cell dedup
     * (ClusteredDistribution(id, neighbor_id) is satisfied by hash(id)),
-    * the id-side payload join, and the final top-k window, which previously
-    * each planned their own exchange. The neighbor-side payload join runs
-    * FIRST so the id-side join is last and its output partitioning feeds
-    * the window directly. Payload-bytes note: the two vecs joins are
-    * byte-minimal at scale — any single-join "struct-pack" form (union the
-    * two key streams, pivot per pair) moves |V| + 2·|pairs| vector
-    * payloads through its pair-group exchange vs 2·|V| + |pairs| here,
-    * and |pairs| ≈ nProbe·|cell|·N ≥ |V| by construction. */
+    * the id-side payload join, and the final per-id top-k aggregate, which
+    * would otherwise each plan their own exchange. The neighbor-side
+    * payload join runs FIRST so the id-side join is last and its output
+    * partitioning feeds the aggregate directly. Payload-bytes note: the
+    * two vecs joins are byte-minimal at scale — any single-join
+    * "struct-pack" form (union the two key streams, pivot per pair) moves
+    * |V| + 2·|pairs| vector payloads through its pair-group exchange vs
+    * 2·|V| + |pairs| here, and |pairs| ≈ nProbe·|cell|·N ≥ |V| by
+    * construction. */
   def knnJoinIvf(df: DataFrame, idCol: String, vecCol: String,
                  cents: DataFrame, k: Int, nProbe: Int,
                  centIdCol: String, centVecCol: String): DataFrame = {
+    requireIntegralId(df, idCol)
     val assigned = ivfAssignProbesJoin(df, idCol, vecCol, cents, nProbe,
         centIdCol, centVecCol)
       .select(col(idCol).as("__kid"), col("__centroid").as("__home"),
@@ -665,15 +623,26 @@ object Similarity {
     topKPerId(scored, k)
   }
 
+  /** The k-NN id contract: `topk_by` ranks on a BIGINT id, so a string
+    * id would be skipped and a fractional one truncated into an id that is
+    * not in the input. */
+  private def requireIntegralId(df: DataFrame, idCol: String): Unit = {
+    val t = df.select(col(idCol)).schema.head.dataType
+    require(Seq(ByteType, ShortType, IntegerType, LongType).contains(t),
+      s"k-NN id column '$idCol' must be integral (tinyint, smallint, int or bigint), got ${t.sql}")
+  }
+
+  /** Per-id top-k of (id, neighbor_id, cosine) pairs through the
+    * bounded-heap [[graft.plans.TopKByScore]] aggregate: the map side
+    * reduces every partition to k pairs per id before the shuffle, and
+    * nothing sorts the candidate stream. */
   private def topKPerId(pairs: DataFrame, k: Int): DataFrame = {
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("id"))
-      .orderBy(col("cosine").desc, col("neighbor_id").asc)
-    pairs.filter(col("cosine").isNotNull)
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("id"), col("neighbor_id"), col("rank").cast(IntegerType),
-        col("cosine"))
+    val idType = pairs.schema("neighbor_id").dataType
+    pairs.groupBy("id")
+      .agg(call_function("topk_by", col("cosine"), col("neighbor_id"), lit(k)).as("__tk"))
+      .select(col("id"), posexplode(col("__tk")))
+      .select(col("id"), col("col.id").cast(idType).as("neighbor_id"),
+        (col("pos") + 1).cast(IntegerType).as("rank"), col("col.score").as("cosine"))
   }
 
   // ----------------------------------- random projection (JL compression)

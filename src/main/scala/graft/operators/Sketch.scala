@@ -20,11 +20,9 @@ import org.apache.spark.sql.types._
  * minima and the same estimate, so the sketch itself is under the hash
  * gate, not just its error bound.
  *
- * Scale shape: one distinct-reduce on (group, hash) with map-side combine,
- * then a bottom-k per group. Here bottom-k is a row_number window over the
- * DISTINCT-hash table (already vocabulary-bounded for token streams); for
- * unbounded-cardinality columns the same math rides a bounded-heap
- * aggregator instead — the estimator and its contract don't change.
+ * Scale shape: bottom-k is one bounded-heap aggregate per group
+ * ([[graft.plans.KmvBottomK]]), so KMV state is k longs at every stage
+ * whatever the column's cardinality.
  */
 object Sketch {
 
@@ -35,61 +33,44 @@ object Sketch {
     * retained-minima count. Groups with fewer than k distinct values are
     * EXACT (n_kept is the true distinct count and kmv_est equals it);
     * otherwise kmv_est = floor((k−1) · 2⁶⁰ / h_k) with h_k the k-th
-    * smallest 60-bit hash — one IEEE division, bit-stable cross-engine. */
+    * smallest 60-bit hash — one IEEE division, bit-stable cross-engine.
+    *
+    * Bottom-k is the native [[graft.plans.KmvBottomK]]
+    * `TypedImperativeAggregate`: per-group state is ≤ k longs at EVERY
+    * stage, the map-side partial ships k longs per (partition, group)
+    * instead of the group's whole distinct-hash set, and the plan is one
+    * ObjectHashAggregate pair — no sort, no window, no distinct-reduce, so
+    * a high-cardinality key (URLs, doc ids) costs what a token column
+    * does. The retained set (k smallest distinct hashes) is a set property
+    * independent of row order, so the output replays under the DuckDB
+    * oracle. Null values are skipped; a group whose every value is null
+    * is dropped. */
   def kmvDistinct(df: DataFrame, groupCols: Seq[String], value: org.apache.spark.sql.Column,
                   k: Int = 64): DataFrame = {
     require(k >= 2, "KMV needs k >= 2")
     val gcols = groupCols.map(col)
-    val hashed = df.select(gcols :+ TextAnalysis.tokenHash(value).as("__h"): _*)
-      .filter(col("__h").isNotNull) // null value ⇒ null hash; a null would
-      // survive distinct() and, with NULLS FIRST asc ordering, permanently
-      // occupy bottom-k rank 1 while max(__h) ignores it — skewed estimate
-      .distinct() // one (group, hash) row — map-side combined
-    val w = Window.partitionBy(gcols: _*).orderBy(col("__h").asc)
-    val bottomK = hashed.withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") <= k)
-    bottomK.groupBy(gcols: _*)
-      .agg(count(lit(1)).as("n_kept"), max(col("__h")).as("__hk"))
-      .withColumn("kmv_est",
-        when(col("n_kept") < k, col("n_kept").cast(DoubleType))
-          .otherwise(floor(lit((k - 1).toDouble) * lit(TWO60) / col("__hk"))
-            .cast(DoubleType)))
-      .drop("__hk")
-  }
-
-  /** The unbounded-cardinality path: same estimator, bounded-heap bottom-k.
-    *
-    * [[kmvDistinct]]'s row_number window materializes and sorts every
-    * distinct hash per group to keep 64 — fine when the value domain is
-    * vocabulary-bounded, hostile on a high-cardinality key (URLs, doc ids)
-    * at 100 TB. Here bottom-k is the native [[graft.plans.KmvBottomK]]
-    * `TypedImperativeAggregate`: per-group state is ≤ k longs at EVERY
-    * stage, the map-side partial ships k longs per (partition, group)
-    * instead of the group's whole distinct-hash set, and the plan carries
-    * no sort, no window, and no distinct-reduce — one ObjectHashAggregate
-    * pair. The retained set (k smallest distinct hashes) is a set property
-    * independent of row order, so the output is bit-identical to the
-    * window path and replays under the same DuckDB oracle.
-    *
-    * Groups whose every value is null are dropped, matching the window
-    * path (their rows never survive the null filter there). */
-  def kmvDistinctHeap(df: DataFrame, groupCols: Seq[String],
-                      value: org.apache.spark.sql.Column, k: Int = 64): DataFrame = {
-    require(k >= 2, "KMV needs k >= 2")
-    val gcols = groupCols.map(col)
     df.select(gcols :+ TextAnalysis.tokenHash(value).as("__h"): _*)
       .groupBy(gcols: _*)
-      .agg(call_function("kmv_bottomk", col("__h"), lit(k)).as("__bk"))
+      .agg(bottomK(k).as("__bk"))
       .select(gcols ++ Seq(
         size(col("__bk")).cast(LongType).as("n_kept"),
         get(col("__bk"), size(col("__bk")) - 1).as("__hk")): _*)
       .filter(col("n_kept") > 0)
-      .withColumn("kmv_est",
-        when(col("n_kept") < k, col("n_kept").cast(DoubleType))
-          .otherwise(floor(lit((k - 1).toDouble) * lit(TWO60) / col("__hk"))
-            .cast(DoubleType)))
+      .withColumn("kmv_est", kmvEstimate(col("n_kept"), col("__hk"), k))
       .drop("__hk")
   }
+
+  /** The k smallest distinct non-null hashes of `__h`, ascending. */
+  private def bottomK(k: Int): org.apache.spark.sql.Column =
+    call_function("kmv_bottomk", col("__h"), lit(k))
+
+  /** The KMV estimate from the retained count and the k-th smallest hash:
+    * exact below k, else floor((k−1) · 2⁶⁰ / h_k). */
+  private def kmvEstimate(nKept: org.apache.spark.sql.Column,
+                          hk: org.apache.spark.sql.Column, k: Int): org.apache.spark.sql.Column =
+    when(nKept < k, nKept.cast(DoubleType))
+      .otherwise(floor(lit((k - 1).toDouble) * lit(TWO60) / hk.cast(DoubleType))
+        .cast(DoubleType))
 
   // ------------------------------------------------- quantiles (KLL)
 
@@ -401,9 +382,10 @@ object Sketch {
     * the bottom-k of A ∪ B is the bottom-k of K(A) ∪ K(B), and the
     * fraction ρ of those union minima present in BOTH per-corpus sketches
     * estimates the Jaccard similarity; |A ∩ B| ≈ ρ · |A ∪ B|. This is the
-    * cheap pre-check before a full cross-corpus dedup pass: two
-    * TakeOrdered bottom-k's (k rows each cross the wire, never a corpus)
-    * decide whether the expensive band join is worth running.
+    * cheap pre-check before a full cross-corpus dedup pass: one global
+    * `kmv_bottomk` sketch per corpus (k longs cross the wire, never a
+    * corpus), joined 1×1, decides whether the expensive band join is
+    * worth running. Building the frame launches no job.
     *
     * Returns one row: (n_kept, n_common, union_est, jaccard_est,
     * inter_est). Small inputs degrade gracefully: with fewer than k union
@@ -411,26 +393,9 @@ object Sketch {
   def kmvOverlap(a: DataFrame, b: DataFrame, value: org.apache.spark.sql.Column,
                  k: Int = 64): DataFrame = {
     require(k >= 2, "KMV needs k >= 2")
-    def bottom(df: DataFrame) =
-      df.select(TextAnalysis.tokenHash(value).as("__h"))
-        .filter(col("__h").isNotNull).distinct()
-        .orderBy(col("__h").asc).limit(k)
-    val ba = bottom(a).transform(Ops.materialize) // k rows; reused twice below
-    val bb = bottom(b).transform(Ops.materialize)
-    val u = ba.union(bb).distinct().orderBy(col("__h").asc).limit(k)
-    val uStats = u.agg(count(lit(1)).as("n_kept"), max(col("__h")).as("__hk"))
-    val nCommon = u.join(ba, Seq("__h")).join(bb, Seq("__h"))
-      .agg(count(lit(1)).as("n_common"))
-    uStats.crossJoin(nCommon)
-      .withColumn("union_est",
-        when(col("n_kept") < k, col("n_kept").cast(DoubleType))
-          .otherwise(floor(lit((k - 1).toDouble) * lit(TWO60) / col("__hk"))
-            .cast(DoubleType)))
-      .withColumn("jaccard_est",
-        col("n_common").cast(DoubleType) / col("n_kept"))
-      .withColumn("inter_est",
-        floor(col("jaccard_est") * col("union_est")).cast(DoubleType))
-      .select("n_kept", "n_common", "union_est", "jaccard_est", "inter_est")
+    def sketch(df: DataFrame, as: String) =
+      df.select(TextAnalysis.tokenHash(value).as("__h")).agg(bottomK(k).as(as))
+    overlapStats(sketch(a, "__ba").crossJoin(sketch(b, "__bb")), k)
   }
 
   /** ALL-PAIRS KMV set algebra over grouped sketches — [[kmvOverlap]]
@@ -438,14 +403,11 @@ object Sketch {
     * scanned ONCE: per group the bounded-heap `kmv_bottomk` aggregate
     * retains the k smallest distinct hashes (map-side partials ship k longs
     * per (partition, group)), and every pairwise union/Jaccard/intersection
-    * estimate is pure ARRAY ALGEBRA over those sketch rows — bottom-k of a
-    * union is the k smallest of the two retained sets (the KMV merge
-    * property), and membership of a union-minimum in both sides is exact
-    * (h ∈ bottom-k(A∪B) ∧ h ∈ A ⟹ h ∈ bottom-k(A)). The pair join is
-    * |G|² SKETCH rows (a broadcast nested loop over k-long arrays), never
-    * data: at 100 TB this answers "which sources share vocabulary" — the
-    * pre-check that orders cross-corpus dedup passes — for the cost of one
-    * scan plus |G|² · k array ops.
+    * estimate is the same array algebra as [[kmvOverlap]]'s over those
+    * sketch rows. The pair join is |G|² SKETCH rows (a broadcast nested
+    * loop over k-long arrays), never data: at 100 TB this answers "which
+    * sources share vocabulary" — the pre-check that orders cross-corpus
+    * dedup passes — for the cost of one scan plus |G|² · k array ops.
     *
     * Estimator arithmetic is the [[kmvDistinct]] form (one IEEE division,
     * bit-stable cross-engine). Groups with a null-only value column are
@@ -460,25 +422,31 @@ object Sketch {
     require(k >= 2, "KMV needs k >= 2")
     val sk = df.select(col(groupCol).as("__g"), TextAnalysis.tokenHash(value).as("__h"))
       .groupBy("__g")
-      .agg(call_function("kmv_bottomk", col("__h"), lit(k)).as("__bk"))
+      .agg(bottomK(k).as("__bk"))
       .filter(size(col("__bk")) > 0)
     val pairs = sk.select(col("__g").as(s"${groupCol}_a"), col("__bk").as("__ba"))
       .join(broadcast(sk.select(col("__g").as(s"${groupCol}_b"), col("__bk").as("__bb"))),
         col(s"${groupCol}_a") < col(s"${groupCol}_b"))
-    pairs
+    overlapStats(pairs, k, s"${groupCol}_a", s"${groupCol}_b")
+  }
+
+  /** Union/Jaccard/intersection estimates from two bottom-k sketch
+    * columns `__ba`, `__bb`: bottom-k of a union is the k smallest of the
+    * two retained sets (the KMV merge property), and membership of a
+    * union minimum in both sides is exact (h ∈ bottom-k(A∪B) ∧ h ∈ A ⟹
+    * h ∈ bottom-k(A)). Returns `keys` then (n_kept, n_common, union_est,
+    * jaccard_est, inter_est). */
+  private def overlapStats(sketches: DataFrame, k: Int, keys: String*): DataFrame =
+    sketches
       .withColumn("__u", slice(array_sort(array_union(col("__ba"), col("__bb"))), 1, k))
       .withColumn("n_kept", size(col("__u")).cast(LongType))
       .withColumn("n_common", size(array_intersect(col("__u"),
         array_intersect(col("__ba"), col("__bb")))).cast(LongType))
-      .withColumn("union_est",
-        when(col("n_kept") < k, col("n_kept").cast(DoubleType))
-          .otherwise(floor(lit((k - 1).toDouble) * lit(TWO60) /
-            element_at(col("__u"), k).cast(DoubleType)).cast(DoubleType)))
+      .withColumn("union_est", kmvEstimate(col("n_kept"), element_at(col("__u"), k), k))
       .withColumn("jaccard_est",
         col("n_common").cast(DoubleType) / col("n_kept"))
       .withColumn("inter_est",
         floor(col("jaccard_est") * col("union_est")).cast(DoubleType))
-      .select(col(s"${groupCol}_a"), col(s"${groupCol}_b"), col("n_kept"),
-        col("n_common"), col("union_est"), col("jaccard_est"), col("inter_est"))
-  }
+      .select((keys ++ Seq("n_kept", "n_common", "union_est", "jaccard_est", "inter_est"))
+        .map(col): _*)
 }

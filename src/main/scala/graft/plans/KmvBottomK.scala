@@ -10,26 +10,24 @@ import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
 
 /**
- * Bounded-heap bottom-k distinct-hash aggregate — the unbounded-cardinality
- * path of the KMV sketch (`graft.operators.Sketch`).
+ * Bounded-heap bottom-k distinct-hash aggregate — the bottom-k of the KMV
+ * sketch (`graft.operators.Sketch`).
  *
- * The window-based bottom-k materializes and sorts EVERY distinct hash per
- * group just to keep k of them: fine when the value domain is vocabulary-
- * bounded (tokens), hostile at 100 TB on a high-cardinality key (URLs, doc
- * ids). This `TypedImperativeAggregate` keeps the k smallest DISTINCT
- * 60-bit hashes in a size-bounded ordered set, so retained state is k longs
- * per group at EVERY stage: the map-side partial aggregate ships k longs
- * per (partition, group) instead of the group's whole distinct-hash table,
- * and no sort or window appears in the plan (ObjectHashAggregate, not
- * Window over a shuffled sort).
+ * This `TypedImperativeAggregate` keeps the k smallest DISTINCT 60-bit
+ * hashes in a size-bounded ordered set, so retained state is k longs per
+ * group at EVERY stage: the map-side partial aggregate ships k longs per
+ * (partition, group) instead of the group's whole distinct-hash table, and
+ * no sort or window appears in the plan (ObjectHashAggregate). A sort or
+ * window bottom-k would materialize every distinct hash per group just to
+ * keep k of them — hostile at 100 TB on a high-cardinality key (URLs, doc
+ * ids).
  *
- * Determinism: the retained set is exactly the k smallest distinct hashes —
- * a set property independent of row order or partitioning — so the result
- * is bit-identical to the window path and replays under the DuckDB oracle.
+ * Order contract: the result is exactly the k smallest distinct non-null
+ * hashes, ascending — a set property independent of row order,
+ * partitioning and merge order — so it replays under the DuckDB oracle.
  *
- * Null semantics: null inputs are skipped (matching the window path's
- * `isNotNull` filter); a group whose every value is null yields an empty
- * array.
+ * Null semantics: null inputs are skipped; a group whose every value is
+ * null yields an empty array.
  *
  * Registered as SQL function `kmv_bottomk(hash, k)` via [[GraftExtensions]];
  * `k` must be a foldable integer literal.

@@ -22,13 +22,14 @@ import org.apache.spark.sql.types._
  * window, no full materialization. At 100 TB of candidate pairs this is
  * the difference between sorting the pair stream and streaming over it.
  *
- * Determinism: the retained set is exactly the k smallest elements under
- * the TOTAL order (score desc, id asc) — a set property independent of
- * row order, partitioning, and merge order — so results are bit-identical
- * to the window form and replay under the DuckDB oracle. Exact
- * (score, id) duplicates collapse (per-key candidate streams are
- * duplicate-free by construction in the k-NN use). Null scores/ids are
- * skipped.
+ * Order contract: the result is exactly the k smallest elements under
+ * the TOTAL order (score desc, id asc), best first — a set property
+ * independent of row order, partitioning, and merge order — so it
+ * replays under the DuckDB oracle. Exact (score, id) duplicates collapse
+ * (per-key candidate streams are duplicate-free by construction in the
+ * k-NN use). Null scores/ids are skipped. The id is cast to BIGINT, so
+ * callers with non-integral ids must reject them first (a string casts
+ * to null and is skipped; a fraction truncates).
  *
  * Returns array<struct<score double, id bigint>> best-first. Registered
  * as SQL function `topk_by(score, id, k)` via [[GraftExtensions]]; `k`

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Encoders}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
@@ -13,8 +13,7 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
  *  - TimestampNormalizer+GroupBy+bucket agg  ⇄ tumbling `window` agg
  *  - TimeBufferProcessor                     ⇄ processing-time trigger /
  *                                              event-time tumbling window
- *  - sliding windows, session windows        ⇄ engine extras (`window` with
- *                                              slide, `session_window`)
+ *  - session windows                         ⇄ engine extra (`session_window`)
  *  - StreamingDeduplicationProcessor         ⇄ dropDuplicates[WithinWatermark]
  *  - RunningCountProcessor (stream scope)    ⇄ mapGroupsWithState counter
  *
@@ -23,7 +22,15 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
  */
 object Streams {
 
-  /** Eviction clock for the sketch streamers' idle-group TTL. Two modes:
+  /** The keyed-state skeleton of the TTL-armed streamers: project each
+    * row to (group as string, value, event time), drop null values (a null
+    * primitive kills the query at the encoder), group by key, and run
+    * `fold` over each group's batch rows and prior state. `fold` returns
+    * the group's next state — None removes it — and its output rows. A
+    * group whose TTL fired is removed and emits nothing; an updated group
+    * re-arms its TTL. A null group key groups as null.
+    *
+    * Eviction clock for the idle-group TTL. Two modes:
     *
     *  - `eventTimeCol` set (requires `stateTtl`): EventTimeTimeout — a
     *    group is evicted once the stream's WATERMARK advances `stateTtl`
@@ -31,7 +38,7 @@ object Streams {
     *    data, not the wall), replay-gateable, and reaches quiescence:
     *    `FlatMapGroupsWithStateExec.shouldRunAnotherBatch` re-triggers
     *    only while the watermark advances, so `processAllAvailable` /
-    *    `Trigger.AvailableNow` terminate. The operator stamps a 0-second
+    *    `Trigger.AvailableNow` terminate. The skeleton stamps a 0-second
     *    watermark on the column; callers needing late-data slack should
     *    pre-watermark upstream instead.
     *  - `eventTimeCol` empty, `stateTtl` set: ProcessingTimeTimeout —
@@ -42,43 +49,47 @@ object Streams {
     *    (measured, not theoretical) — use only under interval triggers in
     *    long-running queries.
     */
-  private def ttlTimeoutConf(stateTtl: Option[String],
-                             eventTimeCol: Option[String]): GroupStateTimeout = {
+  private def keyedState[V: Encoder, S: Encoder, O: Encoder](
+      stream: DataFrame, group: Column, value: Column, mode: OutputMode,
+      stateTtl: Option[String], eventTimeCol: Option[String])(
+      fold: (String, Iterator[V], Option[S]) => (Option[S], Iterator[O])): Dataset[O] = {
     // eventTimeCol without stateTtl would silently run NoTimeout while
     // still stamping a 0-second watermark — a misconfigured TTL must fail
     // loudly, not leak state forever
     require(stateTtl.isDefined || eventTimeCol.isEmpty,
       "eventTimeCol selects the eviction clock for stateTtl and requires it; " +
         "pass stateTtl (e.g. Some(\"1 hour\")) or drop eventTimeCol")
-    (stateTtl, eventTimeCol) match {
+    val timeout = (stateTtl, eventTimeCol) match {
       case (Some(_), Some(_)) => GroupStateTimeout.EventTimeTimeout
       case (Some(_), None)    => GroupStateTimeout.ProcessingTimeTimeout
       case (None, _)          => GroupStateTimeout.NoTimeout
     }
-  }
-
-  /** Arm the group's TTL after an update, on whichever clock is active. */
-  private def armTtl(state: GroupState[_], stateTtl: Option[String],
-                     eventTime: Boolean): Unit =
-    stateTtl.foreach { ttl =>
-      if (eventTime)
-        state.setTimeoutTimestamp(math.max(state.getCurrentWatermarkMs, 0L), ttl)
-      else state.setTimeoutDuration(ttl)
-    }
-
-  /** Stamp the 0-delay watermark the EventTimeTimeout mode needs. */
-  private def withTtlWatermark(stream: DataFrame,
-                               eventTimeCol: Option[String]): DataFrame =
+    // the analyzer requires the WATERMARKED ATTRIBUTE in the
+    // flatMapGroupsWithState child's output (watermark metadata rides on
+    // the attribute, not the plan), so event time survives the select even
+    // though no fold reads it; a constant keeps the row shape otherwise
+    val eventTime = eventTimeCol.map(col).getOrElse(lit(new java.sql.Timestamp(0L)))
     eventTimeCol.fold(stream)(c => stream.withWatermark(c, "0 seconds"))
-
-  /** The event-time column threaded through the streamer's projection —
-    * the analyzer requires the WATERMARKED ATTRIBUTE in the
-    * flatMapGroupsWithState child's output (watermark metadata rides on
-    * the attribute, not the plan), so it must survive the select even
-    * though the state function never reads it; a constant stands in when
-    * no event-time TTL is configured so the row shape stays uniform. */
-  private def ttlEventTime(eventTimeCol: Option[String]): Column =
-    eventTimeCol.map(col).getOrElse(lit(new java.sql.Timestamp(0L)))
+      .select(group.cast("string").as("g"), value.as("v"), eventTime.as("et"))
+      .filter(col("v").isNotNull)
+      .as(Encoders.tuple(Encoders.STRING, implicitly[Encoder[V]], Encoders.TIMESTAMP))
+      .groupByKey(_._1)(Encoders.STRING)
+      .flatMapGroupsWithState[S, O](mode, timeout) {
+        (g: String, rows: Iterator[(String, V, java.sql.Timestamp)], state: GroupState[S]) =>
+          if (state.hasTimedOut) { state.remove(); Iterator.empty }
+          else fold(g, rows.map(_._2), state.getOption) match {
+            case (Some(next), out) =>
+              state.update(next)
+              stateTtl.foreach { ttl =>
+                if (eventTimeCol.isDefined)
+                  state.setTimeoutTimestamp(math.max(state.getCurrentWatermarkMs, 0L), ttl)
+                else state.setTimeoutDuration(ttl)
+              }
+              out
+            case (None, out) => state.remove(); out
+          }
+      }
+  }
 
   /** Tumbling event-time window aggregation with watermark
     * (ref: TimestampNormalizerProcessor.scala:17 + GroupByProcessor). */
@@ -86,13 +97,6 @@ object Streams {
                   keys: Seq[String], aggs: Seq[Column]): DataFrame =
     df.withWatermark(tsCol, watermark)
       .groupBy(window(col(tsCol), duration) +: keys.map(col): _*)
-      .agg(aggs.head, aggs.tail: _*)
-
-  /** Sliding event-time window aggregation (engine extra). */
-  def slidingAgg(df: DataFrame, tsCol: String, duration: String, slide: String,
-                 watermark: String, keys: Seq[String], aggs: Seq[Column]): DataFrame =
-    df.withWatermark(tsCol, watermark)
-      .groupBy(window(col(tsCol), duration, slide) +: keys.map(col): _*)
       .agg(aggs.head, aggs.tail: _*)
 
   /** Session windows with inactivity gap (engine extra — the reference has no
@@ -122,33 +126,18 @@ object Streams {
     * 100 TB ingest keyed by e.g. URL the store grows monotonically under
     * NoTimeout. `stateTtl` evicts idle keys on the watermark clock when
     * `eventTimeCol` is given (deterministic, replay-gateable), else the
-    * wall clock (see [[ttlTimeoutConf]] for the busy-spin caution); an
+    * wall clock (see [[keyedState]] for the busy-spin caution); an
     * evicted key that reappears restarts its count from zero. */
   def runningCountPerKey(df: DataFrame, keyCol: String,
                          stateTtl: Option[String] = None,
                          eventTimeCol: Option[String] = None): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
-    val timeoutConf = ttlTimeoutConf(stateTtl, eventTimeCol)
-    val evTime = eventTimeCol.isDefined
-    withTtlWatermark(df, eventTimeCol)
-      .select(col(keyCol).cast("string").as("k"),
-        ttlEventTime(eventTimeCol).as("et"))
-      .as[(String, java.sql.Timestamp)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState[Long, (String, Long)](
-        OutputMode.Update, timeoutConf) {
-        (key: String, rows: Iterator[(String, java.sql.Timestamp)],
-         state: GroupState[Long]) =>
-          if (state.hasTimedOut) { state.remove(); Iterator.empty }
-          else {
-            val next = state.getOption.getOrElse(0L) + rows.size
-            state.update(next)
-            armTtl(state, stateTtl, evTime)
-            Iterator.single((key, next))
-          }
-      }
-      .toDF("key", "running_count")
+    keyedState[Boolean, Long, (String, Long)](df, col(keyCol), lit(true),
+      OutputMode.Update, stateTtl, eventTimeCol) { (key, rows, prior) =>
+      val next = prior.getOrElse(0L) + rows.size
+      (Some(next), Iterator.single((key, next)))
+    }.toDF("key", "running_count")
   }
 
   /** SignalBufferProcessor (ref: BufferProcessors.scala:171), streaming
@@ -169,7 +158,7 @@ object Streams {
     * evicts such keys, DISCARDING the unreleased buffer (the reference's
     * actor-mailbox shape has the same drop-on-death semantics) — on the
     * watermark clock when `eventTimeCol` is given (deterministic,
-    * replay-gateable), else the wall clock (see [[ttlTimeoutConf]]). A
+    * replay-gateable), else the wall clock (see [[keyedState]]). A
     * later data row for an evicted key starts a fresh buffer. */
   def signalBuffer(unioned: DataFrame, keyCol: String, isSignalCol: String,
                    payloadCol: String, orderCol: String,
@@ -177,44 +166,26 @@ object Streams {
                    eventTimeCol: Option[String] = None): DataFrame = {
     val spark = unioned.sparkSession
     import spark.implicits._
-    val timeoutConf = ttlTimeoutConf(stateTtl, eventTimeCol)
-    val evTime = eventTimeCol.isDefined
     // signal rows naturally carry null payload/seq after the union — the
     // primitive tuple fields must never see a null or deserialization kills
     // the query, so default sig/seq explicitly
-    withTtlWatermark(unioned, eventTimeCol)
-      .select(expr(s"CAST($keyCol AS STRING)").as("k"),
-        expr(s"coalesce(CAST($isSignalCol AS BOOLEAN), false)").as("sig"),
-        expr(s"CAST($payloadCol AS STRING)").as("payload"),
-        expr(s"coalesce(CAST($orderCol AS BIGINT), 0)").as("seq"),
-        ttlEventTime(eventTimeCol).as("et"))
-      .as[(String, Boolean, String, Long, java.sql.Timestamp)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState[List[(Long, String)], (String, String)](
-        OutputMode.Append, timeoutConf) {
-        (key: String, rows: Iterator[(String, Boolean, String, Long, java.sql.Timestamp)],
-         state: GroupState[List[(Long, String)]]) =>
-          if (state.hasTimedOut) {
-            // the key's signal never arrived within the TTL: drop the buffer
-            state.remove(); Iterator.empty
-          } else {
-            val batch = rows.toList
-            val buffered = state.getOption.getOrElse(Nil) :::
-              batch.collect { case (_, false, p, s, _) => (s, p) }
-            if (batch.exists(_._2)) {
-              // remove (not update-to-empty): an empty-list entry per released
-              // key would grow the state store without bound at high key
-              // cardinality; the entry is recreated on the key's next data row
-              state.remove()
-              buffered.sortBy(_._1).iterator.map { case (_, p) => (key, p) }
-            } else {
-              state.update(buffered)
-              armTtl(state, stateTtl, evTime)
-              Iterator.empty
-            }
-          }
-      }
-      .toDF("key", "payload")
+    val row = struct(expr(s"coalesce(CAST($isSignalCol AS BOOLEAN), false)").as("_1"),
+      expr(s"CAST($payloadCol AS STRING)").as("_2"),
+      expr(s"coalesce(CAST($orderCol AS BIGINT), 0)").as("_3"))
+    keyedState[(Boolean, String, Long), List[(Long, String)], (String, String)](
+      unioned, expr(keyCol), row, OutputMode.Append, stateTtl, eventTimeCol) {
+      (key, rows, prior) =>
+        val batch = rows.toList
+        val buffered = prior.getOrElse(Nil) :::
+          batch.collect { case (false, p, s) => (s, p) }
+        // a signal releases the buffer and removes the key (not an update to
+        // empty: an empty-list entry per released key would grow the state
+        // store without bound at high key cardinality); the entry is
+        // recreated on the key's next data row
+        if (batch.exists(_._1))
+          (None, buffered.sortBy(_._1).iterator.map { case (_, p) => (key, p) })
+        else (Some(buffered), Iterator.empty)
+    }.toDF("key", "payload")
   }
 
   /** Streaming MinHash/LSH near-duplicate candidate detection — the
@@ -329,7 +300,7 @@ object Streams {
     * monotonically under NoTimeout. `stateTtl` (e.g. "1 hour") evicts
     * idle groups — on the watermark clock when `eventTimeCol` is given
     * (deterministic, replay-gated), else on the wall clock (see
-    * [[ttlTimeoutConf]] for the contract and the busy-spin caution); an
+    * [[keyedState]] for the contract and the busy-spin caution); an
     * evicted group that reappears restarts its registers from zero. */
   def streamingHllDistinct(stream: DataFrame, groupCol: String,
                            valueCol: String, p: Int = 8,
@@ -343,45 +314,29 @@ object Streams {
     val m = 1 << p
     val p1 = 61 - p
     val c = graft.operators.Sketch.hllConstant(p)
-    val timeoutConf = ttlTimeoutConf(stateTtl, eventTimeCol)
-    val evTime = eventTimeCol.isDefined
-    withTtlWatermark(stream, eventTimeCol)
-      .select(col(groupCol).cast("string").as("g"),
-        graft.operators.TextAnalysis.tokenHash(col(valueCol)).as("h"),
-        ttlEventTime(eventTimeCol).as("et"))
-      .filter(col("h").isNotNull) // null value ⇒ null hash ⇒ encoder throw
-      .as[(String, Long, java.sql.Timestamp)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState[Array[Byte], (String, Long, Long, Double)](
-        OutputMode.Update, timeoutConf) {
-        (g: String, rows: Iterator[(String, Long, java.sql.Timestamp)],
-         state: GroupState[Array[Byte]]) =>
-          if (state.hasTimedOut) { state.remove(); Iterator.empty }
-          else {
-            val regs = state.getOption.getOrElse(new Array[Byte](m))
-            rows.foreach { case (_, h, _) =>
-              val b = (h >>> width).toInt
-              val low = h & mask
-              // rank = leading zeros within the low `width` bits + 1 — the
-              // same integer as the batch path's width+1 − length(bin(low))
-              val rho =
-                if (low == 0L) width + 1
-                else java.lang.Long.numberOfLeadingZeros(low) + width - 63
-              if (rho > regs(b)) regs(b) = rho.toByte
-            }
-            state.update(regs)
-            armTtl(state, stateTtl, evTime)
-            var nz = 0L; var sum = 0L; var i = 0
-            while (i < m) {
-              val r = regs(i)
-              if (r == 0) nz += 1
-              sum += 1L << (p1 - r)
-              i += 1
-            }
-            Iterator.single((g, nz, sum, math.floor(c / sum.toDouble)))
-          }
+    keyedState[Long, Array[Byte], (String, Long, Long, Double)](stream, col(groupCol),
+      graft.operators.TextAnalysis.tokenHash(col(valueCol)), OutputMode.Update,
+      stateTtl, eventTimeCol) { (g, rows, prior) =>
+      val regs = prior.getOrElse(new Array[Byte](m))
+      rows.foreach { h =>
+        val b = (h >>> width).toInt
+        val low = h & mask
+        // rank = leading zeros within the low `width` bits + 1 — the
+        // same integer as the batch path's width+1 − length(bin(low))
+        val rho =
+          if (low == 0L) width + 1
+          else java.lang.Long.numberOfLeadingZeros(low) + width - 63
+        if (rho > regs(b)) regs(b) = rho.toByte
       }
-      .toDF(groupCol, "n_zero", "sum_scaled", "hll_est")
+      var nz = 0L; var sum = 0L; var i = 0
+      while (i < m) {
+        val r = regs(i)
+        if (r == 0) nz += 1
+        sum += 1L << (p1 - r)
+        i += 1
+      }
+      (Some(regs), Iterator.single((g, nz, sum, math.floor(c / sum.toDouble))))
+    }.toDF(groupCol, "n_zero", "sum_scaled", "hll_est")
   }
 
   /** Streaming KMV distinct-count estimation — the ingestion-time form of
@@ -393,7 +348,7 @@ object Streams {
     * identical estimate. Update output mode (each batch re-emits touched
     * groups). Per-group state is k longs but group cardinality is not
     * bounded: `stateTtl` evicts idle groups on the watermark clock when
-    * `eventTimeCol` is given, else the wall clock (see [[ttlTimeoutConf]]);
+    * `eventTimeCol` is given, else the wall clock (see [[keyedState]]);
     * a reappearing group restarts its bottom-k from empty. */
   def streamingKmvDistinct(stream: DataFrame, groupCol: String,
                            valueCol: String, k: Int = 64,
@@ -403,37 +358,18 @@ object Streams {
     val spark = stream.sparkSession
     import spark.implicits._
     val two60 = 1152921504606846976.0
-    val timeoutConf = ttlTimeoutConf(stateTtl, eventTimeCol)
-    val evTime = eventTimeCol.isDefined
-    withTtlWatermark(stream, eventTimeCol)
-      .select(col(groupCol).cast("string").as("g"),
-        graft.operators.TextAnalysis.tokenHash(col(valueCol)).as("h"),
-        ttlEventTime(eventTimeCol).as("et"))
-      // a null value hashes to null and the (String, Long) encoder throws
-      // on a null primitive at runtime — one bad record would kill the
-      // whole streaming query; drop it here, matching the batch estimator
-      .filter(col("h").isNotNull)
-      .as[(String, Long, java.sql.Timestamp)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState[Array[Long], (String, Long, Double)](
-        OutputMode.Update, timeoutConf) {
-        (g: String, rows: Iterator[(String, Long, java.sql.Timestamp)],
-         state: GroupState[Array[Long]]) =>
-          if (state.hasTimedOut) { state.remove(); Iterator.empty }
-          else {
-            // merge the batch's hashes into the bottom-k: sort-distinct the
-            // union, truncate — O((k + batch) log(k + batch)) per group-batch
-            val merged = (state.getOption.getOrElse(Array.empty[Long]).iterator ++
-              rows.map(_._2)).toArray.distinct.sorted.take(k)
-            state.update(merged)
-            armTtl(state, stateTtl, evTime)
-            val est =
-              if (merged.length < k) merged.length.toDouble
-              else math.floor((k - 1).toDouble * two60 / merged.last)
-            Iterator.single((g, merged.length.toLong, est))
-          }
-      }
-      .toDF(groupCol, "n_kept", "kmv_est")
+    keyedState[Long, Array[Long], (String, Long, Double)](stream, col(groupCol),
+      graft.operators.TextAnalysis.tokenHash(col(valueCol)), OutputMode.Update,
+      stateTtl, eventTimeCol) { (g, rows, prior) =>
+      // merge the batch's hashes into the bottom-k: sort-distinct the
+      // union, truncate — O((k + batch) log(k + batch)) per group-batch
+      val merged = (prior.getOrElse(Array.empty[Long]).iterator ++ rows)
+        .toArray.distinct.sorted.take(k)
+      val est =
+        if (merged.length < k) merged.length.toDouble
+        else math.floor((k - 1).toDouble * two60 / merged.last)
+      (Some(merged), Iterator.single((g, merged.length.toLong, est)))
+    }.toDF(groupCol, "n_kept", "kmv_est")
   }
 
   /** Streaming frequent items — the ingestion-time form of
@@ -452,7 +388,7 @@ object Streams {
     * Update output mode. Per-group state is ≤ 2·maxTracked counters but
     * group cardinality is not bounded: `stateTtl` evicts idle groups on
     * the watermark clock when `eventTimeCol` is given, else the wall
-    * clock (see [[ttlTimeoutConf]]); a reappearing group restarts its
+    * clock (see [[keyedState]]); a reappearing group restarts its
     * counters from empty. */
   def streamingFrequentItems(stream: DataFrame, groupCol: String,
                              valueCol: String, maxTracked: Int = 1024,
@@ -461,41 +397,25 @@ object Streams {
     require(maxTracked >= 1, "streamingFrequentItems needs maxTracked >= 1")
     val spark = stream.sparkSession
     import spark.implicits._
-    val timeoutConf = ttlTimeoutConf(stateTtl, eventTimeCol)
-    val evTime = eventTimeCol.isDefined
-    withTtlWatermark(stream, eventTimeCol)
-      .select(col(groupCol).cast("string").as("g"),
-        col(valueCol).cast("string").as("v"),
-        ttlEventTime(eventTimeCol).as("et"))
-      .filter(col("v").isNotNull) // null value would kill the query at the encoder
-      .as[(String, String, java.sql.Timestamp)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState[Map[String, Long], (String, String, Long)](
-        OutputMode.Update, timeoutConf) {
-        (g: String, rows: Iterator[(String, String, java.sql.Timestamp)],
-         state: GroupState[Map[String, Long]]) =>
-          if (state.hasTimedOut) { state.remove(); Iterator.empty }
-          else {
-            val m = scala.collection.mutable.HashMap.empty[String, Long]
-            state.getOption.foreach(m ++= _)
-            rows.foreach { case (_, v, _) =>
-              m.update(v, m.getOrElse(v, 0L) + 1L)
-              if (m.size > 2 * maxTracked) {
-                // subtract the (size − maxTracked)-th smallest count from
-                // everything and drop the non-positive — amortized O(1)/row
-                val pivot = m.values.toIndexedSeq.sorted.apply(m.size - maxTracked - 1)
-                val keep = m.iterator.collect {
-                  case (k, c) if c > pivot => k -> (c - pivot)
-                }.toSeq
-                m.clear(); m ++= keep
-              }
-            }
-            state.update(m.toMap)
-            armTtl(state, stateTtl, evTime)
-            m.iterator.map { case (item, est) => (g, item, est) }.toSeq.iterator
+    keyedState[String, Map[String, Long], (String, String, Long)](stream, col(groupCol),
+      col(valueCol).cast("string"), OutputMode.Update, stateTtl, eventTimeCol) {
+      (g, rows, prior) =>
+        val m = scala.collection.mutable.HashMap.empty[String, Long]
+        prior.foreach(m ++= _)
+        rows.foreach { v =>
+          m.update(v, m.getOrElse(v, 0L) + 1L)
+          if (m.size > 2 * maxTracked) {
+            // subtract the (size − maxTracked)-th smallest count from
+            // everything and drop the non-positive — amortized O(1)/row
+            val pivot = m.values.toIndexedSeq.sorted.apply(m.size - maxTracked - 1)
+            val keep = m.iterator.collect {
+              case (k, c) if c > pivot => k -> (c - pivot)
+            }.toSeq
+            m.clear(); m ++= keep
           }
-      }
-      .toDF(groupCol, "item", "est")
+        }
+        (Some(m.toMap), m.iterator.map { case (item, est) => (g, item, est) }.toSeq.iterator)
+    }.toDF(groupCol, "item", "est")
   }
 
   /** Streaming per-group quantiles — the ingestion-time form of
@@ -513,7 +433,7 @@ object Streams {
     * Per-group state is O(k·log(n/k)) doubles but group cardinality is
     * not bounded: `stateTtl` evicts idle groups on the watermark clock
     * when `eventTimeCol` is given, else the wall clock (see
-    * [[ttlTimeoutConf]]); a reappearing group restarts its sketch — and
+    * [[keyedState]]); a reappearing group restarts its sketch — and
     * its exact `n` — from empty, the property the 3-batch eviction
     * replay gates. */
   def streamingQuantiles(stream: DataFrame, groupCol: String,
@@ -524,44 +444,28 @@ object Streams {
     import graft.plans.{KllState, QuantileKll}
     val spark = stream.sparkSession
     import spark.implicits._
-    val timeoutConf = ttlTimeoutConf(stateTtl, eventTimeCol)
-    val evTime = eventTimeCol.isDefined
-    withTtlWatermark(stream, eventTimeCol)
-      .select(col(groupCol).cast("string").as("g"),
-        col(valueCol).cast("double").as("v"),
-        ttlEventTime(eventTimeCol).as("et"))
-      .filter(col("v").isNotNull) // null primitive kills the encoder
-      .as[(String, Double, java.sql.Timestamp)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState[Seq[Seq[Double]], (String, Long, Double, Double, Double)](
-        OutputMode.Update, timeoutConf) {
-        (g: String, rows: Iterator[(String, Double, java.sql.Timestamp)],
-         state: GroupState[Seq[Seq[Double]]]) =>
-          if (state.hasTimedOut) { state.remove(); Iterator.empty }
-          else {
-            val st = new KllState
-            state.getOption.foreach { levels =>
-              st.levels.clear()
-              levels.foreach(l => st.levels +=
-                scala.collection.mutable.ArrayBuffer.from(l))
-            }
-            rows.foreach(r => QuantileKll.insert(st, r._2, k))
-            state.update(st.levels.map(_.toSeq).toSeq)
-            armTtl(state, stateTtl, evTime)
-            val sample = QuantileKll.sample(st)
-            var n = 0L
-            sample.foreach(n += _._2)
-            def q(p: Double): Double = {
-              val target = math.ceil(p * n).toLong
-              var cum = 0L
-              var i = 0
-              while (i < sample.length && cum < target) { cum += sample(i)._2; i += 1 }
-              if (i == 0) Double.NaN else sample(i - 1)._1
-            }
-            Iterator.single((g, n, q(0.5), q(0.9), q(0.99)))
-          }
+    keyedState[Double, Seq[Seq[Double]], (String, Long, Double, Double, Double)](stream,
+      col(groupCol), col(valueCol).cast("double"), OutputMode.Update,
+      stateTtl, eventTimeCol) { (g, rows, prior) =>
+      val st = new KllState
+      prior.foreach { levels =>
+        st.levels.clear()
+        levels.foreach(l => st.levels +=
+          scala.collection.mutable.ArrayBuffer.from(l))
       }
-      .toDF(groupCol, "n", "p50", "p90", "p99")
+      rows.foreach(QuantileKll.insert(st, _, k))
+      val sample = QuantileKll.sample(st)
+      var n = 0L
+      sample.foreach(n += _._2)
+      def q(p: Double): Double = {
+        val target = math.ceil(p * n).toLong
+        var cum = 0L
+        var i = 0
+        while (i < sample.length && cum < target) { cum += sample(i)._2; i += 1 }
+        if (i == 0) Double.NaN else sample(i - 1)._1
+      }
+      (Some(st.levels.map(_.toSeq).toSeq), Iterator.single((g, n, q(0.5), q(0.9), q(0.99))))
+    }.toDF(groupCol, "n", "p50", "p90", "p99")
   }
 
   /** Per-row benchmark-contamination tag on a stream — the online gate in

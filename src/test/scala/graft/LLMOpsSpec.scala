@@ -444,29 +444,35 @@ class LLMOpsSpec extends SparkSpec {
     assert(dup("big") == est && dup("small") == 10.0)
   }
 
-  test("kmvDistinctHeap: bounded-heap path is bit-identical to the window path") {
-    import graft.operators.Sketch
+  test("kmvDistinct equals a driver-side bottom-k, nulls skipped") {
+    import graft.operators.{Sketch, TextAnalysis}
     val rows = (1 to 10).map(i => ("small", s"v$i")) ++
       (1 to 20000).map(i => ("big", s"value-$i")) ++
       (1 to 500).map(i => ("big", s"value-$i")) // duplicates: sketch must dedup
     val d = rows.toDF("grp", "v").repartition(7) // force multi-partition merge()
-    val win = Sketch.kmvDistinct(d, Seq("grp"), col("v"), k = 64)
+    // the reference: every hash collected, bottom-64 and estimate on the driver
+    val ref = d.select(col("grp"), TextAnalysis.tokenHash(col("v")).as("h"))
+      .as[(String, Long)].collect().groupBy(_._1).map { case (g, hs) =>
+        val bk = hs.map(_._2).distinct.sorted.take(64)
+        val est = if (bk.length < 64) bk.length.toDouble
+          else math.floor(63.0 * 1152921504606846976.0 / bk.last.toDouble)
+        (g, bk.length.toLong, est)
+      }.toSet
+    val out = Sketch.kmvDistinct(d, Seq("grp"), col("v"), k = 64)
       .collect().map(r => (r.getString(0), r.getLong(1), r.getDouble(2))).toSet
-    val heap = Sketch.kmvDistinctHeap(d, Seq("grp"), col("v"), k = 64)
-      .collect().map(r => (r.getString(0), r.getLong(1), r.getDouble(2))).toSet
-    assert(heap == win, s"heap=$heap win=$win")
-    // nulls are skipped; an all-null group vanishes, matching the window path
+    assert(out == ref, s"out=$out ref=$ref")
+    // nulls are skipped; an all-null group vanishes
     val withNulls = (rows.map { case (g, v) => (g, v: String) } ++
       Seq(("big", null: String), ("allnull", null: String))).toDF("grp", "v")
-    val hn = Sketch.kmvDistinctHeap(withNulls, Seq("grp"), col("v"), k = 64)
+    val hn = Sketch.kmvDistinct(withNulls, Seq("grp"), col("v"), k = 64)
       .collect().map(r => (r.getString(0), r.getLong(1), r.getDouble(2))).toSet
-    assert(hn == win, s"null handling diverged: $hn")
+    assert(hn == ref, s"null handling diverged: $hn")
     // the scale claim: ObjectHashAggregate, no Window and no Sort in the plan
-    val plan = Sketch.kmvDistinctHeap(d, Seq("grp"), col("v"), k = 64)
+    val plan = Sketch.kmvDistinct(d, Seq("grp"), col("v"), k = 64)
       .queryExecution.executedPlan.toString
     assert(plan.contains("ObjectHashAggregate"), plan)
-    assert(!plan.contains("Window"), "heap path must not plan a window")
-    assert(!plan.toLowerCase.contains("sort "), "heap path must not plan a sort")
+    assert(!plan.contains("Window"), "kmvDistinct must not plan a window")
+    assert(!plan.toLowerCase.contains("sort "), "kmvDistinct must not plan a sort")
   }
 
   test("meanPoolEmbedding: exact per-dimension means, ordered dims, OOV dropped") {
@@ -621,8 +627,8 @@ class LLMOpsSpec extends SparkSpec {
     assert(!plan.toLowerCase.contains("sort "), "HLL must not plan a sort")
   }
 
-  test("kmvPairwiseOverlap: pairwise estimates agree with kmvOverlap, exact regime, invariance") {
-    import graft.operators.Sketch
+  test("kmvPairwiseOverlap equals driver-side set algebra, invariance") {
+    import graft.operators.{Sketch, TextAnalysis}
     val rows = (1 to 1500).map(i => ("a", s"item-$i")) ++
       (1001 to 2500).map(i => ("b", s"item-$i")) ++
       (5000 to 5030).map(i => ("c", s"other-$i"))
@@ -631,13 +637,22 @@ class LLMOpsSpec extends SparkSpec {
       .collect().map(r => (r.getString(0), r.getString(1)) ->
         (r.getLong(2), r.getLong(3), r.getDouble(4), r.getDouble(5), r.getDouble(6))).toMap
     assert(out.keySet == Set(("a", "b"), ("a", "c"), ("b", "c")), s"pairs: ${out.keySet}")
-    // the (a, b) pair must equal the two-corpus kmvOverlap on the same data
-    // (the pairwise path is the same estimator over grouped sketches)
-    val ref = Sketch.kmvOverlap(
-      df.filter(col("grp") === "a").select("v"),
-      df.filter(col("grp") === "b").select("v"), col("v"), k = 64).head()
-    assert(out(("a", "b")) ==
-      ((ref.getLong(0), ref.getLong(1), ref.getDouble(2), ref.getDouble(3), ref.getDouble(4))))
+    // the reference: per-group bottom-64 of the collected hashes, then the
+    // union bottom-64 and its coincidences with both sketches on the driver
+    val sketches = df.select(col("grp"), TextAnalysis.tokenHash(col("v")).as("h"))
+      .as[(String, Long)].collect().groupBy(_._1)
+      .map { case (g, hs) => g -> hs.map(_._2).distinct.sorted.take(64).toSet }
+    for ((ga, gb) <- out.keySet) {
+      val (sa, sb) = (sketches(ga), sketches(gb))
+      val u = (sa ++ sb).toSeq.sorted.take(64)
+      val nKept = u.length.toLong
+      val nCommon = u.count(h => sa(h) && sb(h)).toLong
+      val union = if (nKept < 64) nKept.toDouble
+        else math.floor(63.0 * 1152921504606846976.0 / u.last.toDouble)
+      val jac = nCommon.toDouble / nKept
+      assert(out((ga, gb)) == ((nKept, nCommon, union, jac, math.floor(jac * union))),
+        s"($ga, $gb)")
+    }
     // c is tiny (31 values) and disjoint: unions with it stay estimates of
     // disjoint sets — zero coincidences, jaccard 0
     assert(out(("a", "c"))._2 == 0L && out(("a", "c"))._4 == 0.0)
@@ -853,6 +868,12 @@ class LLMOpsSpec extends SparkSpec {
       Seq("x", "y").toDF("v"), Seq("y", "z").toDF("v"), col("v"), k = 64).head()
     assert(tiny.getLong(0) == 3L && tiny.getDouble(2) == 3.0)
     assert(tiny.getDouble(3) == 1.0 / 3)
+    // one empty side still yields one row: the other side's exact count
+    val empty = Sketch.kmvOverlap(Seq("x", "y", "z").toDF("v"),
+      Seq.empty[String].toDF("v"), col("v"), k = 64).collect()
+    assert(empty.map(_.toSeq).toSeq == Seq(Seq(3L, 0L, 3.0, 0.0, 0.0)))
+    // two global sketches joined 1×1: building the frame runs no job
+    assert(jobsIn(Sketch.kmvOverlap(a, b, col("v"), k = 64))._2 == 0)
   }
 
   test("CMS: overestimate-only, partition-invariant, exact when uncrowded") {

@@ -153,6 +153,21 @@ class OpsSpec extends SparkSpec {
       known = Seq("fpGrowth", "nbsvm"))
   }
 
+  test("every public Sketch, Similarity and Dedup def has a caller in src/main (source gate)") {
+    // a superseded twin of an operator body is never exempt
+    assertCallers("graft/operators/Sketch.scala", "Sketch", Map.empty,
+      known = Seq("kmvDistinct", "kmvOverlap"))
+    assertCallers("graft/operators/Similarity.scala", "Similarity", Map(
+      "dotHof" -> "the fold form specs compare the native vec_dot against",
+      "l2sqHof" -> "the fold form specs compare the native vec_l2sq against",
+      "ivfIndex" -> "the IVF-quantizer trainer, seeded so that oracles can replay it",
+      "pqTrain" -> "the PQ-codebook trainer, seeded so that oracles can replay it"),
+      known = Seq("knnJoinExact", "knnJoinIvf"))
+    assertCallers("graft/operators/Dedup.scala", "Dedup", Map(
+      "simhash" -> "the reference specs compare the codegen'd simhash form against"),
+      known = Seq("minhashNearDups"))
+  }
+
   test("array ops: explode, zip, flatten, element") {
     val arrs = Seq((1, Seq("x", "y"), Seq(1, 2, 3))).toDF("id", "a", "b")
     assert(Ops.sequenceExplode(arrs, "a", "e").count() == 2)

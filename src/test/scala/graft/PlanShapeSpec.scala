@@ -59,9 +59,24 @@ class PlanShapeSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   }
 
   test("bounded-heap knn join aggregates without a window over the candidate stream") {
-    val p = planOf("ann_knn_join_heap")
-    assert(!p.contains("Window"), "heap top-k must not sort/window candidates")
-    assert(p.contains("ObjectHashAggregate"), "topk_by should plan as ObjectHashAggregate")
+    for (q <- Seq("ann_knn_join", "ann_knn_join_heap", "ann_knn_join_ivf")) {
+      val p = planOf(q)
+      assert(!p.contains("Window"), s"$q: heap top-k must not sort/window candidates")
+      assert(p.contains("ObjectHashAggregate"), s"$q: topk_by should plan as ObjectHashAggregate")
+    }
+    // the IVF pair stream is already hash(id)-partitioned for the id-side
+    // join, so the per-id top-k adds no exchange (27 in the final and
+    // initial plans together, as with the window it replaced)
+    val ivf = "Exchange".r.findAllIn(planOf("ann_knn_join_ivf")).size
+    assert(ivf <= 27, s"ann_knn_join_ivf plans $ivf exchanges")
+  }
+
+  test("KMV distinct and two-corpus overlap sketch without a window") {
+    for (q <- Seq("kmv_distinct", "kmv_overlap")) {
+      val p = planOf(q)
+      assert(!p.contains("Window"), s"$q grew a window")
+      assert(p.contains("ObjectHashAggregate"), s"$q: kmv_bottomk should plan as ObjectHashAggregate")
+    }
   }
 
   test("doc embedding pooling broadcasts the vocab vectors and stays codegen'd") {

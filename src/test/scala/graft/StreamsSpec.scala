@@ -202,7 +202,7 @@ class StreamsSpec extends SparkSpec {
 
   test("sketch streamers: event-time TTL evicts idle groups, survivors keep folding") {
     implicit val sql = spark.sqlContext
-    // KMV exercises the shared armTtl/ttlTimeoutConf path (quantiles get
+    // KMV exercises the shared keyedState TTL path (quantiles get
     // the oracle replay): batch 1 arms both groups at watermark(0) + 60 s
     // with event times 1-5 s (watermark stays below the deadline, so
     // nothing fires early); batch 2 feeds only "live" at ~1000 s, pushing
